@@ -47,13 +47,11 @@ object GraftSession {
     // format 3 keeps ONE RocksDB store per partition (virtual column
     // families) instead of four. Results are provider- and
     // format-independent (spec-asserted, oracle-checked).
-    // GRAFT_STATE_STORE=hdfs restores the heap-backed engine default for
-    // A/B (the format/changelog knobs are RocksDB-only and flip with it);
-    // =rocksdb stays accepted from the r13 opt-in contract.
-    val useRocksDb =
-      !sys.env.get("GRAFT_STATE_STORE").exists(v => v == "hdfs" || v == "heap")
+    // GRAFT_STATE_STORE=hdfs (or heap) restores the heap-backed engine
+    // default for A/B (the format/changelog knobs are RocksDB-only and flip
+    // with it); see [[useRocksDbStateStore]] for the accepted values.
     val withState =
-      if (useRocksDb)
+      if (useRocksDbStateStore(sys.env.get("GRAFT_STATE_STORE")))
         builder
           .config("spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
@@ -65,4 +63,16 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Streaming state-store choice from the `GRAFT_STATE_STORE` value:
+    * unset or `rocksdb` selects RocksDB, `hdfs` or `heap` the heap-backed
+    * provider (case-insensitive). Anything else fails loudly instead of
+    * silently selecting RocksDB. */
+  private[graft] def useRocksDbStateStore(value: Option[String]): Boolean =
+    value.map(_.toLowerCase(java.util.Locale.ROOT)) match {
+      case None | Some("rocksdb") => true
+      case Some("hdfs") | Some("heap") => false
+      case Some(other) => throw new IllegalArgumentException(
+        s"GRAFT_STATE_STORE must be one of rocksdb, hdfs, heap; got '$other'")
+    }
 }

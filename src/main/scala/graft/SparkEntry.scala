@@ -832,7 +832,8 @@ object SparkEntry {
       .orderBy("a_id", "b_id")
 
   /** Duplicate clusters over the (capped) exact-Jaccard pair graph:
-    * min-label connected components, component id = canonical keeper. */
+    * large-star/small-star connected components, component id = canonical
+    * keeper. */
   private def dedupClusters(s: SparkSession, dir: String): DataFrame = {
     val pairs = Dedup.ngramJaccardPairs(t(s, dir, "documents"), "text", "doc_id",
       n = 3, threshold = 0.5, maxDf = Some(10L))

@@ -63,81 +63,6 @@ object Dedup {
         first(col("__payload")).as("__payload"))
       .pinned() // reused by reps, within, and expansion
 
-  /** [[canonicalGroups]] with a REP-FETCH payload path — the
-    * `multimodal_dedup` rule (compute the key map-side; payload bytes
-    * never shuffle) applied to text. Variant A (the single-shuffle
-    * [[canonicalGroups]]) moves every payload through the
-    * canonicalization shuffle — at sf100 that is the dominant cost of the
-    * bloom decontaminate (11 GB of text through collect_list, SURVEY
-    * §9.8). Variant B shuffles only (16-byte key, 8-byte id) to form the
-    * groups, then fetches payloads MAP-SIDE for the reps alone: the
-    * rep-id set broadcasts, the payload source is scanned a second time
-    * with the semi-join applied before any exchange, and corpus text
-    * never enters a shuffle — payload bytes moved drop by the duplication
-    * factor, and to ~zero when downstream consumes rep payloads without
-    * re-keying (the decontaminate CSR kernel does).
-    *
-    * Returns (groups: (__ck, rep_id, members) — NO payload column,
-    * repPayloads: (rep_id, __payload)). The rep payload is the MIN-id
-    * member's (deterministic; variant A's `first` is
-    * partition-order-arbitrary — equivalent downstream because grouped
-    * payloads share a canonical key). `payloadSource` may be a cheaper
-    * superset frame than `keySource` (e.g. the raw corpus instead of the
-    * bloom-filtered candidates, so the fetch pass does not recompute the
-    * candidacy kernel); it must contain every keySource id.
-    *
-    * Mode (`spark.graft.dedup.repFetch`): `off` (default) is the
-    * single-shuffle path — the round-11 sf100 A/B measured it FASTER at
-    * BOTH duplication extremes of the text corpus family (dup 1.002:
-    * 336-362 s vs 370-411 s at sf100; dup 4.0: 21.5-34.0 s vs
-    * 33.1-40.1 s on a 2M-doc 4x-replicated corpus): the decontaminate
-    * operators are kernel/verify-bound, the text shuffle they'd save is
-    * seconds, and rep-fetch's second scan + broadcast build + eager
-    * materializations cost more than that at ~2 KB/doc payloads. `on`
-    * keeps the rep-fetch path available for FAT-payload corpora (the
-    * regime where the repo's `multimodal_dedup` applies the same
-    * map-side-key rule because payloads are MB-scale and the shuffle
-    * genuinely dominates), guarded by the rep-id broadcast budget. */
-  private def canonicalGroupsRepFetch(
-      keySource: DataFrame,
-      payloadSource: DataFrame,
-      idCol: String,
-      keyCol: Column,
-      payload: Column,
-      maxRepIdBytes: Long = 256L << 20): (DataFrame, DataFrame) = {
-    val mode = keySource.sparkSession.conf.get("spark.graft.dedup.repFetch", "off")
-    def variantA: (DataFrame, DataFrame) = {
-      val g = canonicalGroups(keySource, idCol, keyCol, payload)
-      (g.select("__ck", "rep_id", "members"), g.select("rep_id", "__payload"))
-    }
-    if (mode != "on") variantA
-    else {
-      val slim = keySource
-        .select(col(idCol).cast("long").as("id"), keyCol.as("__ck"))
-        .where(col("__ck").isNotNull)
-        .groupBy("__ck")
-        .agg(min(col("id")).as("rep_id"),
-          sort_array(collect_list(col("id"))).as("members"))
-        .pinned() // reused by the fetch guard, expansion, and the count
-      val nReps = slim.count()
-      val repIds = slim.select(col("rep_id").as("id"))
-      val payloads = payloadSource
-        .select(col(idCol).cast("long").as("id"), payload.as("__payload"))
-      // broadcast budget at the repo's hash-relation accounting (~48 B per
-      // long-keyed entry incl. row + map overhead, same as dedupIndexProbe)
-      // — 8 B/raw key undercounted the relation ~6x, an executor OOM risk
-      // in exactly the fat-payload regime repFetch=on targets. Past the
-      // budget the fetch degrades to a SHUFFLED id join reusing the pinned
-      // groups (one payload shuffle — variant A's payload cost without
-      // redoing the canonicalization shuffle the old fallback paid twice).
-      val repPayloads =
-        (if (nReps * 48L <= maxRepIdBytes) payloads.join(broadcast(repIds), Seq("id"))
-         else payloads.join(repIds, Seq("id")))
-          .select(col("id").as("rep_id"), col("__payload"))
-      (slim, repPayloads)
-    }
-  }
-
   /** All member pairs inside each group (trivial matches by construction),
     * restricted to groups passing `emitWhen`.
     *
@@ -489,11 +414,10 @@ object Dedup {
     * Output-volume note: the pair LIST is quadratic in the duplication
     * factor by definition (every within-group pair is a true hamming-0
     * match — |group|²/2 pairs per fingerprint). On corpora whose
-    * duplication scales with corpus size, consume GROUPS downstream
-    * (the [[dropNearDuplicates]] / [[connectedComponents]] shape)
-    * instead of materializing this list; the expansion itself streams
-    * through spillable joins, but ~n·dup²/2 output rows are inherent to
-    * asking for pairs. */
+    * duplication scales with corpus size, consume the fingerprint GROUPS
+    * downstream instead of materializing this list; the expansion itself
+    * streams through spillable joins, but ~n·dup²/2 output rows are
+    * inherent to asking for pairs. */
   def simhashPairsCanonical(
       df: DataFrame,
       textCol: String,
@@ -520,98 +444,59 @@ object Dedup {
     within.unionByName(expandGroupPairs(groups, fpPairs))
   }
 
+  /** Round bound for [[connectedComponents]]: large-star/small-star
+    * converges in O(log² n) rounds, a handful on any realistic pair graph,
+    * so hitting this means something is wrong — fail loudly. */
+  private val MaxComponentRounds = 50
+
+  /** Whether distinct hi->lo `edges` (u > v) form one star per component:
+    * no node has two outgoing edges and no node has both outgoing and
+    * incoming ones. Both star operations preserve connectivity, so each
+    * star's center is then its component's minimum id — the
+    * large-star/small-star fixpoint, detected one round before the edge
+    * set stops changing. */
+  private def isStarForest(edges: DataFrame): Boolean =
+    edges.select(col("u").as("id"), lit(1).as("out"), lit(0).as("in"))
+      .unionByName(edges.select(col("v").as("id"), lit(0).as("out"), lit(1).as("in")))
+      .groupBy("id")
+      .agg(sum(col("out")).as("out"), max(col("in")).as("in"))
+      .where(col("out") > 1 || (col("out") === 1 && col("in") === 1))
+      .limit(1).count() == 0
+
   /** Connected components over near-dup pairs — the step that turns a
     * pair list into dedup decisions (one keeper per duplicate cluster).
     *
-    * Min-label propagation: every node starts as its own component; each
-    * iteration every node adopts the smallest component id among itself
-    * and its neighbors, until a fixpoint. Each iteration is one
-    * shuffle-on-key join + min-aggregate — the Pregel-lite shape. Near-dup
-    * graphs are overwhelmingly small cliques, so convergence is 1–2
-    * iterations; for adversarial long-chain graphs swap in large-star /
-    * small-star (Kiveris 2014), which this API deliberately matches.
+    * Alternating large-star / small-star (Kiveris et al. 2014, "Connected
+    * Components in MapReduce and Beyond"): star operations re-wire whole
+    * neighborhoods onto local minima each round, so convergence takes
+    * O(log² n) rounds regardless of graph diameter — a long near-dup chain
+    * costs about as many rounds as a clique. Each round is two grouped
+    * aggregations over the edge list (shuffle on node id, map-side
+    * combinable) with hi->lo directed edges as the invariant; at the
+    * fixpoint every component is a star centered on its minimum id.
     *
-    * Returns (id, component) for every node appearing in `pairs`, where
-    * component = min node id reachable — so the component id doubles as
-    * the canonical keeper id.
+    * Returns (id, comp) for every node appearing in `pairs` — including a
+    * node that appears only in a self-pair (a, a) — where comp = min node
+    * id reachable, so the component id doubles as the canonical keeper id.
+    * Integral id columns are widened: both output columns are `long`.
     */
   def connectedComponents(
       pairs: DataFrame,
       aCol: String = "a_id",
-      bCol: String = "b_id",
-      maxIter: Int = 20): DataFrame = {
-    // materialize the edge list once — every iteration (and its
-    // convergence check) reuses it instead of recomputing the upstream
-    // candidate-generation pipeline per step
-    val edges = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
-      .unionByName(pairs.select(col(bCol).as("u"), col(aCol).as("v")))
-      .pinned()
-    var labels = edges.select(col("u").as("id")).distinct()
-      .select(col("id"), col("id").as("comp"))
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      // each node adopts min(own comp, neighbors' comps). The old label
-      // rides the union as a third column (labels holds exactly one row
-      // per id, so max(__own) recovers it), which fuses the convergence
-      // check into the SAME aggregation — the former per-iteration
-      // node-sized shuffle join of next against labels is gone; the check
-      // is now a narrow filter over the pinned result.
-      val viaNeighbors = edges
-        .join(labels.withColumnRenamed("id", "v").withColumnRenamed("comp", "n_comp"), "v")
-        .select(col("u").as("id"), col("n_comp").as("comp"))
-      val next = labels.withColumn("__own", col("comp"))
-        .unionByName(viaNeighbors.withColumn("__own", lit(null).cast("long")))
-        .groupBy("id")
-        .agg(min(col("comp")).as("comp"), max(col("__own")).as("__own"))
-        .pinned() // truncate the iterative lineage
-      val changed = next.where(!(col("comp") <=> col("__own"))).limit(1).count()
-      converged = changed == 0
-      labels = next.select(col("id"), col("comp"))
-      iter += 1
-    }
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge within $maxIter iterations " +
-        "(graph diameter exceeds the bound) — raise maxIter or use " +
-        "connectedComponentsStar, the large-star/small-star formulation " +
-        "that converges in O(log^2 n) rounds on long-chain graphs")
-    labels
-  }
-
-  /** Connected components by alternating large-star / small-star (Kiveris
-    * et al. 2014, "Connected Components in MapReduce and Beyond") — the
-    * escape hatch for adversarial long-chain graphs, where plain min-label
-    * propagation needs diameter-many rounds: star operations re-wire whole
-    * neighborhoods onto local minima each round, converging in O(log^2 n)
-    * rounds regardless of diameter.
-    *
-    * Each round is two grouped aggregations over the edge list (shuffle on
-    * node id, map-side combinable) with hi->lo directed edges as the
-    * invariant; at the fixpoint every component is a star centered on its
-    * minimum id. Output matches [[connectedComponents]]: (id, comp) for
-    * every node in `pairs`, comp = min reachable id. */
-  def connectedComponentsStar(
-      pairs: DataFrame,
-      aCol: String = "a_id",
-      bCol: String = "b_id",
-      maxIter: Int = 50): DataFrame = {
-    val raw = pairs
-      .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
-      .where(col("u") =!= col("v"))
-    val nodes = raw.select(col("u").as("id"))
-      .unionByName(raw.select(col("v").as("id"))).distinct()
-      .pinned()
-    var edges = raw
-      .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
+      bCol: String = "b_id"): DataFrame = {
+    // evaluate the pair input ONCE: the node set and the first round both
+    // read this pin instead of recomputing the upstream candidate pipeline.
+    // Self-pairs stay in it (as u = v) so self-pair-only nodes are kept.
+    val input = pairs
+      .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
+      .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
       .distinct()
       .pinned()
-    var iter = 0
-    // edge count carried across rounds: the convergence test needs |edges|
-    // and |next|, and |edges| is last round's |next| — recounting the
-    // pinned edge list every round was one redundant job per round
-    var edgeCount = edges.count()
-    var converged = edgeCount == 0
-    while (iter < maxIter && !converged) {
+    var edges = input.where(col("u") =!= col("v"))
+    var rounds = 0
+    while (!isStarForest(edges)) {
+      if (rounds == MaxComponentRounds) throw new IllegalStateException(
+        s"connectedComponents did not converge within $MaxComponentRounds rounds")
       // large-star: every node attaches its strictly-larger neighbors to
       // the minimum of its closed neighborhood
       val nbrs = edges.unionByName(edges.select(col("v").as("u"), col("u").as("v")))
@@ -625,26 +510,18 @@ object Dedup {
       // small-star: every node folds itself and its smaller neighbors onto
       // their minimum (hi->lo edges already ARE the smaller-neighbor lists)
       val ssMins = largeStar.groupBy("u").agg(min(col("v")).as("m"))
-      val next = ssMins.select(col("u"), col("m").as("v"))
+      edges = ssMins.select(col("u"), col("m").as("v"))
         .unionByName(largeStar.join(ssMins, "u")
           .where(col("v") =!= col("m"))
           .select(col("v").as("u"), col("m").as("v")))
         .distinct()
         .pinned() // truncate the iterative lineage
-      val nextCount = next.count()
-      // set equality of two distinct sets: equal cardinality plus empty
-      // one-sided difference; the anti-join only runs when the counts
-      // already agree (i.e. at most once per convergence)
-      converged = nextCount == edgeCount &&
-        next.join(edges, Seq("u", "v"), "left_anti").limit(1).count() == 0
-      edges = next
-      edgeCount = nextCount
-      iter += 1
+      rounds += 1
     }
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponentsStar did not converge within $maxIter rounds")
     // fixpoint is a star per component: non-roots point at the component
     // min, roots (the mins) have no outgoing hi->lo edge
+    val nodes = input.select(col("u").as("id"))
+      .unionByName(input.select(col("v").as("id"))).distinct()
     nodes.join(edges.withColumnRenamed("u", "id"), Seq("id"), "left")
       .select(col("id"), coalesce(col("v"), col("id")).as("comp"))
   }
@@ -783,10 +660,7 @@ object Dedup {
     requireLongId(corpus, idCol)
     requireLongId(evalSet, idCol)
 
-    // rep-fetch canonicalization: corpus text never shuffles — groups form
-    // over (key, id) and rep payloads are fetched map-side (variant B of
-    // [[canonicalGroupsRepFetch]]; guard-gated, conf-togglable)
-    val (groups, repPayloads) = canonicalGroupsRepFetch(corpus, corpus, idCol,
+    val groups = canonicalGroups(corpus, idCol,
       TextAnalysis.fingerprint(col(textCol)), col(textCol))
     val evalDocs = evalSet
       .select(col(idCol).cast("long").as("id"), col(textCol).as("__text"))
@@ -797,13 +671,13 @@ object Dedup {
       TextAnalysis.fingerprint(col("__text")), col("__text"))
     val evalShRows = collectEvalShingles(evalGroups, n, maxEvalShingles)
 
-    // Spread + pin the shingled reps: under rep-fetch the frame derives
-    // from a file-split corpus scan (16-ish partitions), and it feeds the
-    // eval-CSR kernel pass — the probe's compute-heavy stage — TWICE
-    // (candidacy + verify). Without this the kernel ran at file-split
-    // parallelism twice (measured at sf100: 10 of 32 cores, >23 min);
-    // spread uses every core and the pin computes the shingling once.
-    val repsSh = Layout.spread(repPayloads.select(col("rep_id"),
+    // Spread + pin the shingled reps: they feed the eval-CSR kernel pass —
+    // the probe's compute-heavy stage — TWICE (candidacy + verify). Spread
+    // keeps that pass on every core whatever partitioning the groups arrive
+    // with (AQE coalesces bytes-small shuffles; a few-partition input
+    // measured 10 of 32 cores busy, >23 min, at sf100) and the pin computes
+    // the shingling once.
+    val repsSh = Layout.spread(groups.select(col("rep_id"),
       gf.shingleFpsSorted(col("__payload"), n).as("a_shl"))).pinned()
     val candidates = evalPrefixCandidates(repsSh, evalShRows, threshold)
     // exact-Jaccard verify, candidates only; eval arrays broadcast (a
@@ -1193,19 +1067,13 @@ object Dedup {
         col("__bh").getItem(1) >= lit(threshold) * col("__bh").getItem(0))
       .select(col("id"), col("__text"))
 
-    // rep-fetch canonicalization: candidate text never re-shuffles — the
-    // payload fetch scans the RAW corpus (so the bloom candidacy kernel is
-    // not recomputed) map-side-filtered by the broadcast rep-id set
-    val corpusPayloads = corpus
-      .where(col(textCol).isNotNull)
-      .select(col(idCol).cast("long").as("id"), col(textCol).as("__text"))
-    val (groups, repPayloads) = canonicalGroupsRepFetch(bloomCands, corpusPayloads,
-      "id", TextAnalysis.fingerprint(col("__text")), col("__text"))
+    val groups = canonicalGroups(bloomCands, "id",
+      TextAnalysis.fingerprint(col("__text")), col("__text"))
     val evalGroups = canonicalGroups(evalDocs, "id",
       TextAnalysis.fingerprint(col("__text")), col("__text"))
     // spread + pin for the same reason as [[decontaminate]]'s repsSh: the
-    // rep-fetch frame is scan-derived and feeds the kernel pass twice
-    val candSh = Layout.spread(repPayloads.select(col("rep_id"),
+    // frame feeds the kernel pass twice
+    val candSh = Layout.spread(groups.select(col("rep_id"),
       gf.shingleFpsSorted(col("__payload"), n).as("a_shl"))).pinned()
     // Candidacy via the eval-prefix CSR kernel (recall exactly 1 — see
     // [[evalPrefixCandidates]]). The shared-shingle equi-join this
@@ -1440,12 +1308,9 @@ object Dedup {
       .agg(collect_list(struct(col("id"), col("vec"))).as("items"))
       .select(explode(gf.bucketPairsCos(col("items"), minCos)).as("p"))
       .select(col("p.a_id").as("a_id"), col("p.b_id").as("b_id"))
-    // large-star/small-star, not min-label propagation: near-dup chains at
-    // a cosine threshold can have graph diameter >> the min-label round
-    // budget (observed at 10x with sqrt-scaled k), while star converges in
-    // O(log² n) rounds regardless of diameter. Output contract (comp = min
-    // reachable id) is identical.
-    val comp = connectedComponentsStar(pairs)
+    // near-dup chains at a cosine threshold can have a long graph diameter
+    // (observed at 10x with sqrt-scaled k); the star rounds do not depend on it
+    val comp = connectedComponents(pairs)
     assigned
       .join(comp, Seq("id"), "left")
       .select(col("id").as(idCol), col("cluster"),
@@ -1810,9 +1675,6 @@ object Dedup {
     val kernelPath = estJoinRows > 16L * math.max(nReps, 1L) &&
       (prefRows + (jEff - prefixMinHits).toLong * dRows) * 12L +
         dRows * 16L <= maxBroadcastBytes
-    if (sys.env.contains("GRAFT_DEBUG_PROBE"))
-      println(s"[probe-debug] bcast=$bcastDelta est=$estJoinRows prefRows=$prefRows " +
-        s"nReps=$nReps jEff=$jEff kernel=$kernelPath")
     val cand =
       if (kernelPath) {
         val kPref = if (jEff == prefixMinHits) dPref else prefFor(jEff)

@@ -3,10 +3,11 @@ package graft
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
 
-/** Property checks for the large-star/small-star connected components
-  * (Kiveris 2014) against a driver-side union-find reference — including
-  * the long-path graphs whose diameter defeats plain min-label
-  * propagation. Case counts are small because every case runs Spark jobs.
+/** Property checks for [[graft.ops.Dedup.connectedComponents]] (large-star /
+  * small-star, Kiveris 2014) against an in-memory union-find reference —
+  * including long-path graphs whose diameter is far past any fixed
+  * propagation-round budget. Case counts are small because every case runs
+  * Spark jobs.
   */
 object DedupGraphPropertySpec extends Properties("ConnectedComponentsStar") {
 
@@ -31,20 +32,20 @@ object DedupGraphPropertySpec extends Properties("ConnectedComponentsStar") {
 
   private def runStar(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._
-    graft.ops.Dedup.connectedComponentsStar(edges.toDF("a_id", "b_id"))
+    graft.ops.Dedup.connectedComponents(edges.toDF("a_id", "b_id"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
   private val randomGraph: Gen[List[(Long, Long)]] = Gen.listOfN(25,
-    Gen.zip(Gen.chooseNum(0L, 30L), Gen.chooseNum(0L, 30L))).map(_.filter(e => e._1 != e._2))
+    Gen.zip(Gen.chooseNum(0L, 30L), Gen.chooseNum(0L, 30L))) // self-pairs included
 
   property("random graphs match union-find (component = min reachable id)") =
     forAll(randomGraph) { edges =>
       edges.isEmpty || runStar(edges) == unionFind(edges)
     }
 
-  /** Path graphs of length far past the min-label 20-iteration bound, with
-    * shuffled node labels so the min sits anywhere in the chain. */
+  /** Path graphs of diameter 39-69, with shuffled node labels so the min
+    * sits anywhere in the chain. */
   private val longPath: Gen[List[(Long, Long)]] = for {
     n <- Gen.chooseNum(40, 70)
     seed <- Gen.chooseNum(0L, Long.MaxValue)

@@ -3,6 +3,7 @@ package graft
 import graft.functions.{gf, Kernels}
 import graft.ops.Dedup
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.unsafe.types.UTF8String
 
 class DedupSpec extends SparkSpec {
@@ -115,8 +116,7 @@ class DedupSpec extends SparkSpec {
     assert(clean === Set(3L))
   }
 
-  test("decontaminate rep-fetch canonicalization (variant B) equals the " +
-      "single-shuffle path (variant A) for plain and bloom variants") {
+  test("decontaminate and decontaminateBloom keep the same ids on a duplicate-heavy corpus") {
     val corpus = (0L until 60L).map { i =>
       val base = s"document number ${i % 20} with shared structural words and tail $i"
       (i, if (i % 3 == 0) base.replace(s"tail $i", "tail shared") else base)
@@ -125,25 +125,11 @@ class DedupSpec extends SparkSpec {
       (100L, "document number 7 with shared structural words and tail shared"),
       (101L, "totally absent from the corpus in every shingle dimension")
     ).toDF("doc_id", "text")
-    def withMode[T](mode: String)(f: => T): T = {
-      spark.conf.set("spark.graft.dedup.repFetch", mode)
-      try f finally spark.conf.unset("spark.graft.dedup.repFetch")
-    }
-    val keptB = withMode("on")(
-      Dedup.decontaminate(corpus, evalSet, "text", "doc_id")
-        .select("doc_id").collect().map(_.getLong(0)).toSet)
-    val keptA = withMode("off")(
-      Dedup.decontaminate(corpus, evalSet, "text", "doc_id")
-        .select("doc_id").collect().map(_.getLong(0)).toSet)
-    assert(keptB === keptA)
-    val bloomB = withMode("on")(
-      Dedup.decontaminateBloom(corpus, evalSet, "text", "doc_id")
-        .select("doc_id").collect().map(_.getLong(0)).toSet)
-    val bloomA = withMode("off")(
-      Dedup.decontaminateBloom(corpus, evalSet, "text", "doc_id")
-        .select("doc_id").collect().map(_.getLong(0)).toSet)
-    assert(bloomB === bloomA)
-    assert(bloomB === keptB)
+    val kept = Dedup.decontaminate(corpus, evalSet, "text", "doc_id")
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    val bloom = Dedup.decontaminateBloom(corpus, evalSet, "text", "doc_id")
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(bloom === kept)
   }
 
   test("null texts never pair: canonical paths match the naive paths' empty output") {
@@ -156,38 +142,53 @@ class DedupSpec extends SparkSpec {
   }
 
   test("connectedComponents: multi-hop chains collapse to the min id (multiple iterations)") {
-    // chain 1-2-3-4-5 (needs propagation over 4 hops), plus clique {10,11,12}
-    // and isolated pair {20,21}
-    val pairs = Seq(
-      (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L),
-      (10L, 11L), (11L, 12L), (10L, 12L),
-      (20L, 21L)).toDF("a_id", "b_id")
-    val comps = Dedup.connectedComponents(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(Seq(1L, 2L, 3L, 4L, 5L).forall(comps(_) === 1L))
-    assert(Seq(10L, 11L, 12L).forall(comps(_) === 10L))
-    assert(Seq(20L, 21L).forall(comps(_) === 20L))
-    assert(comps.size === 10)
+    // chain 1-2-3-4-5 (needs propagation over 4 hops), clique {10,11,12},
+    // pair {20,21} also given reversed, and 30 seen only in a self-pair
+    val edges = Seq(
+      (1, 2), (2, 3), (3, 4), (4, 5),
+      (10, 11), (11, 12), (10, 12),
+      (20, 21), (21, 20),
+      (30, 30))
+    val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
+      10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L, 30L -> 30L)
+    val longIds = edges.map { case (a, b) => (a.toLong, b.toLong) }.toDF("a_id", "b_id")
+    val intIds = edges.toDF("a_id", "b_id") // Int-typed ids are widened to long
+    Seq(longIds, intIds).foreach { pairs =>
+      val comps = Dedup.connectedComponents(pairs)
+      assert(comps.schema.map(_.dataType) === Seq(LongType, LongType))
+      val got = comps.collect().map(r => r.getLong(0) -> r.getLong(1))
+      assert(got.length === expected.size) // one row per node
+      assert(got.toMap === expected)
+    }
   }
 
-  test("connectedComponentsStar: long chain where min-label refuses; agreement on cliques") {
-    // a 60-node path: diameter 59 >> the min-label default bound of 20
+  test("connectedComponents: 60-node path is one component; cliques match the expected map") {
+    // a 60-node path: diameter 59, far past what diameter-bound propagation
+    // handles in a fixed round budget
     val path = (0L until 59L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    assertThrows[IllegalStateException] {
-      Dedup.connectedComponents(path).collect()
-    }
-    val comps = Dedup.connectedComponentsStar(path)
+    val comps = Dedup.connectedComponents(path)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(comps.size === 60)
     assert(comps.values.toSet === Set(0L)) // one component, min id 0
-    // on the clique-shaped graphs dedup produces, both formulations agree
     val cliques = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (21L, 20L))
       .toDF("a_id", "b_id")
-    val minLabel = Dedup.connectedComponents(cliques)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val star = Dedup.connectedComponentsStar(cliques)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(star === minLabel)
+    val got = Dedup.connectedComponents(cliques)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L,
+      20L -> 20L, 21L -> 20L))
+  }
+
+  test("nearDupPipeline: a 90-document near-dup chain (diameter > 20) collapses to one keeper") {
+    // 20-word windows over distinct tokens, each shifted 2 words from the
+    // last: consecutive docs share 16 of 20 trigram shingles (Jaccard 0.8),
+    // docs 3 shifts apart sit at exactly 0.5 and 4+ shifts apart below it,
+    // so the duplicate graph is a chain of ~30 hops from end to end
+    val docs = (0 until 90).map { i =>
+      (i.toLong + 1000L, (2 * i until 2 * i + 20).map(w => s"w$w").mkString(" "))
+    }.toDF("doc_id", "text")
+    val kept = Dedup.nearDupPipeline(docs, "text", "doc_id")
+      .select("doc_id").collect().map(_.getLong(0))
+    assert(kept.toSeq === Seq(1000L))
   }
 
   test("dropBoilerplateLines: global hot lines removed, order preserved") {

@@ -28,6 +28,18 @@ class EdgeCasesSpec extends SparkSpec {
     assert(Dedup.dropNearDuplicates(docs, noPairs, "doc_id").count() === 1L)
   }
 
+  test("GRAFT_STATE_STORE: known values case-insensitive, anything else fails loudly") {
+    assert(GraftSession.useRocksDbStateStore(None))
+    assert(GraftSession.useRocksDbStateStore(Some("rocksdb")))
+    assert(GraftSession.useRocksDbStateStore(Some("RocksDB")))
+    assert(!GraftSession.useRocksDbStateStore(Some("hdfs")))
+    assert(!GraftSession.useRocksDbStateStore(Some("HDFS")))
+    assert(!GraftSession.useRocksDbStateStore(Some("Heap")))
+    Seq("", "rocks", "hdfs2", "memory").foreach { v =>
+      assertThrows[IllegalArgumentException](GraftSession.useRocksDbStateStore(Some(v)))
+    }
+  }
+
   test("corpus operators on an empty corpus") {
     // rollup still emits the grand-total row (count 0 over nothing is a
     // deliberate SQL-standard choice: GROUP BY ROLLUP of zero rows -> one
