@@ -211,7 +211,10 @@ class Graft(val spark: SparkSession, datasetRoot: String = "target/graft/dataset
 
   /** Full get_job_results parity (sutro/sdk.py:1131): cached read, column
     * ordering (inputs / metadata / output / diagnostics), optional JSON
-    * unpack (incl. reasoning nesting), optional join-back by id column. */
+    * unpack (incl. reasoning nesting), optional join-back by id column.
+    * The cache is read with the schema recorded at submit (no footer
+    * inference), which keeps a model's declared output schema, so a
+    * declared output unpacks without a probe job. */
   def jobResults(
       id: String,
       includeInputs: Boolean = false,

@@ -59,24 +59,24 @@ object Functions {
     val df = Seq(promptFromInput(inputData)).toDF("__prompt")
     val inferred = Infer.infer(df, model, Seq("__prompt"), outputColumn = "__out",
       truncateRows = true)
+    // a classifier's winner comes from the SAME truncated prompt infer
+    // used (an untruncated recompute could contradict the response when
+    // the only keyword sits past the context window), in the same query
+    val winnerCol = model match {
+      case kc: KeywordClassifier =>
+        kc.classification(Infer.truncateTokens(col("__prompt"), kc.contextWindow))
+      case _ => lit(null)
+    }
     val row = inferred.select(
       col("__out").cast("string"),
       (if (inferred.columns.contains("confidence_score")) col("confidence_score")
-       else lit(1.0)).cast("double")).head()
+       else lit(1.0)).cast("double"),
+      winnerCol.cast("string")).head()
     val response = row.getString(0)
     val conf = row.getDouble(1)
     val predictions = model match {
       case kc: KeywordClassifier =>
-        val winner = {
-          // classification is embedded in the structured JSON output;
-          // recompute it through the model's own column expression over the
-          // SAME truncated prompt infer used (an untruncated recompute
-          // could contradict the response when the only keyword sits past
-          // the context window)
-          val effective = Infer.truncateTokens(col("__prompt"), kc.contextWindow)
-          val r = df.select(kc.classification(effective).cast("string")).head()
-          r.getString(0)
-        }
+        val winner = row.getString(2)
         val others = (kc.classes :+ kc.fallback).filterNot(_ == winner)
         val rest = if (others.isEmpty) 0.0 else (1.0 - conf) / others.size
         (Prediction(winner, conf) +: others.map(Prediction(_, rest)))

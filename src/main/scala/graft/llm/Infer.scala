@@ -46,6 +46,8 @@ object Infer {
     * With randomSeedPerInput the per-row seed is exposed alongside the
     * output as `<outputColumn>_seed` (our local models are deterministic;
     * a sampling backend would consume it in generate()).
+    * A model's declared [[Model.outputSchema]] is stamped on the output
+    * column's metadata, so it travels with the data.
     *
     * Returns df + `outputColumn`.
     */
@@ -62,6 +64,7 @@ object Infer {
     if (truncateRows) prompt = truncateTokens(prompt, model.contextWindow)
     systemPrompt.foreach(sp => prompt = concat(lit(sp + "\n\n"), prompt))
     var out = df.withColumn(outputColumn, model.generate(prompt))
+    model.outputSchema.foreach(s => out = out.withMetadata(outputColumn, Results.schemaMetadata(s)))
     model.confidence(prompt).foreach(c => out = out.withColumn("confidence_score", c))
     if (randomSeedPerInput) out = out.withColumn(s"${outputColumn}_seed", perInputSeed(prompt))
     out

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 
@@ -30,11 +31,16 @@ object Jobs {
     * cache — the local analog of the reference's streamed row counts. */
   case class JobProgress(jobId: String, tasksDone: Long, tasksTotal: Long, rowsWritten: Long)
 
-  /** priority mirrors the reference's job_priority (0 = prototyping). */
-  case class Job(id: String, name: Option[String], resultPath: String,
+  /** priority mirrors the reference's job_priority (0 = prototyping);
+    * schema is the submitted frame's, metadata included, so reading the
+    * cache back needs no footer inference. */
+  case class Job(id: String, name: Option[String], resultPath: String, schema: StructType,
       var status: Status, priority: Int = 0, var failureReason: Option[String] = None)
 
   private val counter = new AtomicLong(0)
+  /** The local properties `SparkContext.setJobGroup` sets. */
+  private val JobGroupKeys =
+    Seq("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
   private val jobs = new ConcurrentHashMap[String, Job]()
 
   /** Resolved job-results cache directory — the single source of truth
@@ -60,12 +66,14 @@ object Jobs {
       onProgress: Option[JobProgress => Unit]): String = {
     val id = s"job-${counter.incrementAndGet()}"
     val path = s"$cacheDir/$id.parquet"
-    val job = Job(id, name, path, Queued, priority)
+    val job = Job(id, name, path, df.schema, Queued, priority)
     jobs.put(id, job)
     job.status = Running
     val sc = df.sparkSession.sparkContext
     val groupId = s"graft-job-group-$id"
     val tracked = onProgress.map(f => Progress.register(sc, groupId, id, f))
+    // the caller's job group (e.g. a tracer's span group) is put back after
+    val callerGroup = JobGroupKeys.map(k => k -> sc.getLocalProperty(k))
     if (tracked.isDefined) sc.setJobGroup(groupId, s"graft $id", interruptOnCancel = false)
     val t0 = System.nanoTime()
     try {
@@ -92,7 +100,7 @@ object Jobs {
         throw e
     } finally {
       if (tracked.isDefined) {
-        sc.clearJobGroup()
+        callerGroup.foreach { case (k, v) => sc.setLocalProperty(k, v) }
         Progress.complete(groupId)
       }
     }
@@ -107,10 +115,11 @@ object Jobs {
   def failureReason(id: String): Option[String] =
     Option(jobs.get(id)).flatMap(_.failureReason)
 
+  /** The cached results, read with the schema recorded at submit. */
   def results(spark: SparkSession, id: String): DataFrame = {
     val job = Option(jobs.get(id)).getOrElse(throw new NoSuchElementException(s"unknown job $id"))
     require(job.status == Succeeded, s"job $id is ${job.status}")
-    spark.read.parquet(job.resultPath)
+    spark.read.schema(job.schema).parquet(job.resultPath)
   }
 
   /** Await a terminal status (reference await_job_completion; local jobs

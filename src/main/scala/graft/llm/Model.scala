@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** A model in graft is a pure columnar transform prompt→output.
   *
@@ -28,6 +29,12 @@ trait Model extends Serializable {
   /** Optional per-row confidence in [0,1] — surfaces as the reference's
     * `confidence_score` results column when defined. */
   def confidence(prompt: Column): Option[Column] = None
+
+  /** Schema of the structured JSON output when the model fixes it (the
+    * reference's declared `output_schema`). [[Infer.infer]] stamps it on
+    * the output column, so [[Results.unpackJson]] needs no data probe.
+    * None for free-text models. */
+  def outputSchema: Option[StructType] = None
 }
 
 /** Echoes the prompt back, truncated to `maxChars` — the identity model used
@@ -64,6 +71,9 @@ case class KeywordClassifier(classes: Seq[String], fallback: String = "other") e
   /** High confidence on a keyword hit, low on fallback. */
   override def confidence(prompt: Column): Option[Column] =
     Some(when(classification(prompt) === fallback, lit(0.5)).otherwise(lit(0.9)))
+  /** What a JSON read of [[generate]]'s output infers: fields sorted by name. */
+  override def outputSchema: Option[StructType] = Some(StructType(Seq(
+    StructField("classification", StringType), StructField("scratchpad", StringType))))
 }
 
 /** Deterministic LLM-judge score in [lo, hi] (sutro/templates/evals.py:13):
@@ -74,6 +84,8 @@ case class JudgeScorer(lo: Int = 0, hi: Int = 10) extends Model {
     concat(lit("{\"score\":"), score(prompt).cast("string"), lit("}"))
   def score(prompt: Column): Column =
     lit(lo) + pmod(length(prompt), lit(hi - lo + 1))
+  override def outputSchema: Option[StructType] =
+    Some(StructType(Seq(StructField("score", LongType))))
 }
 
 /** Deterministic feature-hash embedder (sutro/templates/embed.py:9): tokens

@@ -170,18 +170,26 @@ object Streams {
     * key-universe-scaled monitors — scale favors the per-row-cheap
     * provider. Default: heap + join state format 2. Session conf
     * `spark.graft.stream.join.stateStore=rocksdb` (or env
-    * GRAFT_STREAM_JOIN_STATE_STORE=rocksdb) keeps the session default
-    * instead; results are provider- and format-identical (spec-asserted). */
-  private def joinReplayConf(spark: SparkSession): Map[String, String] = {
-    val choice = spark.conf.getOption("spark.graft.stream.join.stateStore")
+    * GRAFT_STREAM_JOIN_STATE_STORE=rocksdb) selects RocksDB (changelog
+    * checkpointing, join state format 3, as [[graft.GraftSession]] sets it)
+    * explicitly, whatever the session's own store; results are
+    * provider- and format-identical (spec-asserted). */
+  private def joinReplayConf(spark: SparkSession): Map[String, String] =
+    joinStateConf(spark.conf.getOption("spark.graft.stream.join.stateStore")
       .orElse(sys.env.get("GRAFT_STREAM_JOIN_STATE_STORE"))
-      .getOrElse("hdfs")
-    if (choice == "rocksdb") Map.empty
+      .getOrElse("hdfs"))
+
+  /** The join replay's state-store conf for a [[joinReplayConf]] choice. */
+  private[graft] def joinStateConf(choice: String): Map[String, String] =
+    if (choice == "rocksdb") Map(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.join.stateFormatVersion" -> "3",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
     else Map(
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
       "spark.sql.streaming.join.stateFormatVersion" -> "2")
-  }
 
   /** Run a streaming frame to a uniquely-named memory sink under
     * AvailableNow and return the materialized table ([[replayConf]] bound
