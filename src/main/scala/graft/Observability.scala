@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
-import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 /** Spark-native analog of the reference's batch-run tracing
@@ -29,26 +28,34 @@ object Observability {
       atMillis: Long,
       jobId: Option[String] = None)
 
-  private val traces = new ConcurrentLinkedQueue[Trace]()
+  /** Capacity of the trace log: a ring that keeps the newest traces and
+    * drops the oldest, so a long-lived session's log stays bounded. */
+  private[graft] val MaxTraces = 10000
+
+  private val traces = new java.util.ArrayDeque[Trace](MaxTraces)
 
   /** Record a trace directly (the Jobs registry stamps its job id here —
     * a listener cannot attribute an action to a job race-free). */
-  def record(trace: Trace): Unit = traces.add(trace): Unit
+  def record(trace: Trace): Unit = traces.synchronized {
+    if (traces.size == MaxTraces) traces.removeFirst()
+    traces.addLast(trace)
+  }
+
+  private def snapshot: Seq[Trace] = traces.synchronized(traces.asScala.toVector)
 
   /** Traces belonging to one job, oldest first. */
-  def forJob(jobId: String): Seq[Trace] =
-    traces.asScala.toSeq.filter(_.jobId.contains(jobId))
+  def forJob(jobId: String): Seq[Trace] = snapshot.filter(_.jobId.contains(jobId))
   private val attached = java.util.Collections.synchronizedSet(new java.util.HashSet[String]())
 
   private final class Listener extends QueryExecutionListener {
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
       val rows = try qe.optimizedPlan.stats.rowCount.map(_.toLong).getOrElse(-1L)
       catch { case _: Throwable => -1L }
-      traces.add(Trace(funcName, durationNs / 1000000L, success = true, None, rows,
+      record(Trace(funcName, durationNs / 1000000L, success = true, None, rows,
         System.currentTimeMillis()))
     }
     override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
-      traces.add(Trace(funcName, 0L, success = false, Some(exception.getMessage), -1L,
+      record(Trace(funcName, 0L, success = false, Some(exception.getMessage), -1L,
         System.currentTimeMillis()))
   }
 
@@ -58,6 +65,6 @@ object Observability {
     if (attached.add(id)) spark.listenerManager.register(new Listener)
   }
 
-  def recent(n: Int = 100): Seq[Trace] = traces.asScala.toSeq.takeRight(n)
-  def clear(): Unit = traces.clear()
+  def recent(n: Int = 100): Seq[Trace] = snapshot.takeRight(n)
+  def clear(): Unit = traces.synchronized(traces.clear())
 }

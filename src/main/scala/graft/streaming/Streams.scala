@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 /** Structured Streaming surface over the events table.
   *
@@ -111,126 +111,108 @@ object Streams {
     else raw
   }
 
-  /** Session conf for the one-shot replay harness, applied around query
-    * start (both values bind at query start only, so the scope is exactly
-    * the started query):
+  /** Session conf for the one-shot replay harness, bound at query start
+    * (both values bind at query start only, so the scope is exactly the
+    * started query):
     *
-    *  - Shuffle partitions drop to a small replay default (state partition
-    *    count is fixed per checkpoint at query start, so this binds only
-    *    the replay harness): every micro-batch commits one state-store
-    *    checkpoint PER PARTITION per stateful operator, so a 10-batch
-    *    staged replay at the session's 32 partitions pays ~320 tiny
-    *    checkpoint commits of pure fixed overhead — at harness scale the
-    *    state fits comfortably in far fewer partitions. A real deployment
-    *    sizes spark.sql.shuffle.partitions for its cluster before starting
-    *    the query; GRAFT_STREAM_SHUFFLE_PARTITIONS overrides.
-    *  - The trailing NO-DATA micro-batch (engine default on) exists to let
-    *    watermark-driven state flush after the last data batch. The staged
+    *  - 8 shuffle partitions (state partition count is fixed per
+    *    checkpoint at query start, so this binds only the replay harness):
+    *    every micro-batch commits one state-store checkpoint PER PARTITION
+    *    per stateful operator, so a 10-batch staged replay at the session's
+    *    32 partitions pays ~320 tiny checkpoint commits of pure fixed
+    *    overhead — at harness scale the state fits comfortably in far fewer
+    *    partitions. A real deployment sizes spark.sql.shuffle.partitions
+    *    for its cluster before starting the query.
+    *  - No trailing NO-DATA micro-batch (engine default on; it exists to let
+    *    watermark-driven state flush after the last data batch). The staged
     *    replays never need it: the last DATA batch (sentinel +20h) already
     *    runs with the watermark advanced past sentinel +10h − delay, which
     *    finalizes and emits every REAL window / session / unmatched join
     *    row; a no-data batch could only emit sentinel-keyed rows, which
     *    every consumer filters (event_type '__sentinel' / user_id −1), and
     *    unwatermarked queries never run one at all. Measured (r14
-    *    attribution): that batch costs a full fixed-overhead micro-batch —
-    *    ~0.8–1.1 s on the stream-stream joins at sf0.1, where its 32 store
-    *    commits alone sum to ~3 s of task time. Batch-equality is
-    *    spec-asserted and oracle-checked either way;
-    *    GRAFT_STREAM_NODATA_BATCHES=1 restores the engine default for A/B. */
-  private def replayConf: Map[String, String] = Map(
-    "spark.sql.shuffle.partitions" ->
-      sys.env.getOrElse("GRAFT_STREAM_SHUFFLE_PARTITIONS", "8"),
-    "spark.sql.streaming.noDataMicroBatches.enabled" ->
-      (if (sys.env.get("GRAFT_STREAM_NODATA_BATCHES").contains("1")) "true"
-       else "false"))
+    *    attribution, VERDICT.md round 14): that batch costs a full
+    *    fixed-overhead micro-batch — ~0.8–1.1 s on the stream-stream joins
+    *    at sf0.1, where its 32 store commits alone sum to ~3 s of task time.
+    *    Batch-equality is spec-asserted and oracle-checked. */
+  private val ReplayConf: Map[String, String] = Map(
+    "spark.sql.shuffle.partitions" -> "8",
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
 
-  private def withReplayConf[A](
-      spark: SparkSession, extra: Map[String, String] = Map.empty)(body: => A): A = {
-    val priors = (replayConf ++ extra).map { case (k, v) =>
+  /** State store for the stream-stream JOIN replays: the heap-backed
+    * provider with join state format 2. Every other stateful query runs on
+    * the session's RocksDB ([[graft.GraftSession.RocksDbState]]); the
+    * choice follows the operator's shape. The join replays' buffers are
+    * bounded by the chunk-row budget BY CONSTRUCTION (the §9.4
+    * discipline), so the heap provider is memory-safe here in a way it is
+    * not for the key-universe-scaled monitors. Measured both ways in round
+    * 14 (same-JVM steady A/Bs, repeats bounding drift): RocksDB wins when
+    * per-batch state is tiny (sf0.1, ~40k buffered rows: 5.2-5.4 → 3.7-3.8
+    * s — the heap provider's per-commit checkpoint-file fan-out
+    * dominates), but LOSES once chunks carry ~1M rows (sf1: inner 4.4-5.1
+    * heap vs 5.5-6.0 rocks, outer 5.2-5.7 vs 8.6-9.7 — per-row JNI
+    * put/iterate dominates, worst on the outer join's eviction scans), so
+    * scale favors the per-row-cheap provider. Results are provider- and
+    * format-identical (spec-asserted). */
+  private[graft] val JoinReplayState: Map[String, String] = Map(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
+    "spark.sql.streaming.join.stateFormatVersion" -> "2")
+
+  private def uniqueName(prefix: String): String = s"${prefix}_${counter.incrementAndGet()}"
+
+  /** Run one AvailableNow replay: `sink` sets up the writer (format, path,
+    * output mode), the query starts under [[ReplayConf]] ++ `state` (prior
+    * session values restored once it has started), and after it finishes
+    * its progress is recorded and its checkpoint deleted — a completed
+    * one-shot run never needs restart recovery, so library callers do not
+    * accumulate one orphan checkpoint per invocation. */
+  private def replay(df: DataFrame, name: String, state: Map[String, String] = Map.empty)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
+    val spark = df.sparkSession
+    val ckpt = scratchDir(s"$name-ckpt")
+    val priors = (ReplayConf ++ state).map { case (k, v) =>
       val prior = spark.conf.getOption(k)
       spark.conf.set(k, v)
       k -> prior
     }
-    try body finally priors.foreach {
+    val q = try {
+      sink(df.writeStream)
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow())
+        .start()
+    } finally priors.foreach {
       case (k, Some(x)) => spark.conf.set(k, x)
       case (k, None) => spark.conf.unset(k)
     }
-  }
-
-  /** State-store choice for the stream-stream JOIN replays, measured both
-    * ways in round 14 (same-JVM steady A/Bs, repeats bounding drift):
-    * the session-default RocksDB wins when per-batch state is tiny (sf0.1,
-    * ~40k buffered rows: 5.2-5.4 → 3.7-3.8 s — the heap provider's
-    * per-commit checkpoint-file fan-out dominates), but LOSES once chunks
-    * carry ~1M rows (sf1: inner 4.4-5.1 heap vs 5.5-6.0 rocks, outer
-    * 5.2-5.7 vs 8.6-9.7 — per-row JNI put/iterate dominates, worst on the
-    * outer join's eviction scans). The replay buffers are bounded by the
-    * chunk-row budget BY CONSTRUCTION (the §9.4 discipline), so the heap
-    * provider is memory-safe here in a way it is not for the
-    * key-universe-scaled monitors — scale favors the per-row-cheap
-    * provider. Default: heap + join state format 2. Session conf
-    * `spark.graft.stream.join.stateStore=rocksdb` (or env
-    * GRAFT_STREAM_JOIN_STATE_STORE=rocksdb) selects RocksDB (changelog
-    * checkpointing, join state format 3, as [[graft.GraftSession]] sets it)
-    * explicitly, whatever the session's own store; results are
-    * provider- and format-identical (spec-asserted). */
-  private def joinReplayConf(spark: SparkSession): Map[String, String] =
-    joinStateConf(spark.conf.getOption("spark.graft.stream.join.stateStore")
-      .orElse(sys.env.get("GRAFT_STREAM_JOIN_STATE_STORE"))
-      .getOrElse("hdfs"))
-
-  /** The join replay's state-store conf for a [[joinReplayConf]] choice. */
-  private[graft] def joinStateConf(choice: String): Map[String, String] =
-    if (choice == "rocksdb") Map(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.join.stateFormatVersion" -> "3",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
-    else Map(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-      "spark.sql.streaming.join.stateFormatVersion" -> "2")
-
-  /** Run a streaming frame to a uniquely-named memory sink under
-    * AvailableNow and return the materialized table ([[replayConf]] bound
-    * at query start). */
-  private def runToMemory(df: DataFrame, prefix: String, mode: String): DataFrame = {
-    val spark = df.sparkSession
-    val name = s"${prefix}_${counter.incrementAndGet()}"
-    val ckpt = scratchDir(s"$name-ckpt")
-    val q = withReplayConf(spark) {
-      df.writeStream
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode(mode)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
     q.awaitTermination()
-    // state-store observability for scale rehearsals: the final batch's
+    // state-store observability for scale rehearsals: each batch's
     // progress carries per-operator state rows/bytes — the number that
     // proves (or disproves) the bounded-state contract at 10x
     if (sys.env.contains("GRAFT_STREAM_PROGRESS"))
       q.recentProgress.foreach(p => println(s"[stream-progress] $name ${p.json}"))
     recordProgress(q.recentProgress)
-    deleteRecursively(ckpt) // one-shot run: the checkpoint is disposable
-    spark.table(name)
+    deleteRecursively(ckpt)
   }
 
-  /** Run a streaming frame to a PARQUET file sink under AvailableNow and
-    * batch-read the committed output back — the harness path for streams
-    * whose OUTPUT SCALES WITH THE DATA (the stream-stream joins): the
-    * memory sink collects every result row to the driver, which at sf100
-    * killed `stream_join_outer` on spark.driver.maxResultSize (1.17 GB of
+  /** Run a streaming frame to a uniquely-named memory sink and return the
+    * materialized table. */
+  private def runToMemory(df: DataFrame, prefix: String, mode: String): DataFrame = {
+    val name = uniqueName(prefix)
+    replay(df, name)(_.format("memory").queryName(name).outputMode(mode))
+    df.sparkSession.table(name)
+  }
+
+  /** Run a streaming frame to a PARQUET file sink and batch-read the
+    * committed output back — the harness path for streams whose OUTPUT
+    * SCALES WITH THE DATA (the stream-stream joins): the memory sink
+    * collects every result row to the driver, which at sf100 killed
+    * `stream_join_outer` on spark.driver.maxResultSize (1.17 GB of
     * serialized join output). The file sink writes executor-side and the
     * read-back stays a lazy distributed scan; downstream consumers (noop
     * bench write, Verify's parquet dump, spec collects at oracle scale)
     * decide what actually moves. Output dir is per-invocation (the sink
-    * appends — reuse would duplicate); the checkpoint dir is deleted here
-    * after the clean one-shot stop (same as runToMemory — it exists only
-    * for restart recovery, which a completed AvailableNow run never needs),
-    * so library callers do not accumulate one orphan ckpt per invocation.
+    * appends — reuse would duplicate).
     *
     * CONSUME-BEFORE-CLEANUP CONTRACT: the returned frame is a LAZY scan
     * over files in [[scratchRoot]]. Materialize (write/collect/noop) before
@@ -240,30 +222,14 @@ object Streams {
     * GRAFT_STREAM_SCRATCH at storage they manage; output dirs are
     * per-invocation and otherwise live until the JVM's owner sweeps them. */
   private def runToParquet(
-      df: DataFrame, prefix: String,
-      extraConf: Map[String, String] = Map.empty): DataFrame = {
-    val spark = df.sparkSession
-    val name = s"${prefix}_${counter.incrementAndGet()}"
-    val out = scratchDir(s"$name-out")
-    val ckpt = scratchDir(s"$name-ckpt")
-    val q = withReplayConf(spark, extraConf) {
-      df.writeStream
-        .format("parquet")
-        .option("path", out.toString)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    if (sys.env.contains("GRAFT_STREAM_PROGRESS"))
-      q.recentProgress.foreach(p => println(s"[stream-progress] $name ${p.json}"))
-    recordProgress(q.recentProgress)
-    deleteRecursively(ckpt) // one-shot run: the checkpoint is disposable
+      df: DataFrame, prefix: String, state: Map[String, String] = Map.empty): DataFrame = {
+    val name = uniqueName(prefix)
+    val out = scratchDir(s"$name-out").toString
+    replay(df, name, state)(_.format("parquet").option("path", out).outputMode("append"))
     // explicit schema: a stream that legitimately emitted zero rows
     // leaves only _spark_metadata, and schema inference would fail where
     // the memory sink would have returned an empty frame
-    spark.read.schema(df.schema).parquet(out.toString)
+    df.sparkSession.read.schema(df.schema).parquet(out)
   }
 
   /** Run a COMPLETE-mode streaming aggregate through a foreachBatch →
@@ -278,29 +244,14 @@ object Streams {
     * and the read-back is a lazy distributed scan. Same consume-before-
     * cleanup contract as [[runToParquet]]. */
   private def runToSnapshot(df: DataFrame, prefix: String): DataFrame = {
-    val spark = df.sparkSession
-    val name = s"${prefix}_${counter.incrementAndGet()}"
-    val out = scratchDir(s"$name-out")
-    val ckpt = scratchDir(s"$name-ckpt")
-    val outPath = out.toString
-    val q = withReplayConf(spark) {
-      df.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          batch.write.mode("overwrite").parquet(outPath)
-        }
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    if (sys.env.contains("GRAFT_STREAM_PROGRESS"))
-      q.recentProgress.foreach(p => println(s"[stream-progress] $name ${p.json}"))
-    recordProgress(q.recentProgress)
-    deleteRecursively(ckpt) // one-shot run: the checkpoint is disposable
+    val name = uniqueName(prefix)
+    val out = scratchDir(s"$name-out").toString
+    replay(df, name)(_.foreachBatch { (batch: Dataset[Row], _: Long) =>
+      batch.write.mode("overwrite").parquet(out)
+    }.outputMode("complete"))
     // explicit schema: an empty stream runs zero batches and leaves an
     // empty snapshot dir, where inference would fail
-    spark.read.schema(df.schema).parquet(outPath)
+    df.sparkSession.read.schema(df.schema).parquet(out)
   }
 
   /** Tumbling 1-hour window aggregation over the events stream: event count
@@ -358,19 +309,26 @@ object Streams {
 
   private val stageCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
+  /** Name of the staging manifest: the `_` prefix keeps Spark's file
+    * source from listing it as input. */
+  private val StageManifest = "_graft_stage"
+
+  private val eventRowsCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+
+  // metadata-only count, memoized per dir: repeated harness invocations
+  // (bench medians) must not pay a count job per run
+  private def eventRows(spark: SparkSession, sfDir: String): Long =
+    eventRowsCache.computeIfAbsent(sfDir,
+      _ => spark.read.parquet(s"$sfDir/events.parquet").count())
+
   /** rows / budget chunk count for a staged replay, with the budget read
     * from `confKey` (falling back to `defaultBudget`). The parquet count is
     * metadata-only. A zero budget would make ceil(rows/0.0) = Infinity
     * whose toInt is Int.MaxValue — ~2^31 backfill chunks instead of an
     * error — hence the require. */
-  private val eventRowsCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   private def autoChunkCount(
       spark: SparkSession, sfDir: String, confKey: String, defaultBudget: Long): Int = {
-    // metadata-only count, memoized per dir: repeated harness invocations
-    // (bench medians) must not pay a count job per run
-    val rows: Long = eventRowsCache.computeIfAbsent(sfDir,
-      _ => spark.read.parquet(s"$sfDir/events.parquet").count())
+    val rows = eventRows(spark, sfDir)
     val budget = spark.conf.getOption(confKey).map(_.toLong).getOrElse(defaultBudget)
     require(budget > 0, s"$confKey must be > 0, got $budget")
     math.max(1, math.ceil(rows.toDouble / budget).toInt)
@@ -391,7 +349,9 @@ object Streams {
     * exactly-once output (a restart with the same checkpoint sees no new
     * input and writes nothing new — idempotent). `workDir` holds the
     * staged input, the checkpoint, and the output; calling again with the
-    * same workDir resumes from the checkpoint instead of reprocessing. */
+    * same workDir resumes from the checkpoint instead of reprocessing, and
+    * fails loudly if the stage no longer matches (a changed
+    * `spark.graft.stream.batchRows` or source, see [[stagedEvents]]). */
   def windowAggAppendToParquet(spark: SparkSession, sfDir: String, workDir: String): DataFrame = {
     val stage = new java.io.File(workDir, "stage")
     val out = new java.io.File(workDir, "out")
@@ -409,7 +369,7 @@ object Streams {
   }
 
   /** Stage [real events, time-chunked] [sentinel +10h] [sentinel +20h]
-    * into `stageDir` (skipped when already staged — enables
+    * into `stageDir` (skipped when its manifest says so — enables
     * checkpoint-resume runs), and build the append-mode windowed
     * aggregation over a maxFilesPerTrigger=1 stream of it: each sentinel
     * batch advances the watermark past the previous batches' windows, so
@@ -430,11 +390,16 @@ object Streams {
     * single file; a directory-shaped source at chunks = 1 pays one
     * single-task rewrite, which every caller bounds by its chunk-row
     * budget — callers never pass chunks = 1 for a beyond-budget table)
-    * followed by two watermark-advancing sentinel files.
-    * Every file lands with REPLACE_EXISTING, so a retry after a partial
-    * staging crash re-stages cleanly instead of wedging the stage dir on
-    * FileAlreadyExistsException (the completeness probe only sees the
-    * LAST-staged sentinel file). */
+    * followed by two watermark-advancing sentinel files, then the
+    * [[StageManifest]].
+    *
+    * The manifest is written LAST, so its presence marks a complete stage
+    * and its content (chunk count, source row count, source path) says
+    * what was staged. A stage dir without one (fresh, or a crash mid-
+    * staging) is cleared and restaged. A stage dir whose manifest does not
+    * match this run fails loudly: a resume that replays a checkpoint over
+    * differently-chunked files could reprocess events or never emit
+    * windows, which breaks the idempotent-resume contract. */
   private def stagedEvents(
       spark: SparkSession, sfDir: String, stageDir: String, chunks: Int): DataFrame = {
     val path = s"$sfDir/events.parquet"
@@ -442,7 +407,19 @@ object Streams {
     val tsIsLong = batchSchema("ts").dataType == org.apache.spark.sql.types.LongType
 
     val stage = new java.io.File(stageDir)
-    if (!new java.io.File(stage, f"events-${chunks + 1}%03d.parquet").exists()) {
+    val manifest = new java.io.File(stage, StageManifest)
+    val want = Map("chunks" -> chunks.toString,
+      "rows" -> eventRows(spark, sfDir).toString, "source" -> path)
+    if (manifest.isFile) {
+      val got = new String(java.nio.file.Files.readAllBytes(manifest.toPath), "UTF-8").linesIterator
+        .map(_.split("=", 2)).collect { case Array(k, v) => k -> v }.toMap
+      if (got != want) throw new IllegalStateException(
+        s"stage dir $stageDir was staged with ${got.getOrElse("chunks", "?")} chunks " +
+          s"(rows ${got.getOrElse("rows", "?")}, source ${got.getOrElse("source", "?")}) " +
+          s"but this run needs $chunks chunks (rows ${want("rows")}, source $path); " +
+          "delete the stage dir and its checkpoint to restage")
+    } else {
+      deleteRecursively(stage)
       stage.mkdirs()
       val raw = spark.read.parquet(path)
       val maxTs = raw.agg(max(col("ts"))).head().get(0)
@@ -536,6 +513,11 @@ object Streams {
       }
       stageOne(sentinel(10), f"events-$chunks%03d.parquet", t0 + (chunks + 1) * 1000L)
       stageOne(sentinel(20), f"events-${chunks + 1}%03d.parquet", t0 + (chunks + 2) * 1000L)
+      val tmp = new java.io.File(stage, s"$StageManifest.tmp").toPath
+      java.nio.file.Files.write(tmp,
+        want.map { case (k, v) => s"$k=$v\n" }.mkString.getBytes("UTF-8"))
+      java.nio.file.Files.move(tmp, manifest.toPath,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     }
 
     val stream = spark.readStream
@@ -578,8 +560,12 @@ object Streams {
   def clickAttributionOuterAvailableNow(spark: SparkSession, sfDir: String): DataFrame =
     clickAttribution(spark, sfDir, "left_outer", "graft_stream_join_outer")
 
-  private def clickAttribution(
-      spark: SparkSession, sfDir: String, joinType: String, prefix: String): DataFrame = {
+  /** The shared stream-stream join replay; `state` is the state-store conf
+    * bound at query start ([[JoinReplayState]] outside the provider
+    * equality spec). */
+  private[graft] def clickAttribution(
+      spark: SparkSession, sfDir: String, joinType: String, prefix: String,
+      state: Map[String, String] = JoinReplayState): DataFrame = {
     // state-scaled chunking (backfill replay discipline for the join
     // buffers): within one micro-batch NOTHING evicts, so a single-batch
     // backlog buffers every click and purchase — state = the whole history,
@@ -618,10 +604,8 @@ object Streams {
       .select(col("click_id"), col("purchase_id"),
         col("user_id"), col("click_ts"), col("purchase_ts"))
     // join output scales with the data — file sink, not the driver-side
-    // memory sink (which died on maxResultSize at sf100, round-11 verdict);
-    // state store per [[joinReplayConf]] (heap-backed for the chunk-bounded
-    // replay buffers, measured faster at 10x)
-    runToParquet(joined, prefix, joinReplayConf(spark)).where(col("user_id") >= 0)
+    // memory sink (which died on maxResultSize at sf100, round-11 verdict)
+    runToParquet(joined, prefix, state).where(col("user_id") >= 0)
   }
 
   /** Per-content-key dedup state for streaming exact dedup. */
@@ -1131,13 +1115,13 @@ object Streams {
 
   def rollupIncrementalAvailableNow(spark: SparkSession, sfDir: String): DataFrame = {
     val name = streamRollupFor.computeIfAbsent(sfDir, _ => {
-      val n = s"graft_stream_rollup_${counter.incrementAndGet()}"
+      val n = uniqueName("graft_stream_rollup")
       graft.ops.AggIndex.buildStreaming(spark, n)
       val ev = streamTable(spark, sfDir, "events.parquet")
         .where(col("value").isNotNull)
       val ckpt = scratchDir(s"$n-ckpt")
       val q = ev.writeStream
-        .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+        .foreachBatch { (df: Dataset[Row], id: Long) =>
           graft.ops.AggIndex.appendBatch(df, id, n)
         }
         .option("checkpointLocation", ckpt.toString)

@@ -28,29 +28,6 @@ class EdgeCasesSpec extends SparkSpec {
     assert(Dedup.dropNearDuplicates(docs, noPairs, "doc_id").count() === 1L)
   }
 
-  test("GRAFT_STATE_STORE: known values case-insensitive, anything else fails loudly") {
-    assert(GraftSession.useRocksDbStateStore(None))
-    assert(GraftSession.useRocksDbStateStore(Some("rocksdb")))
-    assert(GraftSession.useRocksDbStateStore(Some("RocksDB")))
-    assert(!GraftSession.useRocksDbStateStore(Some("hdfs")))
-    assert(!GraftSession.useRocksDbStateStore(Some("HDFS")))
-    assert(!GraftSession.useRocksDbStateStore(Some("Heap")))
-    Seq("", "rocks", "hdfs2", "memory").foreach { v =>
-      assertThrows[IllegalArgumentException](GraftSession.useRocksDbStateStore(Some(v)))
-    }
-  }
-
-  test("join replay state store: the rocksdb escape sets RocksDB + format 3 itself; default heap + 2") {
-    val rocks = graft.streaming.Streams.joinStateConf("rocksdb")
-    assert(rocks("spark.sql.streaming.stateStore.providerClass") ===
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    assert(rocks("spark.sql.streaming.join.stateFormatVersion") === "3")
-    val heap = graft.streaming.Streams.joinStateConf("hdfs")
-    assert(heap("spark.sql.streaming.stateStore.providerClass") ===
-      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-    assert(heap("spark.sql.streaming.join.stateFormatVersion") === "2")
-  }
-
   test("corpus operators on an empty corpus") {
     // rollup still emits the grand-total row (count 0 over nothing is a
     // deliberate SQL-standard choice: GROUP BY ROLLUP of zero rows -> one

@@ -33,4 +33,22 @@ class ObservabilitySpec extends SparkSpec {
     // ad-hoc actions carry no job id; forJob filters them out
     assert(Observability.forJob("job-nonexistent").isEmpty)
   }
+
+  test("the trace log is a bounded ring: the oldest traces drop past the cap") {
+    val cap = Observability.MaxTraces
+    Observability.clear()
+    try {
+      (0 until cap + 5).foreach { i =>
+        Observability.record(Observability.Trace(s"ring-$i", 0L, success = true, None, -1L,
+          i.toLong, jobId = Some(s"ring-job-$i")))
+      }
+      val all = Observability.recent(Int.MaxValue)
+      assert(all.size === cap)
+      assert(all.head.action === "ring-5")
+      assert(all.last.action === s"ring-${cap + 4}")
+      assert((0 until 5).forall(i => Observability.forJob(s"ring-job-$i").isEmpty))
+      assert(Observability.forJob(s"ring-job-${cap + 4}").map(_.action) ===
+        Seq(s"ring-${cap + 4}"))
+    } finally Observability.clear()
+  }
 }

@@ -72,6 +72,30 @@ class StreamingSpec extends SparkSpec {
     assert(second.count() === batchCount)
   }
 
+  test("resume under a different batchRows budget fails loudly instead of restaging") {
+    val work = java.nio.file.Files.createTempDirectory("graft-stream-resume").toString
+    val key = "spark.graft.stream.batchRows"
+    val staged = try {
+      spark.conf.set(key, "200")
+      Streams.windowAggAppendToParquet(spark, sfDir, work).count()
+    } finally spark.conf.unset(key)
+    assert(staged > 0)
+    val manifest = new java.io.File(s"$work/stage/_graft_stage")
+    assert(manifest.isFile)
+    val chunks = math.ceil(
+      graft.io.Tables.events(spark, sfDir).count().toDouble / 200).toInt
+    val before = new String(java.nio.file.Files.readAllBytes(manifest.toPath), "UTF-8")
+    assert(before.contains(s"chunks=$chunks\n"))
+    // the default budget stages ONE chunk: the checkpoint's offsets refer
+    // to the multi-chunk files, so the stage must not be silently redone
+    val ex = intercept[IllegalStateException](
+      Streams.windowAggAppendToParquet(spark, sfDir, work))
+    assert(ex.getMessage.contains(s"$work/stage"))
+    assert(ex.getMessage.contains(s"staged with $chunks chunks"))
+    assert(ex.getMessage.contains("needs 1 chunks"))
+    assert(new String(java.nio.file.Files.readAllBytes(manifest.toPath), "UTF-8") === before)
+  }
+
   test("clickAttributionAvailableNow (stream-stream join) equals the batch join") {
     val streamed = Streams.clickAttributionAvailableNow(spark, sfDir)
       .orderBy("click_id", "purchase_id").collect()
@@ -200,8 +224,8 @@ class StreamingSpec extends SparkSpec {
   test("heap-backed state store: sessionization identical to the RocksDB default") {
     // the state store provider must be a pure swap: same query, same rows.
     // RocksDB is the session default since round 14 (GraftSession), so the
-    // equality is asserted against the heap-backed engine provider — the
-    // GRAFT_STATE_STORE=hdfs escape hatch must stay bit-identical.
+    // equality is asserted against the heap-backed engine provider, set
+    // through Spark's own key as a library user would.
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prior = spark.conf.getOption(key)
     val heap = try {
@@ -224,23 +248,16 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stream-stream join: RocksDB + state format v3 equals the heap + v2 default (inner + outer)") {
-    // the join replay defaults to heap + join stateFormatVersion 2
-    // (joinReplayConf — measured faster once chunks carry ~1M rows); the
-    // spark.graft.stream.join.stateStore=rocksdb escape keeps the session's
-    // RocksDB + v3 (one store with virtual column families per partition
-    // instead of four). Neither may change a single emitted row.
-    val key = "spark.graft.stream.join.stateStore"
-    def run() = Streams.clickAttributionOuterAvailableNow(spark, sfDir)
+    // the join replay runs on heap + join stateFormatVersion 2
+    // (Streams.JoinReplayState — measured faster once chunks carry ~1M
+    // rows); the session's RocksDB + v3 (one store with virtual column
+    // families per partition instead of four) must not change a single
+    // emitted row.
+    def run(state: Map[String, String]) = Streams.clickAttribution(
+        spark, sfDir, "left_outer", "graft_stream_join_outer", state)
       .orderBy(col("click_id"), col("purchase_id").asc_nulls_first).collect()
-    val heapV2 = run() // harness default
-    val prior = spark.conf.getOption(key)
-    val rocksV3 = try {
-      spark.conf.set(key, "rocksdb")
-      run()
-    } finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    val heapV2 = run(Streams.JoinReplayState) // harness default
+    val rocksV3 = run(GraftSession.RocksDbState)
     assert(rocksV3.length === heapV2.length)
     assert(rocksV3.sameElements(heapV2))
   }
