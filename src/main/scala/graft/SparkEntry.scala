@@ -862,20 +862,6 @@ object SparkEntry {
       .orderBy("doc_id")
   }
 
-  /** Bloom-prefilter decontamination at the same operating point as
-    * dedup_decontaminate. Candidate recall is 1 by Bloom construction
-    * (no false negatives + J>=0.5 implies a shared shingle) and the
-    * verify stage is the same exact Jaccard, so the OUTPUT is identical
-    * and the twin shares the exact-Jaccard oracle verbatim. */
-  private def dedupDecontaminateBloom(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val evalSet = docs.where(pmod(col("doc_id"), lit(10)) === 0)
-    val corpus = docs.where(pmod(col("doc_id"), lit(10)) =!= 0)
-    Dedup.decontaminateBloom(corpus, evalSet, "text", "doc_id")
-      .select("doc_id", "lang")
-      .orderBy("doc_id")
-  }
-
   /** N-gram-collision decontamination (the GPT-3 13-gram recipe, at n=8
     * for this short-document corpus): drops corpus docs sharing ANY word
     * 8-gram with the eval slice — catches eval CONTAINMENT inside long
@@ -1788,7 +1774,9 @@ object SparkEntry {
     "dedup_apply" -> (dedupApply _),
     "dedup_decontaminate" -> (dedupDecontaminate _),
     "dedup_decontaminate_ngram" -> (dedupDecontaminateNgram _),
-    "dedup_decontaminate_bloom" -> (dedupDecontaminateBloom _),
+    // the Bloom-prefiltered path is the only one; the name stays for
+    // catalog stability
+    "dedup_decontaminate_bloom" -> (dedupDecontaminate _),
     "dedup_decontaminate_report" -> (dedupDecontaminateReport _),
     "dedup_incremental" -> (dedupIncremental _),
     "dedup_embedding_incremental" -> (dedupEmbeddingIncremental _),
@@ -1952,6 +1940,59 @@ object SparkEntry {
       |  LEFT JOIN ls ON d.doc_id = ls.doc_id
       |  LEFT JOIN bs ON d.doc_id = bs.doc_id)
       |SELECT doc_id, reason = 'keep' AS keep, reason FROM dec ORDER BY doc_id""".stripMargin
+
+  /** Decontamination = corpus docs with no exact word-3-gram
+    * Jaccard >= 0.5 match to any eval-slice doc. Every candidacy stage of
+    * Dedup.decontaminate has recall 1, so the exact SQL applies. Shared by
+    * dedup_decontaminate and dedup_decontaminate_bloom (one operator). */
+  private val decontaminateOracleSql: String =
+    """WITH norm AS (
+      |  SELECT doc_id AS id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w
+      |  FROM documents),
+      |sh AS (
+      |  SELECT id, list_distinct(list_transform(generate_series(1, greatest(len(w)-2, 0)),
+      |    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shl
+      |  FROM norm),
+      |ex AS (SELECT id, len(shl) AS sz, unnest(shl) AS shingle FROM sh),
+      |prs AS (
+      |  SELECT a.id AS a_id, b.id AS b_id, any_value(a.sz) AS a_size, any_value(b.sz) AS b_size, count(*) AS shared
+      |  FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.id < b.id
+      |  GROUP BY a.id, b.id),
+      |jac AS (
+      |  SELECT a_id, b_id FROM prs
+      |  WHERE CAST(shared AS DOUBLE) / (a_size + b_size - shared) >= 0.5)
+      |SELECT d.doc_id, d.lang FROM documents d
+      |WHERE d.doc_id % 10 <> 0
+      |  AND NOT EXISTS (
+      |    SELECT 1 FROM jac j
+      |    WHERE (j.a_id = d.doc_id AND j.b_id % 10 = 0)
+      |       OR (j.b_id = d.doc_id AND j.a_id % 10 = 0))
+      |ORDER BY d.doc_id""".stripMargin
+
+  /** Contamination report: the same exact-Jaccard pairs, emitted instead
+    * of anti-joined. Shared by dedup_decontaminate_report and
+    * stream_decontaminate: the monitor emits exactly the batch report's
+    * pairs under AvailableNow (stateless stream-static join). */
+  private val decontaminateReportOracleSql: String =
+    """WITH norm AS (
+      |  SELECT doc_id AS id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w
+      |  FROM documents),
+      |sh AS (
+      |  SELECT id, list_distinct(list_transform(generate_series(1, greatest(len(w)-2, 0)),
+      |    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shl
+      |  FROM norm),
+      |ex AS (SELECT id, len(shl) AS sz, unnest(shl) AS shingle FROM sh),
+      |prs AS (
+      |  SELECT a.id AS corpus_id, b.id AS eval_id,
+      |    any_value(a.sz) AS a_size, any_value(b.sz) AS b_size, count(*) AS shared
+      |  FROM ex a JOIN ex b ON a.shingle = b.shingle
+      |  WHERE a.id % 10 <> 0 AND b.id % 10 = 0
+      |  GROUP BY a.id, b.id)
+      |SELECT corpus_id AS doc_id, eval_id,
+      |  round(CAST(shared AS DOUBLE) / (a_size + b_size - shared), 4) AS jaccard
+      |FROM prs
+      |WHERE CAST(shared AS DOUBLE) / (a_size + b_size - shared) >= 0.5
+      |ORDER BY doc_id, eval_id""".stripMargin
 
   def oracleSql: Map[String, String] = Map(
     "q1_agg" ->
@@ -3005,31 +3046,7 @@ object SparkEntry {
         |    PARTITION BY source ORDER BY doc_id
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / 2048.0) AS BIGINT) AS seq_id
         |FROM documents ORDER BY source, doc_id""".stripMargin,
-    // decontamination = corpus docs with no exact-Jaccard>=0.5 match to
-    // any eval-slice doc (banding recall is 1 here, so exact SQL applies)
-    "dedup_decontaminate" ->
-      """WITH norm AS (
-        |  SELECT doc_id AS id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w
-        |  FROM documents),
-        |sh AS (
-        |  SELECT id, list_distinct(list_transform(generate_series(1, greatest(len(w)-2, 0)),
-        |    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shl
-        |  FROM norm),
-        |ex AS (SELECT id, len(shl) AS sz, unnest(shl) AS shingle FROM sh),
-        |prs AS (
-        |  SELECT a.id AS a_id, b.id AS b_id, any_value(a.sz) AS a_size, any_value(b.sz) AS b_size, count(*) AS shared
-        |  FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.id < b.id
-        |  GROUP BY a.id, b.id),
-        |jac AS (
-        |  SELECT a_id, b_id FROM prs
-        |  WHERE CAST(shared AS DOUBLE) / (a_size + b_size - shared) >= 0.5)
-        |SELECT d.doc_id, d.lang FROM documents d
-        |WHERE d.doc_id % 10 <> 0
-        |  AND NOT EXISTS (
-        |    SELECT 1 FROM jac j
-        |    WHERE (j.a_id = d.doc_id AND j.b_id % 10 = 0)
-        |       OR (j.b_id = d.doc_id AND j.a_id % 10 = 0))
-        |ORDER BY d.doc_id""".stripMargin,
+    "dedup_decontaminate" -> decontaminateOracleSql,
     // n-gram-collision decontamination: contaminated = shares >= 1 word
     // 8-gram with the eval slice's n-gram union. The oracle matches on the
     // n-gram STRINGS; the Spark side matches 64-bit fingerprints of the
@@ -3050,32 +3067,7 @@ object SparkEntry {
         |SELECT d.doc_id, d.lang FROM documents d
         |WHERE d.doc_id % 10 <> 0 AND d.doc_id NOT IN (SELECT doc_id FROM hits)
         |ORDER BY d.doc_id""".stripMargin,
-    // the Bloom prefilter has recall 1 (no false negatives + J>=0.5
-    // implies a shared shingle), so the twin's output equals the exact
-    // Jaccard definition and it shares dedup_decontaminate's oracle
-    "dedup_decontaminate_bloom" ->
-      """WITH norm AS (
-        |  SELECT doc_id AS id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w
-        |  FROM documents),
-        |sh AS (
-        |  SELECT id, list_distinct(list_transform(generate_series(1, greatest(len(w)-2, 0)),
-        |    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shl
-        |  FROM norm),
-        |ex AS (SELECT id, len(shl) AS sz, unnest(shl) AS shingle FROM sh),
-        |prs AS (
-        |  SELECT a.id AS a_id, b.id AS b_id, any_value(a.sz) AS a_size, any_value(b.sz) AS b_size, count(*) AS shared
-        |  FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.id < b.id
-        |  GROUP BY a.id, b.id),
-        |jac AS (
-        |  SELECT a_id, b_id FROM prs
-        |  WHERE CAST(shared AS DOUBLE) / (a_size + b_size - shared) >= 0.5)
-        |SELECT d.doc_id, d.lang FROM documents d
-        |WHERE d.doc_id % 10 <> 0
-        |  AND NOT EXISTS (
-        |    SELECT 1 FROM jac j
-        |    WHERE (j.a_id = d.doc_id AND j.b_id % 10 = 0)
-        |       OR (j.b_id = d.doc_id AND j.a_id % 10 = 0))
-        |ORDER BY d.doc_id""".stripMargin,
+    "dedup_decontaminate_bloom" -> decontaminateOracleSql,
     // exact-substring spans from first principles: positional 5-grams
     // (1-based i converts to the kernel's 0-based word offsets), corpus-
     // wide occurrence count >= 2, gaps-and-islands span merge. A span
@@ -3101,8 +3093,6 @@ object SparkEntry {
         |SELECT doc_id, min(i) - 1 AS span_start, max(i) + 4 AS span_end,
         |  max(i) + 4 - (min(i) - 1) AS span_words
         |FROM grp GROUP BY doc_id, g ORDER BY doc_id, span_start""".stripMargin,
-    // contamination report: the same exact-Jaccard pair machinery as
-    // dedup_decontaminate, emitting the matches instead of anti-joining
     // incremental probe vs the persisted corpus index: per delta doc
     // (doc_id % 10 = 0) the verdict against the corpus (doc_id % 10 <> 0) —
     // exact = identical normalized content (match = min such corpus id,
@@ -3184,26 +3174,7 @@ object SparkEntry {
         |LEFT JOIN nearj nj ON nj.d_id = d.doc_id
         |WHERE d.doc_id % 10 = 0 AND d.text IS NOT NULL
         |ORDER BY d.doc_id""".stripMargin,
-    "dedup_decontaminate_report" ->
-      """WITH norm AS (
-        |  SELECT doc_id AS id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w
-        |  FROM documents),
-        |sh AS (
-        |  SELECT id, list_distinct(list_transform(generate_series(1, greatest(len(w)-2, 0)),
-        |    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shl
-        |  FROM norm),
-        |ex AS (SELECT id, len(shl) AS sz, unnest(shl) AS shingle FROM sh),
-        |prs AS (
-        |  SELECT a.id AS corpus_id, b.id AS eval_id,
-        |    any_value(a.sz) AS a_size, any_value(b.sz) AS b_size, count(*) AS shared
-        |  FROM ex a JOIN ex b ON a.shingle = b.shingle
-        |  WHERE a.id % 10 <> 0 AND b.id % 10 = 0
-        |  GROUP BY a.id, b.id)
-        |SELECT corpus_id AS doc_id, eval_id,
-        |  round(CAST(shared AS DOUBLE) / (a_size + b_size - shared), 4) AS jaccard
-        |FROM prs
-        |WHERE CAST(shared AS DOUBLE) / (a_size + b_size - shared) >= 0.5
-        |ORDER BY doc_id, eval_id""".stripMargin,
+    "dedup_decontaminate_report" -> decontaminateReportOracleSql,
     // substring-dedup application: rebuild each document from the raw
     // (case-preserving) tokens whose 1-based position j is covered by no
     // span [min(i), max(i)+4] (the 1-based closed form of the kernel's
@@ -3246,28 +3217,7 @@ object SparkEntry {
         |  coalesce(agg.txt, '') AS cleaned
         |FROM w0 LEFT JOIN agg USING (doc_id)
         |ORDER BY doc_id""".stripMargin,
-    // the streaming monitor emits exactly the batch report's pairs under
-    // AvailableNow (stateless stream-static join, single input file)
-    "stream_decontaminate" ->
-      """WITH norm AS (
-        |  SELECT doc_id AS id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w
-        |  FROM documents),
-        |sh AS (
-        |  SELECT id, list_distinct(list_transform(generate_series(1, greatest(len(w)-2, 0)),
-        |    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shl
-        |  FROM norm),
-        |ex AS (SELECT id, len(shl) AS sz, unnest(shl) AS shingle FROM sh),
-        |prs AS (
-        |  SELECT a.id AS corpus_id, b.id AS eval_id,
-        |    any_value(a.sz) AS a_size, any_value(b.sz) AS b_size, count(*) AS shared
-        |  FROM ex a JOIN ex b ON a.shingle = b.shingle
-        |  WHERE a.id % 10 <> 0 AND b.id % 10 = 0
-        |  GROUP BY a.id, b.id)
-        |SELECT corpus_id AS doc_id, eval_id,
-        |  round(CAST(shared AS DOUBLE) / (a_size + b_size - shared), 4) AS jaccard
-        |FROM prs
-        |WHERE CAST(shared AS DOUBLE) / (a_size + b_size - shared) >= 0.5
-        |ORDER BY doc_id, eval_id""".stripMargin,
+    "stream_decontaminate" -> decontaminateReportOracleSql,
     // the salted join must equal the PLAIN join — that equality is the
     // whole correctness contract of the skew utility
     "q_salted_join" ->

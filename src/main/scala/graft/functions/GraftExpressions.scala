@@ -545,23 +545,6 @@ case class NgramFpsExpr(child: Expression, n: Int) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Does ANY word-n-gram shingle of the text hit the plan-embedded Bloom
-  * filter? One pass, early-out; the filter bits ride the serialized
-  * expression like the IVF centroids. */
-case class AnyShingleHitExpr(child: Expression, n: Int, bits: Array[Long], k: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def nullSafeEval(input: Any): Any =
-    Kernels.anyShingleHit(input.asInstanceOf[UTF8String], n, bits, k)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloomBits", bits, "long[]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.anyShingleHit($c, $n, $ref, $k)")
-  }
-  override def prettyName: String = "any_shingle_hit"
-  override protected def withNewChildInternal(newChild: Expression): AnyShingleHitExpr =
-    copy(child = newChild)
-}
-
 /** [n_distinct_shingles, n_bloom_hits] against a plan-embedded Bloom
   * filter — the count-based decontamination prefilter. */
 case class BloomShingleHitsExpr(child: Expression, n: Int, bits: Array[Long], k: Int)
@@ -796,10 +779,6 @@ object gf {
 
   /** Positional word-n-gram fingerprints (index = word position). */
   def ngramFps(text: Column, n: Int): Column = u(text)(NgramFpsExpr(_, n))
-
-  /** Any-shingle Bloom membership of a text column. */
-  def anyShingleHit(text: Column, n: Int, bits: Array[Long], k: Int): Column =
-    u(text)(AnyShingleHitExpr(_, n, bits, k))
 
   /** [n_distinct_shingles, n_bloom_hits] of a text column. */
   def bloomShingleHits(text: Column, n: Int, bits: Array[Long], k: Int): Column =

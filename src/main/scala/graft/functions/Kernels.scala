@@ -1033,7 +1033,7 @@ object Kernels {
 
   /** Driver-side Bloom build over 64-bit fingerprints. The probe sequence
     * (double hashing: position p = fp + p*(mix64(fp)|1), mod bit count)
-    * is shared with [[anyShingleHit]] — build and query MUST agree or the
+    * is shared with [[bloomShingleHits]] — build and query MUST agree or the
     * no-false-negative contract breaks. */
   def bloomBuild(fps: Array[Long], bitsPerItem: Int): Array[Long] = {
     val nBits0 = math.max(64L, fps.length.toLong * bitsPerItem)
@@ -1072,32 +1072,6 @@ object Kernels {
       p += 1
     }
     true
-  }
-
-  /** True iff ANY word-n-gram shingle fingerprint of the text hits the
-    * plan-embedded Bloom filter (k probes per shingle, double hashing,
-    * same fingerprints as [[ngramFps]]). No false negatives by Bloom
-    * construction: a document sharing at least one shingle with the
-    * filtered set always returns true. Early-outs on the first hit. */
-  def anyShingleHit(text: UTF8String, n: Int, bits: Array[Long], k: Int): Boolean = {
-    val toks = tokenize(text)
-    val m = toks.length - n + 1
-    if (m <= 0) return false
-    val mBits = bits.length.toLong * 64L
-    val sb = new java.lang.StringBuilder(64)
-    var i = 0
-    while (i < m) {
-      sb.setLength(0)
-      var j = 0
-      while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(toks(i + j))
-        j += 1
-      }
-      if (bloomContains(fnv1a64(sb.toString), bits, k, mBits)) return true
-      i += 1
-    }
-    false
   }
 
   /** [n_distinct_shingles, n_bloom_hits] of a text against the

@@ -320,13 +320,9 @@ object Dedup {
     within.unionByName(expandGroupPairs(groups, repPairs))
   }
 
-  /** Banding candidates + exact-Jaccard verify over (id, __text) rows with
-    * distinct contents — the representative-level core of
-    * [[minhashLshPairsVerified]]. */
   /** (id, band, bucket) banding rows over (id, __text) — the ONE banding
     * scheme every minhash path shares (layout or salt changes here
-    * propagate to the self-join dedup AND the corpus-vs-eval
-    * decontamination identically). */
+    * propagate to all of them identically). */
   private def bandedSignature(
       reps: DataFrame, n: Int, numHashes: Int, bands: Int): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands evenly")
@@ -339,6 +335,9 @@ object Dedup {
           .as(Seq("band", "bucket")))
   }
 
+  /** Banding candidates + exact-Jaccard verify over (id, __text) rows with
+    * distinct contents — the representative-level core of
+    * [[minhashLshPairsVerified]]. */
   private def minhashVerifiedRepPairs(
       reps: DataFrame,
       n: Int,
@@ -543,31 +542,85 @@ object Dedup {
     docs.join(nonKeepers, Seq(idCol), "left_anti")
   }
 
-  /** Eval-prefix CSR candidacy — the decontaminate family's shared
-    * candidacy pass. The eval battery is small by contract (benchmark
-    * suites), so its PREFIX postings (rare-first (df, fp) order over
-    * eval-side document frequencies; length |B| - ceil(t·|B|) + j per eval
-    * rep) are built on the driver and ride the plan as a CSR; one kernel
-    * pass over the corpus reps' full fp sets counts hits task-locally
-    * (one-sided prefix theorem: the j smallest common elements of a
-    * J >= t pair sit inside the EVAL side's prefix, so recall is exactly
-    * 1). This replaced two shuffle-based candidacies that went quadratic
-    * on saturated shingle spaces at sf100: the MinHash band join (~5·10^8
-    * chance band collisions) and the shared-shingle equi-join (Σ
-    * df_corpus·df_eval ≈ 9·10^10 rows — filled the disk). Returns
-    * (rep_id, eval_rep) candidates for exact-Jaccard verification. */
+  // ----- contamination core: one eval index, one candidate→verify -----
+
+  /** Bloom bits per distinct eval shingle: k = 8 probes, ~0.3% false
+    * positives. A false positive only admits a candidate the exact
+    * verify then rejects. */
+  private val EvalBloomBitsPerItem = 12
+
+  /** Default cap on an eval battery's summed shingle count (see
+    * [[evalIndex]]); the battery is input from outside the program. */
+  private val MaxEvalShingles = 50000000
+
+  /** An eval battery collected once: one `reps` row per distinct
+    * normalized content, (rep id = min member id, sorted distinct word
+    * n-gram fps, sorted member ids), plus the fp union (`fps`, sorted) and
+    * its Bloom filter (`bits`, `kProbes` probes per fp). */
+  private[graft] case class EvalIndex(
+      reps: Array[(Long, Array[Long], Array[Long])],
+      fps: Array[Long], bits: Array[Long], kProbes: Int)
+
+  /** The [[EvalIndex]] of `evalSet` at shingle size `n`: ONE collect of
+    * its canonicalized groups (eval batteries duplicate too, and Jaccard
+    * is content-only, so a match expands back through the member list
+    * exactly); the fp union and Bloom bits derive from it on the driver.
+    *
+    * The collect runs under a two-sided size contract. The LIMIT rides
+    * the plan so an oversized battery fails BEFORE materializing on the
+    * driver, but a row limit alone can truncate silently: a battery with
+    * more rows than the limit yet few shingles per doc (avg < 8) passes
+    * the shingle-sum check while the rows beyond the limit were never
+    * collected. So collecting EXACTLY the limit fails loudly; strictly
+    * under it, the collect was complete and the shingle total is checked
+    * against `maxEvalShingles`. */
+  private[graft] def evalIndex(
+      evalSet: DataFrame, textCol: String, idCol: String, n: Int,
+      maxEvalShingles: Int): EvalIndex = {
+    requireLongId(evalSet, idCol)
+    val rowLimit = maxEvalShingles / 8 + 1
+    val rows = evalSet
+      .where(col(textCol).isNotNull)
+      .select(col(idCol).cast("long").as("id"), col(textCol).as("__text"))
+      .groupBy(TextAnalysis.fingerprint(col("__text")))
+      .agg(min(col("id")).as("rep_id"), sort_array(collect_list(col("id"))).as("members"),
+        first(col("__text")).as("__text"))
+      .select(col("rep_id"), gf.shingleFpsSorted(col("__text"), n), col("members"))
+      .limit(rowLimit)
+      .collect()
+    require(rows.length < rowLimit,
+      s"eval battery has >= $rowLimit distinct docs — the collect limit was " +
+        "reached, so docs beyond it would be silently skipped; raise " +
+        s"maxEvalShingles (= $maxEvalShingles) above 8x the battery's doc count")
+    val reps = rows.map(r =>
+      (r.getLong(0), r.getSeq[Long](1).toArray, r.getSeq[Long](2).toArray))
+    require(reps.iterator.map(_._2.length.toLong).sum <= maxEvalShingles,
+      s"eval battery exceeds $maxEvalShingles shingles; raise maxEvalShingles")
+    val union = reps.flatMap(_._2)
+    java.util.Arrays.sort(union)
+    var d = 0
+    var i = 0
+    while (i < union.length) {
+      if (i == 0 || union(i) != union(i - 1)) { union(d) = union(i); d += 1 }
+      i += 1
+    }
+    val fps = java.util.Arrays.copyOf(union, d)
+    EvalIndex(reps, fps, graft.functions.Kernels.bloomBuild(fps, EvalBloomBitsPerItem),
+      graft.functions.Kernels.bloomK(EvalBloomBitsPerItem))
+  }
+
   /** Plan-embeddable prefix-CSR arrays over an eval battery's
-    * (rep, sorted fps) rows — the probe side of [[gf.prefixCandidates]].
-    * Shared by the batch decontaminate paths and the streaming
-    * contamination monitor (which caches it per battery). */
-  private[graft] case class EvalPrefixCsr(
+    * (rep, sorted fps) rows — the probe side of [[gf.prefixCandidates]]
+    * in [[verifiedMatches]]. */
+  private case class EvalPrefixCsr(
       fps: Array[Long], offsets: Array[Int], reps: Array[Int],
       repIds: Array[Long], repNfp: Array[Int])
 
-  private[graft] def evalPrefixCsr(
-      evalShRows: Array[(Long, Array[Long])],
-      threshold: Double,
-      minHits: Int = 3): EvalPrefixCsr = {
+  /** Prefix hit bound j shared by the CSR build and the probe kernel. */
+  private val PrefixMinHits = 3
+
+  private def evalPrefixCsr(
+      evalShRows: Array[(Long, Array[Long])], threshold: Double): EvalPrefixCsr = {
     def oMin(sz: Int): Int = math.ceil(sz * threshold - 1e-9).toInt
     val df = new java.util.HashMap[Long, Int]()
     evalShRows.foreach(_._2.foreach(fp => df.merge(fp, 1, Integer.sum _)))
@@ -578,7 +631,7 @@ object Dedup {
     val posts = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)] // (fp, eval idx)
     evalShRows.foreach { case (rep, fps) =>
       val o = oMin(fps.length)
-      val l = math.min(fps.length, fps.length - o + math.min(minHits, o))
+      val l = math.min(fps.length, fps.length - o + math.min(PrefixMinHits, o))
       val idx = idxOf(rep)
       fps.sortBy(fp => (df.get(fp).intValue, fp)).take(l).foreach(fp => posts += ((fp, idx)))
     }
@@ -596,59 +649,91 @@ object Dedup {
     EvalPrefixCsr(fpsB.result(), offB.result(), reps, attrs.map(_._1), attrs.map(_._2))
   }
 
-  private def evalPrefixCandidates(
-      repsSh: DataFrame,
-      evalShRows: Array[(Long, Array[Long])],
-      threshold: Double,
-      minHits: Int = 3): DataFrame = {
-    val c = evalPrefixCsr(evalShRows, threshold, minHits)
-    repsSh.select(col("rep_id"),
-      explode(gf.prefixCandidates(col("a_shl"), threshold, minHits,
-        c.fps, c.offsets, c.reps, c.repIds, c.repNfp, probePrefix = false)).as("eval_rep"))
+  /** Bloom count prefilter over (id, __text) rows: keep a row iff its
+    * distinct-shingle hits against the eval fp union reach t·|shingles|.
+    * J(a,b) >= t implies |a ∩ b| >= t·|a| (from shared >= t(|a|+|b|)/(1+t)
+    * and |b| >= shared), and a Bloom filter has no false negatives, so the
+    * hit count upper-bounds |a ∩ b| for every eval doc b: recall is exactly
+    * 1. One codegen pass, no shuffle; a document that merely shares a few
+    * common shingles with the battery (an any-hit rule's failure mode on
+    * boilerplate-heavy corpora) is discarded here. */
+  private def bloomCandidates(
+      docs: DataFrame, idx: EvalIndex, n: Int, threshold: Double): DataFrame =
+    docs.withColumn("__bh", gf.bloomShingleHits(col("__text"), n, idx.bits, idx.kProbes))
+      .where(col("__bh").getItem(0) > 0 &&
+        col("__bh").getItem(1) >= lit(threshold) * col("__bh").getItem(0))
+      .drop("__bh")
+
+  /** Exact-verified eval matches of (id, __text) rows:
+    * (id, eval_members, __jraw) for every eval rep whose sorted-fp Jaccard
+    * with the row reaches `threshold` on the RAW score (rounding first
+    * would admit pairs just under it).
+    *
+    * Candidacy is the eval-prefix CSR probe: the battery is small by
+    * contract, so its PREFIX postings (rare-first (df, fp) order over
+    * eval-side document frequencies; length |B| - ceil(t·|B|) + j per eval
+    * rep) ride the plan, and one kernel pass over each row's full fp set
+    * counts hits task-locally (one-sided prefix theorem: the j smallest
+    * common elements of a J >= t pair sit inside the EVAL side's prefix,
+    * so recall is exactly 1). A shuffle-based candidacy goes quadratic on
+    * saturated shingle spaces: the shared-shingle equi-join measured
+    * Σ df_corpus·df_eval ≈ 9·10^10 rows at sf100 and filled the disk.
+    * The score is projected once, then filtered; the eval arrays join as a
+    * broadcast local relation. Per-row throughout, so it runs unchanged on
+    * a stream. */
+  private def verifiedMatches(
+      docs: DataFrame, idx: EvalIndex, n: Int, threshold: Double): DataFrame = {
+    require(threshold > 0, s"threshold must be > 0, got $threshold " +
+      "(shared-shingle candidacy is complete only for J >= t > 0)")
+    val c = evalPrefixCsr(idx.reps.map(r => (r._1, r._2)), threshold)
+    val evalSh = {
+      import docs.sparkSession.implicits._
+      idx.reps.toSeq.toDF("eval_rep", "b_shl", "eval_members")
+    }
+    docs.select(col("id"), gf.shingleFpsSorted(col("__text"), n).as("a_shl"))
+      .select(col("id"), col("a_shl"),
+        explode(gf.prefixCandidates(col("a_shl"), threshold, PrefixMinHits,
+          c.fps, c.offsets, c.reps, c.repIds, c.repNfp, probePrefix = false)).as("eval_rep"))
+      .join(broadcast(evalSh), "eval_rep")
+      .withColumn("__jraw", gf.jaccardSortedFps(col("a_shl"), col("b_shl")))
+      .where(col("__jraw") >= threshold)
+      .select(col("id"), col("eval_members"), col("__jraw"))
   }
 
-  /** Collect the eval battery's (rep_id, sorted shingle fps) rows under an
-    * explicit two-sided size contract. The LIMIT rides the plan so an
-    * oversized battery fails BEFORE materializing on the driver — but a
-    * row limit alone can TRUNCATE silently: a battery with more rows than
-    * the limit yet few shingles per doc (avg < 8) passes the post-collect
-    * shingle-sum check while the rows beyond the limit were never
-    * collected, so those eval docs are simply never decontaminated
-    * against. Contract: collecting EXACTLY the limit means truncation may
-    * have occurred → fail loudly; strictly under it, the collect was
-    * complete and the shingle total is checked against the cap. */
-  private def collectEvalShingles(
-      evalGroups: DataFrame,
-      n: Int,
-      maxEvalShingles: Int): Array[(Long, Array[Long])] = {
-    val rowLimit = maxEvalShingles / 8 + 1
-    val evalRows = evalGroups
-      .select(col("rep_id"), gf.shingleFpsSorted(col("__payload"), n).as("b_shl"))
-      .limit(rowLimit)
-      .collect()
-    require(evalRows.length < rowLimit,
-      s"eval battery has >= $rowLimit distinct docs — the collect limit was " +
-        "reached, so docs beyond it would be silently skipped; raise " +
-        s"maxEvalShingles (= $maxEvalShingles) above 8x the battery's doc count")
-    val evalShRows = evalRows.map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-    require(evalShRows.iterator.map(_._2.length.toLong).sum <= maxEvalShingles,
-      s"eval battery exceeds $maxEvalShingles shingles; raise maxEvalShingles")
-    evalShRows
+  /** The batch candidate→verify: Bloom candidates canonicalized to
+    * distinct contents (duplicates multiply the verify on crawl-shaped
+    * corpora; filtering first means only candidates shuffle, never the
+    * whole corpus text), spread over every core (the verify is the
+    * compute-heavy stage, and AQE coalesces bytes-small shuffles to a few
+    * partitions: 10 of 32 cores busy, >23 min, at sf100 without it), then
+    * verified. Returns (candidate groups, matches keyed by rep id). */
+  private def contaminatedGroups(
+      corpus: DataFrame, evalSet: DataFrame, textCol: String, idCol: String,
+      n: Int, threshold: Double, maxEvalShingles: Int): (DataFrame, DataFrame) = {
+    requireLongId(corpus, idCol)
+    val idx = evalIndex(evalSet, textCol, idCol, n, maxEvalShingles)
+    val docs = corpus.where(col(textCol).isNotNull)
+      .select(col(idCol).cast("long").as("id"), col(textCol).as("__text"))
+    val groups = canonicalGroups(bloomCandidates(docs, idx, n, threshold), "id",
+      TextAnalysis.fingerprint(col("__text")), col("__text"))
+    val reps = Layout.spread(groups.select(col("rep_id").as("id"), col("__payload").as("__text")))
+    (groups, verifiedMatches(reps, idx, n, threshold).withColumnRenamed("id", "rep_id"))
   }
 
-  /** Decontamination: drop every corpus document that exactly or nearly
-    * matches a document in a held-out evaluation set — the step that keeps
-    * benchmark answers out of training data.
+  /** Decontamination: drop every corpus document whose word-n-gram
+    * shingle Jaccard with some document of a held-out evaluation set
+    * reaches `threshold` — the step that keeps benchmark answers out of
+    * training data.
     *
     * ASYMMETRIC by design: an eval set is thousands of docs next to a
-    * 100 TB corpus, so the eval side rides the plan (its prefix postings
-    * as a CSR, its shingle arrays as a broadcast local relation) and the
-    * corpus side never shuffles — candidacy is one kernel pass over the
-    * corpus reps ([[evalPrefixCandidates]], recall exactly 1), the verify
-    * is the exact sorted-merge Jaccard on candidates only. The corpus is
-    * canonicalized first (near-dup work runs once per distinct content; a
-    * contaminated content flags every copy through membership
-    * expansion). */
+    * 100 TB corpus, so the eval side rides the plan (Bloom bits, prefix
+    * postings, shingle arrays) and the corpus side is filtered in one
+    * codegen pass before anything shuffles: a Bloom count prefilter, then
+    * the candidates canonicalize (a contaminated content flags every copy
+    * through membership expansion), then the eval-prefix CSR probe and the
+    * exact sorted-merge Jaccard verify. Every stage has recall 1, so the
+    * output is the exact-Jaccard definition. Compose after exact dedup for
+    * duplicate-heavy corpora. */
   def decontaminate(
       corpus: DataFrame,
       evalSet: DataFrame,
@@ -656,47 +741,55 @@ object Dedup {
       idCol: String,
       n: Int = 3,
       threshold: Double = 0.5,
-      maxEvalShingles: Int = 50000000): DataFrame = {
-    requireLongId(corpus, idCol)
-    requireLongId(evalSet, idCol)
-
-    val groups = canonicalGroups(corpus, idCol,
-      TextAnalysis.fingerprint(col(textCol)), col(textCol))
-    val evalDocs = evalSet
-      .select(col(idCol).cast("long").as("id"), col(textCol).as("__text"))
-      .where(col("__text").isNotNull)
-    // eval reps collected under the shared two-sided size contract
-    // ([[collectEvalShingles]]): complete-or-fail, never silent truncation
-    val evalGroups = canonicalGroups(evalDocs, "id",
-      TextAnalysis.fingerprint(col("__text")), col("__text"))
-    val evalShRows = collectEvalShingles(evalGroups, n, maxEvalShingles)
-
-    // Spread + pin the shingled reps: they feed the eval-CSR kernel pass —
-    // the probe's compute-heavy stage — TWICE (candidacy + verify). Spread
-    // keeps that pass on every core whatever partitioning the groups arrive
-    // with (AQE coalesces bytes-small shuffles; a few-partition input
-    // measured 10 of 32 cores busy, >23 min, at sf100) and the pin computes
-    // the shingling once.
-    val repsSh = Layout.spread(groups.select(col("rep_id"),
-      gf.shingleFpsSorted(col("__payload"), n).as("a_shl"))).pinned()
-    val candidates = evalPrefixCandidates(repsSh, evalShRows, threshold)
-    // exact-Jaccard verify, candidates only; eval arrays broadcast (a
-    // local relation), corpus arrays joined by candidate rep id
-    val evalSh = {
-      import corpus.sparkSession.implicits._
-      evalShRows.toSeq.toDF("eval_rep", "b_shl")
-    }
-    val contaminatedReps = candidates
-      .join(repsSh, "rep_id")
-      .join(broadcast(evalSh), "eval_rep")
-      .where(gf.jaccardSortedFps(col("a_shl"), col("b_shl")) >= threshold)
-      .select(col("rep_id")).distinct()
-
+      maxEvalShingles: Int = MaxEvalShingles): DataFrame = {
+    val (groups, matches) = contaminatedGroups(
+      corpus, evalSet, textCol, idCol, n, threshold, maxEvalShingles)
     val contaminated = groups
-      .join(contaminatedReps, Seq("rep_id"))
+      .join(matches.select("rep_id").distinct(), Seq("rep_id"))
       .select(explode(col("members")).as(idCol))
       .distinct()
     corpus.join(contaminated, Seq(idCol), "left_anti")
+  }
+
+  /** Contamination REPORT — which corpus documents match which eval docs
+    * and how strongly: (idCol, eval_id, jaccard rounded to 4 decimals),
+    * the audit artifact a curation review reads BEFORE a decontamination
+    * pass mutates the corpus. Same candidate→verify as [[decontaminate]];
+    * matches expand through both membership lists instead of
+    * anti-joining, so every affected document is attributed. */
+  def decontaminateReport(
+      corpus: DataFrame,
+      evalSet: DataFrame,
+      textCol: String,
+      idCol: String,
+      n: Int = 3,
+      threshold: Double = 0.5,
+      maxEvalShingles: Int = MaxEvalShingles): DataFrame = {
+    val (groups, matches) = contaminatedGroups(
+      corpus, evalSet, textCol, idCol, n, threshold, maxEvalShingles)
+    groups
+      .join(matches, Seq("rep_id"))
+      .select(explode(col("members")).as(idCol), col("eval_members"),
+        round(col("__jraw"), 4).as("jaccard"))
+      .select(col(idCol), explode(col("eval_members")).as("eval_id"), col("jaccard"))
+  }
+
+  /** The report's matches per DOCUMENT, without canonicalization (a stream
+    * cannot group without state): (idCol, eval_id, jaccard rounded to 4)
+    * — the streaming contamination monitor's per-row select. `docs` is
+    * spread first: the document table is bytes-small while the per-row
+    * kernel chain is compute-huge, so file-split sizing would hand a
+    * micro-batch to a couple of scan tasks. */
+  private[graft] def contaminationMatches(
+      docs: DataFrame, evalSet: DataFrame, textCol: String, idCol: String,
+      n: Int, threshold: Double): DataFrame = {
+    requireLongId(docs, idCol)
+    val idx = evalIndex(evalSet, textCol, idCol, n, MaxEvalShingles)
+    val rows = Layout.spread(docs.where(col(textCol).isNotNull)
+      .select(col(idCol).cast("long").as("id"), col(textCol).as("__text")))
+    verifiedMatches(bloomCandidates(rows, idx, n, threshold), idx, n, threshold)
+      .select(col("id").as(idCol), explode(col("eval_members")).as("eval_id"),
+        round(col("__jraw"), 4).as("jaccard"))
   }
 
   /** C4-style global line deduplication (boilerplate removal): a line whose
@@ -849,94 +942,23 @@ object Dedup {
         col("c.cleaned").as("cleaned"))
   }
 
-  /** Bloom-prefilter decontamination — same contract and same OUTPUT as
-    * [[decontaminate]] (drop corpus docs whose shingle Jaccard vs any eval
-    * doc reaches the threshold), different candidate generation: the eval
-    * set's distinct shingle fingerprints build a driver-side Bloom filter
-    * whose bits ride the plan (like the IVF centroids), and a corpus
-    * document becomes a candidate iff ANY of its shingles hits the filter
-    * — one codegen pass over the corpus with NO explode, NO band join, no
-    * shuffle at all before the contamination-bounded exact-verify stage.
-    *
-    * Candidacy is COUNT-based, not any-hit: J(a,b) >= t implies
-    * |a ∩ b| >= t·|a| (from shared >= t(|a|+|b|)/(1+t) and |b| >= shared),
-    * and the filter holds the union of eval shingles with no Bloom false
-    * negatives, so n_bloom_hits >= |a ∩ b| for every eval doc b. Requiring
-    * n_bloom_hits >= t·|shingles(a)| therefore keeps candidate recall
-    * EXACTLY 1 while discarding documents that merely share a few common
-    * shingles with the eval battery — the failure mode of an any-hit rule
-    * on small-vocabulary or boilerplate-heavy corpora, where nearly every
-    * document shares something. Bloom false positives only loosen the
-    * count, never drop a true candidate, so the output equals the
-    * exact-Jaccard definition verbatim (this operator shares
-    * [[decontaminate]]'s oracle).
-    *
-    * The 100 TB posture: filter size is O(bitsPerItem x distinct eval
-    * shingles) bits independent of corpus size — a full eval battery of
-    * 10 M shingles at 12 bits/item is a 15 MB task constant — while the
-    * band-join variant's broadcast table grows with bands x eval docs and
-    * still shuffles corpus band keys. Compose after exact dedup for
-    * duplicate-heavy corpora (duplicates multiply verify candidates). */
-  def decontaminateBloom(
-      corpus: DataFrame,
-      evalSet: DataFrame,
-      textCol: String,
-      idCol: String,
-      n: Int = 3,
-      threshold: Double = 0.5,
-      bitsPerItem: Int = 12,
-      maxEvalShingles: Int = 50000000): DataFrame = {
-    val (groups, _, pairs) = bloomVerifiedPairs(
-      corpus, evalSet, textCol, idCol, n, threshold, bitsPerItem, maxEvalShingles)
-    val contaminated = groups
-      .join(pairs.select("rep_id").distinct(), Seq("rep_id"))
-      .select(explode(col("members")).as(idCol))
-      .distinct()
-    corpus.join(contaminated, Seq(idCol), "left_anti")
-  }
-
-  /** Contamination REPORT — which corpus documents match which eval docs
-    * and how strongly: (idCol, eval_id, jaccard rounded to 4 decimals),
-    * the audit artifact a curation review reads BEFORE a decontamination
-    * pass mutates the corpus. Same machinery as [[decontaminateBloom]];
-    * pairs expand through duplicate-group membership instead of
-    * anti-joining, so every affected document is attributed. */
-  def decontaminateReport(
-      corpus: DataFrame,
-      evalSet: DataFrame,
-      textCol: String,
-      idCol: String,
-      n: Int = 3,
-      threshold: Double = 0.5,
-      bitsPerItem: Int = 12,
-      maxEvalShingles: Int = 50000000): DataFrame = {
-    val (groups, evalGroups, pairs) = bloomVerifiedPairs(
-      corpus, evalSet, textCol, idCol, n, threshold, bitsPerItem, maxEvalShingles)
-    groups
-      .join(pairs, Seq("rep_id"))
-      .join(evalGroups.select(col("rep_id").as("eval_rep"),
-        col("members").as("__eval_members")), Seq("eval_rep"))
-      .select(explode(col("members")).as(idCol), col("__eval_members"), col("jaccard"))
-      .select(col(idCol), explode(col("__eval_members")).as("eval_id"), col("jaccard"))
-  }
-
   /** N-gram-collision decontamination (the GPT-3/PaLM recipe): drop every
     * corpus document sharing at least `minHits` distinct word n-grams with
-    * the eval set's n-gram union. COMPLEMENTS the Jaccard-threshold
-    * variants ([[decontaminate]]/[[decontaminateBloom]]): a short eval
-    * answer quoted inside a long document has LOW Jaccard (the document's
-    * shingle set dwarfs the eval doc's) yet is exactly the leakage a
-    * training corpus must not carry — n-gram collision catches
-    * CONTAINMENT, Jaccard catches near-duplication. Long n-grams (13 in
-    * GPT-3; ~8 suits short-document corpora) keep natural collisions rare.
+    * the eval set's n-gram union. COMPLEMENTS the Jaccard threshold of
+    * [[decontaminate]]: a short eval answer quoted inside a long document
+    * has LOW Jaccard (the document's shingle set dwarfs the eval doc's)
+    * yet is exactly the leakage a training corpus must not carry — n-gram
+    * collision catches CONTAINMENT, Jaccard catches near-duplication. Long
+    * n-grams (13 in GPT-3; ~8 suits short-document corpora) keep natural
+    * collisions rare.
     *
-    * Scale shape mirrors [[decontaminateBloom]]: the eval n-gram fp union
-    * rides the plan as a Bloom filter — one codegen candidacy pass over
-    * the corpus, recall exactly 1 (Bloom false positives only over-admit;
-    * the candidacy count upper-bounds true hits) — candidates canonicalize
-    * to distinct contents, and the verify is an exact fp equi-join +
-    * per-content hit count, bounded by candidate volume (AQE broadcasts
-    * the eval fp table when it is small). */
+    * Same [[EvalIndex]] at this operator's `n`: its Bloom bits drive one
+    * codegen candidacy pass over the corpus, recall exactly 1 (Bloom false
+    * positives only over-admit; the candidacy count upper-bounds true
+    * hits), candidates canonicalize to distinct contents, and the verify
+    * is an exact equi-join against the index's fp union + per-content hit
+    * count, bounded by candidate volume (AQE broadcasts the fp table when
+    * it is small). */
   def decontaminateNgram(
       corpus: DataFrame,
       evalSet: DataFrame,
@@ -944,28 +966,19 @@ object Dedup {
       idCol: String,
       n: Int = 8,
       minHits: Int = 1,
-      bitsPerItem: Int = 12,
-      maxEvalShingles: Int = 50000000): DataFrame = {
+      maxEvalShingles: Int = MaxEvalShingles): DataFrame = {
     requireLongId(corpus, idCol)
-    requireLongId(evalSet, idCol)
     require(minHits >= 1, s"minHits must be >= 1, got $minHits")
-    val evalDocs = evalSet
-      .select(col(idCol).cast("long").as("id"), col(textCol).as("__text"))
-      .where(col("__text").isNotNull)
-    val eb = evalBloomFor(evalDocs, n, bitsPerItem, maxEvalShingles)
-    val bits = eb.bits
-    val kProbes = eb.kProbes
-    // the verify join's eval side comes from the cached fp array (a local
-    // relation AQE broadcasts), NOT a re-computed eval aggregate
+    val idx = evalIndex(evalSet, textCol, idCol, n, maxEvalShingles)
     val evalFpDf = {
       import corpus.sparkSession.implicits._
-      eb.fps.toSeq.toDF("fp")
+      idx.fps.toSeq.toDF("fp")
     }
 
     val candidates = corpus
       .where(col(textCol).isNotNull)
       .select(col(idCol).cast("long").as("id"), col(textCol).as("__text"),
-        gf.bloomShingleHits(col(textCol), n, bits, kProbes).as("__bh"))
+        gf.bloomShingleHits(col(textCol), n, idx.bits, idx.kProbes).as("__bh"))
       .where(col("__bh").getItem(1) >= minHits)
       .select(col("id"), col("__text"))
     val groups = canonicalGroups(candidates, "id",
@@ -984,117 +997,6 @@ object Dedup {
       .select(explode(col("members")).as(idCol))
       .distinct()
     corpus.join(contaminated, Seq(idCol), "left_anti")
-  }
-
-  /** Cached eval-side Bloom artifacts: the distinct fp union plus its
-    * built filter bits. Keyed by the CANONICALIZED eval plan (same source
-    * + same transforms = same key) and the fp/filter parameters, so
-    * repeated decontaminate/monitor calls in one session skip the eval
-    * aggregate + collect entirely (the battery is a task constant; a
-    * mutated-in-place eval file under an unchanged plan is not detected —
-    * re-create the session to invalidate, same contract as the minhash
-    * coefficient cache). */
-  private[graft] case class EvalBloom(fps: Array[Long], bits: Array[Long], kProbes: Int)
-
-  private val evalBloomCache =
-    new java.util.concurrent.ConcurrentHashMap[String, EvalBloom]()
-
-  /** Distinct eval n-gram fps + Bloom bits, one compute pass: the size
-    * guard (a cheap distributed count) and the driver collect share a
-    * persisted aggregate instead of computing it twice, and the result is
-    * cached for the JVM (see [[EvalBloom]]). The collect is primitive
-    * longs — 8 bytes each, guarded by maxEvalShingles BEFORE
-    * materializing on the driver. */
-  private[graft] def evalBloomFor(
-      evalDocs: DataFrame, n: Int, bitsPerItem: Int, maxEvalShingles: Int): EvalBloom = {
-    val evalFpDf = evalDocs
-      .select(explode(array_distinct(gf.ngramFps(col("__text"), n))).as("fp"))
-      .distinct()
-    val key = evalFpDf.queryExecution.logical.canonicalized.toString +
-      s"#b=$bitsPerItem#max=$maxEvalShingles"
-    evalBloomCache.computeIfAbsent(key, _ => {
-      evalFpDf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val nEvalFps = evalFpDf.count()
-        require(nEvalFps <= maxEvalShingles,
-          s"eval n-gram set has $nEvalFps distinct n-grams (max $maxEvalShingles); " +
-            "raise maxEvalShingles or split the eval battery")
-        val fps = {
-          import evalFpDf.sparkSession.implicits._
-          evalFpDf.as[Long].collect()
-        }
-        EvalBloom(fps, graft.functions.Kernels.bloomBuild(fps, bitsPerItem),
-          graft.functions.Kernels.bloomK(bitsPerItem))
-      } finally evalFpDf.unpersist(blocking = false)
-    })
-  }
-
-  /** Shared Bloom-prefilter verify: (candidate groups, eval groups,
-    * exact-verified (rep_id, eval_rep, jaccard) pairs). Candidate
-    * generation is one codegen pass over the corpus (no explode, no band
-    * join, no shuffle); verification runs once per DISTINCT content on
-    * BOTH sides (duplicates multiply candidates on crawl-shaped corpora,
-    * and a replicated eval battery would otherwise multiply the verify
-    * the same way — the canonicalization lesson, applied symmetrically)
-    * and scores with the one-merge-pass sorted-fingerprint Jaccard
-    * kernel, an order of magnitude cheaper per pair than string-array
-    * intersection. Jaccard depends only on content, so expanding rep
-    * pairs through both membership lists reproduces every doc-level
-    * pair exactly. */
-  private def bloomVerifiedPairs(
-      corpus: DataFrame,
-      evalSet: DataFrame,
-      textCol: String,
-      idCol: String,
-      n: Int,
-      threshold: Double,
-      bitsPerItem: Int,
-      maxEvalShingles: Int): (DataFrame, DataFrame, DataFrame) = {
-    requireLongId(corpus, idCol)
-    requireLongId(evalSet, idCol)
-    val evalDocs = evalSet
-      .select(col(idCol).cast("long").as("id"), col(textCol).as("__text"))
-      .where(col("__text").isNotNull)
-    val eb = evalBloomFor(evalDocs, n, bitsPerItem, maxEvalShingles)
-    val bits = eb.bits
-    val kProbes = eb.kProbes
-
-    val bloomCands = corpus
-      .where(col(textCol).isNotNull)
-      .select(col(idCol).cast("long").as("id"), col(textCol).as("__text"),
-        gf.bloomShingleHits(col(textCol), n, bits, kProbes).as("__bh"))
-      .where(col("__bh").getItem(0) > 0 &&
-        col("__bh").getItem(1) >= lit(threshold) * col("__bh").getItem(0))
-      .select(col("id"), col("__text"))
-
-    val groups = canonicalGroups(bloomCands, "id",
-      TextAnalysis.fingerprint(col("__text")), col("__text"))
-    val evalGroups = canonicalGroups(evalDocs, "id",
-      TextAnalysis.fingerprint(col("__text")), col("__text"))
-    // spread + pin for the same reason as [[decontaminate]]'s repsSh: the
-    // frame feeds the kernel pass twice
-    val candSh = Layout.spread(groups.select(col("rep_id"),
-      gf.shingleFpsSorted(col("__payload"), n).as("a_shl"))).pinned()
-    // Candidacy via the eval-prefix CSR kernel (recall exactly 1 — see
-    // [[evalPrefixCandidates]]). The shared-shingle equi-join this
-    // replaces had recall 1 too, but its volume is Σ df_cand·df_eval over
-    // shared fps — on a saturated shingle space that went quadratic
-    // (measured ~9·10^10 join rows at sf100: the shuffle filled the disk).
-    val evalShRows = collectEvalShingles(evalGroups, n, maxEvalShingles)
-    val candidates = evalPrefixCandidates(candSh, evalShRows, threshold)
-    val evalSh = {
-      import corpus.sparkSession.implicits._
-      evalShRows.toSeq.toDF("eval_rep", "b_shl")
-    }
-    val pairs = candidates
-      .join(candSh, "rep_id")
-      .join(broadcast(evalSh), "eval_rep")
-      // threshold on the RAW score (rounding first would admit pairs just
-      // under it); the reported value rounds for cross-engine stability
-      .withColumn("__jraw", gf.jaccardSortedFps(col("a_shl"), col("b_shl")))
-      .where(col("__jraw") >= threshold)
-      .select(col("rep_id"), col("eval_rep"), round(col("__jraw"), 4).as("jaccard"))
-    (groups, evalGroups, pairs)
   }
 
   /** One-call near-dup pipeline — the composition every training corpus

@@ -645,78 +645,6 @@ object Streams {
     runToParquet(decisions.toDF(), "graft_stream_dedup")
   }
 
-  /** Driver-built static-eval index for the contamination monitor: Bloom
-    * bits for candidacy, the PREFIX-CSR candidacy arrays (the same
-    * rarity-ordered prefix-filter probe the batch decontaminate paths
-    * embed — [[graft.ops.Dedup.evalPrefixCsr]]), and the per-group
-    * (sorted shingle fps, member ids) for exact verify. One Spark job
-    * builds it; cached per (sfDir, n, bitsPerItem, threshold) for the
-    * JVM's lifetime — a monitor that restarts its query (or a bench
-    * marathon) must not re-aggregate the static battery every call. */
-  private[graft] case class EvalIndex(
-      bits: Array[Long], kProbes: Int,
-      csr: graft.ops.Dedup.EvalPrefixCsr,
-      groups: Array[(Int, Array[Long], Array[Long])])
-
-  /** LRU-bounded (access-ordered, capacity 4): a long-lived monitor session
-    * cycling distinct eval batteries must not accumulate one CSR index per
-    * battery in driver memory for the JVM's lifetime. 4 covers any realistic
-    * set of concurrently-live batteries; an evicted one is just rebuilt. */
-  private[graft] val evalIndexCacheMax = 4
-  private val evalIndexCache =
-    new java.util.LinkedHashMap[String, EvalIndex](8, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[String, EvalIndex]): Boolean =
-        size() > evalIndexCacheMax
-    }
-
-  private[graft] def cachedEvalIndex(key: String)(build: => EvalIndex): EvalIndex =
-    evalIndexCache.synchronized {
-      val hit = evalIndexCache.get(key)
-      if (hit != null) hit
-      else { val v = build; evalIndexCache.put(key, v); v }
-    }
-
-  /** Test hook: current cache keys, eldest first. */
-  private[graft] def evalIndexCacheKeys: Seq[String] = evalIndexCache.synchronized {
-    import scala.jdk.CollectionConverters._
-    evalIndexCache.keySet().asScala.toSeq
-  }
-
-  private def buildEvalIndex(
-      evalDocs: DataFrame, n: Int, bitsPerItem: Int, threshold: Double): EvalIndex = {
-    import graft.functions.{gf, Kernels}
-    // canonicalize the STATIC side (the stream side cannot group without
-    // state, but the eval battery can and must): eval batteries duplicate
-    // too, and verifying per eval DOC multiplied the per-batch pair count
-    // by the duplication factor — measured 131s -> 17s at the 10x
-    // replicated corpus. Jaccard is content-only, so matches expand back
-    // through the membership list exactly.
-    val rows = evalDocs
-      .groupBy(graft.ops.TextAnalysis.fingerprint(col("__text")).as("__fp"))
-      .agg(sort_array(collect_list(col("eval_id"))).as("__members"),
-        first(col("__text")).as("__payload"))
-      .select(gf.shingleFpsSorted(col("__payload"), n).as("b_shl"), col("__members"))
-      .collect()
-    val groups = rows.zipWithIndex.map { case (r, g) =>
-      (g, r.getSeq[Long](0).toArray, r.getSeq[Long](1).toArray)
-    }
-    // the Bloom filter's distinct shingle union and the prefix CSR both
-    // come from the same collect — no second eval-side aggregate job
-    val union = groups.iterator.flatMap(_._2).toArray
-    java.util.Arrays.sort(union)
-    var d = 0
-    var i = 0
-    while (i < union.length) {
-      if (i == 0 || union(i) != union(i - 1)) { union(d) = union(i); d += 1 }
-      i += 1
-    }
-    val fps = java.util.Arrays.copyOf(union, d)
-    val csr = graft.ops.Dedup.evalPrefixCsr(
-      groups.map { case (g, shl, _) => (g.toLong, shl) }, threshold)
-    EvalIndex(Kernels.bloomBuild(fps, bitsPerItem), Kernels.bloomK(bitsPerItem),
-      csr, groups)
-  }
-
   /** Streaming intake quality filter — the admission-control stage of a
     * continuous ingestion pipeline (decide keep/drop + first-failing-rule
     * reason for every arriving document BEFORE it lands in the corpus).
@@ -791,76 +719,26 @@ object Streams {
   /** Streaming contamination monitor: a document ingest stream checked
     * against a STATIC eval battery — the intake-pipeline alerting shape
     * (flag eval-contaminated documents as they arrive, before they land
-    * in a training corpus). Entirely STATELESS per micro-batch: the eval
-    * Bloom filter bits ride the plan into every batch (count-based
-    * candidacy, recall exactly 1 — same soundness argument as
-    * Dedup.decontaminateBloom), surviving candidates generate (doc, eval
-    * group) pairs through the SAME plan-embedded rarity-ordered
-    * prefix-CSR probe the batch decontaminate paths use
-    * ([[graft.ops.Dedup.evalPrefixCsr]] + gf.prefixCandidates — recall
-    * exactly 1 by the prefix-filter theorem with per-side short-doc
-    * caps), and each pair exact-verifies ONCE with the
-    * sorted-fingerprint merge kernel via a broadcast stream-static join
-    * on group id. The candidacy is pair-deduped inside one codegen pass
-    * per row (a streaming plan cannot dedup pairs relationally without a
-    * state store), and the h-hit rule bounds chance pairs on saturated
-    * shingle spaces — the any-shared-shingle CSR this replaces gathered
-    * and sorted every posting of every doc shingle, which on the
-    * saturated decade corpora cost ~10x the batch twin (measured 82 s
-    * vs 8.7 s at sf10 even after Layout.spread). No watermark, no state
-    * store: the monitor runs forever in bounded memory. Emits one row
-    * per (document, matching eval doc):
+    * in a training corpus). It runs the batch decontamination's
+    * candidate→verify per row ([[graft.ops.Dedup.contaminationMatches]]):
+    * the eval index's Bloom bits and prefix postings ride the plan into
+    * every micro-batch (both stages recall exactly 1) and each candidate
+    * pair exact-verifies once against a broadcast local relation of the
+    * eval groups. Entirely STATELESS per micro-batch — no watermark, no
+    * state store: the monitor runs forever in bounded memory. Emits one
+    * row per (document, matching eval doc):
     * (doc_id, eval_id, jaccard rounded to 4). */
   def decontaminateMonitorAvailableNow(
       spark: SparkSession,
       sfDir: String,
       n: Int = 3,
-      threshold: Double = 0.5,
-      bitsPerItem: Int = 12): DataFrame = {
-    import graft.functions.gf
-    require(threshold > 0, s"threshold must be > 0, got $threshold " +
-      "(shared-shingle pair generation is complete only for J >= t > 0)")
-    val idx = cachedEvalIndex(s"$sfDir#$n#$bitsPerItem#$threshold")(
-      buildEvalIndex(
-        spark.read.parquet(s"$sfDir/documents.parquet")
-          .where(pmod(col("doc_id"), lit(10)) === 0 && col("text").isNotNull)
-          .select(col("doc_id").cast("long").as("eval_id"), col("text").as("__text")),
-        n, bitsPerItem, threshold))
-    import spark.implicits._
-    val evalDf = idx.groups.toSeq
-      .map { case (g, shl, m) => (g.toLong, shl, m) }
-      .toDF("gid", "b_shl", "__members")
-
-    // Layout.spread BEFORE the kernel: the document table is bytes-small
-    // (tens of MB compressed per decade) while the per-row kernel chain
-    // (bloom probes + shingling + CSR walk + Jaccard merges) is
-    // compute-huge, so file-split sizing hands the whole micro-batch to a
-    // couple of scan tasks (measured at sf10 once the directory-source fix
-    // made the stream real: 242 s on ~2 of 32 cores; the same disease
-    // Layout.spread documents for the batch NLJ probes). One explicit
-    // repartition spreads each micro-batch over every core.
-    val candidates = graft.io.Layout.spread(
-        streamTable(spark, sfDir, "documents.parquet")
-          .where(pmod(col("doc_id"), lit(10)) =!= 0 && col("text").isNotNull))
-      .select(col("doc_id").cast("long").as("doc_id"), col("text").as("__text"),
-        gf.bloomShingleHits(col("text"), n, idx.bits, idx.kProbes).as("__bh"))
-      .where(col("__bh").getItem(0) > 0 &&
-        col("__bh").getItem(1) >= lit(threshold) * col("__bh").getItem(0))
-      .select(col("doc_id"), gf.shingleFpsSorted(col("__text"), n).as("a_shl"))
-
-    // project the merge-kernel score ONCE, then filter and round from the
-    // projected column — a kernel call in the join condition AND the output
-    // projection would run the per-pair merge twice
-    val matches = candidates
-      .select(col("doc_id"), col("a_shl"),
-        explode(gf.prefixCandidates(col("a_shl"), threshold, 3,
-          idx.csr.fps, idx.csr.offsets, idx.csr.reps, idx.csr.repIds, idx.csr.repNfp,
-          probePrefix = false)).as("gid"))
-      .join(broadcast(evalDf), Seq("gid"))
-      .withColumn("__jraw", gf.jaccardSortedFps(col("a_shl"), col("b_shl")))
-      .where(col("__jraw") >= threshold)
-      .select(col("doc_id"), explode(col("__members")).as("eval_id"),
-        round(col("__jraw"), 4).as("jaccard"))
+      threshold: Double = 0.5): DataFrame = {
+    val evalSet = spark.read.parquet(s"$sfDir/documents.parquet")
+      .where(pmod(col("doc_id"), lit(10)) === 0)
+    val docs = streamTable(spark, sfDir, "documents.parquet")
+      .where(pmod(col("doc_id"), lit(10)) =!= 0)
+    val matches = graft.ops.Dedup.contaminationMatches(
+      docs, evalSet, "text", "doc_id", n, threshold)
     runToMemory(matches, "graft_stream_decon", "append")
   }
 

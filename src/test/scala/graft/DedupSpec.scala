@@ -11,6 +11,25 @@ class DedupSpec extends SparkSpec {
 
   private lazy val docs = graft.io.Tables.documents(spark, sfDir)
 
+  /** Brute-force reference for the Jaccard decontaminators: ids of the
+    * corpus docs with no eval doc at exact word-trigram Jaccard >= 0.5
+    * (lowercased whitespace tokens, the engine's tokenization). */
+  private def exactTrigramSurvivors(corpus: Seq[(Long, String)], evalSet: Seq[(Long, String)]): Set[Long] = {
+    def sh(s: String): Set[String] =
+      if (s == null) Set.empty
+      else s.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
+        .sliding(3).filter(_.length == 3).map(_.mkString(" ")).toSet
+    val ev = evalSet.map(e => sh(e._2)).filter(_.nonEmpty)
+    corpus.filter { case (_, text) =>
+      val a = sh(text)
+      !ev.exists(b => a.nonEmpty && (a & b).size.toDouble / (a | b).size >= 0.5)
+    }.map(_._1).toSet
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, String)] =
+    df.select(col("doc_id").cast("long"), col("text")).collect().toSeq
+      .map(r => (r.getLong(0), r.getString(1)))
+
   test("exact: whitespace/case variants collapse to one content key") {
     val df = Seq((1L, "Hello  World"), (2L, "hello world"), (3L, "other")).toDF("doc_id", "text")
     val out = Dedup.exact(df, "text", "doc_id").orderBy("keeper_id").collect()
@@ -116,7 +135,7 @@ class DedupSpec extends SparkSpec {
     assert(clean === Set(3L))
   }
 
-  test("decontaminate and decontaminateBloom keep the same ids on a duplicate-heavy corpus") {
+  test("decontaminate keeps the brute-force Jaccard survivors on a duplicate-heavy corpus") {
     val corpus = (0L until 60L).map { i =>
       val base = s"document number ${i % 20} with shared structural words and tail $i"
       (i, if (i % 3 == 0) base.replace(s"tail $i", "tail shared") else base)
@@ -127,9 +146,65 @@ class DedupSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val kept = Dedup.decontaminate(corpus, evalSet, "text", "doc_id")
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    val bloom = Dedup.decontaminateBloom(corpus, evalSet, "text", "doc_id")
+    assert(kept === exactTrigramSurvivors(rows(corpus), rows(evalSet)))
+  }
+
+  test("decontaminate: J exactly at the threshold drops the doc; the report lists it at 0.5") {
+    // 5-word docs sharing 2 of their 3 trigrams: J = 2 / (3 + 3 - 2) = 0.5
+    val corpus = Seq((1L, "alpha beta gamma delta epsilon"), (2L, "zeta eta theta iota kappa"))
+      .toDF("doc_id", "text")
+    val evalSet = Seq((10L, "alpha beta gamma delta omega")).toDF("doc_id", "text")
+    val kept = Dedup.decontaminate(corpus, evalSet, "text", "doc_id")
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(bloom === kept)
+    assert(kept === Set(2L))
+    val report = Dedup.decontaminateReport(corpus, evalSet, "text", "doc_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(report.toSeq === Seq((1L, 10L, 0.5)))
+  }
+
+  test("two in-memory eval batteries in one session: each call drops exactly its own battery's copy") {
+    val textA = "question one asks which river runs through the old capital city"
+    val textB = "question two asks which mountain stands above the northern lake shore"
+    val corpus = Seq((1L, textA), (2L, textB), (3L, "unrelated filler words that share nothing here at all"))
+      .toDF("doc_id", "text")
+    val batteryA = Seq((100L, textA)).toDF("doc_id", "text")
+    val batteryB = Seq((200L, textB)).toDF("doc_id", "text")
+    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.select("doc_id").collect().map(_.getLong(0)).toSet
+    for ((battery, own, evalId) <- Seq((batteryA, 1L, 100L), (batteryB, 2L, 200L))) {
+      assert(ids(Dedup.decontaminate(corpus, battery, "text", "doc_id")) === Set(1L, 2L, 3L) - own)
+      assert(ids(Dedup.decontaminateNgram(corpus, battery, "text", "doc_id")) === Set(1L, 2L, 3L) - own)
+      val report = Dedup.decontaminateReport(corpus, battery, "text", "doc_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      assert(report.toSeq === Seq((own, evalId, 1.0)))
+    }
+  }
+
+  test("evalIndex: the two-sided size contract fails loudly, also through the operators") {
+    // maxEvalShingles = 16 -> row limit 16 / 8 + 1 = 3
+    val manyRows = Seq((1L, "a b c"), (2L, "d e f"), (3L, "g h i")).toDF("doc_id", "text")
+    // 2 rows (under the row limit) with 14 trigrams / 9 8-grams each: sum > 16
+    val manyShingles = Seq(
+      (1L, (1 to 16).map(i => s"a$i").mkString(" ")),
+      (2L, (1 to 16).map(i => s"b$i").mkString(" "))).toDF("doc_id", "text")
+    val corpus = Seq((9L, "a b c d e f g h i j")).toDF("doc_id", "text")
+    def rowArm(f: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](f)
+      assert(e.getMessage.contains(">= 3 distinct docs") && e.getMessage.contains("(= 16)"),
+        e.getMessage)
+    }
+    def sumArm(f: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](f)
+      assert(e.getMessage.contains("exceeds 16 shingles"), e.getMessage)
+    }
+    rowArm(Dedup.evalIndex(manyRows, "text", "doc_id", 3, 16))
+    sumArm(Dedup.evalIndex(manyShingles, "text", "doc_id", 3, 16))
+    rowArm(Dedup.decontaminate(corpus, manyRows, "text", "doc_id", maxEvalShingles = 16))
+    sumArm(Dedup.decontaminate(corpus, manyShingles, "text", "doc_id", maxEvalShingles = 16))
+    rowArm(Dedup.decontaminateNgram(corpus, manyRows, "text", "doc_id", maxEvalShingles = 16))
+    sumArm(Dedup.decontaminateNgram(corpus, manyShingles, "text", "doc_id", maxEvalShingles = 16))
+    // one row under each limit passes
+    assert(Dedup.evalIndex(manyRows.limit(2), "text", "doc_id", 3, 16).reps.length === 2)
   }
 
   test("null texts never pair: canonical paths match the naive paths' empty output") {
@@ -323,7 +398,7 @@ class DedupSpec extends SparkSpec {
     }
     // the documents the report names are exactly those decontaminate drops
     val reported = report.map(_.getLong(0)).toSet
-    val kept = Dedup.decontaminateBloom(corpus, evalSet, "text", "doc_id")
+    val kept = Dedup.decontaminate(corpus, evalSet, "text", "doc_id")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val all = corpus.select("doc_id").collect().map(_.getLong(0)).toSet
     assert(reported === (all -- kept))
@@ -340,7 +415,7 @@ class DedupSpec extends SparkSpec {
     ).toDF("doc_id", "text")
 
     // Jaccard view: doc 1 shares 8 of ~88 shingles with eval -> J ~ 0.09,
-    // far below the 0.5 threshold — the band-join variant KEEPS the leak
+    // far below the 0.5 threshold — the Jaccard decontaminator KEEPS the leak
     val keptJ = Dedup.decontaminate(corpus, evalSet, "text", "doc_id")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(keptJ === Set(1L, 2L), "Jaccard decontamination keeps the containment leak (by design)")
@@ -363,24 +438,16 @@ class DedupSpec extends SparkSpec {
     assert(keptAt3 === Set(2L))
   }
 
-  test("decontaminateBloom: output equals the band-join decontaminate exactly") {
+  test("decontaminate: output equals a brute-force exact word-trigram Jaccard reference") {
     val evalSet = docs.where(pmod(col("doc_id"), lit(10)) === 0)
     val corpus = docs.where(pmod(col("doc_id"), lit(10)) =!= 0)
-    val banded = Dedup.decontaminate(corpus, evalSet, "text", "doc_id")
+    val kept = Dedup.decontaminate(corpus, evalSet, "text", "doc_id")
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    val bloomed = Dedup.decontaminateBloom(corpus, evalSet, "text", "doc_id")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    // sound on ANY data: Bloom candidacy has recall exactly 1, so its drop
-    // set contains the band variant's (MinHash banding at 32 bands x 4 rows
-    // can miss a pair sitting right at J = 0.5) — kept sets go the other way
-    assert(bloomed.subsetOf(banded),
-      "Bloom (recall 1) must never keep a doc the band join drops")
-    // on THIS fixture the contaminated pairs sit well above the threshold
-    // (mostly exact/near-exact eval copies), where 32x4 banding recall is
-    // ~1 - (1 - J^4)^32 ≈ 1 — so the two variants agree exactly; with
-    // near-threshold pairs only the subset relation above is guaranteed
-    assert(banded === bloomed)
-    assert(bloomed.size < corpus.count(), "the eval slice's near-matches must drop something")
+    val reference = exactTrigramSurvivors(rows(corpus), rows(evalSet))
+    // every candidacy stage has recall 1: never keeps a doc the reference drops
+    assert(kept.subsetOf(reference), "decontaminate kept a doc the exact reference drops")
+    assert(kept === reference)
+    assert(kept.size < corpus.count(), "the eval slice's near-matches must drop something")
   }
 
   test("clusterEmbeddings: matches semdedup assignment; sizes partition the corpus") {

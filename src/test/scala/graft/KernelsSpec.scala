@@ -78,22 +78,27 @@ class KernelsSpec extends AnyFunSuite {
     val fps = texts.flatMap(t => Kernels.ngramFps(t, 3).toLongArray()).distinct
     val bits = Kernels.bloomBuild(fps, 12)
     val k = Kernels.bloomK(12)
-    texts.foreach(t => assert(Kernels.anyShingleHit(t, 3, bits, k)))
+    // [n_distinct, n_hits]: every distinct shingle of an inserted text hits
+    texts.foreach { t =>
+      val h = Kernels.bloomShingleHits(t, 3, bits, k).toLongArray()
+      assert(h(0) > 0 && h(1) === h(0))
+    }
   }
 
-  test("anyShingleHit: text sharing a shingle with the filtered set always hits") {
+  test("bloomShingleHits: text sharing a shingle with the filtered set always hits") {
     val evalText = u("alpha beta gamma delta epsilon zeta eta theta")
     val evalFps = Kernels.ngramFps(evalText, 3).toLongArray()
     val bits = Kernels.bloomBuild(evalFps, 12)
     val k = Kernels.bloomK(12)
+    def hits(t: String): Seq[Long] = Kernels.bloomShingleHits(u(t), 3, bits, k).toLongArray().toSeq
     // shares the shingle "gamma delta epsilon"
-    assert(Kernels.anyShingleHit(u("xx yy gamma delta epsilon zz"), 3, bits, k))
-    // identical text trivially hits
-    assert(Kernels.anyShingleHit(evalText, 3, bits, k))
-    // too short for any shingle -> never hits
-    assert(!Kernels.anyShingleHit(u("alpha beta"), 3, bits, k))
+    assert(hits("xx yy gamma delta epsilon zz")(1) >= 1L)
+    // identical text trivially hits on every shingle
+    assert(hits("alpha beta gamma delta epsilon zeta eta theta") === Seq(6L, 6L))
+    // too short for any shingle -> [0, 0]
+    assert(hits("alpha beta") === Seq(0L, 0L))
     // overwhelmingly-likely miss for disjoint vocabulary
-    assert(!Kernels.anyShingleHit(u("q1 q2 q3 q4 q5 q6 q7 q8"), 3, bits, k))
+    assert(hits("q1 q2 q3 q4 q5 q6 q7 q8") === Seq(6L, 0L))
   }
 
   test("dropSpans: span walk, case preservation, boundary and empty cases") {

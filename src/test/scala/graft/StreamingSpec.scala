@@ -333,31 +333,6 @@ class StreamingSpec extends SparkSpec {
     // both verdicts occur at sf0.001 — the filter is exercised, not trivial
     assert(streamed.exists(_.getBoolean(1)) && streamed.exists(!_.getBoolean(1)))
   }
-
-  test("evalIndexCache: LRU-bounded — a 5th distinct battery evicts the eldest") {
-    def dummy = Streams.EvalIndex(Array(0L), 1,
-      graft.ops.Dedup.EvalPrefixCsr(Array.empty, Array(0), Array.empty, Array.empty, Array.empty),
-      Array.empty)
-    var builds = 0
-    def put(k: String): Unit = { Streams.cachedEvalIndex(k) { builds += 1; dummy }: Unit }
-    val ks = (1 to 5).map(i => s"__lru_test_$i")
-    // filling to capacity flushes whatever earlier tests cached
-    ks.take(4).foreach(put)
-    assert(Streams.evalIndexCacheKeys === ks.take(4))
-    assert(builds === 4)
-    // touching k1 refreshes it (access order), so k2 is now the eldest...
-    put(ks(0))
-    assert(builds === 4) // hit, not a rebuild
-    // ...and the 5th distinct battery evicts k2, not k1
-    put(ks(4))
-    assert(builds === 5)
-    assert(Streams.evalIndexCacheKeys.size === Streams.evalIndexCacheMax)
-    assert(!Streams.evalIndexCacheKeys.contains(ks(1)))
-    assert(Streams.evalIndexCacheKeys.contains(ks(0)))
-    // the evicted battery rebuilds on next use
-    put(ks(1))
-    assert(builds === 6)
-  }
   test("driftMonitor: stream centroids bit-match batch; verdict mix is sane") {
     val got = Streams.driftMonitorAvailableNow(spark, sfDir)
       .orderBy("label").collect()

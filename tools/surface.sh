@@ -1,7 +1,8 @@
 #!/bin/bash
 # Print the size of graft's code and configuration surface, the numbers
 # ROADMAP.md tracks: src/main lines, sys.env reads, distinct spark.graft.*
-# conf keys, and mains.
+# conf keys, mains, and public defs declared directly in the graft.ops
+# objects (local defs inside a method are indented deeper and not counted).
 #
 # Usage: tools/surface.sh   (reports on the checkout the script sits in)
 set -euo pipefail
@@ -12,3 +13,4 @@ echo "src_main_lines   $(find "$main" -name '*.scala' -exec cat {} + | wc -l)"
 echo "sys_env_reads    $(grep -rF 'sys.env' "$main" | wc -l)"
 echo "spark_graft_keys $(grep -rhoE '"spark\.graft\.[A-Za-z.]+"' "$main" | sort -u | wc -l)"
 echo "mains            $(grep -rlE 'def main\(' "$main" | wc -l)"
+echo "ops_public_defs  $(grep -rhE '^  def ' "$main/graft/ops" | wc -l)"
