@@ -1,11 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.functions.gf
 import graft.io.Layout
 import graft.ops.Checkpointing.PinSyntax
+import scala.jdk.CollectionConverters._
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -134,7 +136,7 @@ object Dedup {
     * Column contract matches the old single-block layout ((block, blockval)
     * = (table id, bucket key)) so [[capHotBuckets]] and the pair joins
     * apply unchanged. */
-  private def simhashBands(
+  private[graft] def simhashBands(
       fp: DataFrame, carryCol: String, maxHamming: Int, numBlocks: Int): DataFrame = {
     require(numBlocks > maxHamming, "numBlocks must exceed maxHamming (pigeonhole)")
     require(numBlocks <= 64, "at most one block per bit")
@@ -364,50 +366,28 @@ object Dedup {
   /** SimHash near-dup pairs with Hamming distance <= maxHamming.
     *
     * 64-bit SimHash fingerprint (custom codegen expression), then
-    * pigeonhole banding: split the 64 bits into maxHamming+1 blocks — any
-    * pair within maxHamming Hamming distance must agree exactly on at
-    * least one block (complete, no false negatives). Block-equality join,
-    * then exact Hamming verify via bit_count(xor).
+    * pigeonhole banding ([[simhashBands]]): any pair within maxHamming
+    * Hamming distance agrees exactly on at least one band key (complete,
+    * no false negatives). Band-equality join, then exact Hamming verify via
+    * bit_count(xor).
+    *
+    * Fingerprint canonicalization — the scale shape for duplicate-heavy
+    * corpora: documents sharing an identical fingerprint collapse to ONE
+    * representative before banding, so bucket occupancy (and the
+    * occupancy² candidate cost) is counted over DISTINCT fingerprints;
+    * pairs then expand back through group membership. Same-fingerprint
+    * pairs are hamming-0 matches by definition and are emitted directly.
+    * With maxBucket = None the output is identical to banding every
+    * document (measured 10x faster on a 10x duplicate-heavy rehearsal
+    * corpus; DedupSpec keeps that per-document path as its baseline).
     *
     * Scale valve: candidate cost per (block, value) bucket is occupancy²,
     * and template-similar corpora concentrate fingerprints into a few hot
     * block values (measured 50x blowup on a 10x synthetic corpus).
     * `maxBucket` drops buckets with occupancy above the cap — pairs whose
     * ONLY agreeing blocks are ultra-hot are missed, the same bounded
-    * trade-off as the n-gram maxDf valve; completeness holds for every
-    * pair retaining at least one un-hot agreeing block.
-    */
-  def simhashPairs(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      maxHamming: Int = 3,
-      maxBucket: Option[Long] = None,
-      numBlocks: Int = 0): DataFrame = {
-    requireLongId(df, idCol)
-    val m = if (numBlocks > 0) numBlocks else maxHamming + 1
-    val fp = df.select(col(idCol).cast("long").as("id"), gf.simhash64(col(textCol)).as("fp"))
-    val capped = capHotBuckets(simhashBands(fp, "id", maxHamming, m), maxBucket)
-    val a = capped.select(col("block"), col("blockval"), col("id").as("a_id"), col("fp").as("a_fp"))
-    val b = capped.select(col("block"), col("blockval"), col("id").as("b_id"), col("fp").as("b_fp"))
-    a.join(b, Seq("block", "blockval"))
-      .where(col("a_id") < col("b_id"))
-      .dropDuplicates("a_id", "b_id")
-      .where(bit_count(col("a_fp").bitwiseXOR(col("b_fp"))) <= maxHamming)
-      .select(col("a_id"), col("b_id"))
-  }
-
-  /** [[simhashPairs]] with fingerprint canonicalization — the scale shape
-    * for duplicate-heavy corpora: documents sharing an identical
-    * fingerprint collapse to ONE representative before banding, so bucket
-    * occupancy (and the occupancy² candidate cost) is counted over
-    * DISTINCT fingerprints; pairs then expand back through group
-    * membership. Same-fingerprint pairs are hamming-0 matches by
-    * definition and are emitted directly. With maxBucket = None the output
-    * is identical to [[simhashPairs]] (measured 10x faster on a 10x
-    * duplicate-heavy rehearsal corpus); with a cap the valve semantics
-    * intentionally differ — occupancy here counts distinct fingerprints,
-    * which is the robust definition (a million exact copies of one
+    * trade-off as the n-gram maxDf valve. Occupancy counts distinct
+    * fingerprints, the robust definition (a million exact copies of one
     * document should not evict their bucket).
     *
     * Output-volume note: the pair LIST is quadratic in the duplication
@@ -448,52 +428,107 @@ object Dedup {
     * so hitting this means something is wrong — fail loudly. */
   private val MaxComponentRounds = 50
 
-  /** Whether distinct hi->lo `edges` (u > v) form one star per component:
-    * no node has two outgoing edges and no node has both outgoing and
-    * incoming ones. Both star operations preserve connectivity, so each
-    * star's center is then its component's minimum id — the
-    * large-star/small-star fixpoint, detected one round before the edge
-    * set stops changing. */
-  private def isStarForest(edges: DataFrame): Boolean =
-    edges.select(col("u").as("id"), lit(1).as("out"), lit(0).as("in"))
+  /** Edge count up to which [[connectedComponents]] finishes on the
+    * driver: at 250k near-dup edges, 1 GB heap, 2-2.5 s against 13-16 s
+    * of rounds and no slower downstream; at 500k the heap grew by about
+    * 500 MB and the downstream slowed. */
+  private val DriverComponentEdges = 250000
+
+  /** (edge count, nodes breaking the star-forest test) of distinct hi->lo
+    * `edges` in one action. In a star forest no node has two outgoing
+    * edges or both outgoing and incoming ones: each star's center is its
+    * component's minimum id, the large-star/small-star fixpoint. */
+  private def edgeStats(edges: DataFrame): (Long, Long) = {
+    val r = edges.select(col("u").as("id"), lit(1).as("out"), lit(0).as("in"))
       .unionByName(edges.select(col("v").as("id"), lit(0).as("out"), lit(1).as("in")))
       .groupBy("id")
       .agg(sum(col("out")).as("out"), max(col("in")).as("in"))
-      .where(col("out") > 1 || (col("out") === 1 && col("in") === 1))
-      .limit(1).count() == 0
+      .agg(coalesce(sum(col("out")), lit(0L)),
+        count_if(col("out") > 1 || (col("out") === 1 && col("in") === 1)))
+      .head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** Sorted distinct copy of `a` (sorts `a` in place). */
+  private def sortedDistinct(a: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(a)
+    var d = 0
+    for (i <- a.indices if i == 0 || a(i) != a(i - 1)) { a(d) = a(i); d += 1 }
+    java.util.Arrays.copyOf(a, d)
+  }
+
+  /** Union-find over the edges us(i)–vs(i) on primitive arrays. Node ids
+    * are sorted, so the smaller index is the smaller id and every root is
+    * its component's minimum. Returns (ids, comps). */
+  private def unionFind(us: Array[Long], vs: Array[Long]): (Array[Long], Array[Long]) = {
+    val ids = sortedDistinct(us ++ vs)
+    val parent = Array.tabulate(ids.length)(identity)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    us.indices.foreach { i =>
+      val a = find(java.util.Arrays.binarySearch(ids, us(i)))
+      val b = find(java.util.Arrays.binarySearch(ids, vs(i)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    (ids, Array.tabulate(ids.length)(k => ids(find(k))))
+  }
 
   /** Connected components over near-dup pairs — the step that turns a
     * pair list into dedup decisions (one keeper per duplicate cluster).
     *
-    * Alternating large-star / small-star (Kiveris et al. 2014, "Connected
-    * Components in MapReduce and Beyond"): star operations re-wire whole
-    * neighborhoods onto local minima each round, so convergence takes
-    * O(log² n) rounds regardless of graph diameter — a long near-dup chain
-    * costs about as many rounds as a clique. Each round is two grouped
-    * aggregations over the edge list (shuffle on node id, map-side
-    * combinable) with hi->lo directed edges as the invariant; at the
-    * fixpoint every component is a star centered on its minimum id.
+    * The pairs are pinned once as distinct hi->lo edges. A graph of at
+    * most [[DriverComponentEdges]] edges is collected under the two-sided
+    * contract of [[evalIndex]] (a `limit(bound + 1)` collect that returns
+    * at most `bound` rows is complete) and finished by union-find on the
+    * driver, as a local frame. Larger graphs run alternating large-star /
+    * small-star rounds (Kiveris et al. 2014, "Connected Components in
+    * MapReduce and Beyond"): O(log² n) rounds regardless of graph
+    * diameter, each two grouped aggregations, a pin and ONE action for its
+    * edge count and star-forest test ([[edgeStats]]). The loop ends at the
+    * fixpoint, or as soon as the edges fit the driver bound: the rounds
+    * preserve connectivity, so union-find finishes the remaining edges.
     *
     * Returns (id, comp) for every node appearing in `pairs` — including a
-    * node that appears only in a self-pair (a, a) — where comp = min node
-    * id reachable, so the component id doubles as the canonical keeper id.
+    * node that appears only in a self-pair (a, a), and one (null, null)
+    * row when some pair has both ids null — where comp = min node id
+    * reachable, so the component id doubles as the canonical keeper id.
     * Integral id columns are widened: both output columns are `long`.
     */
   def connectedComponents(
       pairs: DataFrame,
       aCol: String = "a_id",
-      bCol: String = "b_id"): DataFrame = {
-    // evaluate the pair input ONCE: the node set and the first round both
-    // read this pin instead of recomputing the upstream candidate pipeline.
-    // Self-pairs stay in it (as u = v) so self-pair-only nodes are kept.
+      bCol: String = "b_id"): DataFrame =
+    components(pairs, aCol, bCol, DriverComponentEdges)
+
+  /** [[connectedComponents]] with the driver-finish bound as a parameter
+    * (0 runs the distributed rounds to the fixpoint). */
+  private[graft] def components(
+      pairs: DataFrame, aCol: String, bCol: String, driverEdges: Int): DataFrame = {
+    val spark = pairs.sparkSession
+    // ONE evaluation of the upstream pipeline; self-pairs stay as u = v
     val input = pairs
       .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
       .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
       .distinct()
       .pinned()
+    // union-find over collected (u, v) rows as a local (id, comp) frame
+    def finish(rows: Array[Row]): DataFrame = {
+      // greatest/least skip nulls, so a row is null only when both ids are
+      val (nulls, edges) = rows.partition(_.isNullAt(0))
+      val (ids, comps) = unionFind(edges.map(_.getLong(0)), edges.map(_.getLong(1)))
+      spark.createDataFrame(
+        (ids.indices.map(i => Row(ids(i), comps(i))) ++ nulls.map(_ => Row(null, null))).asJava,
+        StructType(Seq(StructField("id", LongType), StructField("comp", LongType))))
+    }
+    val local = input.limit(driverEdges + 1).collect()
+    if (local.length <= driverEdges) return finish(local)
     var edges = input.where(col("u") =!= col("v"))
+    var (n, bad) = edgeStats(edges)
     var rounds = 0
-    while (!isStarForest(edges)) {
+    while (bad > 0 && n > driverEdges) {
       if (rounds == MaxComponentRounds) throw new IllegalStateException(
         s"connectedComponents did not converge within $MaxComponentRounds rounds")
       // large-star: every node attaches its strictly-larger neighbors to
@@ -515,14 +550,17 @@ object Dedup {
           .select(col("v").as("u"), col("m").as("v")))
         .distinct()
         .pinned() // truncate the iterative lineage
+      val stats = edgeStats(edges)
+      n = stats._1; bad = stats._2
       rounds += 1
     }
-    // fixpoint is a star per component: non-roots point at the component
-    // min, roots (the mins) have no outgoing hi->lo edge
+    // a star per component maps each non-root to its component min
+    // directly; otherwise union-find finishes the edges that fit
+    val mapped = if (bad == 0) edges.toDF("id", "comp") else finish(edges.collect())
     val nodes = input.select(col("u").as("id"))
       .unionByName(input.select(col("v").as("id"))).distinct()
-    nodes.join(edges.withColumnRenamed("u", "id"), Seq("id"), "left")
-      .select(col("id"), coalesce(col("v"), col("id")).as("comp"))
+    nodes.join(mapped, Seq("id"), "left")
+      .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
   }
 
   /** Apply dedup decisions: drop every document that belongs to a near-dup
@@ -596,15 +634,7 @@ object Dedup {
       (r.getLong(0), r.getSeq[Long](1).toArray, r.getSeq[Long](2).toArray))
     require(reps.iterator.map(_._2.length.toLong).sum <= maxEvalShingles,
       s"eval battery exceeds $maxEvalShingles shingles; raise maxEvalShingles")
-    val union = reps.flatMap(_._2)
-    java.util.Arrays.sort(union)
-    var d = 0
-    var i = 0
-    while (i < union.length) {
-      if (i == 0 || union(i) != union(i - 1)) { union(d) = union(i); d += 1 }
-      i += 1
-    }
-    val fps = java.util.Arrays.copyOf(union, d)
+    val fps = sortedDistinct(reps.flatMap(_._2))
     EvalIndex(reps, fps, graft.functions.Kernels.bloomBuild(fps, EvalBloomBitsPerItem),
       graft.functions.Kernels.bloomK(EvalBloomBitsPerItem))
   }

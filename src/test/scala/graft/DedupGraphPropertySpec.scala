@@ -3,11 +3,11 @@ package graft
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
 
-/** Property checks for [[graft.ops.Dedup.connectedComponents]] (large-star /
-  * small-star, Kiveris 2014) against an in-memory union-find reference —
-  * including long-path graphs whose diameter is far past any fixed
-  * propagation-round budget. Case counts are small because every case runs
-  * Spark jobs.
+/** Property checks for [[graft.ops.Dedup.connectedComponents]] against an
+  * in-memory union-find reference, on both of its paths: the driver finish
+  * and the large-star / small-star rounds (Kiveris 2014) — including
+  * long-path graphs whose diameter is far past any fixed propagation-round
+  * budget. Case counts are small because every case runs Spark jobs.
   */
 object DedupGraphPropertySpec extends Properties("ConnectedComponentsStar") {
 
@@ -30,10 +30,14 @@ object DedupGraphPropertySpec extends Properties("ConnectedComponentsStar") {
     parent.keys.map(k => k -> find(k)).toMap
   }
 
-  private def runStar(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+  /** Components through the driver finish (the default bound) and
+    * through the distributed rounds (bound 0). */
+  private def runBoth(edges: Seq[(Long, Long)]): Seq[Map[Long, Long]] = {
     import spark.implicits._
-    graft.ops.Dedup.connectedComponents(edges.toDF("a_id", "b_id"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val pairs = edges.toDF("a_id", "b_id")
+    Seq(graft.ops.Dedup.connectedComponents(pairs),
+      graft.ops.Dedup.components(pairs, "a_id", "b_id", 0))
+      .map(_.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
   }
 
   private val randomGraph: Gen[List[(Long, Long)]] = Gen.listOfN(25,
@@ -41,7 +45,7 @@ object DedupGraphPropertySpec extends Properties("ConnectedComponentsStar") {
 
   property("random graphs match union-find (component = min reachable id)") =
     forAll(randomGraph) { edges =>
-      edges.isEmpty || runStar(edges) == unionFind(edges)
+      edges.isEmpty || runBoth(edges).forall(_ == unionFind(edges))
     }
 
   /** Path graphs of diameter 39-69, with shuffled node labels so the min
@@ -57,6 +61,6 @@ object DedupGraphPropertySpec extends Properties("ConnectedComponentsStar") {
 
   property("long shuffled path graphs (diameter >> 20) match union-find") =
     forAll(longPath) { edges =>
-      runStar(edges) == unionFind(edges)
+      runBoth(edges).forall(_ == unionFind(edges))
     }
 }

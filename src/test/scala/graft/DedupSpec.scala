@@ -26,6 +26,36 @@ class DedupSpec extends SparkSpec {
     }.map(_._1).toSet
   }
 
+  /** Per-document banded SimHash pairs — the baseline
+    * [[Dedup.simhashPairsCanonical]] must equal: every document is banded
+    * on its own, with no fingerprint canonicalization. */
+  private def simhashPairs(
+      df: org.apache.spark.sql.DataFrame, textCol: String, idCol: String,
+      maxHamming: Int = 3): org.apache.spark.sql.DataFrame = {
+    val fp = df.select(col(idCol).cast("long").as("id"), gf.simhash64(col(textCol)).as("fp"))
+    val banded = Dedup.simhashBands(fp, "id", maxHamming, maxHamming + 1)
+    banded.select(col("block"), col("blockval"), col("id").as("a_id"), col("fp").as("a_fp"))
+      .join(banded.select(col("block"), col("blockval"), col("id").as("b_id"), col("fp").as("b_fp")),
+        Seq("block", "blockval"))
+      .where(col("a_id") < col("b_id"))
+      .dropDuplicates("a_id", "b_id")
+      .where(bit_count(col("a_fp").bitwiseXOR(col("b_fp"))) <= maxHamming)
+      .select(col("a_id"), col("b_id"))
+  }
+
+  /** Component rows of both [[Dedup.connectedComponents]] paths: the
+    * driver finish (default bound) and the distributed rounds (bound 0). */
+  private def bothComponentPaths(
+      pairs: org.apache.spark.sql.DataFrame): (Set[(Option[Long], Option[Long])], Set[(Option[Long], Option[Long])]) = {
+    def rowsOf(df: org.apache.spark.sql.DataFrame) = {
+      val got = df.collect().map(r =>
+        (Option(r.get(0)).map(_.asInstanceOf[Long]), Option(r.get(1)).map(_.asInstanceOf[Long])))
+      assert(got.length === got.toSet.size) // one row per node
+      got.toSet
+    }
+    (rowsOf(Dedup.connectedComponents(pairs)), rowsOf(Dedup.components(pairs, "a_id", "b_id", 0)))
+  }
+
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, String)] =
     df.select(col("doc_id").cast("long"), col("text")).collect().toSeq
       .map(r => (r.getLong(0), r.getString(1)))
@@ -67,7 +97,7 @@ class DedupSpec extends SparkSpec {
       (ida, fpa) <- fps; (idb, fpb) <- fps
       if ida < idb && java.lang.Long.bitCount(fpa ^ fpb) <= 3
     } yield (ida, idb)).toSet
-    val banded = Dedup.simhashPairs(docs, "text", "doc_id", 3)
+    val banded = simhashPairs(docs, "text", "doc_id", 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(banded === brute)
   }
@@ -95,7 +125,7 @@ class DedupSpec extends SparkSpec {
     // add exact duplicates so fingerprint groups have >1 member
     val dups = docs.limit(5).withColumn("doc_id", col("doc_id") + 1000000L)
     val corpus = docs.unionByName(dups)
-    val naive = Dedup.simhashPairs(corpus, "text", "doc_id", maxHamming = 3)
+    val naive = simhashPairs(corpus, "text", "doc_id", maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val canonical = Dedup.simhashPairsCanonical(corpus, "text", "doc_id", maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -211,29 +241,30 @@ class DedupSpec extends SparkSpec {
     val docs = Seq((1L, "some real document text here"), (2L, null), (3L, null), (4L, null))
       .toDF("doc_id", "text")
     // naive simhash emits nothing for nulls; canonical must not invent a null group
-    assert(Dedup.simhashPairs(docs, "text", "doc_id").count() === 0L)
+    assert(simhashPairs(docs, "text", "doc_id").count() === 0L)
     assert(Dedup.simhashPairsCanonical(docs, "text", "doc_id").count() === 0L)
     assert(Dedup.minhashLshPairsVerified(docs, "text", "doc_id").count() === 0L)
   }
 
   test("connectedComponents: multi-hop chains collapse to the min id (multiple iterations)") {
     // chain 1-2-3-4-5 (needs propagation over 4 hops), clique {10,11,12},
-    // pair {20,21} also given reversed, and 30 seen only in a self-pair
+    // pair {20,21} also given reversed, 30 seen only in a self-pair, and
+    // one pair whose ids are both null
     val edges = Seq(
       (1, 2), (2, 3), (3, 4), (4, 5),
       (10, 11), (11, 12), (10, 12),
       (20, 21), (21, 20),
-      (30, 30))
-    val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
+      (30, 30)).map { case (a, b) => (Option(a), Option(b)) } :+ ((None, None))
+    val expected = (Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L, 30L -> 30L)
-    val longIds = edges.map { case (a, b) => (a.toLong, b.toLong) }.toDF("a_id", "b_id")
+      .map { case (id, comp) => (Option(id), Option(comp)) } :+ ((None, None))).toSet
+    val longIds = edges.map { case (a, b) => (a.map(_.toLong), b.map(_.toLong)) }.toDF("a_id", "b_id")
     val intIds = edges.toDF("a_id", "b_id") // Int-typed ids are widened to long
     Seq(longIds, intIds).foreach { pairs =>
-      val comps = Dedup.connectedComponents(pairs)
-      assert(comps.schema.map(_.dataType) === Seq(LongType, LongType))
-      val got = comps.collect().map(r => r.getLong(0) -> r.getLong(1))
-      assert(got.length === expected.size) // one row per node
-      assert(got.toMap === expected)
+      assert(Dedup.connectedComponents(pairs).schema.map(_.dataType) === Seq(LongType, LongType))
+      val (driver, rounds) = bothComponentPaths(pairs)
+      assert(driver === expected)
+      assert(rounds === expected)
     }
   }
 
@@ -241,10 +272,10 @@ class DedupSpec extends SparkSpec {
     // a 60-node path: diameter 59, far past what diameter-bound propagation
     // handles in a fixed round budget
     val path = (0L until 59L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val comps = Dedup.connectedComponents(path)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(comps.size === 60)
-    assert(comps.values.toSet === Set(0L)) // one component, min id 0
+    val (driver, rounds) = bothComponentPaths(path)
+    assert(driver.size === 60)
+    assert(driver.map(_._2) === Set(Some(0L))) // one component, min id 0
+    assert(rounds === driver)
     val cliques = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (21L, 20L))
       .toDF("a_id", "b_id")
     val got = Dedup.connectedComponents(cliques)
@@ -264,6 +295,34 @@ class DedupSpec extends SparkSpec {
     val kept = Dedup.nearDupPipeline(docs, "text", "doc_id")
       .select("doc_id").collect().map(_.getLong(0))
     assert(kept.toSeq === Seq(1000L))
+  }
+
+  test("connectedComponents: the 90-document near-dup chain, same components on both paths") {
+    val docs = (0 until 90).map { i =>
+      (i.toLong + 1000L, (2 * i until 2 * i + 20).map(w => s"w$w").mkString(" "))
+    }.toDF("doc_id", "text")
+    val pairs = Dedup.minhashLshPairsVerified(docs, "text", "doc_id").localCheckpoint()
+    val (driver, rounds) = bothComponentPaths(pairs)
+    assert(driver.size === 90)
+    assert(driver.forall(_._2 === Some(1000L)))
+    assert(rounds === driver)
+  }
+
+  test("connectedComponents: a path joined to a clique finishes mid-round on the driver") {
+    // 40-node path + 16-node clique = 159 edges. A bound of 80 sends the
+    // input to the rounds; the first round collapses the clique to a
+    // star, leaving about 54 edges that are not yet a star forest, which
+    // union-find then finishes
+    val path = (0L until 39L).map(i => (100L + i, 101L + i))
+    val clique = for (a <- 0L until 16L; b <- a + 1 until 16L) yield (a + 500L, b + 500L)
+    val pairs = (path ++ clique).toDF("a_id", "b_id")
+    val expected = ((100L to 139L).map(i => i -> 100L) ++ (500L to 515L).map(i => i -> 500L)).toMap
+    Seq(0, 80, 1000).foreach { bound =>
+      val got = Dedup.components(pairs, "a_id", "b_id", bound)
+        .collect().map(r => r.getLong(0) -> r.getLong(1))
+      assert(got.length === expected.size)
+      assert(got.toMap === expected, s"bound $bound")
+    }
   }
 
   test("dropBoilerplateLines: global hot lines removed, order preserved") {

@@ -52,13 +52,19 @@ class StatePolicySpec extends SparkSpec {
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled") === "true")
   }
 
-  test("join replays run on the heap store, other stateful replays on RocksDB; 8 partitions, no empty tail batch") {
+  test("heap join, RocksDB sessions; batch-sized partitions; chunks + 1 data batches") {
+    // the test data fits every chunk budget, so each staged replay is one
+    // chunk whose batch also carries the +10h sentinel, then the +20h one
+    val rows = graft.io.Tables.events(spark, sfDir).count()
+    assert(rows < 500000L)
+    val partitions = Streams.replayPartitions(rows,
+      spark.conf.get("spark.sql.shuffle.partitions").toInt).toLong
     val join = progressOf(Streams.clickAttributionAvailableNow(spark, sfDir).count(): Unit)
     assert(join.size === 1)
     val joinOps = stateOps(join.head)
     assert(joinOps.nonEmpty)
     joinOps.foreach { op =>
-      assert(op.numShufflePartitions === 8L)
+      assert(op.numShufflePartitions === partitions)
       assert(op.customMetrics.containsKey("loadedMapCacheHitCount"), op.customMetrics)
       assert(!op.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb")), op.customMetrics)
     }
@@ -69,17 +75,33 @@ class StatePolicySpec extends SparkSpec {
     val sessionOps = stateOps(sessions.head)
     assert(sessionOps.nonEmpty)
     sessionOps.foreach { op =>
-      assert(op.numShufflePartitions === 8L)
+      assert(op.numShufflePartitions === partitions)
       assert(op.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb")), op.customMetrics)
       assert(!op.customMetrics.containsKey("loadedMapCacheHitCount"), op.customMetrics)
     }
 
-    // every staged batch carries data: no trailing no-data batch runs
+    // chunks + 1 = 2 batches, every one with input rows: the real rows and
+    // the +10h sentinel, then the +20h sentinel; no trailing no-data batch
     (join ++ sessions).foreach { ps =>
-      assert(ps.nonEmpty && ps.forall(_.numInputRows > 0), ps.map(_.numInputRows))
+      assert(ps.size === 2 && ps.forall(_.numInputRows > 0), ps.map(_.numInputRows))
     }
+    assert(sessions.head.map(_.numInputRows) === Seq(rows + 1, 1L))
+    // single-batch replays keep the fixed 8 partitions
+    val window = progressOf(Streams.windowAggAvailableNow(spark, sfDir).count(): Unit)
+    assert(window.size === 1 && stateOps(window.head).nonEmpty)
+    stateOps(window.head).foreach(op => assert(op.numShufflePartitions === 8L))
     // the replay's settings were bound only around query start
     assert(spark.conf.get("spark.sql.streaming.stateStore.providerClass") === rocksProvider)
     assert(spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled") === "true")
+  }
+
+  test("replay partitions: one per 100k rows of the largest batch, clamped to the session's") {
+    assert(Streams.replayPartitions(0L, 8) === 1)
+    assert(Streams.replayPartitions(20001L, 8) === 1)
+    assert(Streams.replayPartitions(100000L, 8) === 1)
+    assert(Streams.replayPartitions(100001L, 8) === 2)
+    assert(Streams.replayPartitions(1000001L, 32) === 11)
+    assert(Streams.replayPartitions(1000001L, 4) === 4)
+    assert(Streams.replayPartitions(Long.MaxValue, 200) === 200)
   }
 }

@@ -96,6 +96,38 @@ class StreamingSpec extends SparkSpec {
     assert(new String(java.nio.file.Files.readAllBytes(manifest.toPath), "UTF-8") === before)
   }
 
+  test("a stage dir staged with the old three-file layout fails loudly on resume") {
+    val work = java.nio.file.Files.createTempDirectory("graft-stream-layout").toString
+    val stage = new java.io.File(work, "stage")
+    stage.mkdirs()
+    val rows = graft.io.Tables.events(spark, sfDir).count()
+    // the manifest of the [chunks] [sentinel +10h] [sentinel +20h] layout,
+    // which had no layout tag
+    val manifest = new java.io.File(stage, "_graft_stage")
+    val old = s"chunks=1\nrows=$rows\nsource=$sfDir/events.parquet\n"
+    java.nio.file.Files.write(manifest.toPath, old.getBytes("UTF-8"))
+    val ex = intercept[IllegalStateException](
+      Streams.windowAggAppendToParquet(spark, sfDir, work))
+    assert(ex.getMessage.contains("delete the stage dir and its checkpoint"))
+    assert(ex.getMessage.contains("layout ?"))
+    assert(ex.getMessage.contains("layout sentinel-in-last-chunk"))
+    assert(new String(java.nio.file.Files.readAllBytes(manifest.toPath), "UTF-8") === old)
+    assert(!new java.io.File(work, "out").exists()) // nothing resumed
+
+    // restaged from scratch: one data file holding the +10h sentinel, then
+    // the +20h sentinel file, under a tagged manifest
+    java.nio.file.Files.delete(manifest.toPath)
+    assert(Streams.windowAggAppendToParquet(spark, sfDir, work).count() > 0)
+    assert(new String(java.nio.file.Files.readAllBytes(manifest.toPath), "UTF-8")
+      .contains("layout=sentinel-in-last-chunk\n"))
+    val files = stage.listFiles().map(_.getName).filter(_.endsWith(".parquet")).sorted.toSeq
+    assert(files === Seq("events-000.parquet", "events-001.parquet"))
+    val staged = spark.read.parquet(stage.toString)
+    assert(staged.count() === rows + 2)
+    assert(spark.read.parquet(s"$stage/events-000.parquet")
+      .where(col("event_type") === "__sentinel").count() === 1L)
+  }
+
   test("clickAttributionAvailableNow (stream-stream join) equals the batch join") {
     val streamed = Streams.clickAttributionAvailableNow(spark, sfDir)
       .orderBy("click_id", "purchase_id").collect()
