@@ -43,6 +43,19 @@ object SparkEntry {
       math.max(t(s, d, "documents").where(col("text").isNotNull).count(), 1L)
     ).longValue()
 
+  /** Persistent-index table names by (prefix, dataset dir): `build` writes
+    * the index under the returned name once per (JVM, prefix, dir), so
+    * BENCH times the probe alone and entries naming the same prefix share
+    * one index. The name is the prefix plus the dir with every
+    * non-alphanumeric character replaced by `_`, lower-cased. */
+  private val builtIndexes = new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private def builtIndex(prefix: String, dir: String)(build: String => Unit): String =
+    builtIndexes.computeIfAbsent((prefix, dir), _ => {
+      val name = (prefix + dir.replaceAll("[^A-Za-z0-9]", "_")).toLowerCase(java.util.Locale.ROOT)
+      build(name)
+      name
+    })
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     q5Multijoin(spark, "/root/testdata/sf0.001")
@@ -283,8 +296,6 @@ object SparkEntry {
       .orderBy("event_type", "hour")
   }
 
-  private val aggIndexFor = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Incremental materialized rollup ([[AggIndex]]): the event history
     * before the final day is aggregated once into day-partitioned integer
     * partials, the final day appends as its own partitions (history never
@@ -292,15 +303,12 @@ object SparkEntry {
     * the full batch aggregate by exact-integer construction, which is
     * precisely what the oracle checks. */
   private def qRollupIncremental(s: SparkSession, dir: String): DataFrame = {
-    val table = aggIndexFor.computeIfAbsent(dir, d => {
-      val name = ("graft_agg_idx_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-        .toLowerCase(java.util.Locale.ROOT)
+    val table = builtIndex("graft_agg_idx_", dir) { name =>
       val ev = Tables.events(s, dir).where(col("value").isNotNull)
       val lastDay = ev.agg(max(to_date(col("ts")))).head().getDate(0)
       AggIndex.build(ev.where(to_date(col("ts")) < lit(lastDay)), name)
       AggIndex.append(ev.where(to_date(col("ts")) === lit(lastDay)), name)
-      name
-    })
+    }
     AggIndex.query(s, table).orderBy("event_type")
   }
 
@@ -884,15 +892,12 @@ object SparkEntry {
     * candidate is verified with the sorted-fp Jaccard kernel, so the
     * per-delta-doc (status, min-matching-corpus-id, jaccard) verdicts admit
     * a first-principles SQL oracle. */
-  private val dedupIndexFor = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def dedupIncremental(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val table = dedupIndexFor.computeIfAbsent(dir, d => {
-      val name = ("graft_dedup_idx_" + d.replaceAll("[^A-Za-z0-9]", "_")).toLowerCase(java.util.Locale.ROOT)
+    val table = builtIndex("graft_dedup_idx_", dir) { name =>
       Dedup.dedupIndexBuild(docs.where(pmod(col("doc_id"), lit(10)) =!= 0),
         "text", "doc_id", name)
-      name
-    })
+    }
     Dedup.dedupIndexProbe(docs.where(pmod(col("doc_id"), lit(10)) === 0),
         "text", "doc_id", table, threshold = 0.5)
       .orderBy("doc_id")
@@ -911,16 +916,13 @@ object SparkEntry {
     * the bits grow with the corpus, pinning bucket occupancy (and probe
     * cost) instead of letting it grow linearly — the documented
     * recall-trading scale path every LSH family member takes. */
-  private val embIndexFor = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def dedupEmbeddingIncremental(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
     val corpus = emb.where(pmod(col("vec_id"), lit(10)) =!= 0)
-    val table = embIndexFor.computeIfAbsent(dir, d => {
-      val name = ("graft_emb_idx_" + d.replaceAll("[^A-Za-z0-9]", "_")).toLowerCase(java.util.Locale.ROOT)
+    val table = builtIndex("graft_emb_idx_", dir) { name =>
       val bits = graft.ops.Similarity.lshBitsFor(math.max(corpus.count(), 1L))
       Dedup.embIndexBuild(corpus, "embedding", "vec_id", name, bits = bits, tables = 48)
-      name
-    })
+    }
     val delta = emb.where(pmod(col("vec_id"), lit(20)) === 1)
       .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
       .unionByName(emb.where(pmod(col("vec_id"), lit(10)) === 0)
@@ -1012,23 +1014,16 @@ object SparkEntry {
     Search.tfidfTopTerms(t(s, dir, "documents"), "doc_id", "text", k = 3)
       .orderBy(col("doc_id"), col("score_r").desc, col("term"))
 
-  private val searchIndexFor = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Persistent BM25 inverted index: built once per sf dir, then answered
     * from the index alone — the postings scan statically partition-pruned
     * to the query terms' hash buckets. Different terms from text_search so
     * the two entries exercise distinct score distributions. */
   private def textSearchIndexed(s: SparkSession, dir: String): DataFrame = {
-    val table = searchIndexFor.computeIfAbsent(dir, d => {
-      val name = ("graft_search_idx_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-        .toLowerCase(java.util.Locale.ROOT)
+    val table = builtIndex("graft_search_idx_", dir) { name =>
       Search.bm25IndexBuild(t(s, dir, "documents"), "text", "doc_id", name)
-      name
-    })
+    }
     Search.bm25IndexQuery(s, table, Seq("data", "vector", "query"), k = 20)
   }
-
-  private val searchRemoveIndexFor = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Takedown shape for the search index: build on the FULL corpus, remove
     * 10% by tombstone (O(removed) — no postings rewrite), query. The lazy
@@ -1036,18 +1031,13 @@ object SparkEntry {
     * retained 90%, which is exactly what the oracle computes. */
   private def textSearchIndexRemove(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val table = searchRemoveIndexFor.computeIfAbsent(dir, d => {
-      val name = ("graft_search_rm_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-        .toLowerCase(java.util.Locale.ROOT)
+    val table = builtIndex("graft_search_rm_", dir) { name =>
       Search.bm25IndexBuild(docs, "text", "doc_id", name)
       Search.bm25IndexRemove(docs.where(pmod(col("doc_id"), lit(10)) === 0),
         "text", "doc_id", name)
-      name
-    })
+    }
     Search.bm25IndexQuery(s, table, Seq("filter", "group", "stream"), k = 20)
   }
-
-  private val searchCompactIndexFor = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Index-lifecycle closure: build, tombstone 10%, then COMPACT — the
     * tombstones fold into the physical tables from the index alone (the
@@ -1056,19 +1046,14 @@ object SparkEntry {
     * in its plan. */
   private def textSearchIndexCompact(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val table = searchCompactIndexFor.computeIfAbsent(dir, d => {
-      val name = ("graft_search_cp_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-        .toLowerCase(java.util.Locale.ROOT)
+    val table = builtIndex("graft_search_cp_", dir) { name =>
       Search.bm25IndexBuild(docs, "text", "doc_id", name)
       Search.bm25IndexRemove(docs.where(pmod(col("doc_id"), lit(10)) === 0),
         "text", "doc_id", name)
       Search.bm25IndexCompact(s, name)
-      name
-    })
+    }
     Search.bm25IndexQuery(s, table, Seq("line", "value", "small"), k = 20)
   }
-
-  private val searchAppendIndexFor = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The daily-crawl increment for the search index: build on 90% of the
     * corpus, append the remaining 10%, query — postings/dfs/stats after the
@@ -1076,15 +1061,12 @@ object SparkEntry {
     * oracle checks the entire append path. */
   private def textSearchIndexAppend(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val table = searchAppendIndexFor.computeIfAbsent(dir, d => {
-      val name = ("graft_search_app_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-        .toLowerCase(java.util.Locale.ROOT)
+    val table = builtIndex("graft_search_app_", dir) { name =>
       Search.bm25IndexBuild(docs.where(pmod(col("doc_id"), lit(10)) =!= 0),
         "text", "doc_id", name)
       Search.bm25IndexAppend(docs.where(pmod(col("doc_id"), lit(10)) === 0),
         "text", "doc_id", name)
-      name
-    })
+    }
     Search.bm25IndexQuery(s, table, Seq("table", "scan", "merge"), k = 20)
   }
 
@@ -1389,14 +1371,11 @@ object SparkEntry {
     * the probe plan prunes unprobed cells AT THE SCAN via dynamic
     * partition pruning (LayoutSpec asserts it). Rows-only like ann_ivfpq:
     * index/direct equality is ScalaTest-asserted. */
-  private val ivfpqIndexFor = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def annIvfpqQuery(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
-    val table = ivfpqIndexFor.computeIfAbsent(dir, d => {
-      val name = ("graft_ivfpq_idx_" + d.replaceAll("[^A-Za-z0-9]", "_")).toLowerCase(java.util.Locale.ROOT)
+    val table = builtIndex("graft_ivfpq_idx_", dir) { name =>
       Similarity.ivfpqBuildIndex(emb, "vec_id", "embedding", name, nlist = 16, m = 8, ksub = 16)
-      name
-    })
+    }
     Similarity.ivfpqQueryIndex(emb.filter(col("vec_id") < 10), "vec_id", "embedding", table,
         k = 5, nprobe = 4, rerank = 50)
       .orderBy("query_id", "rank")
@@ -1412,17 +1391,14 @@ object SparkEntry {
     * oracle checks the append path end-to-end: encode-with-loaded-
     * codebooks, partition routing of appended files, probe join over
     * mixed build+append partitions, re-rank. */
-  private val ivfpqAppendIndexFor = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def annIvfpqAppendFull(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
-    val table = ivfpqAppendIndexFor.computeIfAbsent(dir, d => {
-      val name = ("graft_ivfpq_app_" + d.replaceAll("[^A-Za-z0-9]", "_")).toLowerCase(java.util.Locale.ROOT)
+    val table = builtIndex("graft_ivfpq_app_", dir) { name =>
       Similarity.ivfpqBuildIndex(emb.filter(col("vec_id") % 2 === 0),
         "vec_id", "embedding", name, nlist = 16, m = 8, ksub = 16)
       Similarity.ivfpqAppendIndex(emb.filter(col("vec_id") % 2 === 1),
         "vec_id", "embedding", name)
-      name
-    })
+    }
     Similarity.ivfpqQueryIndex(emb.filter(col("vec_id") < 10), "vec_id", "embedding", table,
         k = 5, nprobe = 16, rerank = nEmb(s, dir).toInt)
       .orderBy("query_id", "rank")
@@ -1436,17 +1412,13 @@ object SparkEntry {
     * probe join, re-rank — leaving only cell-pruned recall to ScalaTest. */
   private def annIvfpqQueryFull(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
-    val table = ivfpqIndexFor.computeIfAbsent(dir, d => {
-      val name = ("graft_ivfpq_idx_" + d.replaceAll("[^A-Za-z0-9]", "_")).toLowerCase(java.util.Locale.ROOT)
+    val table = builtIndex("graft_ivfpq_idx_", dir) { name =>
       Similarity.ivfpqBuildIndex(emb, "vec_id", "embedding", name, nlist = 16, m = 8, ksub = 16)
-      name
-    })
+    }
     Similarity.ivfpqQueryIndex(emb.filter(col("vec_id") < 10), "vec_id", "embedding", table,
         k = 5, nprobe = 16, rerank = nEmb(s, dir).toInt)
       .orderBy("query_id", "rank")
   }
-
-  private val ivfpqRemoveIndexFor = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Vector takedown at the exhaustive operating point: build on ALL
     * embeddings, tombstone 20% (no retrain, no rewrite — the FAISS
@@ -1455,20 +1427,15 @@ object SparkEntry {
     * tombstoned vectors are invisible end-to-end. */
   private def annIvfpqRemoveFull(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
-    val table = ivfpqRemoveIndexFor.computeIfAbsent(dir, d => {
-      val name = ("graft_ivfpq_rm_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-        .toLowerCase(java.util.Locale.ROOT)
+    val table = builtIndex("graft_ivfpq_rm_", dir) { name =>
       Similarity.ivfpqBuildIndex(emb, "vec_id", "embedding", name, nlist = 16, m = 8, ksub = 16)
       Similarity.ivfpqRemoveIndex(emb.filter(pmod(col("vec_id"), lit(5)) === 0),
         "vec_id", name)
-      name
-    })
+    }
     Similarity.ivfpqQueryIndex(emb.filter(col("vec_id") < 10), "vec_id", "embedding", table,
         k = 5, nprobe = 16, rerank = nEmb(s, dir).toInt)
       .orderBy("query_id", "rank")
   }
-
-  private val ivfpqCompactIndexFor = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Index-lifecycle closure for IVFADC: build, tombstone 20%, COMPACT
     * (affected cells rewritten, dead cells dropped, tombstones cleared),
@@ -1476,15 +1443,12 @@ object SparkEntry {
     * vectors, now with no anti-join in the probe. */
   private def annIvfpqCompactFull(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
-    val table = ivfpqCompactIndexFor.computeIfAbsent(dir, d => {
-      val name = ("graft_ivfpq_cp_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-        .toLowerCase(java.util.Locale.ROOT)
+    val table = builtIndex("graft_ivfpq_cp_", dir) { name =>
       Similarity.ivfpqBuildIndex(emb, "vec_id", "embedding", name, nlist = 16, m = 8, ksub = 16)
       Similarity.ivfpqRemoveIndex(emb.filter(pmod(col("vec_id"), lit(5)) === 0),
         "vec_id", name)
       Similarity.ivfpqCompactIndex(s, name)
-      name
-    })
+    }
     Similarity.ivfpqQueryIndex(emb.filter(col("vec_id") < 10), "vec_id", "embedding", table,
         k = 5, nprobe = 16, rerank = nEmb(s, dir).toInt)
       .orderBy("query_id", "rank")
@@ -1862,6 +1826,55 @@ object SparkEntry {
       |WHERE q.vec_id < 10
       |  AND list_cosine_similarity(q.embedding, c.embedding) >= 0.3
       |ORDER BY query_id, neighbor_id""".stripMargin
+
+  /** Exact brute-force top-5 of the first 10 vectors (cosine desc, id
+    * asc). Shared by every ANN entry run at an operating point where its
+    * approximation vanishes: ann_bruteforce, the exhaustive ann_ivf_full,
+    * ann_pq_full, ann_sq_full, ann_ivfpq_full, the persistent-index
+    * ann_ivfpq_query_full and ann_ivfpq_append_full, and the full-recall
+    * ann_lsh. */
+  private val annExactTop5OracleSql: String =
+    """WITH scored AS (
+      |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+      |    row_number() OVER (PARTITION BY q.vec_id
+      |      ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC, c.vec_id) AS rank
+      |  FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
+      |  WHERE q.vec_id < 10)
+      |SELECT query_id, neighbor_id, rank FROM scored
+      |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+
+  /** [[annExactTop5OracleSql]] over the vectors retained after removing
+    * vec_id % 5 = 0: ann_ivfpq_remove_full (tombstones must be invisible)
+    * and ann_ivfpq_compact_full (the fold must keep that view). */
+  private val annRetainedTop5OracleSql: String =
+    """WITH scored AS (
+      |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+      |    row_number() OVER (PARTITION BY q.vec_id
+      |      ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC, c.vec_id) AS rank
+      |  FROM embeddings q JOIN embeddings c
+      |    ON c.vec_id <> q.vec_id AND c.vec_id % 5 <> 0
+      |  WHERE q.vec_id < 10)
+      |SELECT query_id, neighbor_id, rank FROM scored
+      |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+
+  /** Exact kNN majority label (k = 10, ties -> smallest label) of the
+    * first 50 vectors: knn_label, and knn_label_lsh at its full-recall
+    * operating point. */
+  private val knnVoteOracleSql: String =
+    """WITH scored AS (
+      |  SELECT q.vec_id AS qid, c.label AS n_label,
+      |    row_number() OVER (PARTITION BY q.vec_id
+      |      ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC, c.vec_id) AS rk
+      |  FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
+      |  WHERE q.vec_id < 50),
+      |votes AS (
+      |  SELECT qid, n_label, count(*) AS votes FROM scored WHERE rk <= 10 GROUP BY qid, n_label),
+      |best AS (
+      |  SELECT qid, n_label, votes,
+      |    row_number() OVER (PARTITION BY qid ORDER BY votes DESC, n_label) AS rk
+      |  FROM votes)
+      |SELECT qid AS query_id, n_label AS pred_label, votes
+      |FROM best WHERE rk = 1 ORDER BY query_id""".stripMargin
 
   private val rollupIncrementalOracleSql: String =
     """WITH ev AS (
@@ -2654,151 +2667,26 @@ object SparkEntry {
         |  FROM px GROUP BY doc_id, f)
         |SELECT doc_id, CAST(f AS BIGINT) AS frame_idx, frame_checksum
         |FROM ck ORDER BY doc_id, frame_idx""".stripMargin,
-    "ann_bruteforce" ->
-      """WITH scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY q.vec_id
-        |      ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC, c.vec_id) AS rank
-        |  FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
-        |  WHERE q.vec_id < 10)
-        |SELECT query_id, neighbor_id, rank FROM scored
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    // ann_ivf_full probes nprobe = nlist (exhaustive — every cell searched),
-    // so the exact brute-force oracle applies verbatim.
-    "ann_ivf_full" ->
-      """WITH scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY q.vec_id
-        |      ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC, c.vec_id) AS rank
-        |  FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
-        |  WHERE q.vec_id < 10)
-        |SELECT query_id, neighbor_id, rank FROM scored
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    // ann_pq_full reranks the whole corpus (rerank = N): the approximate
-    // phase prunes nothing, the exact re-rank IS brute force.
-    "ann_pq_full" ->
-      """WITH scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY q.vec_id
-        |      ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC, c.vec_id) AS rank
-        |  FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
-        |  WHERE q.vec_id < 10)
-        |SELECT query_id, neighbor_id, rank FROM scored
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    // ann_sq_full reranks the whole corpus: the SQ8 approximation
-    // vanishes, the result is brute force.
-    "ann_sq_full" ->
-      """WITH scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY q.vec_id
-        |      ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC, c.vec_id) AS rank
-        |  FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
-        |  WHERE q.vec_id < 10)
-        |SELECT query_id, neighbor_id, rank FROM scored
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    // ann_ivfpq_full probes every cell AND reranks the whole corpus:
-    // both approximations vanish, the result is brute force.
-    "ann_ivfpq_full" ->
-      """WITH scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY q.vec_id
-        |      ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC, c.vec_id) AS rank
-        |  FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
-        |  WHERE q.vec_id < 10)
-        |SELECT query_id, neighbor_id, rank FROM scored
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    // ann_ivfpq_query_full probes the PERSISTENT index exhaustively —
-    // build, partitioning, code round-trip, probe join and re-rank all
-    // checked against the exact oracle.
-    "ann_ivfpq_query_full" ->
-      """WITH scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY q.vec_id
-        |      ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC, c.vec_id) AS rank
-        |  FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
-        |  WHERE q.vec_id < 10)
-        |SELECT query_id, neighbor_id, rank FROM scored
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    // remove path: tombstoned vectors (vec_id % 5 = 0) must be invisible —
-    // brute force over the RETAINED set only
-    "ann_ivfpq_remove_full" ->
-      """WITH scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY q.vec_id
-        |      ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC, c.vec_id) AS rank
-        |  FROM embeddings q JOIN embeddings c
-        |    ON c.vec_id <> q.vec_id AND c.vec_id % 5 <> 0
-        |  WHERE q.vec_id < 10)
-        |SELECT query_id, neighbor_id, rank FROM scored
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    // compaction folds the tombstones into the cell partitions (dead
-    // cells dropped) — the exhaustive probe must still equal brute force
-    // over the retained vectors, same oracle as the tombstone path
-    "ann_ivfpq_compact_full" ->
-      """WITH scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY q.vec_id
-        |      ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC, c.vec_id) AS rank
-        |  FROM embeddings q JOIN embeddings c
-        |    ON c.vec_id <> q.vec_id AND c.vec_id % 5 <> 0
-        |  WHERE q.vec_id < 10)
-        |SELECT query_id, neighbor_id, rank FROM scored
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    // ann_ivfpq_append_full: index built on half the corpus, the other
-    // half APPENDED with frozen quantizers, probed exhaustively — equals
-    // brute force over the full corpus, same exact oracle.
-    "ann_ivfpq_append_full" ->
-      """WITH scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY q.vec_id
-        |      ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC, c.vec_id) AS rank
-        |  FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
-        |  WHERE q.vec_id < 10)
-        |SELECT query_id, neighbor_id, rank FROM scored
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    // ann_lsh runs a full-recall operating point on this corpus
-    // (deterministic hyperplanes), so the exact brute-force oracle applies.
-    "ann_lsh" ->
-      """WITH scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY q.vec_id
-        |      ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC, c.vec_id) AS rank
-        |  FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
-        |  WHERE q.vec_id < 10)
-        |SELECT query_id, neighbor_id, rank FROM scored
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    "knn_label" ->
-      """WITH scored AS (
-        |  SELECT q.vec_id AS qid, c.label AS n_label,
-        |    row_number() OVER (PARTITION BY q.vec_id
-        |      ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC, c.vec_id) AS rk
-        |  FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
-        |  WHERE q.vec_id < 50),
-        |votes AS (
-        |  SELECT qid, n_label, count(*) AS votes FROM scored WHERE rk <= 10 GROUP BY qid, n_label),
-        |best AS (
-        |  SELECT qid, n_label, votes,
-        |    row_number() OVER (PARTITION BY qid ORDER BY votes DESC, n_label) AS rk
-        |  FROM votes)
-        |SELECT qid AS query_id, n_label AS pred_label, votes
-        |FROM best WHERE rk = 1 ORDER BY query_id""".stripMargin,
-    // LSH-backed kNN runs at full recall here, so the exact brute-force
-    // kNN oracle applies verbatim (same SQL as knn_label).
-    "knn_label_lsh" ->
-      """WITH scored AS (
-        |  SELECT q.vec_id AS qid, c.label AS n_label,
-        |    row_number() OVER (PARTITION BY q.vec_id
-        |      ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC, c.vec_id) AS rk
-        |  FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
-        |  WHERE q.vec_id < 50),
-        |votes AS (
-        |  SELECT qid, n_label, count(*) AS votes FROM scored WHERE rk <= 10 GROUP BY qid, n_label),
-        |best AS (
-        |  SELECT qid, n_label, votes,
-        |    row_number() OVER (PARTITION BY qid ORDER BY votes DESC, n_label) AS rk
-        |  FROM votes)
-        |SELECT qid AS query_id, n_label AS pred_label, votes
-        |FROM best WHERE rk = 1 ORDER BY query_id""".stripMargin,
+    // every *_full entry runs where its approximation vanishes (nprobe =
+    // nlist, rerank = N), and ann_lsh / knn_label_lsh at full recall, so
+    // the exact brute-force oracles apply verbatim
+    "ann_bruteforce" -> annExactTop5OracleSql,
+    "ann_ivf_full" -> annExactTop5OracleSql,
+    "ann_pq_full" -> annExactTop5OracleSql,
+    "ann_sq_full" -> annExactTop5OracleSql,
+    "ann_ivfpq_full" -> annExactTop5OracleSql,
+    // the persistent index probed exhaustively: build, partitioning, code
+    // round-trip, probe join and re-rank against the exact oracle; the
+    // append variant grows a half-corpus index by the other half first
+    "ann_ivfpq_query_full" -> annExactTop5OracleSql,
+    "ann_ivfpq_append_full" -> annExactTop5OracleSql,
+    // tombstoned (vec_id % 5 = 0) vectors must be invisible, before and
+    // after compaction folds them into the cell partitions
+    "ann_ivfpq_remove_full" -> annRetainedTop5OracleSql,
+    "ann_ivfpq_compact_full" -> annRetainedTop5OracleSql,
+    "ann_lsh" -> annExactTop5OracleSql,
+    "knn_label" -> knnVoteOracleSql,
+    "knn_label_lsh" -> knnVoteOracleSql,
     "stream_dedup_exact" ->
       """SELECT md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS content_key,
         |  min(doc_id) AS keeper_id, count(*) AS n_copies
@@ -3928,10 +3816,6 @@ object SparkEntry {
     * from a context loss (Bench) must invalidate them before re-running,
     * or every probe query would reference a vanished table. */
   private[graft] def invalidateSessionCaches(): Unit = {
-    embCountFor.clear(); aggIndexFor.clear(); dedupIndexFor.clear()
-    embIndexFor.clear(); searchIndexFor.clear(); searchRemoveIndexFor.clear()
-    searchCompactIndexFor.clear(); searchAppendIndexFor.clear()
-    ivfpqIndexFor.clear(); ivfpqAppendIndexFor.clear()
-    ivfpqRemoveIndexFor.clear(); ivfpqCompactIndexFor.clear()
+    embCountFor.clear(); builtIndexes.clear()
   }
 }

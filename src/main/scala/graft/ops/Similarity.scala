@@ -50,13 +50,41 @@ object Similarity {
   /** (query_id, cos_sim, neighbor_id) -> top-k per query via the bounded
     * heap aggregate, ranks 1..k best-first. */
   private[graft] def rankTopK(scored: DataFrame, k: Int): DataFrame =
+    rankTopKScored(scored, k).drop("cos_sim")
+
+  /** [[rankTopK]] keeping each kept row's score as (query_id, neighbor_id,
+    * cos_sim, rank) — the one top-k every ranked output here goes through. */
+  private def rankTopKScored(scored: DataFrame, k: Int): DataFrame =
     scored
       .groupBy("query_id")
       .agg(graft.functions.TopKByScoreAgg.topK(
         struct(col("cos_sim").cast("double"), col("neighbor_id").cast("long")), k).as("top"))
       .select(col("query_id"), posexplode(col("top")).as(Seq("rk0", "item")))
       .select(col("query_id"), col("item.id").as("neighbor_id"),
-        (col("rk0") + 1).cast("int").as("rank"))
+        col("item.score").as("cos_sim"), (col("rk0") + 1).cast("int").as("rank"))
+
+  /** The exact re-rank behind every compressed-index ANN ([[pqTopK]],
+    * [[sqTopK]], [[ivfpqTopK]], [[ivfpqQueryIndex]]): the approximate
+    * (query_id, neighbor_id, cos_sim) scores keep the top `rerank`
+    * candidates per query, which join back to their raw vectors
+    * (neighbor_id, c_vec) and the broadcast queries (query_id, q_vec) and
+    * re-rank by exact cosine — the output ordering is exact over the
+    * candidate set, and at rerank = corpus size it is brute force. */
+  private def exactRerank(
+      approx: DataFrame,
+      vectors: DataFrame,
+      queries: DataFrame,
+      k: Int,
+      rerank: Int): DataFrame = {
+    require(rerank >= k,
+      s"rerank = $rerank must be >= k = $k: the exact re-rank can only return rerank neighbours per query")
+    val exact = rankTopK(approx, rerank).drop("rank")
+      .join(vectors, "neighbor_id")
+      .join(broadcast(queries), "query_id")
+      .select(col("query_id"), col("neighbor_id"),
+        gf.cosine(col("q_vec"), col("c_vec")).as("cos_sim"))
+    rankTopK(exact, k)
+  }
 
   /** Random-hyperplane LSH top-k — the scale path for ANN.
     *
@@ -204,119 +232,41 @@ object Similarity {
       seed: Long = 42L): DataFrame = {
     Dedup.requireLongId(corpus, idCol)
     Dedup.requireLongId(queries, idCol)
-    val centroids = trainQuantizer(corpus, idCol, vecCol, nlist, sampleSize, seed)
+    val centroids = kmeans(hashSample(corpus, idCol, vecCol, sampleSize), nlist,
+      new scala.util.Random(seed))
     // cell assignment + probe lists run as codegen expressions carrying the
     // tiny centroid table in the plan itself — no UDF boxing, no separate
     // broadcast lifecycle
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
       .withColumn("cell", gf.nearestCell(col("c_vec"), centroids))
-    queryCells(c, queries, idCol, vecCol, centroids, k, nprobe)
-  }
-
-  /** Build a PERSISTENT IVF index — the "index once, query many" shape: the
-    * quantizer trains once, the corpus is written as a managed table
-    * bucketed BY CELL (so a query batch's cell equi-join reads co-located
-    * data with no corpus-side shuffle), and the centroids are stored next
-    * to it in `<table>_centroids`. */
-  def ivfBuildIndex(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      tableName: String,
-      nlist: Int = 16,
-      numBuckets: Int = 16,
-      sampleSize: Int = 10000,
-      seed: Long = 42L): Unit = {
-    Dedup.requireLongId(corpus, idCol)
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    dropIndexTables(spark, Seq(tableName, s"${tableName}_centroids"))
-    val centroids = trainQuantizer(corpus, idCol, vecCol, nlist, sampleSize, seed)
-    corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-      .withColumn("cell", gf.nearestCell(col("c_vec"), centroids))
-      .write.mode("overwrite")
-      .bucketBy(numBuckets, "cell").sortBy("cell")
-      .format("parquet")
-      .saveAsTable(tableName)
-    centroids.zipWithIndex
-      .map { case (v, i) => (i, v.toSeq) }.toSeq
-      .toDF("cell", "centroid")
-      .write.mode("overwrite").format("parquet").saveAsTable(s"${tableName}_centroids")
-  }
-
-  /** Overwrite semantics across sessions — see [[Warehouse.dropTables]]. */
-  private def dropIndexTables(spark: org.apache.spark.sql.SparkSession, names: Seq[String]): Unit =
-    Warehouse.dropTables(spark, names)
-
-  /** Query a persistent IVF index built by [[ivfBuildIndex]]: loads the
-    * (tiny) centroid table, probes nprobe cells per query, and joins the
-    * pre-bucketed corpus on cell. */
-  def ivfQueryIndex(
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      tableName: String,
-      k: Int,
-      nprobe: Int = 4): DataFrame = {
-    Dedup.requireLongId(queries, idCol)
-    val spark = queries.sparkSession
-    val centroids = spark.table(s"${tableName}_centroids")
-      .orderBy("cell")
-      .collect()
-      .map(_.getSeq[Double](1).toArray)
-    queryCells(spark.table(tableName), queries, idCol, vecCol, centroids, k, nprobe)
-  }
-
-  /** Probe + score + rank against a (neighbor_id, c_vec, cell) corpus. */
-  private def queryCells(
-      corpusWithCells: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      centroids: Array[Array[Double]],
-      k: Int,
-      nprobe: Int): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
       .withColumn("cell", explode(gf.probeCells(col("q_vec"), centroids, nprobe)))
-    val scored = corpusWithCells.join(q, Seq("cell"))
+    val scored = c.join(q, Seq("cell"))
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         gf.cosine(col("q_vec"), col("c_vec")).as("cos_sim"))
     rankTopK(scored, k)
   }
 
-  /** Train the coarse quantizer on a bounded sample (driver-side Lloyd's;
-    * centroids are nlist x dim doubles — tiny). Sampled as the sampleSize
-    * smallest xxhash64(id) rows: a per-partition top-k + driver merge (no
-    * full shuffle) whose result is independent of partition layout — the
-    * quantizer, and therefore every cell assignment, is deterministic
-    * across runs and executor counts. */
-  private def trainQuantizer(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      nlist: Int,
-      sampleSize: Int,
-      seed: Long): Array[Array[Double]] = {
-    val sample = hashSample(corpus, idCol, vecCol, sampleSize)
-    require(sample.nonEmpty, "empty corpus")
-    kmeans(sample, nlist, new scala.util.Random(seed))
-  }
-
-  /** The deterministic training sample: the sampleSize smallest
-    * xxhash64(id) rows via per-partition top-k + driver merge — no full
-    * shuffle, independent of partition layout. */
+  /** The deterministic training sample every quantizer trains on: the
+    * sampleSize smallest xxhash64(id) rows via per-partition top-k +
+    * driver merge — no full shuffle, independent of partition layout, so
+    * the trained quantizers (and every cell assignment and code) are
+    * deterministic across runs and executor counts. */
   private def hashSample(
       corpus: DataFrame,
       idCol: String,
       vecCol: String,
-      sampleSize: Int): Array[Array[Double]] =
-    corpus
+      sampleSize: Int): Array[Array[Double]] = {
+    val sample = corpus
       .select(col(vecCol), xxhash64(col(idCol)).as("__h"))
       .orderBy(col("__h"))
       .limit(sampleSize)
       .select(col(vecCol))
       .collect().map(_.getSeq[Float](0).map(_.toDouble).toArray)
+    require(sample.nonEmpty, "empty corpus")
+    sample
+  }
 
   /** Driver-side Lloyd's iterations from distinct-vector seeds ([[
     * seedCentroids]]): duplicate seeds would collapse two cells into one
@@ -354,7 +304,8 @@ object Similarity {
     * table, candidate scoring is m table lookups instead of a dim-wide
     * dot product, and the approximate top-`rerank` per query is re-ranked
     * by exact cosine so the output ordering is exact over the candidate
-    * set.
+    * set. Requires rerank >= k (fails with an IllegalArgumentException
+    * otherwise): only rerank candidates per query reach the re-rank.
     *
     * Codebooks train per sub-space on the same deterministic hash-sample
     * as the IVF quantizer and ride the plan via addReferenceObj. The scan
@@ -393,14 +344,8 @@ object Similarity {
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         (-gf.pqAdc(col("tbl"), col("codes"), ksub)).as("cos_sim"))
-    val candidates = rankTopK(approx, rerank).drop("rank")
-    // exact re-rank of the bounded candidate set
-    val exact = candidates
-      .join(codes.select(col("neighbor_id"), col("c_vec")), "neighbor_id")
-      .join(broadcast(qt.select(col("query_id"), col("q_vec"))), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        gf.cosine(col("q_vec"), col("c_vec")).as("cos_sim"))
-    rankTopK(exact, k)
+    exactRerank(approx, codes.select(col("neighbor_id"), col("c_vec")),
+      qt.select(col("query_id"), col("q_vec")), k, rerank)
   }
 
   /** The trained PQ codebooks, exposed for external oracle checking: the
@@ -421,7 +366,8 @@ object Similarity {
     * (sum over sub-spaces of the query's table entry at the neighbor's
     * code word), rounded to 6 decimals, top `topPerQuery` per query by
     * (adc_dist asc, neighbor_id asc) — a total order shared with a SQL
-    * re-derivation. All-pairs by design: this is an oracle baseline for
+    * re-derivation, ranked by the shared bounded top-k on the negated
+    * distance. All-pairs by design: this is an oracle baseline for
     * the ADC arithmetic (encode + table + lookup-sum), not a scale path —
     * [[pqTopK]]/[[ivfpqTopK]] are the deployment shapes. */
   def pqAdcScores(
@@ -441,15 +387,16 @@ object Similarity {
       gf.pqEncode(col(vecCol), codebooks, m, ksub).as("codes"))
     val qt = queries.select(col(idCol).cast("long").as("query_id"),
       gf.pqTable(col(vecCol), codebooks, m, ksub).as("tbl"))
-    val w = Window.partitionBy("query_id").orderBy(col("adc_dist"), col("neighbor_id"))
     // all-pairs oracle baseline by design, but the streamed code table is
-    // still bytes-small/compute-heavy — spread it ([[Layout.spread]])
-    Layout.spread(codes).crossJoin(broadcast(qt))
+    // still bytes-small/compute-heavy — spread it ([[Layout.spread]]).
+    // Score = -adc_dist, so score desc / id asc is adc_dist asc / id asc;
+    // negation is exact, the rounded distance comes back bit-for-bit.
+    val scored = Layout.spread(codes).crossJoin(broadcast(qt))
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        round(gf.pqAdc(col("tbl"), col("codes"), ksub), 6).as("adc_dist"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= topPerQuery)
+        (-round(gf.pqAdc(col("tbl"), col("codes"), ksub), 6)).as("cos_sim"))
+    rankTopKScored(scored, topPerQuery)
+      .select(col("query_id"), col("neighbor_id"), (-col("cos_sim")).as("adc_dist"), col("rank"))
   }
 
   /** IVF x PQ composed ANN (IVFADC, Jégou et al. 2011) — the shape real
@@ -460,7 +407,8 @@ object Similarity {
     * displacement, and each (query, probed cell) pair gets its own ADC
     * table from the query's residual in that cell. Approximate top-`rerank`
     * per query is re-ranked by exact cosine — output ordering is exact
-    * over the candidate set.
+    * over the candidate set. Requires rerank >= k (fails with an
+    * IllegalArgumentException otherwise).
     *
     * Scale shape: centroids + codebooks are tiny and ride the plan; cell
     * assignment and encoding are narrow codegen maps; the probe join
@@ -495,8 +443,7 @@ object Similarity {
     * bucketing: the probe join broadcasts the query side, so Spark's
     * dynamic partition pruning turns "nprobe cells per query batch" into
     * files SKIPPED AT THE SCAN — at 100 TB the index read is
-    * sum(probed cells), not the corpus. (The IVF index keeps the bucketed
-    * layout as the co-located-join variant; both shapes are demonstrated.) */
+    * sum(probed cells), not the corpus. */
   def ivfpqBuildIndex(
       corpus: DataFrame,
       idCol: String,
@@ -510,7 +457,7 @@ object Similarity {
     Dedup.requireLongId(corpus, idCol)
     val spark = corpus.sparkSession
     import spark.implicits._
-    dropIndexTables(spark,
+    Warehouse.dropTables(spark,
       Seq(tableName, s"${tableName}_centroids", s"${tableName}_pq",
         s"${tableName}_tombstones"))
     val (centroids, codebooks) = trainIvfpq(corpus, idCol, vecCol, nlist, m, ksub, sampleSize, seed)
@@ -557,14 +504,8 @@ object Similarity {
       tableName: String): Unit = {
     Dedup.requireLongId(newVecs, idCol)
     val spark = newVecs.sparkSession
-    val centroids = spark.table(s"${tableName}_centroids")
-      .orderBy("cell")
-      .collect()
-      .map(_.getSeq[Double](1).toArray)
-    val meta = spark.table(s"${tableName}_pq").head()
-    val codebooks = meta.getSeq[Double](2).toArray
-    val encoded = encodeIvfpq(newVecs, idCol, vecCol, centroids, codebooks,
-        meta.getInt(0), meta.getInt(1))
+    val (centroids, codebooks, m, ksub) = loadIvfpqQuantizers(spark, tableName)
+    val encoded = encodeIvfpq(newVecs, idCol, vecCol, centroids, codebooks, m, ksub)
       .pinned() // delta-sized; consumed by probe + insert
     // FAULT TOLERANCE: the insert below is one job (atomic under the
     // commit protocol — a crashed append leaves nothing visible), so the
@@ -586,7 +527,6 @@ object Similarity {
       .write.mode("append").insertInto(tableName)
   }
 
-  /** Query a persistent IVFADC index built by [[ivfpqBuildIndex]]. */
   /** Remove vectors from a [[ivfpqBuildIndex]] index at O(removed) cost —
     * the takedown twin of [[ivfpqAppendIndex]], with the same
     * frozen-quantizer contract (FAISS remove_ids does not retrain):
@@ -673,6 +613,11 @@ object Similarity {
       .join(broadcast(affected.where(col("cell") >= 0)), Seq("cell"), "left_semi")
       .join(broadcast(tomb), col("neighbor_id") === col("vec_id"), "left_anti")
 
+  /** Query a persistent IVFADC index built by [[ivfpqBuildIndex]]: the
+    * same probe, ADC scan and exact re-rank as [[ivfpqTopK]] with the
+    * index's stored quantizers, tombstoned vectors anti-joined away.
+    * Requires rerank >= k (fails with an IllegalArgumentException
+    * otherwise). */
   def ivfpqQueryIndex(
       queries: DataFrame,
       idCol: String,
@@ -683,19 +628,27 @@ object Similarity {
       rerank: Int = 50): DataFrame = {
     Dedup.requireLongId(queries, idCol)
     val spark = queries.sparkSession
-    val centroids = spark.table(s"${tableName}_centroids")
-      .orderBy("cell")
-      .collect()
-      .map(_.getSeq[Double](1).toArray)
-    val meta = spark.table(s"${tableName}_pq").head()
-    val codebooks = meta.getSeq[Double](2).toArray
+    val (centroids, codebooks, m, ksub) = loadIvfpqQuantizers(spark, tableName)
     val tomb = spark.table(s"${tableName}_tombstones")
     val index =
       if (tomb.head(1).isEmpty) spark.table(tableName)
       else spark.table(tableName).join(broadcast(tomb),
         col("neighbor_id") === col("vec_id"), "left_anti")
-    queryIvfpq(index, queries, idCol, vecCol, centroids, codebooks,
-      k, nprobe, meta.getInt(0), meta.getInt(1), rerank)
+    queryIvfpq(index, queries, idCol, vecCol, centroids, codebooks, k, nprobe, m, ksub, rerank)
+  }
+
+  /** The quantizers an [[ivfpqBuildIndex]] index stores beside its cells:
+    * (centroids by cell, flattened PQ codebooks, m, ksub). Tiny
+    * driver-side constants; never retrained after the build. */
+  private def loadIvfpqQuantizers(
+      spark: SparkSession,
+      tableName: String): (Array[Array[Double]], Array[Double], Int, Int) = {
+    val centroids = spark.table(s"${tableName}_centroids")
+      .orderBy("cell")
+      .collect()
+      .map(_.getSeq[Double](1).toArray)
+    val meta = spark.table(s"${tableName}_pq").head()
+    (centroids, meta.getSeq[Double](2).toArray, meta.getInt(0), meta.getInt(1))
   }
 
   /** Coarse centroids + residual-space PQ codebooks from one deterministic
@@ -711,7 +664,6 @@ object Similarity {
       sampleSize: Int,
       seed: Long): (Array[Array[Double]], Array[Double]) = {
     val sample = hashSample(corpus, idCol, vecCol, sampleSize)
-    require(sample.nonEmpty, "empty corpus")
     val centroids = kmeans(sample, nlist, new scala.util.Random(seed))
     val residuals = sample.map { v =>
       val c = centroids(nearestCentroid(v, centroids))
@@ -740,7 +692,7 @@ object Similarity {
 
   /** Probe nprobe cells per query, ADC-score the in-cell codes against the
     * query's per-cell residual table, re-rank the bounded candidate set by
-    * exact cosine. */
+    * exact cosine ([[exactRerank]]). */
   private def queryIvfpq(
       coded: DataFrame,
       queries: DataFrame,
@@ -764,13 +716,7 @@ object Similarity {
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         (-gf.pqAdc(col("tbl"), col("codes"), ksub)).as("cos_sim"))
-    val candidates = rankTopK(approx, rerank).drop("rank")
-    val exact = candidates
-      .join(coded.select(col("neighbor_id"), col("c_vec")), "neighbor_id")
-      .join(broadcast(qRaw), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        gf.cosine(col("q_vec"), col("c_vec")).as("cos_sim"))
-    rankTopK(exact, k)
+    exactRerank(approx, coded.select(col("neighbor_id"), col("c_vec")), qRaw, k, rerank)
   }
 
   /** Per-sub-space k-means codebooks on the deterministic hash-sample,
@@ -782,11 +728,8 @@ object Similarity {
       m: Int,
       ksub: Int,
       sampleSize: Int,
-      seed: Long): Array[Double] = {
-    val sample = hashSample(corpus, idCol, vecCol, sampleSize)
-    require(sample.nonEmpty, "empty corpus")
-    trainPqOnVectors(sample, m, ksub, seed)
-  }
+      seed: Long): Array[Double] =
+    trainPqOnVectors(hashSample(corpus, idCol, vecCol, sampleSize), m, ksub, seed)
 
   /** Per-sub-space k-means on an in-memory training set, flattened
     * [m][ksub][dsub] — shared by raw-vector PQ and residual-vector IVFADC. */
@@ -961,6 +904,8 @@ object Similarity {
     * asymmetric approximate-cosine scoring (codes vs raw query) via a
     * codegen kernel over plan-embedded min/span arrays, then exact
     * re-rank of the top-`rerank` candidates from the real vectors.
+    * Requires rerank >= k (fails with an IllegalArgumentException
+    * otherwise).
     *
     * Train is ONE aggregate (dim rows to the driver — the codebook-load
     * pattern) and is exact min/max, so it is partition-layout- and
@@ -990,13 +935,7 @@ object Similarity {
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         gf.sqCos(col("codes"), col("q_vec"), mins, spans).as("cos_sim"))
-    val candidates = rankTopK(approx, rerank).drop("rank")
-    val exact = candidates
-      .join(codes.select(col("neighbor_id"), col("c_vec")), "neighbor_id")
-      .join(broadcast(qt), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        gf.cosine(col("q_vec"), col("c_vec")).as("cos_sim"))
-    rankTopK(exact, k)
+    exactRerank(approx, codes.select(col("neighbor_id"), col("c_vec")), qt, k, rerank)
   }
 
   /** Exact per-dimension (min, span) of a float-vector corpus — the SQ8

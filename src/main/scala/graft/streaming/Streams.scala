@@ -317,7 +317,10 @@ object Streams {
       .where(col("event_type") =!= "__sentinel")
   }
 
+  /** Staged copies by (sfDir, chunk count), shared by every pass in the
+    * JVM ([[stagedChunkedEventsStream]]) and deleted when it exits. */
   private val stageCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  sys.addShutdownHook(stageCache.values.forEach(d => deleteRecursively(new java.io.File(d))))
 
   /** Name of the staging manifest: the `_` prefix keeps Spark's file
     * source from listing it as input. */
@@ -352,7 +355,8 @@ object Streams {
 
   /** The chunked staged stream, with staging memoized per (sfDir, chunks):
     * two entries that resolve to the same chunk count SHARE one staged copy
-    * (the staging content is a pure function of source + chunk count). */
+    * (the staging content is a pure function of source + chunk count). The
+    * copy lives in a temp dir deleted at JVM exit. */
   private def stagedChunkedEventsStream(
       spark: SparkSession, sfDir: String, chunks: Int): DataFrame = {
     val stageDir = stageCache.computeIfAbsent(s"$sfDir#chunked-$chunks", _ =>

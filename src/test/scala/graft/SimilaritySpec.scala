@@ -111,19 +111,6 @@ class SimilaritySpec extends SparkSpec {
     assert(a === c)
   }
 
-  test("ivf persistent index: build once, query equals direct ivfTopK") {
-    spark.sql("DROP TABLE IF EXISTS graft_ivf_idx")
-    spark.sql("DROP TABLE IF EXISTS graft_ivf_idx_centroids")
-    val queries = emb.where(col("vec_id") < 20)
-    Similarity.ivfBuildIndex(emb, "vec_id", "embedding", "graft_ivf_idx", nlist = 16)
-    val viaIndex = Similarity.ivfQueryIndex(queries, "vec_id", "embedding", "graft_ivf_idx",
-        k = 5, nprobe = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val direct = Similarity.ivfTopK(emb, queries, "vec_id", "embedding", 5, nlist = 16, nprobe = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(viaIndex === direct)
-  }
-
   test("knnLabelLsh at full-recall params agrees with brute-force kNN on sf0.001") {
     val queries = emb.where(col("vec_id") < 20)
     val exact = Similarity.knnLabel(emb, queries, "vec_id", "embedding", "label", 10)
@@ -191,6 +178,72 @@ class SimilaritySpec extends SparkSpec {
       assert(dists === dists.sorted, s"adc_dist not monotone in rank for query $q")
       assert(dists.forall(_ >= 0.0))
     }
+  }
+
+  test("pqAdcScores equals the rank-window formulation, ADC ties broken by neighbor_id") {
+    // the row_number() reference pqAdcScores ranked with before it moved
+    // onto the shared bounded top-k
+    def windowAdc(corpus: org.apache.spark.sql.DataFrame, topPerQuery: Int) = {
+      import graft.functions.gf
+      import org.apache.spark.sql.expressions.Window
+      val codebooks = Similarity.pqCodebooks(corpus, "vec_id", "embedding")
+      val codes = corpus.select(col("vec_id").cast("long").as("neighbor_id"),
+        gf.pqEncode(col("embedding"), codebooks, 8, 16).as("codes"))
+      val qt = corpus.where(col("vec_id") < 10).select(col("vec_id").cast("long").as("query_id"),
+        gf.pqTable(col("embedding"), codebooks, 8, 16).as("tbl"))
+      val w = Window.partitionBy("query_id").orderBy(col("adc_dist"), col("neighbor_id"))
+      codes.crossJoin(broadcast(qt))
+        .where(col("query_id") =!= col("neighbor_id"))
+        .select(col("query_id"), col("neighbor_id"),
+          round(gf.pqAdc(col("tbl"), col("codes"), 16), 6).as("adc_dist"))
+        .withColumn("rank", row_number().over(w))
+        .where(col("rank") <= topPerQuery)
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+        .sortBy(r => (r._1, r._4)).toSeq
+    def check(corpus: org.apache.spark.sql.DataFrame, topPerQuery: Int) = {
+      val got = Similarity.pqAdcScores(corpus, corpus.where(col("vec_id") < 10),
+        "vec_id", "embedding", topPerQuery = topPerQuery)
+      val ref = windowAdc(corpus, topPerQuery)
+      assert(got.schema.map(f => (f.name, f.dataType)) === ref.schema.map(f => (f.name, f.dataType)))
+      val out = rows(got)
+      assert(out === rows(ref))
+      out
+    }
+    check(emb, 50)
+    // vector 5 again under id 1000000: identical codes, so every query
+    // but 5 sees an exact ADC tie that must rank 5 first
+    val dup = emb.unionByName(emb.where(col("vec_id") === 5).withColumn("vec_id", lit(1000000L)))
+    val out = check(dup, dup.count().toInt)
+    val ties = out.filter(r => r._2 == 5L || r._2 == 1000000L).groupBy(_._1)
+    assert(ties.size === 10)
+    ties.foreach { case (q, rs) =>
+      if (q == 5L) assert(rs.map(_._2) === Seq(1000000L))
+      else {
+        assert(rs.map(_._2) === Seq(5L, 1000000L), s"tie order for query $q")
+        assert(rs.head._3 === rs(1)._3 && rs(1)._4 === rs.head._4 + 1, s"tie for query $q")
+      }
+    }
+  }
+
+  test("pqTopK, sqTopK, ivfpqTopK and ivfpqQueryIndex fail loudly on rerank < k") {
+    val queries = emb.where(col("vec_id") < 10)
+    Similarity.ivfpqBuildIndex(emb, "vec_id", "embedding", "graft_ivfpq_rerank_k",
+      nlist = 16, m = 8, ksub = 16)
+    try {
+      val calls = Seq[() => org.apache.spark.sql.DataFrame](
+        () => Similarity.pqTopK(emb, queries, "vec_id", "embedding", 5, rerank = 3),
+        () => Similarity.sqTopK(emb, queries, "vec_id", "embedding", 5, rerank = 3),
+        () => Similarity.ivfpqTopK(emb, queries, "vec_id", "embedding", 5, rerank = 3),
+        () => Similarity.ivfpqQueryIndex(queries, "vec_id", "embedding",
+          "graft_ivfpq_rerank_k", k = 5, rerank = 3))
+      calls.foreach { call =>
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains("rerank = 3") && e.getMessage.contains("k = 5"), e.getMessage)
+      }
+    } finally Seq("", "_centroids", "_pq", "_tombstones")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS graft_ivfpq_rerank_k$t"))
   }
 
   test("ivfpq persistent index: build once, query equals direct ivfpqTopK") {
