@@ -59,24 +59,14 @@ object AggIndex {
   }
 
   /** Append ONE micro-batch's partials IDEMPOTENTLY: rows carry the
-    * batch id and land via dynamic partition overwrite, so a Structured
+    * batch id and land via [[Warehouse.dynOverwrite]], so a Structured
     * Streaming retry of the same batch REPLACES its own (day, batch_id)
     * partitions instead of double-counting — exactly-once ingestion on a
     * plain parquet table, no transaction log needed. Because the partials
     * are mergeable integers, query results are independent of how the
     * history was sliced into batches. */
-  def appendBatch(events: DataFrame, batchId: Long, tableName: String): Unit = {
-    val spark = events.sparkSession
-    val modeKey = "spark.sql.sources.partitionOverwriteMode"
-    val prior = spark.conf.get(modeKey)
-    try {
-      spark.conf.set(modeKey, "dynamic")
-      partials(events)
-        .withColumn("batch_id", lit(batchId))
-        .select(spark.table(tableName).schema.fieldNames.map(col).toSeq: _*)
-        .write.mode("overwrite").insertInto(tableName)
-    } finally spark.conf.set(modeKey, prior)
-  }
+  def appendBatch(events: DataFrame, batchId: Long, tableName: String): Unit =
+    Warehouse.dynOverwrite(partials(events).withColumn("batch_id", lit(batchId)), tableName)
 
   /** One day's totals — the partition-pruned point lookup. */
   def queryDay(spark: SparkSession, tableName: String, day: java.sql.Date): DataFrame =

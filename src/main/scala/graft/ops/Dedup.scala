@@ -1343,7 +1343,7 @@ object Dedup {
     requireLongId(corpus, idCol)
     val spark = corpus.sparkSession
     import spark.implicits._
-    dropWarehouseTables(spark,
+    Warehouse.dropTables(spark,
       Seq(tableName, s"${tableName}_fps", s"${tableName}_df", s"${tableName}_meta"))
     val docs = corpus
       .where(col(textCol).isNotNull)
@@ -1680,11 +1680,6 @@ object Dedup {
           .otherwise(col("near_j")).as("jaccard"))
   }
 
-  /** Drop an index table + orphan warehouse dir — see [[Warehouse.dropTables]]. */
-  private def dropWarehouseTables(
-      spark: org.apache.spark.sql.SparkSession, names: Seq[String]): Unit =
-    Warehouse.dropTables(spark, names)
-
   /** Persistent EMBEDDING near-dup index — the embedding-space twin of
     * [[dedupIndexBuild]] (4th member of the persistent-index family):
     * index the corpus vectors once, probe each arriving delta for exact
@@ -1708,7 +1703,7 @@ object Dedup {
     requireLongId(corpus, idCol)
     val spark = corpus.sparkSession
     import spark.implicits._
-    dropWarehouseTables(spark, Seq(tableName, s"${tableName}_lsh", s"${tableName}_meta"))
+    Warehouse.dropTables(spark, Seq(tableName, s"${tableName}_lsh", s"${tableName}_meta"))
     val vecs = corpus
       .where(col(vecCol).isNotNull)
       .select(col(idCol).cast("long").as("vec_id"), col(vecCol).as("embedding"))

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.functions.gf
 import graft.ops.Checkpointing.PinSyntax
 
@@ -147,10 +148,7 @@ object Search {
       .withColumn("batch", lit(0L))
       .write.mode("overwrite").partitionBy("batch").format("parquet")
       .saveAsTable(s"${tableName}_meta")
-    spark.range(0)
-      .select(col("id").as("doc_id"), col("id").cast("int").as("dl"))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${tableName}_tombstones")
+    Warehouse.emptyTombstones(spark, tableName, StructType.fromDDL("doc_id BIGINT, dl INT"))
   }
 
   /** Remove documents from a [[bm25IndexBuild]] index WITHOUT touching the
@@ -165,7 +163,7 @@ object Search {
     * postings anti-joined against the broadcast tombstone set. Query
     * results are bit-identical to a fresh build on the retained corpus
     * (spec-asserted). When tombstones stop being small relative to the
-    * corpus, rebuild the index — that IS the compaction.
+    * corpus, [[bm25IndexCompact]] folds them into the tables.
     *
     * Removing an id that was never indexed (or removing it twice) is the
     * caller's bug, exactly like appending a duplicate id. */
@@ -189,59 +187,35 @@ object Search {
   /** Compact a [[bm25IndexBuild]] index: fold the accumulated tombstones
     * into the physical tables and clear them — the amortized maintenance
     * step that ends the lazy-correction era [[bm25IndexRemove]] begins.
-    * Works from the INDEX ALONE (postings anti-join tombstones; dfs
-    * recounted from the surviving postings; meta decremented by exact
-    * integers) — the original corpus is never needed, which is the point:
-    * at 100 TB the text may be long gone while the index lives on. Cost
-    * is O(index), the classic compaction trade: pay one rewrite to make
-    * every subsequent query drop its anti-join. Queries before and after
-    * compaction are bit-identical by construction. */
+    * Works from the INDEX ALONE: at 100 TB the text may be long gone while
+    * the index lives on.
+    *
+    * The postings fold through [[Warehouse.compact]]: only the affected
+    * `(tb, batch)` partitions are rewritten and dead ones dropped; the same
+    * partitions of `_terms` are recounted from the staged postings (dead
+    * ones dropped too). The removed docs' count and sum(dl) come off the
+    * batch-0 meta row as exact integers (a per-batch decrement found
+    * through the postings would miss zero-token docs, which count in
+    * n_docs but have no postings). Cost is O(affected partitions) plus
+    * one postings scan to find them; batch ids are kept and untouched
+    * batches are not rewritten. Queries before and after are
+    * bit-identical, now without the anti-join. */
   def bm25IndexCompact(spark: SparkSession, tableName: String): Unit = {
-    val tomb = spark.table(s"${tableName}_tombstones")
-      .dropDuplicates("doc_id")
-      .pinned() // O(removed) — bounded by contract
-    if (tomb.isEmpty) return
-    // Durable staging: the surviving postings are written to a stage
-    // table BEFORE their source is overwritten — with only
-    // executor-cached blocks, an executor loss mid-overwrite could lose
-    // the sole copy of the whole index. The stage read also feeds the
-    // terms recount, so the postings scan happens exactly once.
-    val stage = s"${tableName}_stage"
-    spark.sql(s"DROP TABLE IF EXISTS $stage")
-    // compaction also COLLAPSES batches to 0: the fold is a new epoch,
-    // and leaving stale batch ids behind could collide with a future
-    // append's id. (Appends must not straddle a compaction — same
-    // single-writer rule every maintenance op here follows.)
-    spark.table(tableName)
-      .join(broadcast(tomb.select(col("doc_id"))), Seq("doc_id"), "left_anti")
-      .withColumn("batch", lit(0L))
-      .write.mode("overwrite").format("parquet").saveAsTable(stage)
-    val retained = spark.table(stage)
-    retained
-      .select(spark.table(tableName).schema.fieldNames.map(col).toSeq: _*)
-      .write.mode("overwrite").partitionBy("tb", "batch").format("parquet")
-      .saveAsTable(tableName)
-    retained.groupBy(col("term"), col("tb"), col("batch"))
-      .agg(count(lit(1)).as("df"))
-      .write.mode("overwrite").partitionBy("tb", "batch").format("parquet")
-      .saveAsTable(s"${tableName}_terms")
-    spark.sql(s"DROP TABLE IF EXISTS $stage")
-    val meta = spark.table(s"${tableName}_meta")
-      .agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
-        coalesce(sum(col("sum_dl")), lit(0L)).as("sum_dl"),
-        max(col("num_parts")).as("num_parts")).head()
-    val numParts = meta.getAs[Int]("num_parts")
-    val st = tomb.agg(count(lit(1)).as("c"), sum(col("dl").cast("long")).as("s")).head()
-    spark.range(1)
-      .select(lit(meta.getAs[Long]("n_docs") - st.getLong(0)).as("n_docs"),
-        lit(meta.getAs[Long]("sum_dl") - (if (st.isNullAt(1)) 0L else st.getLong(1))).as("sum_dl"),
-        lit(numParts).as("num_parts"), lit(0L).as("batch"))
-      .write.mode("overwrite").partitionBy("batch").format("parquet")
-      .saveAsTable(s"${tableName}_meta")
-    spark.range(0)
-      .select(col("id").as("doc_id"), col("id").cast("int").as("dl"))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${tableName}_tombstones")
+    val tomb = spark.table(s"${tableName}_tombstones").dropDuplicates("doc_id")
+    Warehouse.compact(spark, tableName, tomb.select(col("doc_id")), "doc_id",
+      fold = { (retained, dead) =>
+        Warehouse.dynOverwrite(
+          retained.groupBy(col("term"), col("tb"), col("batch")).agg(count(lit(1)).as("df")),
+          s"${tableName}_terms")
+        Warehouse.dropPartitions(spark, s"${tableName}_terms", dead)
+        val st = tomb.agg(count(lit(1)), coalesce(sum(col("dl").cast("long")), lit(0L))).head()
+        val m = spark.table(s"${tableName}_meta").where(col("batch") === 0L).head()
+        Warehouse.dynOverwrite(
+          spark.range(1).select(lit(m.getAs[Long]("n_docs") - st.getLong(0)).as("n_docs"),
+            lit(m.getAs[Long]("sum_dl") - st.getLong(1)).as("sum_dl"),
+            lit(m.getAs[Int]("num_parts")).as("num_parts"), lit(0L).as("batch")),
+          s"${tableName}_meta")
+      })
   }
 
   /** Append a delta of NEW documents to a [[bm25IndexBuild]] index — the

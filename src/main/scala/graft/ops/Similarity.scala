@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.functions.gf
 import graft.io.Layout
 import graft.ops.Checkpointing.PinSyntax
@@ -466,9 +467,7 @@ object Similarity {
       .partitionBy("cell")
       .format("parquet")
       .saveAsTable(tableName)
-    spark.range(0).select(col("id").as("vec_id"))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${tableName}_tombstones")
+    Warehouse.emptyTombstones(spark, tableName, StructType.fromDDL("vec_id BIGINT"))
     centroids.zipWithIndex
       .map { case (v, i) => (i, v.toSeq) }.toSeq
       .toDF("cell", "centroid")
@@ -533,7 +532,7 @@ object Similarity {
     * removal appends vec_id tombstones; queries anti-join the cell scan
     * against the broadcast tombstone set (skipped while empty), so results
     * equal querying the original index restricted to the retained ids.
-    * When tombstones stop being small, rebuild — that is the compaction. */
+    * [[ivfpqCompactIndex]] folds them into the cells. */
   def ivfpqRemoveIndex(
       vecs: DataFrame,
       idCol: String,
@@ -544,74 +543,13 @@ object Similarity {
   }
 
   /** Compact a [[ivfpqBuildIndex]] index: fold the accumulated vec_id
-    * tombstones into the physical cell partitions and clear them. Only
-    * the AFFECTED cells (those holding a tombstoned vector — a bounded,
-    * driver-sized set) are rewritten, via dynamic partition overwrite;
-    * untouched cells keep their files byte-for-byte. A cell whose every
-    * vector is tombstoned is DROPPED as a partition (dynamic overwrite
-    * only replaces partitions present in the written data — leaving the
-    * dead cell's files behind would resurrect its vectors the moment the
-    * tombstones clear). Works from the index alone; queries before and
-    * after are identical, now without the anti-join. */
-  def ivfpqCompactIndex(spark: SparkSession, tableName: String): Unit = {
-    val tomb = spark.table(s"${tableName}_tombstones").dropDuplicates("vec_id")
-      .pinned() // O(removed) — bounded by contract
-    if (tomb.isEmpty) return
-    // Affected cells stay a FRAME for the scan (broadcast semi-join +
-    // runtime partition pruning — an In(cell, ...) literal list would
-    // bloat the plan at a 10^5+-cell index); the driver-side values are
-    // collected ONLY for the dead-cell DDL, which needs them anyway.
-    val affected = spark.table(tableName)
-      .join(broadcast(tomb), col("neighbor_id") === col("vec_id"))
-      .select(col("cell")).distinct()
-      .pinned()
-    val affectedCells = affected.collect().map(_.getInt(0))
-    if (affectedCells.nonEmpty) {
-      // Durable staging: the retained rows are written to a stage table
-      // BEFORE their source partitions are overwritten — with only
-      // executor-cached blocks, an executor loss mid-overwrite could
-      // lose the sole copy of the retained rows.
-      val stage = s"${tableName}_stage"
-      spark.sql(s"DROP TABLE IF EXISTS $stage")
-      ivfpqCompactionScan(spark, tableName, tomb, affected)
-        .write.mode("overwrite").format("parquet").saveAsTable(stage)
-      val retained = spark.table(stage)
-      val modeKey = "spark.sql.sources.partitionOverwriteMode"
-      val prior = spark.conf.get(modeKey)
-      try {
-        spark.conf.set(modeKey, "dynamic")
-        retained.select(spark.table(tableName).schema.fieldNames.map(col).toSeq: _*)
-          .write.mode("overwrite").insertInto(tableName)
-      } finally spark.conf.set(modeKey, prior)
-      val survivors = retained.select(col("cell")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      val dead = affectedCells.filterNot(survivors)
-      // one batched DDL per 500 specs — not a per-partition metastore loop
-      dead.grouped(500).foreach { grp =>
-        spark.sql(s"ALTER TABLE $tableName DROP IF EXISTS " +
-          grp.map(c => s"PARTITION (cell=$c)").mkString(", "))
-      }
-      spark.sql(s"DROP TABLE IF EXISTS $stage")
-    }
-    spark.range(0).select(col("id").as("vec_id"))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${tableName}_tombstones")
-  }
-
-  /** The compaction's retained-row scan, exposed so its plan shape is
-    * assertable: the affected-cell frame broadcasts into a semi-join on
-    * the partition column (pruned at the scan by dynamic partition
-    * pruning — the `cell >= 0` filter is the DPP trigger predicate,
-    * vacuously true for the non-negative cell ids), then the tombstoned
-    * vectors anti-join away. No literal cell list ever enters the plan. */
-  private[graft] def ivfpqCompactionScan(
-      spark: SparkSession,
-      tableName: String,
-      tomb: DataFrame,
-      affected: DataFrame): DataFrame =
-    spark.table(tableName)
-      .join(broadcast(affected.where(col("cell") >= 0)), Seq("cell"), "left_semi")
-      .join(broadcast(tomb), col("neighbor_id") === col("vec_id"), "left_anti")
+    * tombstones into the physical cell partitions and clear them through
+    * [[Warehouse.compact]] — only the affected cells are rewritten,
+    * untouched cells keep their files byte-for-byte, and a cell whose
+    * every vector is tombstoned is dropped. Works from the index alone;
+    * queries before and after are identical, now without the anti-join. */
+  def ivfpqCompactIndex(spark: SparkSession, tableName: String): Unit =
+    Warehouse.compact(spark, tableName, spark.table(s"${tableName}_tombstones"), "neighbor_id")
 
   /** Query a persistent IVFADC index built by [[ivfpqBuildIndex]]: the
     * same probe, ADC scan and exact re-rank as [[ivfpqTopK]] with the

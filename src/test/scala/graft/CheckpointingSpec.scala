@@ -41,20 +41,18 @@ class CheckpointingSpec extends SparkSpec {
   }
 
   test("pin under the conf key writes reliable checkpoint files; unset stays local") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-").toString
-    try {
-      val local = Checkpointing.pin(spark.range(100).toDF("id"))
-      assert(local.count() === 100L)
-      // unset: the pin stayed executor-local — nothing appears under dir
-      assert(listFiles(dir).isEmpty)
+    val dir = tempDir("graft-ckpt-").toString
+    val local = Checkpointing.pin(spark.range(100).toDF("id"))
+    assert(local.count() === 100L)
+    // unset: the pin stayed executor-local — nothing appears under dir
+    assert(listFiles(dir).isEmpty)
 
-      withConf(Checkpointing.ConfKey, Some(dir)) {
-        val reliable = Checkpointing.pin(spark.range(100).toDF("id"))
-        assert(reliable.count() === 100L)
-        assert(listFiles(dir).nonEmpty,
-          "reliable pin must write checkpoint files under the conf dir")
-      }
-    } finally deleteRec(new java.io.File(dir))
+    withConf(Checkpointing.ConfKey, Some(dir)) {
+      val reliable = Checkpointing.pin(spark.range(100).toDF("id"))
+      assert(reliable.count() === 100L)
+      assert(listFiles(dir).nonEmpty,
+        "reliable pin must write checkpoint files under the conf dir")
+    }
   }
 
   test("a multi-pin iterative operator returns identical rows under both strategies") {
@@ -66,14 +64,12 @@ class CheckpointingSpec extends SparkSpec {
     ).toDF("a_id", "b_id")
     val localRows =
       Dedup.connectedComponents(pairs).orderBy("id").collect().toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-op-").toString
-    try {
-      val reliableRows = withConf(Checkpointing.ConfKey, Some(dir)) {
-        Dedup.connectedComponents(pairs).orderBy("id").collect().toSeq
-      }
-      assert(reliableRows === localRows)
-      assert(listFiles(dir).nonEmpty, "the op must have pinned through the conf dir")
-    } finally deleteRec(new java.io.File(dir))
+    val dir = tempDir("graft-ckpt-op-").toString
+    val reliableRows = withConf(Checkpointing.ConfKey, Some(dir)) {
+      Dedup.connectedComponents(pairs).orderBy("id").collect().toSeq
+    }
+    assert(reliableRows === localRows)
+    assert(listFiles(dir).nonEmpty, "the op must have pinned through the conf dir")
   }
 
   private def listFiles(dir: String): Seq[java.io.File] = {
@@ -81,10 +77,5 @@ class CheckpointingSpec extends SparkSpec {
       if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).toSeq.flatMap(walk)
       else Seq(f)
     walk(new java.io.File(dir))
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
-    f.delete(): Unit
   }
 }

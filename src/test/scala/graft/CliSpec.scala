@@ -9,16 +9,16 @@ class CliSpec extends SparkSpec {
   import spark.implicits._
 
   test("datasets download: round-trips a named file to an output dir (cli.py:348)") {
-    val g = new Graft(spark, Files.createTempDirectory("graft-cli-ds").toString)
+    val g = new Graft(spark, tempDir("graft-cli-ds").toString)
     val id = g.datasets.create(Some("dl-test"))
-    val src = Files.createTempDirectory("graft-cli-src")
+    val src = tempDir("graft-cli-src")
     Files.writeString(src.resolve("lines.txt"), "one\ntwo\n")
     Files.writeString(src.resolve("rows.csv"), "a,b\n1,2\n")
     g.datasets.uploadFiles(
       Seq(src.resolve("lines.txt").toString, src.resolve("rows.csv").toString), Some(id))
 
     // named file into an explicit output path
-    val out = Files.createTempDirectory("graft-cli-out")
+    val out = tempDir("graft-cli-out")
     Cli.run(g, List("datasets", "download", id, "lines.txt", out.toString))
     assert(Files.readString(out.resolve("lines.txt")) === "one\ntwo\n")
     assert(!Files.exists(out.resolve("rows.csv")), "only the named file downloads")

@@ -42,17 +42,13 @@ class GraphSpec extends SparkSpec {
   test("pageRank under Reliable checkpointing is bit-identical to Local") {
     val v = ids.toDF("id")
     val e = edges.toDF("src", "dst")
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    try {
-      val reliable = Graph.pageRank(v, e, iters = 4,
-          ckpt = graft.ops.CheckpointStrategy.Reliable(dir))
-        .as[(Long, Long)].collect().toMap
-      val local = Graph.pageRank(v, e, iters = 4).as[(Long, Long)].collect().toMap
-      assert(reliable === local)
-      assert(reliable === refRanks(ids, edges, 4))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    }
+    val dir = tempDir("graft-ckpt").toString
+    val reliable = Graph.pageRank(v, e, iters = 4,
+        ckpt = graft.ops.CheckpointStrategy.Reliable(dir))
+      .as[(Long, Long)].collect().toMap
+    val local = Graph.pageRank(v, e, iters = 4).as[(Long, Long)].collect().toMap
+    assert(reliable === local)
+    assert(reliable === refRanks(ids, edges, 4))
   }
 
   test("pageRank is partition-layout independent") {

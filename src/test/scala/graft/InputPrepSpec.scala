@@ -8,7 +8,7 @@ class InputPrepSpec extends SparkSpec {
   import spark.implicits._
 
   test("prepareInput: dataset requires a non-empty string column") {
-    val g = new Graft(spark, java.nio.file.Files.createTempDirectory("graft-prep").toString)
+    val g = new Graft(spark, tempDir("graft-prep").toString)
     val id = g.datasets.create(Some("dataset-123"))
     g.datasets.upload(Seq((1L, "x")).toDF("id", "text"), id)
     for (bad <- Seq(None, Some(""), Some("   "))) {

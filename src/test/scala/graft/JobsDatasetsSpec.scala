@@ -26,7 +26,7 @@ class JobsDatasetsSpec extends SparkSpec {
   }
 
   test("datasets: create/upload/list/download parquet and csv") {
-    val root = java.nio.file.Files.createTempDirectory("graft-ds").toString
+    val root = tempDir("graft-ds").toString
     val ds = new Datasets(root)
     val id = ds.create(Some("my-data"))
     assert(ds.list().contains("my-data"))
@@ -41,7 +41,7 @@ class JobsDatasetsSpec extends SparkSpec {
   }
 
   test("datasets: orc round-trip preserves schema and values") {
-    val root = java.nio.file.Files.createTempDirectory("graft-ds-orc").toString
+    val root = tempDir("graft-ds-orc").toString
     val ds = new Datasets(root)
     val id = ds.create(Some("orc-data"))
     val df = Seq((1L, "x", 1.5), (2L, "y", -2.25)).toDF("id", "v", "w")
@@ -55,13 +55,13 @@ class JobsDatasetsSpec extends SparkSpec {
   }
 
   test("datasets: unknown dataset rejected") {
-    val ds = new Datasets(java.nio.file.Files.createTempDirectory("graft-ds2").toString)
+    val ds = new Datasets(tempDir("graft-ds2").toString)
     intercept[IllegalArgumentException](ds.listFiles("missing"))
   }
 
   test("datasets: raw file upload with format validation (sdk.py:1400)") {
-    val ds = new Datasets(java.nio.file.Files.createTempDirectory("graft-ds3").toString)
-    val src = java.nio.file.Files.createTempDirectory("graft-upload-src")
+    val ds = new Datasets(tempDir("graft-ds3").toString)
+    val src = tempDir("graft-upload-src")
     java.nio.file.Files.writeString(src.resolve("lines.txt"), "one\ntwo\n")
     java.nio.file.Files.writeString(src.resolve("rows.csv"), "a,b\n1,2\n")
     // directory expansion + auto-created dataset
@@ -76,10 +76,10 @@ class JobsDatasetsSpec extends SparkSpec {
       ds.uploadFiles(Seq(src.resolve("blob.xyz").toString), Some(id)))
     assert(ex.getMessage.contains("Unsupported file type"))
     // empty directory rejected
-    val empty = java.nio.file.Files.createTempDirectory("graft-empty")
+    val empty = tempDir("graft-empty")
     intercept[IllegalArgumentException](ds.uploadFiles(Seq(empty.toString)))
     // raw download round-trip (sdk.py:1535)
-    val outDir = java.nio.file.Files.createTempDirectory("graft-export")
+    val outDir = tempDir("graft-export")
     val written = ds.exportFiles(id, outDir.toString)
     assert(written.map(p => new java.io.File(p).getName).sorted === Seq("lines.txt", "rows.csv"))
     assert(java.nio.file.Files.readString(outDir.resolve("lines.txt")) === "one\ntwo\n")

@@ -12,7 +12,7 @@ class LayoutSpec extends SparkSpec {
   private def docs = graft.io.Tables.table(spark, sfDir, "documents")
 
   test("partitioned write: filters on the partition column prune at the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val dir = tempDir("graft-part").toString
     Layout.writePartitioned(docs, dir, Seq("lang"))
     val read = spark.read.parquet(dir).where(col("lang") === "en")
     val plan = read.queryExecution.executedPlan.toString
@@ -24,16 +24,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("bucketed tables: equi-join on the bucket key runs with no shuffle") {
-    for (t <- Seq("graft_docs_a", "graft_docs_b")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(
-        spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(): Unit
-      }
-      rm(loc)
-    }
+    graft.ops.Warehouse.dropTables(spark, Seq("graft_docs_a", "graft_docs_b"))
     Layout.writeBucketed(docs.select("doc_id", "lang"), "graft_docs_a", "doc_id", 4)
     Layout.writeBucketed(docs.select("doc_id", "source"), "graft_docs_b", "doc_id", 4)
     // at test scale the planner would rather broadcast (also shuffle-free);
@@ -109,26 +100,33 @@ class LayoutSpec extends SparkSpec {
       nlist = 16, m = 8, ksub = 16)
     graft.ops.Similarity.ivfpqRemoveIndex(emb.where(col("vec_id") % 7 === 0),
       "vec_id", "graft_ivfpq_cpplan")
-    val tomb = spark.table("graft_ivfpq_cpplan_tombstones").dropDuplicates("vec_id")
-    val affected = spark.table("graft_ivfpq_cpplan")
-      .join(org.apache.spark.sql.functions.broadcast(tomb),
-        col("neighbor_id") === col("vec_id"))
-      .select(col("cell")).distinct()
-    val scan = graft.ops.Similarity.ivfpqCompactionScan(
-      spark, "graft_ivfpq_cpplan", tomb, affected)
-    val plan = scan.queryExecution.executedPlan.toString
-    // at a 10^5+-cell index a literal In(cell, ...) list bloats the plan
-    // and defeats reuse — the affected cells must arrive as a broadcast
-    // semi-join whose pruning reaches the scan (DPP)
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftSemi"),
-      s"affected-cell selection must be a broadcast semi-join:\n${plan.take(4000)}")
-    assert(plan.toLowerCase.contains("dynamicpruning"),
-      s"no dynamic partition pruning on the compaction scan:\n${plan.take(4000)}")
-    assert(!plan.matches("(?s).*cell IN \\([^)]{200,}.*"),
-      s"wide literal cell list in the compaction scan:\n${plan.take(4000)}")
-    assert(scan.count() > 0)
-    Seq("", "_centroids", "_pq", "_tombstones").foreach(sfx =>
-      spark.sql(s"DROP TABLE IF EXISTS graft_ivfpq_cpplan$sfx"))
+    // the same shared scan over the BM25 postings, partitioned by (tb, batch)
+    graft.ops.Search.bm25IndexBuild(docs, "text", "doc_id", "graft_search_cpplan")
+    graft.ops.Search.bm25IndexRemove(docs.where(pmod(col("doc_id"), lit(7)) === 0),
+      "text", "doc_id", "graft_search_cpplan")
+    for ((table, tombCol, keyCol, parts) <- Seq(
+        ("graft_ivfpq_cpplan", "vec_id", "neighbor_id", Seq("cell")),
+        ("graft_search_cpplan", "doc_id", "doc_id", Seq("tb", "batch")))) {
+      val tomb = spark.table(s"${table}_tombstones").select(col(tombCol).as(keyCol)).distinct()
+      val affected = spark.table(table)
+        .join(broadcast(tomb), Seq(keyCol), "left_semi")
+        .select(parts.map(col): _*).distinct()
+      val scan = graft.ops.Warehouse.compactionScan(spark, table, tomb, keyCol, affected)
+      val plan = scan.queryExecution.executedPlan.toString
+      // at a 10^5+-partition index a literal In(cell, ...) list bloats the
+      // plan and defeats reuse — the affected partitions must arrive as a
+      // broadcast semi-join whose pruning reaches the scan (DPP)
+      assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftSemi"),
+        s"$table: affected-partition selection must be a broadcast semi-join:\n${plan.take(4000)}")
+      assert(plan.toLowerCase.contains("dynamicpruning"),
+        s"$table: no dynamic partition pruning on the compaction scan:\n${plan.take(4000)}")
+      assert(!plan.matches(s"(?s).*(${parts.mkString("|")}) IN \\([^)]{200,}.*"),
+        s"$table: wide literal partition list in the compaction scan:\n${plan.take(4000)}")
+      assert(scan.count() > 0, table)
+    }
+    graft.ops.Warehouse.dropTables(spark,
+      Seq("", "_centroids", "_pq", "_tombstones").map("graft_ivfpq_cpplan" + _) ++
+        Seq("", "_terms", "_meta", "_tombstones").map("graft_search_cpplan" + _))
   }
 
   test("dedup index probe: index tables are scanned, never shuffled") {

@@ -210,6 +210,62 @@ class SearchSpec extends SparkSpec {
       .collect().toSeq === before)
   }
 
+  test("bm25 index compact: rewrites only affected partitions, batch ids kept, exact totals") {
+    import org.apache.spark.sql.functions.{pmod, lit, sum}
+    val corpus = graft.io.Tables.table(spark, sfDir, "documents")
+      .select(col("doc_id"), col("text"))
+      .union(Seq((999999L, " \t "), (999990L, "quokka quokka"), (999980L, "wombat numbat"))
+        .toDF("doc_id", "text"))
+    // 90% (with the whitespace-only doc 999999) built, 10% appended as batch 7
+    val base = corpus.where(pmod(col("doc_id"), lit(10)) =!= 0)
+    val delta = corpus.where(pmod(col("doc_id"), lit(10)) === 0)
+    // removed from batch 0: doc_id % 10 = 3 and the zero-token doc; from
+    // batch 7: the two short docs, so most batch-7 partitions hold none
+    val gone = corpus.where(pmod(col("doc_id"), lit(10)) === 3 ||
+      col("doc_id").isin(999999L, 999990L, 999980L))
+    val (t, ref) = ("graft_search_idx_b7", "graft_search_idx_b7k")
+    Search.bm25IndexBuild(base, "text", "doc_id", t)
+    Search.bm25IndexAppend(delta, "text", "doc_id", t, Some(7L))
+    Search.bm25IndexRemove(gone, "text", "doc_id", t)
+    Search.bm25IndexBuild(base.except(gone), "text", "doc_id", ref)
+    Search.bm25IndexAppend(delta.except(gone), "text", "doc_id", ref, Some(7L))
+    val termSets = Seq(Seq("spark", "join", "window"), Seq("data", "scan"), Seq("quokka"))
+    def answers(n: String) =
+      termSets.map(ts => Search.bm25IndexQuery(spark, n, ts, k = 25).collect().toSeq)
+    val before = answers(t)
+    // the batch-7 partitions holding no removed doc, and their files
+    val goneIds = gone.select(col("doc_id")).as[Long].collect().toSeq
+    val touched = spark.table(t).where(col("doc_id").isin(goneIds: _*))
+      .select(col("tb"), col("batch")).distinct().as[(Int, Long)].collect().toSet
+    def files(tb: Int) = spark.table(t).where(col("tb") === tb && col("batch") === 7L)
+      .inputFiles.toSet
+    val untouched = spark.table(t).where(col("batch") === 7L).select(col("tb")).distinct()
+      .as[Int].collect().filterNot(tb => touched((tb, 7L)))
+    assert(untouched.nonEmpty, "every batch-7 partition holds a removed doc")
+    val filesBefore = untouched.map(tb => tb -> files(tb)).toMap
+    Search.bm25IndexCompact(spark, t)
+    assert(answers(t) === before)
+    assert(answers(t) === answers(ref))
+    assert(spark.table(s"${t}_tombstones").isEmpty)
+    assert(!spark.catalog.tableExists(s"${t}_stage"))
+    // untouched batch-7 partitions keep their exact files; batch ids survive,
+    // so postings and dfs equal the retained-only build + append row for row
+    untouched.foreach(tb => assert(files(tb) === filesBefore(tb), s"tb=$tb rewritten"))
+    def tbl(n: String) = spark.table(n).collect().map(_.toString).sorted.toSeq
+    assert(tbl(t) === tbl(ref))
+    assert(tbl(s"${t}_terms") === tbl(s"${ref}_terms"))
+    def totals(n: String) =
+      spark.table(s"${n}_meta").agg(sum(col("n_docs")), sum(col("sum_dl"))).head()
+    assert(totals(t) === totals(ref))
+    // removing everything left: dead partitions dropped, no resurrection
+    Search.bm25IndexRemove(corpus.except(gone), "text", "doc_id", t)
+    Search.bm25IndexCompact(spark, t)
+    assert(spark.table(t).isEmpty)
+    assert(spark.table(s"${t}_terms").isEmpty)
+    assert(totals(t).getLong(0) === 0L)
+    assert(Search.bm25IndexQuery(spark, t, Seq("spark", "quokka"), k = 5).isEmpty)
+  }
+
   test("bm25 index: unknown terms score nothing; empty terms rejected") {
     val docs = Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text")
     Search.bm25IndexBuild(docs, "text", "doc_id", "graft_search_idx_edge")

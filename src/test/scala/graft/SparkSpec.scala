@@ -11,4 +11,12 @@ object TestSession {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   val sfDir = "/root/testdata/sf0.001"
+
+  /** A fresh directory under java.io.tmpdir, deleted recursively when the
+    * JVM exits (the specs' Spark session may still read it until then). */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile): Unit)
+    dir
+  }
 }

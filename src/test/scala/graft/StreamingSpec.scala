@@ -28,7 +28,7 @@ class StreamingSpec extends SparkSpec {
     // vs 1,000,000 batch). This writes a MULTI-FILE directory table and
     // asserts streamed row count == batch row count through a streamTable
     // consumer; it must keep failing if anyone reintroduces the glob.
-    val dir = java.nio.file.Files.createTempDirectory("graft-dir-shaped").toString
+    val dir = tempDir("graft-dir-shaped").toString
     val src = graft.io.Tables.events(spark, sfDir)
     src.repartition(4).write.mode("overwrite").parquet(s"$dir/events.parquet")
     val parts = new java.io.File(s"$dir/events.parquet").listFiles()
@@ -62,7 +62,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("parquet sink + checkpoint: exactly-once output, restart writes nothing new") {
-    val work = java.nio.file.Files.createTempDirectory("graft-stream-sink").toString
+    val work = tempDir("graft-stream-sink").toString
     val first = Streams.windowAggAppendToParquet(spark, sfDir, work)
     val batchCount = graft.io.Tables.events(spark, sfDir)
       .groupBy(window(col("ts"), "1 hour"), col("event_type")).count().count()
@@ -73,7 +73,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("resume under a different batchRows budget fails loudly instead of restaging") {
-    val work = java.nio.file.Files.createTempDirectory("graft-stream-resume").toString
+    val work = tempDir("graft-stream-resume").toString
     val key = "spark.graft.stream.batchRows"
     val staged = try {
       spark.conf.set(key, "200")
@@ -97,7 +97,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("a stage dir staged with the old three-file layout fails loudly on resume") {
-    val work = java.nio.file.Files.createTempDirectory("graft-stream-layout").toString
+    val work = tempDir("graft-stream-layout").toString
     val stage = new java.io.File(work, "stage")
     stage.mkdirs()
     val rows = graft.io.Tables.events(spark, sfDir).count()
@@ -309,7 +309,7 @@ class StreamingSpec extends SparkSpec {
     val u2 = Seq((2L, ts(0L)), (2L, ts(300L)))
     val rows = scala.util.Random.shuffle(u1 ++ u1boundary ++ u2).zipWithIndex
       .map { case ((uid, t), i) => (i.toLong, uid, "e", t, 1.0) }
-    val dir = java.nio.file.Files.createTempDirectory("graft-skew-events").toString
+    val dir = tempDir("graft-skew-events").toString
     rows.toDF("event_id", "user_id", "event_type", "ts", "value")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = Streams.sessionizeSessionWindowsAvailableNow(spark, dir, gapMinutes = 30)
