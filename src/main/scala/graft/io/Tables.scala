@@ -1,6 +1,13 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 
 /** Table loading mirroring the reference's input handling
   * (reference: sutro/common.py:119 `prepare_input_data` — list, DataFrame,
@@ -10,15 +17,36 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Tables {
   /** Load one of the driver-generated test tables from an sf directory. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
 
-  def lineitem(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "lineitem")
-  def orders(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "orders")
-  def customer(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "customer")
-  def supplier(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "supplier")
-  def part(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "part")
-  def nation(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "nation")
-  def region(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "region")
+  /** `spark.read.parquet(path)` without Spark's schema-inference job: the
+    * schema comes from the footer of the one file inference reads with
+    * mergeSchema off (`_common_metadata`, else `_metadata`, else the first
+    * data file by path), read on the driver by Spark's own converter. With
+    * no such file, schema merging on, an unreadable footer or a data column
+    * also named by a `k=v` directory, this is `spark.read.parquet` itself. */
+  private[graft] def parquet(spark: SparkSession, path: String): DataFrame = {
+    val (root, conf) = (new Path(path), spark.sessionState.newHadoopConf())
+    val fs = root.getFileSystem(conf)
+    var partCols = Set.empty[String]
+    // listed as Spark lists: hidden names dropped at every level
+    def leaves(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq
+      .filterNot(f => GraftBridge.hiddenPathName(f.getPath.getName)).flatMap { f =>
+        if (!f.isDirectory) Seq(f)
+        else { partCols ++= f.getPath.getName.split("=", 2).init.map(_.toLowerCase); leaves(f.getPath) }
+      }
+    val files = if (fs.exists(root)) leaves(root).sortBy(_.getPath.toString) else Nil
+    val summaries = Seq("_common_metadata", "_metadata")
+    val touched = (summaries.flatMap(n => files.find(_.getPath.getName == n)) ++
+      files.filterNot(f => summaries.contains(f.getPath.getName))).headOption
+    touched.filter(_ => !spark.sessionState.conf.isParquetSchemaMergingEnabled).flatMap { f =>
+      try Some(ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(f, conf), SKIP_ROW_GROUPS)), new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+      catch { case NonFatal(_) => None }
+    }.filterNot(_.fieldNames.exists(n => partCols(n.toLowerCase)))
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
+
   /** events.parquet has carried two parquet encodings across driver data
     * generations: TIMESTAMP(NANOS), which Spark has no native type for (with
     * spark.sql.legacy.parquet.nanosAsLong=true it arrives as long nanos), and
@@ -54,7 +82,7 @@ object Tables {
       case i  => path.substring(i + 1).toLowerCase
     }
     ext match {
-      case "parquet"       => spark.read.parquet(path)
+      case "parquet"       => parquet(spark, path)
       case "orc"           => spark.read.orc(path)
       case "csv"           => spark.read.option("header", "true").option("inferSchema", "true").csv(path)
       case "json" | "jsonl" => spark.read.json(path)

@@ -1,17 +1,20 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import scala.collection.mutable
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{ArrayType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Elo ratings from ranking ballots via Bradley–Terry maximum likelihood
   * (MM updates, Hunter 2004) — the reference's `elo`
   * (sutro/templates/evals.py:180) re-expressed for scale:
   *
   * The data-sized part (turning N ballots into pairwise win/tie counts)
-  * runs distributed: explode each ballot into its (winner, loser) pairs and
-  * tie pairs, aggregate with map-side combine. Only the m×m solve
-  * (m = #labels, tiny) runs on the driver.
+  * runs distributed in one narrow pass, no shuffle: each partition folds
+  * its ballots into counts. The driver adds them and runs the m×m solve
+  * (m = #labels, tiny).
   *
   * Reference-parity semantics:
   *  - Ballots are ordered best→worst. A ballot may contain tie GROUPS
@@ -23,6 +26,8 @@ import org.apache.spark.sql.types.{ArrayType, StringType}
   *    the reference (evals.py:311-319) — so a migrated dashboard shows the
   *    same numbers.
   *  - Labels with zero matches are dropped before the solve (evals.py:285).
+  *  - Null ballots, null groups and null labels are skipped, and a null
+  *    group also voids the win pairs of every group before it.
   */
 object Elo {
 
@@ -39,55 +44,54 @@ object Elo {
       eloMean: Double = 1500.0): DataFrame = {
     val spark = ballots.sparkSession
     import spark.implicits._
-
-    // Normalize to tie-group shape: array<string> -> singleton groups.
-    // Strict ballots cannot contain ties, so their tie scan is skipped
-    // entirely (one distributed pass instead of two).
-    val (grouped: Column, mayHaveTies) = ballots.schema(column).dataType match {
-      case ArrayType(StringType, _) => (transform(col(column), x => array(x)), false)
-      case ArrayType(ArrayType(StringType, _), _) => (col(column), true)
-      case other => throw new IllegalArgumentException(
-        s"ballot column must be array<string> or array<array<string>>, got $other")
-    }
-    val g = ballots
-      .select(grouped.as("groups"))
-      .where(col("groups").isNotNull && size(col("groups")) >= 1)
-
-    // Distributed: cross-group (winner, loser) pairs — every label in an
-    // earlier group beats every label in any later group.
-    val winPairs = g
-      .select(posexplode(col("groups")).as(Seq("gi", "grp")), col("groups"))
-      .select(col("gi"), explode(col("grp")).as("winner"), col("groups"))
-      .select(col("winner"),
-        explode(flatten(slice(col("groups"), col("gi") + 2, size(col("groups"))))).as("loser"))
-      .where(col("winner") =!= col("loser"))
-      .groupBy("winner", "loser")
-      .agg(count(lit(1)).cast("double").as("n"))
-      .collect() // m² rows, m = #labels — tiny by construction
-      .map(r => ((r.getString(0), r.getString(1)), r.getDouble(2)))
-      .toMap
-
-    // Distributed: within-group tie pairs, one per unordered pair per ballot.
-    val tiePairs = if (!mayHaveTies) Map.empty[(String, String), Double] else g
-      .select(explode(col("groups")).as("grp"))
-      .where(size(col("grp")) >= 2)
-      .select(posexplode(col("grp")).as(Seq("ai", "a")), col("grp"))
-      .select(col("a"), explode(slice(col("grp"), col("ai") + 2, size(col("grp")))).as("b"))
-      .where(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("x"), greatest(col("a"), col("b")).as("y"))
-      .groupBy("x", "y")
-      .agg(count(lit(1)).cast("double").as("n"))
-      .collect()
-      .map(r => ((r.getString(0), r.getString(1)), r.getDouble(2)))
-      .toMap
-
-    val solved = solve(winPairs, tiePairs, laplace, maxIter, tol, eloMean)
-    solved.toSeq
+    val (winPairs, tiePairs) = pairCounts(ballots, column)
+    solve(winPairs, tiePairs, laplace, maxIter, tol, eloMean).toSeq
       .sortBy { case (label, t) => (-t._3, label) }
       .map { case (label, (ability, beta, elo, wins, losses, matches)) =>
         (label, ability, beta, elo, wins, losses, matches)
       }
       .toDF("label", "ability", "beta", "elo", "wins", "losses", "matches")
+  }
+
+  /** Directed (winner, loser) counts and (least, greatest) tie counts over
+    * the ballots: each partition folds into at most m² entries per map. */
+  private[graft] def pairCounts(ballots: DataFrame, column: String)
+      : (Map[(String, String), Double], Map[(String, String), Double]) = {
+    // A plain array<string> ballot is read as all-singleton groups.
+    val nested = ballots.schema(column).dataType match {
+      case ArrayType(StringType, _) => false
+      case ArrayType(ArrayType(StringType, _), _) => true
+      case other => throw new IllegalArgumentException(
+        s"ballot column must be array<string> or array<array<string>>, got $other")
+    }
+    val partials = ballots.select(col(column)).queryExecution.toRdd.mapPartitions { rows =>
+      val wins, ties = mutable.HashMap.empty[(String, String), Long]
+      def bump(m: mutable.HashMap[(String, String), Long], a: UTF8String, b: UTF8String): Unit =
+        if (a != null && b != null && a != b)
+          m.updateWith((a.toString, b.toString))(n => Some(n.fold(1L)(_ + 1)))
+      rows.foreach { row =>
+        val b = row.getArray(0)
+        if (b != null) {
+          val groups = Array.tabulate(b.numElements()) { i =>
+            if (!nested) Array(b.getUTF8String(i))
+            else Option(b.getArray(i)).map(g => Array.tabulate(g.numElements())(g.getUTF8String)).orNull
+          }
+          // Every label of a group beats every label of each later group. A
+          // null group voids the win pairs of every group before it.
+          val from = groups.lastIndexWhere(_ == null) + 1
+          for (gi <- from until groups.length; w <- groups(gi);
+               later <- gi + 1 until groups.length; l <- groups(later)) bump(wins, w, l)
+          // Tie pairs: one per pair of positions in a group, keyed (least, greatest).
+          for (g <- groups if g != null; i <- g.indices; j <- i + 1 until g.length)
+            if (g(i) != null && g(j) != null && g(i).binaryCompare(g(j)) > 0) bump(ties, g(j), g(i))
+            else bump(ties, g(i), g(j))
+        }
+      }
+      Iterator((wins.toMap, ties.toMap))
+    }.collect()
+    def total(maps: Seq[Map[(String, String), Long]]): Map[(String, String), Double] =
+      maps.flatten.groupMapReduce(_._1)(_._2)(_ + _).map { case (k, n) => k -> n.toDouble }
+    (total(partials.map(_._1).toSeq), total(partials.map(_._2).toSeq))
   }
 
   /** Solve over directed win counts only (no ties). */

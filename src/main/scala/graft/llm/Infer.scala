@@ -28,10 +28,12 @@ object Infer {
 
   /** Truncate a prompt to at most `maxTokens` whitespace tokens
     * (reference `truncate_rows`, sutro/sdk.py:480). Token boundaries are
-    * normalized to single spaces on truncation, untouched otherwise. */
+    * normalized to single spaces on truncation, untouched otherwise. A
+    * prompt under `maxTokens` chars has at most that many tokens: no split. */
   def truncateTokens(prompt: Column, maxTokens: Int): Column = {
     val toks = split(prompt, "\\s+")
-    when(size(toks) <= maxTokens, prompt)
+    when(length(prompt) < maxTokens, prompt)
+      .when(size(toks) <= maxTokens, prompt)
       .otherwise(array_join(slice(toks, 1, maxTokens), " "))
   }
 

@@ -24,7 +24,7 @@ object Streams {
     * dying on vanished temp-checkpoint dirs — with per-query dirs under a
     * root the harness owns, no failure (or sweep) can touch a neighbor's
     * live checkpoint, and [[graft.Bench.cleanup]] sweeps the whole root
-    * between queries. Override with GRAFT_STREAM_SCRATCH. */
+    * between queries and JVM exit deletes it. Override with GRAFT_STREAM_SCRATCH. */
   private[graft] lazy val scratchRoot: java.io.File = {
     // per-JVM subdir: query names are unique only within one JVM's
     // counter, so two concurrent JVMs (a Verify and a test suite, say)
@@ -33,6 +33,7 @@ object Streams {
       System.getProperty("java.io.tmpdir") + "/graft-stream-scratch"),
       java.lang.ProcessHandle.current().pid().toString)
     root.mkdirs()
+    sys.addShutdownHook(deleteRecursively(root))
     root
   }
 
@@ -94,7 +95,7 @@ object Streams {
     * parquet file sitting beside its sibling tables in sfDir. */
   private def streamTable(spark: SparkSession, sfDir: String, file: String): DataFrame = {
     val path = s"$sfDir/$file"
-    val batchSchema = spark.read.parquet(path).schema
+    val batchSchema = graft.io.Tables.parquet(spark, path).schema
     val reader = spark.readStream.schema(batchSchema)
     // layout probe through Hadoop's FileSystem, NOT java.io.File: on an
     // hdfs:// or s3a:// sfDir a local-File probe answers false for every
@@ -228,7 +229,7 @@ object Streams {
     * after the sweep sees FileNotFound. Library callers who never run
     * Bench.cleanup should either consume promptly or point
     * GRAFT_STREAM_SCRATCH at storage they manage; output dirs are
-    * per-invocation and otherwise live until the JVM's owner sweeps them. */
+    * per-invocation and otherwise live until the JVM exits. */
   private def runToParquet(df: DataFrame, prefix: String,
       partitions: Int = ReplayPartitions, state: Map[String, String] = Map.empty): DataFrame = {
     val name = uniqueName(prefix)
@@ -332,7 +333,7 @@ object Streams {
   // (bench medians) must not pay a count job per run
   private def eventRows(spark: SparkSession, sfDir: String): Long =
     eventRowsCache.computeIfAbsent(sfDir,
-      _ => spark.read.parquet(s"$sfDir/events.parquet").count())
+      _ => graft.io.Tables.parquet(spark, s"$sfDir/events.parquet").count())
 
   /** [[replayPartitions]] for a staged replay of `chunks` near-equal time
     * ranges (the one sentinel row is left out of the batch size). */
@@ -418,7 +419,7 @@ object Streams {
   private def stagedEvents(
       spark: SparkSession, sfDir: String, stageDir: String, chunks: Int): DataFrame = {
     val path = s"$sfDir/events.parquet"
-    val batchSchema = spark.read.parquet(path).schema
+    val batchSchema = graft.io.Tables.parquet(spark, path).schema
     val tsIsLong = batchSchema("ts").dataType == org.apache.spark.sql.types.LongType
 
     val stage = new java.io.File(stageDir)
@@ -437,7 +438,7 @@ object Streams {
     } else {
       deleteRecursively(stage)
       stage.mkdirs()
-      val raw = spark.read.parquet(path)
+      val raw = graft.io.Tables.parquet(spark, path)
       // sentinel ts = max(ts) + offset in the RAW encoding (long nanos,
       // TIMESTAMP or TIMESTAMP_NTZ), so staged files share one schema; a
       // sentinel below the tail would stall the watermark and suppress
@@ -710,7 +711,7 @@ object Streams {
       sfDir: String,
       n: Int = 3,
       threshold: Double = 0.5): DataFrame = {
-    val evalSet = spark.read.parquet(s"$sfDir/documents.parquet")
+    val evalSet = graft.io.Tables.documents(spark, sfDir)
       .where(pmod(col("doc_id"), lit(10)) === 0)
     val docs = streamTable(spark, sfDir, "documents.parquet")
       .where(pmod(col("doc_id"), lit(10)) =!= 0)
@@ -856,7 +857,7 @@ object Streams {
       spark: SparkSession,
       sfDir: String,
       minCos: Double = 0.1): DataFrame = {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = graft.io.Tables.embeddings(spark, sfDir)
     val baseline = graft.ops.Similarity
       .groupCentroids(emb.where(pmod(col("vec_id"), lit(10)) === 0), "label", "embedding")
       .groupBy("grp")

@@ -29,6 +29,9 @@ class InferSpec extends SparkSpec {
     val df = Seq("a  b   c d e", "x y").toDF("t")
     val out = df.select(Infer.truncateTokens(col("t"), 3).as("t")).as[String].collect()
     assert(out.toSeq === Seq("a b c", "x y"))
+    // one whitespace char is two (empty) tokens: over a limit of 1
+    val edge = Seq(" ", "a", null).toDF("t").select(Infer.truncateTokens(col("t"), 1)).as[String].collect()
+    assert(edge.toSeq === Seq("", "a", null))
   }
 
   test("infer: output column name + system prompt prefix") {

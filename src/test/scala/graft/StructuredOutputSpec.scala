@@ -1,7 +1,6 @@
 package graft
 
 import graft.llm._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -11,31 +10,6 @@ import org.apache.spark.sql.types._
   * classify, unpack and results frames launches no Spark job. */
 class StructuredOutputSpec extends SparkSpec {
   import spark.implicits._
-
-  /** Spark jobs `body` launches, counted by job group. The listener bus is
-    * ordered, so once a marker job run afterwards is seen, every job of
-    * `body` has been seen too. */
-  private def jobsLaunchedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val (counted, marker) = (s"counted-$tag", s"marker-$tag")
-    val groups = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(counted, "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 30000
-      while (!groups.contains(marker) && System.currentTimeMillis() < deadline) Thread.sleep(10)
-      assert(groups.contains(marker), "marker job never reached the listener")
-      groups.toArray.count(_ == counted)
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** Empty text, a null, non-ASCII text, and a prompt whose only keyword
     * sits past the 4,096-token context window. */
