@@ -1,879 +1,277 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Custom Catalyst expressions over the [[Kernels]]: each generates a single
-  * static call inside whole-stage codegen (no interpreted HOF fallback, no
-  * UDF serialization), with a matching interpreted `nullSafeEval` path.
-  */
-case class WordShinglesExpr(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    Kernels.shingles(input.asInstanceOf[UTF8String], n)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.shingles($c, $n)")
-  override def prettyName: String = "word_shingles"
-  override protected def withNewChildInternal(newChild: Expression): WordShinglesExpr =
-    copy(child = newChild)
+/** One call of a [[Kernels]] method as a Catalyst expression: the column
+  * arguments `args` are its children, and the scalar and plan-embedded
+  * array parameters `consts` follow them in the call. Analyzed plans and
+  * column names show it under its SQL name (`word_shingles(text)`). The
+  * optimizer replaces it with Spark's `StaticInvoke`, whose codegen is a
+  * single static call inside whole-stage codegen (no UDF boundary, no row
+  * serialization) and whose interpreted path calls the same method. A null
+  * argument gives null; only a kernel with `returnsNull` may return null
+  * itself (the media parsers, on malformed bytes). */
+private[functions] case class KernelCall(
+    name: String, fn: String, override val dataType: DataType,
+    args: Seq[Expression], consts: Seq[Any], returnsNull: Boolean = false)
+    extends Expression with RuntimeReplaceable {
+  override lazy val replacement: Expression = StaticInvoke(
+    Kernels.getClass, dataType, fn,
+    args ++ consts.map {
+      case a: Array[_] => Literal(a, ObjectType(a.getClass))
+      case v => Literal(v)
+    },
+    propagateNull = true, returnNullable = returnsNull)
+  override def children: Seq[Expression] = args
+  override def prettyName: String = name
+  override protected def stringArgs: Iterator[Any] = (args ++ consts).iterator
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): KernelCall =
+    copy(args = c)
 }
 
-case class NgramsAllExpr(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    Kernels.ngramsAll(input.asInstanceOf[UTF8String], n)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.ngramsAll($c, $n)")
-  override def prettyName: String = "ngrams_all"
-  override protected def withNewChildInternal(newChild: Expression): NgramsAllExpr =
-    copy(child = newChild)
-}
-
-case class MinHashSigExpr(child: Expression, n: Int, k: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    Kernels.minhashSig(input.asInstanceOf[UTF8String], n, k)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.minhashSig($c, $n, $k)")
-  override def prettyName: String = "minhash_sig"
-  override protected def withNewChildInternal(newChild: Expression): MinHashSigExpr =
-    copy(child = newChild)
-}
-
-case class SimHash64Expr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any =
-    Kernels.simhash64(input.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.simhash64($c)")
-  override def prettyName: String = "simhash64"
-  override protected def withNewChildInternal(newChild: Expression): SimHash64Expr =
-    copy(child = newChild)
-}
-
-case class HashEmbedExpr(child: Expression, dim: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    Kernels.hashEmbed(input.asInstanceOf[UTF8String], dim)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.hashEmbed($c, $dim)")
-  override def prettyName: String = "hash_embed"
-  override protected def withNewChildInternal(newChild: Expression): HashEmbedExpr =
-    copy(child = newChild)
-}
-
-case class CosineSimExpr(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.cosineF(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kernels.cosineF($a, $b)")
-  override def prettyName: String = "cosine_sim"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSimExpr =
-    copy(left = l, right = r)
-}
-
-/** L2 norm of an array<float> column — see [[Kernels.l2NormF]]. */
-case class L2NormFExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(input: Any): Any =
-    Kernels.l2NormF(input.asInstanceOf[ArrayData])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.l2NormF($c)")
-  override def prettyName: String = "l2_norm"
-  override protected def withNewChildInternal(newChild: Expression): L2NormFExpr =
-    copy(child = newChild)
-}
-
-case class DotProductExpr(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.dotF(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kernels.dotF($a, $b)")
-  override def prettyName: String = "dot_product"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProductExpr =
-    copy(left = l, right = r)
-}
-
-case class SigAgreementExpr(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.sigAgreement(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kernels.sigAgreement($a, $b)")
-  override def prettyName: String = "sig_agreement"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): SigAgreementExpr =
-    copy(left = l, right = r)
-}
-
-case class HyperplaneBucketExpr(child: Expression, bits: Int, seed: Long) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any =
-    Kernels.hyperplaneBucket(input.asInstanceOf[ArrayData], bits, seed)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.hyperplaneBucket($c, $bits, ${seed}L)")
-  override def prettyName: String = "hyperplane_bucket"
-  override protected def withNewChildInternal(newChild: Expression): HyperplaneBucketExpr =
-    copy(child = newChild)
-}
-
-/** Candidate-pair emission from a shingle posting list (inverted-index
-  * Jaccard join): array<struct<id, sz>> -> array<struct<a_id, b_id,
-  * a_size, b_size>> with a_id < b_id. */
-case class PostingPairsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("a_id", LongType, nullable = false),
-      StructField("b_id", LongType, nullable = false),
-      StructField("a_size", IntegerType, nullable = false),
-      StructField("b_size", IntegerType, nullable = false))),
-    containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    Kernels.postingPairs(input.asInstanceOf[ArrayData])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.postingPairs($c)")
-  override def prettyName: String = "posting_pairs"
-  override protected def withNewChildInternal(newChild: Expression): PostingPairsExpr =
-    copy(child = newChild)
-}
-
-/** Bucket-local pair scorer: all (min_id, max_id) pairs in one LSH bucket
-  * with cosine >= minCos, in a single codegen call — the O(b²) loop runs
-  * inside the aggregate's projection, so non-surviving candidate pairs are
-  * never materialized as rows and never shuffled. */
-case class BucketPairsCosExpr(child: Expression, minCos: Double) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("a_id", LongType, nullable = false),
-      StructField("b_id", LongType, nullable = false))),
-    containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    Kernels.bucketPairsCos(input.asInstanceOf[ArrayData], minCos)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.bucketPairsCos($c, $minCos)")
-  override def prettyName: String = "bucket_pairs_cos"
-  override protected def withNewChildInternal(newChild: Expression): BucketPairsCosExpr =
-    copy(child = newChild)
-}
-
-/** Gopher-style repetition statistics of a document in one pass:
-  * array<double> [n_lines, dup_line_frac, dup_line_char_frac,
-  * top_bigram_frac]. */
-case class RepetitionStatsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    Kernels.repetitionStats(input.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.repetitionStats($c)")
-  override def prettyName: String = "repetition_stats"
-  override protected def withNewChildInternal(newChild: Expression): RepetitionStatsExpr =
-    copy(child = newChild)
-}
-
-/** One-pass quality + language-ID stats:
-  * [n_tokens, n_uniq, n_punct, lang scores...] as array<long>. */
-case class QualityLangStatsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    Kernels.qualityLangStats(input.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.qualityLangStats($c)")
-  override def prettyName: String = "quality_lang_stats"
-  override protected def withNewChildInternal(newChild: Expression): QualityLangStatsExpr =
-    copy(child = newChild)
-}
-
-/** Regroup whitespace-separated words into k-word '\n'-separated lines. */
-case class RegroupLinesExpr(child: Expression, k: Int) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(input: Any): Any =
-    Kernels.regroupLines(input.asInstanceOf[UTF8String], k)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.regroupLines($c, $k)")
-  override def prettyName: String = "regroup_lines"
-  override protected def withNewChildInternal(newChild: Expression): RegroupLinesExpr =
-    copy(child = newChild)
-}
-
-/** FNV-1a 64 fingerprints of each normalized nonempty line. */
-case class LineFpsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    Kernels.lineFps(input.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.lineFps($c)")
-  override def prettyName: String = "line_fps"
-  override protected def withNewChildInternal(newChild: Expression): LineFpsExpr =
-    copy(child = newChild)
-}
-
-/** One-pass boilerplate-line removal against a plan-embedded sorted hot
-  * set: (n_lines, n_kept, cleaned). */
-case class CleanLinesExpr(child: Expression, hotSorted: Array[Long]) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_lines", LongType, nullable = false),
-    StructField("n_kept", LongType, nullable = false),
-    StructField("cleaned", StringType, nullable = false)))
-  override def nullSafeEval(input: Any): Any =
-    Kernels.cleanLines(input.asInstanceOf[UTF8String], hotSorted)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("hotSorted", hotSorted, "long[]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.cleanLines($c, $ref)")
-  }
-  override def prettyName: String = "clean_lines"
-  override protected def withNewChildInternal(newChild: Expression): CleanLinesExpr =
-    copy(child = newChild)
-}
-
-/** Product-quantization code indices of a vector against plan-embedded
-  * codebooks. */
-case class PqEncodeExpr(child: Expression, codebooks: Array[Double], m: Int, ksub: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    Kernels.pqEncode(input.asInstanceOf[ArrayData], codebooks, m, ksub)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("codebooks", codebooks, "double[]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.pqEncode($c, $ref, $m, $ksub)")
-  }
-  override def prettyName: String = "pq_encode"
-  override protected def withNewChildInternal(newChild: Expression): PqEncodeExpr =
-    copy(child = newChild)
-}
-
-/** Per-query ADC distance table over plan-embedded codebooks. */
-case class PqTableExpr(child: Expression, codebooks: Array[Double], m: Int, ksub: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    Kernels.pqTable(input.asInstanceOf[ArrayData], codebooks, m, ksub)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("codebooks", codebooks, "double[]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.pqTable($c, $ref, $m, $ksub)")
-  }
-  override def prettyName: String = "pq_table"
-  override protected def withNewChildInternal(newChild: Expression): PqTableExpr =
-    copy(child = newChild)
-}
-
-/** ADC distance lookup: m table reads per candidate. */
-case class PqAdcExpr(left: Expression, right: Expression, ksub: Int) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.pqAdc(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], ksub)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kernels.pqAdc($a, $b, $ksub)")
-  override def prettyName: String = "pq_adc"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): PqAdcExpr =
-    copy(left = l, right = r)
-}
-
-/** SQ8 scalar-quantization encode over plan-embedded per-dim min/span. */
-case class SqEncodeExpr(child: Expression, mins: Array[Float], spans: Array[Float])
-    extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(input: Any): Any =
-    Kernels.sqEncode(input.asInstanceOf[ArrayData], mins, spans)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mref = ctx.addReferenceObj("sqMins", mins, "float[]")
-    val sref = ctx.addReferenceObj("sqSpans", spans, "float[]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.sqEncode($c, $mref, $sref)")
-  }
-  override def prettyName: String = "sq_encode"
-  override protected def withNewChildInternal(newChild: Expression): SqEncodeExpr =
-    copy(child = newChild)
-}
-
-/** Approximate cosine of (SQ8 codes, raw query) over plan-embedded
-  * min/span — the asymmetric scoring phase of the SQ index. */
-case class SqCosExpr(left: Expression, right: Expression,
-    mins: Array[Float], spans: Array[Float]) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.sqCos(a.asInstanceOf[Array[Byte]], b.asInstanceOf[ArrayData], mins, spans)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mref = ctx.addReferenceObj("sqMins", mins, "float[]")
-    val sref = ctx.addReferenceObj("sqSpans", spans, "float[]")
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kernels.sqCos($a, $b, $mref, $sref)")
-  }
-  override def prettyName: String = "sq_cos"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): SqCosExpr =
-    copy(left = l, right = r)
-}
-
-/** Per-document char-bigram counts, packed (code << 32 | count), ascending
-  * code order. */
-case class CharBigramCountsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    Kernels.charBigramCounts(input.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.charBigramCounts($c)")
-  override def prettyName: String = "char_bigram_counts"
-  override protected def withNewChildInternal(newChild: Expression): CharBigramCountsExpr =
-    copy(child = newChild)
-}
-
-/** [n_bigrams, sum count*lnP] under a plan-embedded trained log-prob table
-  * (16k doubles — tiny, rides the serialized expression like the IVF
-  * centroids). */
-case class BigramLogScoreExpr(child: Expression, lnP: Array[Double]) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    Kernels.bigramLogScore(input.asInstanceOf[UTF8String], lnP)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("lnP", lnP, "double[]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.bigramLogScore($c, $ref)")
-  }
-  override def prettyName: String = "bigram_log_score"
-  override protected def withNewChildInternal(newChild: Expression): BigramLogScoreExpr =
-    copy(child = newChild)
-}
-
-/** Nearest-centroid cell id over a small broadcast-by-plan centroid table
-  * (the IVF coarse quantizer). The centroid array rides the serialized
-  * expression — nlist x dim doubles, tiny — and codegen references it via
-  * addReferenceObj, so assignment stays inside whole-stage codegen. */
-case class NearestCellExpr(child: Expression, centroids: Array[Array[Double]])
-    extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(input: Any): Any =
-    Kernels.nearestCell(input.asInstanceOf[ArrayData], centroids)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("centroids", centroids, "double[][]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.nearestCell($c, $ref)")
-  }
-  override def prettyName: String = "nearest_cell"
-  override protected def withNewChildInternal(newChild: Expression): NearestCellExpr =
-    copy(child = newChild)
-}
-
-/** Max-cosine centroid index over a small plan-carried centroid table —
-  * spherical cluster assignment for SemDeDup. Same shape as
-  * [[NearestCellExpr]] but argmax cosine instead of argmin L2. */
-case class NearestCosExpr(child: Expression, centroids: Array[Array[Double]])
-    extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(input: Any): Any =
-    Kernels.nearestCos(input.asInstanceOf[ArrayData], centroids)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("centroids", centroids, "double[][]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.nearestCos($c, $ref)")
-  }
-  override def prettyName: String = "nearest_cos"
-  override protected def withNewChildInternal(newChild: Expression): NearestCosExpr =
-    copy(child = newChild)
-}
-
-/** The nprobe nearest centroid indices for a query vector (IVF probe list). */
-case class ProbeCellsExpr(child: Expression, centroids: Array[Array[Double]], nprobe: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    Kernels.probeCells(input.asInstanceOf[ArrayData], centroids, nprobe)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("centroids", centroids, "double[][]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.probeCells($c, $ref, $nprobe)")
-  }
-  override def prettyName: String = "probe_cells"
-  override protected def withNewChildInternal(newChild: Expression): ProbeCellsExpr =
-    copy(child = newChild)
-}
-
-/** Residual of an array<float> vector against its coarse cell's centroid
-  * (plan-embedded centroid table) — the IVFADC encode/query input. */
-case class CellResidualExpr(left: Expression, right: Expression, centroids: Array[Array[Double]])
-    extends BinaryExpression {
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def nullSafeEval(v: Any, cell: Any): Any =
-    Kernels.cellResidual(v.asInstanceOf[ArrayData], cell.asInstanceOf[Int], centroids)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("centroids", centroids, "double[][]")
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kernels.cellResidual($a, $b, $ref)")
-  }
-  override def prettyName: String = "cell_residual"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CellResidualExpr =
-    copy(left = l, right = r)
-}
-
-/** Structurally valid media container (PNG/JPEG/WAV/GIF by docId % 4)
-  * around a binary body — header fields derived from the body byte sum
-  * (oracle-replicable arithmetic), real public byte layouts. */
-case class MediaContainerExpr(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(docId: Any, body: Any): Any =
-    Kernels.mediaContainer(docId.asInstanceOf[Long], body.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kernels.mediaContainer($a, $b)")
-  override def prettyName: String = "media_container"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): MediaContainerExpr =
-    copy(left = l, right = r)
-}
-
-/** URL canonicalization: lowercase scheme/host, strip default ports and
-  * trailing slash, drop utm_* params, sort the rest. */
-case class CanonicalizeUrlExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(input: Any): Any =
-    Kernels.canonicalizeUrl(input.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.canonicalizeUrl($c)")
-  override def prettyName: String = "canonicalize_url"
-  override protected def withNewChildInternal(newChild: Expression): CanonicalizeUrlExpr =
-    copy(child = newChild)
-}
-
-/** Synthetic grayscale raster payload from a doc id (formulaic pixels —
-  * the SQL-verifiable stand-in for a decoded image plane). */
-case class RasterContainerExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(docId: Any): Any =
-    Kernels.rasterContainer(docId.asInstanceOf[Long])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.rasterContainer($c)")
-  override def prettyName: String = "raster_container"
-  override protected def withNewChildInternal(newChild: Expression): RasterContainerExpr =
-    copy(child = newChild)
-}
-
-/** 2x2 integer average-pool over a raster payload:
-  * [out_w, out_h, position-weighted checksum]; null on malformed header. */
-case class RasterPool2x2Expr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def nullSafeEval(payload: Any): Any =
-    Kernels.rasterPool2x2(payload.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.functions.Kernels.rasterPool2x2($c);
-         |if (${ev.value} == null) { ${ev.isNull} = true; }
-       """.stripMargin
-    })
-  override def prettyName: String = "raster_pool_2x2"
-  override protected def withNewChildInternal(newChild: Expression): RasterPool2x2Expr =
-    copy(child = newChild)
-}
-
-/** PCM energy stats from a WAV payload (RIFF walk + one data pass):
-  * [sample_rate, channels, n_samples, peak, sum_sq]; null if not WAV. */
-case class AudioStatsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def nullSafeEval(payload: Any): Any =
-    Kernels.audioStats(payload.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.functions.Kernels.audioStats($c);
-         |if (${ev.value} == null) { ${ev.isNull} = true; }
-       """.stripMargin
-    })
-  override def prettyName: String = "audio_stats"
-  override protected def withNewChildInternal(newChild: Expression): AudioStatsExpr =
-    copy(child = newChild)
-}
-
-/** Synthetic multi-frame raster payload ("video") from a doc id. */
-case class VideoContainerExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(docId: Any): Any =
-    Kernels.videoContainer(docId.asInstanceOf[Long])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.videoContainer($c)")
-  override def prettyName: String = "video_container"
-  override protected def withNewChildInternal(newChild: Expression): VideoContainerExpr =
-    copy(child = newChild)
-}
-
-/** Strided frame sampling over a video payload:
-  * [w, h, checksum per sampled frame]; null on malformed header. */
-case class VideoFramesExpr(child: Expression, stride: Int) extends UnaryExpression {
-  // Fail at analysis time, not on the executor: stride <= 0 would loop
-  // forever in the frame walk (SQL callers bypass the Scala-side guard).
-  require(stride > 0, s"video_frames stride must be positive, got $stride")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def nullSafeEval(payload: Any): Any =
-    Kernels.videoFrameChecksums(payload.asInstanceOf[Array[Byte]], stride)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.functions.Kernels.videoFrameChecksums($c, $stride);
-         |if (${ev.value} == null) { ${ev.isNull} = true; }
-       """.stripMargin
-    })
-  override def prettyName: String = "video_frames"
-  override protected def withNewChildInternal(newChild: Expression): VideoFramesExpr =
-    copy(child = newChild)
-}
-
-/** Real media header decode (PNG IHDR / JPEG SOF / WAV fmt / GIF LSD):
-  * struct(format, width, height, sample_rate, channels, bit_depth). */
-case class MediaHeaderExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("format", StringType, nullable = false),
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("sample_rate", IntegerType, nullable = false),
-    StructField("channels", IntegerType, nullable = false),
-    StructField("bit_depth", IntegerType, nullable = false)))
-  override def nullSafeEval(input: Any): Any =
-    Kernels.mediaHeader(input.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.mediaHeader($c)")
-  override def prettyName: String = "media_header"
-  override protected def withNewChildInternal(newChild: Expression): MediaHeaderExpr =
-    copy(child = newChild)
-}
-
-/** Positional word-n-gram FNV-1a fingerprints (array index = word
-  * position) — the exact-substring-dedup primitive. */
-case class NgramFpsExpr(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    Kernels.ngramFps(input.asInstanceOf[UTF8String], n)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.ngramFps($c, $n)")
-  override def prettyName: String = "ngram_fps"
-  override protected def withNewChildInternal(newChild: Expression): NgramFpsExpr =
-    copy(child = newChild)
-}
-
-/** [n_distinct_shingles, n_bloom_hits] against a plan-embedded Bloom
-  * filter — the count-based decontamination prefilter. */
-case class BloomShingleHitsExpr(child: Expression, n: Int, bits: Array[Long], k: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    Kernels.bloomShingleHits(input.asInstanceOf[UTF8String], n, bits, k)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloomBits", bits, "long[]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.bloomShingleHits($c, $n, $ref, $k)")
-  }
-  override def prettyName: String = "bloom_shingle_hits"
-  override protected def withNewChildInternal(newChild: Expression): BloomShingleHitsExpr =
-    copy(child = newChild)
-}
-
-/** Distinct word-n-gram shingle fingerprints, sorted ascending. */
-case class ShingleFpsSortedExpr(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    Kernels.shingleFpsSorted(input.asInstanceOf[UTF8String], n)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.shingleFpsSorted($c, $n)")
-  override def prettyName: String = "shingle_fps_sorted"
-  override protected def withNewChildInternal(newChild: Expression): ShingleFpsSortedExpr =
-    copy(child = newChild)
-}
-
-/** [n_bytes, n_deflated] of a text column (DEFLATE level 6). */
-case class DeflateStatsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    Kernels.deflateStats(input.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.deflateStats($c)")
-  override def prettyName: String = "deflate_stats"
-  override protected def withNewChildInternal(newChild: Expression): DeflateStatsExpr =
-    copy(child = newChild)
-}
-
-/** One-pass word-span removal: (text, interleaved sorted [s,e) offsets)
-  * -> struct(n_words, n_kept, cleaned). */
-case class DropSpansExpr(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_words", LongType, nullable = false),
-    StructField("n_kept", LongType, nullable = false),
-    StructField("cleaned", StringType, nullable = false)))
-  override def nullSafeEval(text: Any, spans: Any): Any =
-    Kernels.dropSpans(text.asInstanceOf[UTF8String], spans.asInstanceOf[ArrayData])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, s) => s"graft.functions.Kernels.dropSpans($t, $s)")
-  override def prettyName: String = "drop_spans"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DropSpansExpr =
-    copy(left = l, right = r)
-}
-
-/** Prefix-filtered candidate delta reps for one corpus rep against a
-  * plan-embedded CSR of the delta's prefix postings — see
-  * [[Kernels.prefixCandidates]]. */
-case class PrefixCandidatesExpr(
-    child: Expression, t: Double, minHits: Int,
-    fps: Array[Long], offsets: Array[Int], dreps: Array[Int],
-    dRepIds: Array[Long], dRepNfp: Array[Int], probePrefix: Boolean = true)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    Kernels.prefixCandidates(input.asInstanceOf[ArrayData], t, minHits,
-      fps, offsets, dreps, dRepIds, dRepNfp, probePrefix)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fpsRef = ctx.addReferenceObj("csrFps", fps, "long[]")
-    val offRef = ctx.addReferenceObj("csrOffsets", offsets, "int[]")
-    val drRef = ctx.addReferenceObj("csrDreps", dreps, "int[]")
-    val idRef = ctx.addReferenceObj("dRepIds", dRepIds, "long[]")
-    val nfRef = ctx.addReferenceObj("dRepNfp", dRepNfp, "int[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.Kernels.prefixCandidates($c, $t, $minHits, " +
-        s"$fpsRef, $offRef, $drRef, $idRef, $nfRef, $probePrefix)")
-  }
-  override def prettyName: String = "prefix_candidates"
-  override protected def withNewChildInternal(newChild: Expression): PrefixCandidatesExpr =
-    copy(child = newChild)
-}
-
-/** One-merge-pass Jaccard of two sorted long arrays. */
-case class JaccardSortedFpsExpr(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.jaccardSortedFps(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kernels.jaccardSortedFps($a, $b)")
-  override def prettyName: String = "jaccard_sorted_fps"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): JaccardSortedFpsExpr =
-    copy(left = l, right = r)
-}
-
-/** BM25 per-document statistics [dl, tf_0, ..., tf_{m-1}] for a
-  * plan-embedded (lower-cased) term list. */
-case class TermFreqsExpr(child: Expression, terms: Array[String]) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    Kernels.termFreqs(input.asInstanceOf[UTF8String], terms)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("terms", terms, "java.lang.String[]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.termFreqs($c, $ref)")
-  }
-  override def prettyName: String = "term_freqs"
-  override protected def withNewChildInternal(newChild: Expression): TermFreqsExpr =
-    copy(child = newChild)
-}
-
-/** Unicode NFC normalization (UAX #15 canonical composition). */
-case class NfcNormalizeExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(input: Any): Any =
-    Kernels.nfcNormalize(input.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.nfcNormalize($c)")
-  override def prettyName: String = "nfc_normalize"
-  override protected def withNewChildInternal(newChild: Expression): NfcNormalizeExpr =
-    copy(child = newChild)
-}
-
-/** Accent stripping: NFD then drop non-spacing marks (category Mn). */
-case class StripAccentsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(input: Any): Any =
-    Kernels.stripAccents(input.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.stripAccents($c)")
-  override def prettyName: String = "strip_accents"
-  override protected def withNewChildInternal(newChild: Expression): StripAccentsExpr =
-    copy(child = newChild)
-}
-
-/** Fused PII scrub: struct(n_email, n_ip, n_phone, scrubbed) in one kernel
-  * call per row — see [[Kernels.piiScrubStats]] for the pass accounting. */
-case class PiiScrubStatsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_email", LongType, nullable = false),
-    StructField("n_ip", LongType, nullable = false),
-    StructField("n_phone", LongType, nullable = false),
-    StructField("scrubbed", StringType, nullable = false)))
-  override def nullSafeEval(input: Any): Any =
-    Kernels.piiScrubStats(input.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.piiScrubStats($c)")
-  override def prettyName: String = "pii_scrub_stats"
-  override protected def withNewChildInternal(newChild: Expression): PiiScrubStatsExpr =
-    copy(child = newChild)
-}
-
-/** Column-typed API over the custom expressions. */
+/** Column-typed API over the [[Kernels]]: each function is one [[KernelCall]]. */
 object gf {
-  private def u(c: Column)(f: Expression => Expression): Column =
-    GraftBridge.column(f(GraftBridge.expression(c)))
+  private def call(name: String, fn: String, dt: DataType, args: Column*)(consts: Any*): Column =
+    GraftBridge.column(KernelCall(name, fn, dt, args.map(GraftBridge.expression), consts))
+
+  /** [[call]] for a parser that returns null on malformed bytes. */
+  private def callOrNull(name: String, fn: String, dt: DataType, arg: Column)(consts: Any*): Column =
+    GraftBridge.column(KernelCall(name, fn, dt, Seq(GraftBridge.expression(arg)), consts,
+      returnsNull = true))
+
+  private def arr(t: DataType): DataType = ArrayType(t, containsNull = false)
+  private def struct(fields: (String, DataType)*): DataType =
+    StructType(fields.map { case (n, t) => StructField(n, t, nullable = false) })
+  private val longs = arr(LongType)
+  private val doubles = arr(DoubleType)
 
   /** Distinct word n-gram shingles of a text column. */
-  def shingles(text: Column, n: Int): Column = u(text)(WordShinglesExpr(_, n))
+  def shingles(text: Column, n: Int): Column =
+    call("word_shingles", "shingles", arr(StringType), text)(n)
 
   /** ALL word n-grams with multiplicity (corpus-frequency counting). */
-  def ngramsAll(text: Column, n: Int): Column = u(text)(NgramsAllExpr(_, n))
+  def ngramsAll(text: Column, n: Int): Column =
+    call("ngrams_all", "ngramsAll", arr(StringType), text)(n)
 
   /** MinHash signature (k permutations over word n-gram shingles). */
-  def minhashSig(text: Column, n: Int, k: Int): Column = u(text)(MinHashSigExpr(_, n, k))
+  def minhashSig(text: Column, n: Int, k: Int): Column =
+    call("minhash_sig", "minhashSig", longs, text)(n, k)
 
   /** 64-bit SimHash fingerprint of a text column. */
-  def simhash64(text: Column): Column = u(text)(SimHash64Expr(_))
+  def simhash64(text: Column): Column = call("simhash64", "simhash64", LongType, text)()
 
   /** Feature-hash embedding (array<float>, L2-normalized). */
-  def hashEmbed(text: Column, dim: Int): Column = u(text)(HashEmbedExpr(_, dim))
+  def hashEmbed(text: Column, dim: Int): Column =
+    call("hash_embed", "hashEmbed", arr(FloatType), text)(dim)
 
   /** Cosine similarity of two array<float> columns. */
-  def cosine(a: Column, b: Column): Column =
-    GraftBridge.column(CosineSimExpr(GraftBridge.expression(a), GraftBridge.expression(b)))
+  def cosine(a: Column, b: Column): Column = call("cosine_sim", "cosineF", DoubleType, a, b)()
 
   /** L2 norm of an array<float> column. */
-  def l2norm(a: Column): Column = u(a)(L2NormFExpr(_))
+  def l2norm(a: Column): Column = call("l2_norm", "l2NormF", DoubleType, a)()
 
   /** Dot product of two array<float> columns. */
-  def dot(a: Column, b: Column): Column =
-    GraftBridge.column(DotProductExpr(GraftBridge.expression(a), GraftBridge.expression(b)))
+  def dot(a: Column, b: Column): Column = call("dot_product", "dotF", DoubleType, a, b)()
 
   /** Fraction of agreeing positions between two array<long> signatures. */
   def sigAgreement(a: Column, b: Column): Column =
-    GraftBridge.column(SigAgreementExpr(GraftBridge.expression(a), GraftBridge.expression(b)))
+    call("sig_agreement", "sigAgreement", DoubleType, a, b)()
 
   /** Random-hyperplane LSH bucket id for an array<float> column. */
   def hyperplaneBucket(v: Column, bits: Int, seed: Long): Column =
-    u(v)(HyperplaneBucketExpr(_, bits, seed))
+    call("hyperplane_bucket", "hyperplaneBucket", LongType, v)(bits, seed)
 
   /** Repetition stats [n_lines, dup_line_frac, dup_line_char_frac,
     * top_bigram_frac] of a text column. */
-  def repetitionStats(text: Column): Column = u(text)(RepetitionStatsExpr(_))
+  def repetitionStats(text: Column): Column =
+    call("repetition_stats", "repetitionStats", doubles, text)()
 
   /** PQ code indices of a vector. */
   def pqEncode(v: Column, codebooks: Array[Double], m: Int, ksub: Int): Column =
-    u(v)(PqEncodeExpr(_, codebooks, m, ksub))
+    call("pq_encode", "pqEncode", arr(IntegerType), v)(codebooks, m, ksub)
 
   /** Per-query ADC distance table. */
   def pqTable(v: Column, codebooks: Array[Double], m: Int, ksub: Int): Column =
-    u(v)(PqTableExpr(_, codebooks, m, ksub))
+    call("pq_table", "pqTable", doubles, v)(codebooks, m, ksub)
 
-  /** ADC distance of (table, codes). */
+  /** ADC distance of (table, codes): m table reads per candidate. */
   def pqAdc(table: Column, codes: Column, ksub: Int): Column =
-    GraftBridge.column(PqAdcExpr(GraftBridge.expression(table), GraftBridge.expression(codes), ksub))
+    call("pq_adc", "pqAdc", DoubleType, table, codes)(ksub)
 
-  /** One-pass quality + language-ID stats of a text column. */
-  def qualityLangStats(text: Column): Column = u(text)(QualityLangStatsExpr(_))
+  /** One-pass quality + language-ID stats of a text column:
+    * [n_tokens, n_uniq, n_punct, lang scores...]. */
+  def qualityLangStats(text: Column): Column =
+    call("quality_lang_stats", "qualityLangStats", longs, text)()
 
-  /** Regroup words into k-word lines (deterministic line derivation). */
-  def regroupLines(text: Column, k: Int): Column = u(text)(RegroupLinesExpr(_, k))
+  /** Regroup words into k-word '\n'-separated lines (deterministic line
+    * derivation). */
+  def regroupLines(text: Column, k: Int): Column =
+    call("regroup_lines", "regroupLines", StringType, text)(k)
 
-  /** Unicode NFC normalization. */
-  def nfcNormalize(text: Column): Column = u(text)(NfcNormalizeExpr(_))
+  /** Unicode NFC normalization (UAX #15 canonical composition). */
+  def nfcNormalize(text: Column): Column = call("nfc_normalize", "nfcNormalize", StringType, text)()
 
-  /** Accent stripping (NFD + drop combining marks). */
-  def stripAccents(text: Column): Column = u(text)(StripAccentsExpr(_))
+  /** Accent stripping (NFD + drop non-spacing marks). */
+  def stripAccents(text: Column): Column = call("strip_accents", "stripAccents", StringType, text)()
 
   /** FNV-1a 64 fingerprints of normalized nonempty lines. */
-  def lineFps(text: Column): Column = u(text)(LineFpsExpr(_))
+  def lineFps(text: Column): Column = call("line_fps", "lineFps", longs, text)()
 
-  /** One-pass hot-line removal: struct(n_lines, n_kept, cleaned). */
+  /** One-pass hot-line removal against a plan-embedded sorted hot set:
+    * struct(n_lines, n_kept, cleaned). */
   def cleanLines(text: Column, hotSorted: Array[Long]): Column =
-    u(text)(CleanLinesExpr(_, hotSorted))
+    call("clean_lines", "cleanLines",
+      struct("n_lines" -> LongType, "n_kept" -> LongType, "cleaned" -> StringType), text)(hotSorted)
 
-  /** Packed per-document char-bigram counts. */
-  def charBigramCounts(text: Column): Column = u(text)(CharBigramCountsExpr(_))
+  /** Per-document char-bigram counts, packed (code << 32 | count), ascending
+    * code order. */
+  def charBigramCounts(text: Column): Column =
+    call("char_bigram_counts", "charBigramCounts", longs, text)()
 
-  /** [n_bigrams, sum count*lnP] under a trained bigram log-prob table. */
+  /** [n_bigrams, sum count*lnP] under a plan-embedded trained bigram
+    * log-prob table (16k doubles, tiny, rides the plan like the IVF
+    * centroids). */
   def bigramLogScore(text: Column, lnP: Array[Double]): Column =
-    u(text)(BigramLogScoreExpr(_, lnP))
+    call("bigram_log_score", "bigramLogScore", doubles, text)(lnP)
 
-  /** Positional word-n-gram fingerprints (index = word position). */
-  def ngramFps(text: Column, n: Int): Column = u(text)(NgramFpsExpr(_, n))
+  /** Positional word-n-gram fingerprints (index = word position) — the
+    * exact-substring-dedup primitive. */
+  def ngramFps(text: Column, n: Int): Column = call("ngram_fps", "ngramFps", longs, text)(n)
 
-  /** [n_distinct_shingles, n_bloom_hits] of a text column. */
+  /** [n_distinct_shingles, n_bloom_hits] of a text column against a
+    * plan-embedded Bloom filter — the decontamination prefilter. */
   def bloomShingleHits(text: Column, n: Int, bits: Array[Long], k: Int): Column =
-    u(text)(BloomShingleHitsExpr(_, n, bits, k))
+    call("bloom_shingle_hits", "bloomShingleHits", longs, text)(n, bits, k)
 
   /** Distinct shingle fingerprints, sorted ascending. */
-  def shingleFpsSorted(text: Column, n: Int): Column = u(text)(ShingleFpsSortedExpr(_, n))
+  def shingleFpsSorted(text: Column, n: Int): Column =
+    call("shingle_fps_sorted", "shingleFpsSorted", longs, text)(n)
 
-  /** Prefix-filtered candidacy against a plan-embedded delta CSR.
-    * `probePrefix=false` = one-sided mode: the probing list need not be
-    * df-ordered; the CSR side carries the prefixes. */
+  /** Prefix-filtered candidacy against a plan-embedded delta CSR (see
+    * [[Kernels.prefixCandidates]]). `probePrefix=false` = one-sided mode:
+    * the probing list need not be df-ordered; the CSR side carries the
+    * prefixes. */
   def prefixCandidates(rked: Column, t: Double, minHits: Int,
       fps: Array[Long], offsets: Array[Int], dreps: Array[Int],
       dRepIds: Array[Long], dRepNfp: Array[Int],
       probePrefix: Boolean = true): Column =
-    u(rked)(PrefixCandidatesExpr(_, t, minHits, fps, offsets, dreps, dRepIds,
-      dRepNfp, probePrefix))
+    call("prefix_candidates", "prefixCandidates", longs, rked)(
+      t, minHits, fps, offsets, dreps, dRepIds, dRepNfp, probePrefix)
 
-  /** Merge-pass Jaccard of two sorted long-array columns. */
+  /** One-merge-pass Jaccard of two sorted long-array columns. */
   def jaccardSortedFps(a: Column, b: Column): Column =
-    GraftBridge.column(JaccardSortedFpsExpr(GraftBridge.expression(a), GraftBridge.expression(b)))
+    call("jaccard_sorted_fps", "jaccardSortedFps", DoubleType, a, b)()
 
-  /** Remove interleaved [s,e) word spans: struct(n_words, n_kept, cleaned). */
+  /** Remove interleaved sorted [s,e) word spans: struct(n_words, n_kept,
+    * cleaned). */
   def dropSpans(text: Column, spans: Column): Column =
-    GraftBridge.column(DropSpansExpr(GraftBridge.expression(text), GraftBridge.expression(spans)))
+    call("drop_spans", "dropSpans",
+      struct("n_words" -> LongType, "n_kept" -> LongType, "cleaned" -> StringType), text, spans)()
 
-  /** [n_bytes, n_deflated] of a text column. */
-  def deflateStats(text: Column): Column = u(text)(DeflateStatsExpr(_))
+  /** [n_bytes, n_deflated] of a text column (DEFLATE level 6). */
+  def deflateStats(text: Column): Column = call("deflate_stats", "deflateStats", longs, text)()
 
-  /** BM25 per-document statistics [dl, tf...] for a fixed term list. */
+  /** BM25 per-document statistics [dl, tf_0, ..., tf_{m-1}] for a fixed
+    * (lower-cased) term list. */
   def termFreqs(text: Column, terms: Array[String]): Column =
-    u(text)(TermFreqsExpr(_, terms))
+    call("term_freqs", "termFreqs", longs, text)(terms)
 
-  /** Candidate pairs from a shingle posting list array<struct<id, sz>>. */
-  def postingPairs(items: Column): Column = u(items)(PostingPairsExpr(_))
+  /** Candidate pairs from a shingle posting list (inverted-index Jaccard
+    * join): array<struct<id, sz>> -> array<struct<a_id, b_id, a_size,
+    * b_size>> with a_id < b_id. */
+  def postingPairs(items: Column): Column =
+    call("posting_pairs", "postingPairs", arr(struct("a_id" -> LongType, "b_id" -> LongType,
+      "a_size" -> IntegerType, "b_size" -> IntegerType)), items)()
 
-  /** Bucket-local cosine pair scoring over array<struct<id, vec>>. */
+  /** Bucket-local pair scorer over array<struct<id, vec>>: all (min_id,
+    * max_id) pairs in one LSH bucket with cosine >= minCos, in a single
+    * call — the O(b²) loop runs inside the aggregate's projection, so
+    * non-surviving candidate pairs are never materialized as rows. */
   def bucketPairsCos(items: Column, minCos: Double): Column =
-    u(items)(BucketPairsCosExpr(_, minCos))
+    call("bucket_pairs_cos", "bucketPairsCos",
+      arr(struct("a_id" -> LongType, "b_id" -> LongType)), items)(minCos)
 
-  /** Nearest-centroid cell id (IVF assignment). */
+  /** Nearest-centroid cell id (the IVF coarse quantizer) over a small
+    * plan-embedded centroid table (nlist x dim doubles). */
   def nearestCell(v: Column, centroids: Array[Array[Double]]): Column =
-    u(v)(NearestCellExpr(_, centroids))
+    call("nearest_cell", "nearestCell", IntegerType, v)(centroids)
 
   /** Max-cosine centroid index (SemDeDup spherical assignment). */
   def nearestCos(v: Column, centroids: Array[Array[Double]]): Column =
-    u(v)(NearestCosExpr(_, centroids))
+    call("nearest_cos", "nearestCos", IntegerType, v)(centroids)
 
   /** nprobe nearest centroid indices (IVF probe list). */
   def probeCells(v: Column, centroids: Array[Array[Double]], nprobe: Int): Column =
-    u(v)(ProbeCellsExpr(_, centroids, nprobe))
+    call("probe_cells", "probeCells", arr(IntegerType), v)(centroids, nprobe)
 
-  /** Residual of a vector against its coarse cell centroid (IVFADC). */
+  /** Residual of a vector against its coarse cell centroid (the IVFADC
+    * encode/query input). */
   def cellResidual(v: Column, cell: Column, centroids: Array[Array[Double]]): Column =
-    GraftBridge.column(CellResidualExpr(
-      GraftBridge.expression(v), GraftBridge.expression(cell), centroids))
+    call("cell_residual", "cellResidual", arr(FloatType), v, cell)(centroids)
 
-  /** Valid media container bytes (format by docId % 4) around a body. */
+  /** Structurally valid media container (PNG/JPEG/WAV/GIF by docId % 4)
+    * around a binary body — header fields derived from the body byte sum,
+    * real public byte layouts. */
   def mediaContainer(docId: Column, body: Column): Column =
-    GraftBridge.column(MediaContainerExpr(GraftBridge.expression(docId), GraftBridge.expression(body)))
+    call("media_container", "mediaContainer", BinaryType, docId, body)()
 
-  /** Decode a media header: struct(format, width, height, sample_rate,
-    * channels, bit_depth); unparseable bytes -> ("unknown", 0...). */
-  def mediaHeader(bytes: Column): Column = u(bytes)(MediaHeaderExpr(_))
+  /** Decode a media header (PNG IHDR / JPEG SOF / WAV fmt / GIF LSD):
+    * struct(format, width, height, sample_rate, channels, bit_depth);
+    * unparseable bytes -> ("unknown", 0...). */
+  def mediaHeader(bytes: Column): Column =
+    call("media_header", "mediaHeader", struct("format" -> StringType, "width" -> IntegerType,
+      "height" -> IntegerType, "sample_rate" -> IntegerType, "channels" -> IntegerType,
+      "bit_depth" -> IntegerType), bytes)()
 
-  /** Canonical form of a URL column. */
-  def canonicalizeUrl(url: Column): Column = u(url)(CanonicalizeUrlExpr(_))
+  /** URL canonicalization: lowercase scheme/host, strip default ports and
+    * trailing slash, drop utm_* params, sort the rest. */
+  def canonicalizeUrl(url: Column): Column =
+    call("canonicalize_url", "canonicalizeUrl", StringType, url)()
 
-  /** Synthetic raster payload from a doc id. */
-  def rasterContainer(docId: Column): Column = u(docId)(RasterContainerExpr(_))
+  /** Synthetic grayscale raster payload from a doc id (formulaic pixels —
+    * the SQL-verifiable stand-in for a decoded image plane). */
+  def rasterContainer(docId: Column): Column =
+    call("raster_container", "rasterContainer", BinaryType, docId)()
 
-  /** 2x2 average-pool of a raster payload: [out_w, out_h, checksum]. */
-  def rasterPool2x2(bytes: Column): Column = u(bytes)(RasterPool2x2Expr(_))
+  /** 2x2 integer average-pool of a raster payload: [out_w, out_h,
+    * position-weighted checksum]; null on a malformed header. */
+  def rasterPool2x2(bytes: Column): Column =
+    callOrNull("raster_pool_2x2", "rasterPool2x2", longs, bytes)()
 
-  /** PCM energy stats of a WAV payload: [sr, ch, n, peak, sum_sq]. */
-  def audioStats(bytes: Column): Column = u(bytes)(AudioStatsExpr(_))
+  /** PCM energy stats of a WAV payload (RIFF walk + one data pass):
+    * [sample_rate, channels, n_samples, peak, sum_sq]; null if not WAV. */
+  def audioStats(bytes: Column): Column = callOrNull("audio_stats", "audioStats", longs, bytes)()
 
   /** SQ8 encode of a float vector with plan-embedded per-dim min/span. */
   def sqEncode(v: Column, mins: Array[Float], spans: Array[Float]): Column =
-    u(v)(SqEncodeExpr(_, mins, spans))
+    call("sq_encode", "sqEncode", BinaryType, v)(mins, spans)
 
-  /** Approximate cosine of (SQ8 codes, raw query vector). */
+  /** Approximate cosine of (SQ8 codes, raw query vector) — the asymmetric
+    * scoring phase of the SQ index. */
   def sqCos(codes: Column, q: Column, mins: Array[Float], spans: Array[Float]): Column =
-    GraftBridge.column(SqCosExpr(GraftBridge.expression(codes),
-      GraftBridge.expression(q), mins, spans))
+    call("sq_cos", "sqCos", DoubleType, codes, q)(mins, spans)
 
   /** Synthetic multi-frame raster ("video") payload from a doc id. */
-  def videoContainer(docId: Column): Column = u(docId)(VideoContainerExpr(_))
+  def videoContainer(docId: Column): Column =
+    call("video_container", "videoContainer", BinaryType, docId)()
 
-  /** Strided frame checksums of a video payload: [w, h, cks...]. */
-  def videoFrames(bytes: Column, stride: Int): Column =
-    u(bytes)(VideoFramesExpr(_, stride))
+  /** Strided frame checksums of a video payload: [w, h, checksum per
+    * sampled frame]; null on a malformed header. A stride <= 0 would loop
+    * forever in the frame walk, so it fails here, when the plan is built
+    * (SQL `video_frames` comes through this function too). */
+  def videoFrames(bytes: Column, stride: Int): Column = {
+    require(stride > 0, s"video_frames stride must be positive, got $stride")
+    callOrNull("video_frames", "videoFrameChecksums", longs, bytes)(stride)
+  }
 
-  /** Fused PII counts + redaction: struct(n_email, n_ip, n_phone, scrubbed). */
-  def piiScrubStats(text: Column): Column = u(text)(PiiScrubStatsExpr(_))
+  /** Fused PII counts + redaction in one kernel call per row:
+    * struct(n_email, n_ip, n_phone, scrubbed) — see [[Kernels.piiScrubStats]]. */
+  def piiScrubStats(text: Column): Column =
+    call("pii_scrub_stats", "piiScrubStats", struct("n_email" -> LongType, "n_ip" -> LongType,
+      "n_phone" -> LongType, "scrubbed" -> StringType), text)()
 
   /** Per-row fixed-point units of a money-like double: round(x·10^scale) as
     * long. For data whose values are near-scale-dp decimals (every money and

@@ -1,108 +1,87 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, GraftBridge, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.types.Decimal
 
-/** SparkSessionExtensions hook: registers graft's custom expressions in the
-  * SQL function registry, so SQL users get them alongside the DataFrame
-  * API:
+/** SparkSessionExtensions hook: registers graft's kernels in the SQL
+  * function registry, so SQL users get them alongside the DataFrame API:
   *
   *   SELECT minhash_sig(text, 3, 128), simhash64(text) FROM documents
   *
+  * Each SQL function builds the same [[KernelCall]] as its `gf` function.
   * Activate with
   *   SparkSession.builder.withExtensions(new GraftExtensions) or
   *   --conf spark.sql.extensions=graft.functions.GraftExtensions
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  import GraftExtensions.Args
 
-  private def arity(fn: String, n: Int)(args: Seq[Expression]): Seq[Expression] = {
-    if (args.length != n) throw new IllegalArgumentException(
-      s"$fn expects $n arguments, got ${args.length}")
-    args
+  /** (name, arity, usage, builder) of every SQL function. */
+  private val fns: Seq[(String, Int, String, Args => Column)] = Seq(
+    ("word_shingles", 2, "word_shingles(text, n) - distinct word n-gram shingles",
+      a => gf.shingles(a.col(0), a.int(1))),
+    ("minhash_sig", 3, "minhash_sig(text, n, k) - k-permutation MinHash signature over word n-grams",
+      a => gf.minhashSig(a.col(0), a.int(1), a.int(2))),
+    ("simhash64", 1, "simhash64(text) - 64-bit SimHash fingerprint",
+      a => gf.simhash64(a.col(0))),
+    ("hash_embed", 2, "hash_embed(text, dim) - L2-normalized feature-hash embedding",
+      a => gf.hashEmbed(a.col(0), a.int(1))),
+    ("cosine_sim", 2, "cosine_sim(a, b) - cosine similarity of two float vectors",
+      a => gf.cosine(a.col(0), a.col(1))),
+    ("dot_product", 2, "dot_product(a, b) - dot product of two float vectors",
+      a => gf.dot(a.col(0), a.col(1))),
+    ("sig_agreement", 2, "sig_agreement(a, b) - fraction of agreeing signature positions",
+      a => gf.sigAgreement(a.col(0), a.col(1))),
+    ("hyperplane_bucket", 3, "hyperplane_bucket(vec, bits, seed) - random-hyperplane LSH bucket id",
+      a => gf.hyperplaneBucket(a.col(0), a.int(1), a.long(2))),
+    ("bucket_pairs_cos", 2, "bucket_pairs_cos(items, minCos) - id pairs in a bucket with cosine >= minCos",
+      a => gf.bucketPairsCos(a.col(0), a.double(1))),
+    ("posting_pairs", 1, "posting_pairs(items) - candidate pairs from a shingle posting list",
+      a => gf.postingPairs(a.col(0))),
+    ("repetition_stats", 1, "repetition_stats(text) - [n_lines, dup_line_frac, dup_line_char_frac, top_bigram_frac]",
+      a => gf.repetitionStats(a.col(0))),
+    ("char_bigram_counts", 1, "char_bigram_counts(text) - packed (code << 32 | count) char-bigram counts",
+      a => gf.charBigramCounts(a.col(0))),
+    ("canonicalize_url", 1, "canonicalize_url(url) - canonical crawl-frontier form of a URL",
+      a => gf.canonicalizeUrl(a.col(0))),
+    ("nfc_normalize", 1, "nfc_normalize(text) - Unicode NFC canonical composition",
+      a => gf.nfcNormalize(a.col(0))),
+    ("strip_accents", 1, "strip_accents(text) - NFD decompose + drop combining marks",
+      a => gf.stripAccents(a.col(0))),
+    ("media_header", 1, "media_header(bytes) - decoded PNG/JPEG/WAV/GIF header struct",
+      a => gf.mediaHeader(a.col(0))),
+    ("audio_stats", 1, "audio_stats(bytes) - [sample_rate, channels, n_samples, peak, sum_sq] of a WAV payload",
+      a => gf.audioStats(a.col(0))),
+    ("video_frames", 2, "video_frames(bytes, stride) - [w, h, checksum per sampled frame] of a video payload",
+      a => gf.videoFrames(a.col(0), a.int(1))))
+
+  override def apply(ext: SparkSessionExtensions): Unit = fns.foreach { case (name, arity, usage, build) =>
+    val info = new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
+    ext.injectFunction((FunctionIdentifier(name), info, (args: Seq[Expression]) => {
+      if (args.length != arity) throw new IllegalArgumentException(
+        s"$name expects $arity arguments, got ${args.length}")
+      GraftBridge.expression(build(new Args(name, args)))
+    }))
   }
+}
 
-  private def intArg(e: Expression, fn: String, pos: Int): Int = e match {
-    case Literal(v: Int, _) => v
-    case other => throw new IllegalArgumentException(
-      s"$fn: argument $pos must be an integer literal, got $other")
+object GraftExtensions {
+  /** A SQL call's arguments: columns pass through as they are; scalar
+    * parameters must be literals, read here as the kernel's parameter type. */
+  private final class Args(fn: String, exprs: Seq[Expression]) {
+    def col(i: Int): Column = GraftBridge.column(exprs(i))
+    def int(i: Int): Int = literal(i, "an integer") { case v: Int => v }
+    def long(i: Int): Long = literal(i, "an integer") { case v: Int => v.toLong; case v: Long => v }
+    def double(i: Int): Double = literal(i, "a numeric") {
+      case v: Int => v.toDouble; case v: Long => v.toDouble
+      case v: Double => v; case v: Decimal => v.toDouble
+    }
+    private def literal[T](i: Int, kind: String)(read: PartialFunction[Any, T]): T = exprs(i) match {
+      case Literal(v, _) if read.isDefinedAt(v) => read(v)
+      case other => throw new IllegalArgumentException(
+        s"$fn: argument ${i + 1} must be $kind literal, got $other")
+    }
   }
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
-
-  private def fns: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
-    (FunctionIdentifier("word_shingles"),
-      info("word_shingles", "word_shingles(text, n) - distinct word n-gram shingles"),
-      (args: Seq[Expression]) => { val a = arity("word_shingles", 2)(args); WordShinglesExpr(a(0), intArg(a(1), "word_shingles", 2)) }),
-    (FunctionIdentifier("minhash_sig"),
-      info("minhash_sig", "minhash_sig(text, n, k) - k-permutation MinHash signature over word n-grams"),
-      (args: Seq[Expression]) => { val a = arity("minhash_sig", 3)(args); MinHashSigExpr(a(0), intArg(a(1), "minhash_sig", 2), intArg(a(2), "minhash_sig", 3)) }),
-    (FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(text) - 64-bit SimHash fingerprint"),
-      (args: Seq[Expression]) => SimHash64Expr(arity("simhash64", 1)(args)(0))),
-    (FunctionIdentifier("hash_embed"),
-      info("hash_embed", "hash_embed(text, dim) - L2-normalized feature-hash embedding"),
-      (args: Seq[Expression]) => { val a = arity("hash_embed", 2)(args); HashEmbedExpr(a(0), intArg(a(1), "hash_embed", 2)) }),
-    (FunctionIdentifier("cosine_sim"),
-      info("cosine_sim", "cosine_sim(a, b) - cosine similarity of two float vectors"),
-      (args: Seq[Expression]) => { val a = arity("cosine_sim", 2)(args); CosineSimExpr(a(0), a(1)) }),
-    (FunctionIdentifier("dot_product"),
-      info("dot_product", "dot_product(a, b) - dot product of two float vectors"),
-      (args: Seq[Expression]) => { val a = arity("dot_product", 2)(args); DotProductExpr(a(0), a(1)) }),
-    (FunctionIdentifier("sig_agreement"),
-      info("sig_agreement", "sig_agreement(a, b) - fraction of agreeing signature positions"),
-      (args: Seq[Expression]) => { val a = arity("sig_agreement", 2)(args); SigAgreementExpr(a(0), a(1)) }),
-    (FunctionIdentifier("hyperplane_bucket"),
-      info("hyperplane_bucket", "hyperplane_bucket(vec, bits, seed) - random-hyperplane LSH bucket id"),
-      (args: Seq[Expression]) => { val a = arity("hyperplane_bucket", 3)(args); HyperplaneBucketExpr(a(0),
-        intArg(a(1), "hyperplane_bucket", 2),
-        a(2) match {
-          case Literal(v: Long, _) => v
-          case Literal(v: Int, _) => v.toLong
-          case other => throw new IllegalArgumentException(
-            s"hyperplane_bucket: argument 3 must be an integer literal, got $other")
-        }) }),
-    (FunctionIdentifier("bucket_pairs_cos"),
-      info("bucket_pairs_cos", "bucket_pairs_cos(items, minCos) - id pairs in a bucket with cosine >= minCos"),
-      (args: Seq[Expression]) => { val a = arity("bucket_pairs_cos", 2)(args); BucketPairsCosExpr(a(0),
-        a(1) match {
-          case Literal(v: Double, _) => v
-          case Literal(v: Int, _) => v.toDouble
-          case Literal(v: Long, _) => v.toDouble
-          case Literal(v: org.apache.spark.sql.types.Decimal, _) => v.toDouble
-          case other => throw new IllegalArgumentException(
-            s"bucket_pairs_cos: argument 2 must be a numeric literal, got $other")
-        }) }),
-    (FunctionIdentifier("posting_pairs"),
-      info("posting_pairs", "posting_pairs(items) - candidate pairs from a shingle posting list"),
-      (args: Seq[Expression]) => PostingPairsExpr(arity("posting_pairs", 1)(args)(0))),
-    (FunctionIdentifier("repetition_stats"),
-      info("repetition_stats", "repetition_stats(text) - [n_lines, dup_line_frac, dup_line_char_frac, top_bigram_frac]"),
-      (args: Seq[Expression]) => RepetitionStatsExpr(arity("repetition_stats", 1)(args)(0))),
-    (FunctionIdentifier("char_bigram_counts"),
-      info("char_bigram_counts", "char_bigram_counts(text) - packed (code << 32 | count) char-bigram counts"),
-      (args: Seq[Expression]) => CharBigramCountsExpr(arity("char_bigram_counts", 1)(args)(0))),
-    (FunctionIdentifier("canonicalize_url"),
-      info("canonicalize_url", "canonicalize_url(url) - canonical crawl-frontier form of a URL"),
-      (args: Seq[Expression]) => CanonicalizeUrlExpr(arity("canonicalize_url", 1)(args)(0))),
-    (FunctionIdentifier("nfc_normalize"),
-      info("nfc_normalize", "nfc_normalize(text) - Unicode NFC canonical composition"),
-      (args: Seq[Expression]) => NfcNormalizeExpr(arity("nfc_normalize", 1)(args)(0))),
-    (FunctionIdentifier("strip_accents"),
-      info("strip_accents", "strip_accents(text) - NFD decompose + drop combining marks"),
-      (args: Seq[Expression]) => StripAccentsExpr(arity("strip_accents", 1)(args)(0))),
-    (FunctionIdentifier("media_header"),
-      info("media_header", "media_header(bytes) - decoded PNG/JPEG/WAV/GIF header struct"),
-      (args: Seq[Expression]) => MediaHeaderExpr(arity("media_header", 1)(args)(0))),
-    (FunctionIdentifier("audio_stats"),
-      info("audio_stats", "audio_stats(bytes) - [sample_rate, channels, n_samples, peak, sum_sq] of a WAV payload"),
-      (args: Seq[Expression]) => AudioStatsExpr(arity("audio_stats", 1)(args)(0))),
-    (FunctionIdentifier("video_frames"),
-      info("video_frames", "video_frames(bytes, stride) - [w, h, checksum per sampled frame] of a video payload"),
-      (args: Seq[Expression]) => { val a = arity("video_frames", 2)(args); VideoFramesExpr(a(0), intArg(a(1), "video_frames", 2)) }))
-
-  override def apply(ext: SparkSessionExtensions): Unit =
-    fns.foreach { case (id, inf, builder) => ext.injectFunction((id, inf, builder)) }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import java.util.regex.Pattern
 
-/** One-pass JVM kernels behind graft's custom Catalyst expressions.
+/** One-pass JVM kernels behind graft's kernel-call expression (`gf`).
   *
   * These exist because Spark's higher-order functions (transform/aggregate/
   * zip_with) evaluate interpreted, per element, with boxing — measured ~2 ms

@@ -90,7 +90,7 @@ case class JudgeScorer(lo: Int = 0, hi: Int = 10) extends Model {
 
 /** Deterministic feature-hash embedder (sutro/templates/embed.py:9): tokens
   * are hashed into `dim` signed buckets and the vector L2-normalized.
-  * Backed by the one-pass [[graft.functions.HashEmbedExpr]] kernel (the
+  * Backed by the one-pass [[graft.functions.gf.hashEmbed]] kernel (the
   * HOF aggregate/zip_with formulation was O(tokens x dim) interpreted).
   */
 case class HashEmbedder(dim: Int = 64) extends Model {

@@ -176,9 +176,9 @@ object Dedup {
   }
 
   /** Word n-gram shingles of `text` (distinct, space-joined). One-pass
-    * custom expression ([[graft.functions.WordShinglesExpr]]) — the
-    * equivalent transform/slice/array_join HOF pipeline evaluates
-    * interpreted per element and measured ~10x slower. */
+    * kernel call ([[graft.functions.gf.shingles]]) — the equivalent
+    * transform/slice/array_join HOF pipeline evaluates interpreted per
+    * element and measured ~10x slower. */
   def shingles(text: Column, n: Int): Column = gf.shingles(text, n)
 
   /** Exact n-gram Jaccard similar pairs via shingle inverted index:

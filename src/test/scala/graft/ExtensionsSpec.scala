@@ -32,11 +32,20 @@ class ExtensionsSpec extends SparkSpec {
 
   test("SQL surface: bucket_pairs_cos and posting_pairs over grouped structs") {
     graft.io.Tables.embeddings(spark, sfDir).createOrReplaceTempView("ext_emb2")
-    // every bucket of identical vectors pairs up at cosine 1
-    val n = spark.sql(
-      """SELECT explode(bucket_pairs_cos(collect_list(struct(vec_id, embedding)), 0.99)) AS p
-        |FROM (SELECT vec_id, embedding FROM ext_emb2 WHERE vec_id < 2)""".stripMargin).count()
-    assert(n >= 0) // callable; pair count depends on data
+    // the same pairs as an exact cosine self-join over the same rows, at a
+    // threshold the two vectors miss and at one they clear
+    val rows = spark.sql("SELECT vec_id, embedding FROM ext_emb2 WHERE vec_id < 2")
+    val counts = Seq("0.99", "0.0").map { minCos =>
+      val n = spark.sql(
+        s"""SELECT explode(bucket_pairs_cos(collect_list(struct(vec_id, embedding)), $minCos)) AS p
+           |FROM (SELECT vec_id, embedding FROM ext_emb2 WHERE vec_id < 2)""".stripMargin).count()
+      val expected = rows.as("a").join(rows.as("b"), col("a.vec_id") < col("b.vec_id") &&
+        graft.functions.gf.cosine(col("a.embedding"), col("b.embedding")) >= minCos.toDouble)
+        .count()
+      assert(n === expected, s"minCos $minCos")
+      n
+    }
+    assert(counts.sum > 0)
     val pairs = spark.sql(
       """SELECT explode(posting_pairs(array(struct(CAST(1 AS BIGINT) AS id, 5 AS sz),
         |  struct(CAST(2 AS BIGINT) AS id, 7 AS sz)))) AS p""".stripMargin)
@@ -51,6 +60,12 @@ class ExtensionsSpec extends SparkSpec {
     val e = intercept[Exception](
       spark.sql("SELECT word_shingles(text, id) FROM ext_docs2").collect())
     assert(e.getMessage.contains("word_shingles"))
+  }
+
+  test("SQL surface: wrong arity rejected with the function name and expected count") {
+    Seq((1L, "a b c")).toDF("id", "text").createOrReplaceTempView("ext_docs4")
+    val e = intercept[Exception](spark.sql("SELECT simhash64(text, 3) FROM ext_docs4").collect())
+    assert(e.getMessage.contains("simhash64 expects 1 arguments, got 2"))
   }
 
   test("SQL surface: repetition_stats and char_bigram_counts") {

@@ -1,8 +1,10 @@
 #!/bin/bash
 # Print the size of graft's code and configuration surface, the numbers
 # ROADMAP.md tracks: src/main lines, sys.env reads, distinct spark.graft.*
-# conf keys, mains, and public defs declared directly in the graft.ops
-# objects (local defs inside a method are indented deeper and not counted).
+# conf keys, mains, public defs declared directly in the graft.ops objects
+# (local defs inside a method are indented deeper and not counted), and
+# hand-written Catalyst expression classes (declarations that extend
+# Expression, UnaryExpression or BinaryExpression).
 #
 # Usage: tools/surface.sh   (reports on the checkout the script sits in)
 set -euo pipefail
@@ -14,3 +16,4 @@ echo "sys_env_reads    $(grep -rF 'sys.env' "$main" | wc -l)"
 echo "spark_graft_keys $(grep -rhoE '"spark\.graft\.[A-Za-z.]+"' "$main" | sort -u | wc -l)"
 echo "mains            $(grep -rlE 'def main\(' "$main" | wc -l)"
 echo "ops_public_defs  $(grep -rhE '^  def ' "$main/graft/ops" | wc -l)"
+echo "catalyst_expr_classes $(grep -rhE '\bextends (Unary|Binary)?Expression\b' "$main" | wc -l)"
