@@ -63,17 +63,24 @@ object Diag {
     }
 
     if (sections("ngram")) {
-      val sh = docs.select(col("doc_id").cast("long").as("id"),
-        gf.shingles(col("text"), 3).as("sh"))
-      val dfs = sh.select(explode(col("sh")).as("shingle"), col("id"))
-        .groupBy("shingle").agg(count(lit(1)).as("df"))
-      val st = dfs.agg(count(lit(1)).as("shingles"), max("df").as("maxdf"),
-        sum(when(col("df").between(2, 10), col("df") * (col("df") - 1) / 2).otherwise(0L)).as("pairs_df_le10"),
-        sum(when(col("df") >= 2, col("df") * (col("df") - 1) / 2).otherwise(0L)).as("pairs_uncapped"),
-        sum(when(col("df") > 10, 1L).otherwise(0L)).as("hot_shingles"))
-        .head()
-      println(s"[diag] ngram shingles=${st.getLong(0)} maxdf=${st.getLong(1)} " +
-        s"pairs(df<=10)=${st.getAs[Any](2)} pairs_uncapped=${st.getAs[Any](3)} hot=${st.getAs[Any](4)}")
+      // ngramJaccardPairs' candidacy volume over distinct contents: the
+      // full shingle self-join (Σ df·(df-1)/2) next to the rare-first
+      // prefix self-join it runs instead
+      val fps = docs.select(TextAnalysis.fingerprint(col("text")).as("ck"), col("text"))
+        .where(col("ck").isNotNull)
+        .groupBy("ck").agg(first(col("text")).as("text"))
+        .select(col("ck"), gf.shingleFpsSorted(col("text"), 3).as("shl"))
+        .select(col("ck"), size(col("shl")).as("sz"), explode(col("shl")).as("fp"))
+      val dfs = ops.Prefix.docFreq(fps, "fp")
+      val pref = ops.Prefix.prefix(fps, Seq("ck", "sz"), "fp", dfs,
+        ops.Prefix.prefixLen(col("sz"), 0.5, ops.Prefix.MinHits))
+      def volume(d: org.apache.spark.sql.DataFrame) = d.agg(count(lit(1)), max("df"),
+        sum(col("df") * (col("df") - 1) / 2)).head()
+      val full = volume(dfs)
+      val pre = volume(ops.Prefix.docFreq(pref, "fp"))
+      println(s"[diag] ngram shingles=${full.getLong(0)} maxdf=${full.getAs[Any](1)} " +
+        s"pairs_full=${full.getAs[Any](2)} prefix_shingles=${pre.getLong(0)} " +
+        s"prefix_maxdf=${pre.getAs[Any](1)} pairs_prefix=${pre.getAs[Any](2)}")
     }
 
     if (sections("prefix")) {
@@ -84,11 +91,10 @@ object Diag {
         dir.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
       val fpsIdx = spark.read.parquet(s"${tbl}_fps")
       val dfIdx = spark.read.parquet(s"${tbl}_df")
-      val t05 = 0.5
-      def oMin(c: org.apache.spark.sql.Column) = ceil(c.cast("double") * t05 - 1e-9)
-      val jHits = 3
+      def prefixLen(n: org.apache.spark.sql.Column) =
+        ops.Prefix.prefixLen(n, 0.5, ops.Prefix.MinHits)
       val ipdf = fpsIdx
-        .where(col("rk") < col("n_fp") - oMin(col("n_fp")) + least(lit(jHits), oMin(col("n_fp"))))
+        .where(col("rk") < prefixLen(col("n_fp")))
         .groupBy("fp").agg(count(lit(1)).as("ipdf"))
       val delta = docs.where(pmod(col("doc_id"), lit(10)) === 0)
       val dSh = delta.select(col("doc_id").cast("long").as("id"), col("text"),
@@ -98,10 +104,8 @@ object Diag {
         .select(col("d_rep"), gf.shingleFpsSorted(col("text"), 3).as("shl"))
       val dFps = dSh.select(col("d_rep"), size(col("shl")).as("d_nfp"),
         explode(col("shl")).as("fp"))
-      val dPref = dFps.join(dfIdx.select("fp", "df"), Seq("fp"))
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy("d_rep").orderBy("df", "fp")))
-        .where(col("rn") <= col("d_nfp") - oMin(col("d_nfp")) + least(lit(jHits), oMin(col("d_nfp"))))
+      val dPref = ops.Prefix.prefix(dFps, Seq("d_rep", "d_nfp"), "fp", dfIdx,
+        prefixLen(col("d_nfp")))
       val dpdf = dPref.groupBy("fp").agg(count(lit(1)).as("dpdf"))
       val st = ipdf.join(dpdf, "fp")
         .agg(sum(col("ipdf") * col("dpdf")).as("join_rows"),

@@ -804,14 +804,11 @@ object SparkEntry {
     Dedup.exact(t(s, dir, "documents"), "text", "doc_id")
       .orderBy("content_key")
 
-  /** maxDf=10 is the scale valve: shingles present in more than 10 docs are
-    * dropped from candidate generation (cost is sum df(shingle)^2, so hot
-    * shingles dominate at scale). The oracle mirrors the cap exactly; at
-    * the driver's verify scale (sf0.01, max df 7) it is a no-op, so the
-    * result also equals the uncapped one there. */
+  /** Exact word-trigram Jaccard >= 0.5 pairs at every scale: hot shingles
+    * sit outside the rare-first prefixes instead of being dropped, so the
+    * uncapped all-pairs oracle applies unchanged. */
   private def dedupNgramJaccard(s: SparkSession, dir: String): DataFrame =
-    Dedup.ngramJaccardPairs(t(s, dir, "documents"), "text", "doc_id", n = 3, threshold = 0.5,
-        maxDf = Some(10L))
+    Dedup.ngramJaccardPairs(t(s, dir, "documents"), "text", "doc_id", n = 3, threshold = 0.5)
       .orderBy("a_id", "b_id")
 
   /** LSH candidates + exact-Jaccard verify: every emitted pair is a true
@@ -839,12 +836,12 @@ object SparkEntry {
         maxBucket = Some(500L), numBlocks = Dedup.simhashBlocksFor(nDocs(s, dir)))
       .orderBy("a_id", "b_id")
 
-  /** Duplicate clusters over the (capped) exact-Jaccard pair graph:
+  /** Duplicate clusters over the exact-Jaccard pair graph:
     * large-star/small-star connected components, component id = canonical
     * keeper. */
   private def dedupClusters(s: SparkSession, dir: String): DataFrame = {
     val pairs = Dedup.ngramJaccardPairs(t(s, dir, "documents"), "text", "doc_id",
-      n = 3, threshold = 0.5, maxDf = Some(10L))
+      n = 3, threshold = 0.5)
     Dedup.connectedComponents(pairs).orderBy("id")
   }
 
@@ -852,8 +849,7 @@ object SparkEntry {
     * members (pairs → components → anti-join). */
   private def dedupApply(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val pairs = Dedup.ngramJaccardPairs(docs, "text", "doc_id",
-      n = 3, threshold = 0.5, maxDf = Some(10L))
+    val pairs = Dedup.ngramJaccardPairs(docs, "text", "doc_id", n = 3, threshold = 0.5)
     Dedup.dropNearDuplicates(docs, pairs, "doc_id")
       .select("doc_id", "lang", "source")
       .orderBy("doc_id")
@@ -1954,12 +1950,10 @@ object SparkEntry {
       |  LEFT JOIN bs ON d.doc_id = bs.doc_id)
       |SELECT doc_id, reason = 'keep' AS keep, reason FROM dec ORDER BY doc_id""".stripMargin
 
-  /** Decontamination = corpus docs with no exact word-3-gram
-    * Jaccard >= 0.5 match to any eval-slice doc. Every candidacy stage of
-    * Dedup.decontaminate has recall 1, so the exact SQL applies. Shared by
-    * dedup_decontaminate and dedup_decontaminate_bloom (one operator). */
-  private val decontaminateOracleSql: String =
-    """WITH norm AS (
+  /** The uncapped exact word-3-gram Jaccard >= 0.5 pair CTEs (norm, sh,
+    * ex, prs, jac(a_id, b_id)) every Jaccard-pair oracle starts from. */
+  private val jaccardPairsCte: String =
+    """norm AS (
       |  SELECT doc_id AS id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w
       |  FROM documents),
       |sh AS (
@@ -1973,7 +1967,14 @@ object SparkEntry {
       |  GROUP BY a.id, b.id),
       |jac AS (
       |  SELECT a_id, b_id FROM prs
-      |  WHERE CAST(shared AS DOUBLE) / (a_size + b_size - shared) >= 0.5)
+      |  WHERE CAST(shared AS DOUBLE) / (a_size + b_size - shared) >= 0.5)""".stripMargin
+
+  /** Decontamination = corpus docs with no exact word-3-gram
+    * Jaccard >= 0.5 match to any eval-slice doc. Every candidacy stage of
+    * Dedup.decontaminate has recall 1, so the exact SQL applies. Shared by
+    * dedup_decontaminate and dedup_decontaminate_bloom (one operator). */
+  private val decontaminateOracleSql: String =
+    "WITH " + jaccardPairsCte + """
       |SELECT d.doc_id, d.lang FROM documents d
       |WHERE d.doc_id % 10 <> 0
       |  AND NOT EXISTS (
@@ -2499,24 +2500,7 @@ object SparkEntry {
         |SELECT canonical_url, min(doc_id) AS keeper_id, CAST(count(*) AS BIGINT) AS n_copies
         |FROM c GROUP BY canonical_url ORDER BY canonical_url""".stripMargin,
     "dedup_ngram_jaccard" ->
-      """WITH norm AS (
-        |  SELECT doc_id AS id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w
-        |  FROM documents),
-        |sh AS (
-        |  SELECT id, list_distinct(list_transform(generate_series(1, greatest(len(w)-2, 0)),
-        |    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shl
-        |  FROM norm),
-        |ex AS (SELECT id, len(shl) AS sz, unnest(shl) AS shingle FROM sh),
-        |exf AS (
-        |  SELECT * FROM ex WHERE shingle NOT IN (
-        |    SELECT shingle FROM ex GROUP BY shingle HAVING count(*) > 10)),
-        |pairs AS (
-        |  SELECT a.id AS a_id, b.id AS b_id, any_value(a.sz) AS a_size, any_value(b.sz) AS b_size, count(*) AS shared
-        |  FROM exf a JOIN exf b ON a.shingle = b.shingle AND a.id < b.id
-        |  GROUP BY a.id, b.id)
-        |SELECT a_id, b_id FROM pairs
-        |WHERE CAST(shared AS DOUBLE) / (a_size + b_size - shared) >= 0.5
-        |ORDER BY a_id, b_id""".stripMargin,
+      ("WITH " + jaccardPairsCte + "\nSELECT a_id, b_id FROM jac ORDER BY a_id, b_id"),
     "infer_render" ->
       """SELECT doc_id,
         |  coalesce(CAST(source AS VARCHAR), '') || ' | ' || coalesce(CAST(lang AS VARCHAR), '') || ' | ' || coalesce(CAST(text AS VARCHAR), '') AS prompt
@@ -3321,33 +3305,16 @@ object SparkEntry {
         |  FROM s, g)
         |SELECT doc_id, score FROM sc WHERE score > 0
         |ORDER BY score DESC, doc_id LIMIT 20""".stripMargin,
-    // clusters = transitive closure over the same capped-Jaccard pair
-    // graph, as a recursive CTE; comp = min reachable id (the keeper).
+    // clusters = transitive closure over the same Jaccard pair graph, as
+    // a recursive CTE; comp = min reachable id (the keeper).
     "dedup_clusters" ->
-      """WITH RECURSIVE norm AS (
-        |  SELECT doc_id AS id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w
-        |  FROM documents),
-        |sh AS (
-        |  SELECT id, list_distinct(list_transform(generate_series(1, greatest(len(w)-2, 0)),
-        |    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shl
-        |  FROM norm),
-        |ex AS (SELECT id, len(shl) AS sz, unnest(shl) AS shingle FROM sh),
-        |exf AS (
-        |  SELECT * FROM ex WHERE shingle NOT IN (
-        |    SELECT shingle FROM ex GROUP BY shingle HAVING count(*) > 10)),
-        |prs AS (
-        |  SELECT a.id AS a_id, b.id AS b_id, any_value(a.sz) AS a_size, any_value(b.sz) AS b_size, count(*) AS shared
-        |  FROM exf a JOIN exf b ON a.shingle = b.shingle AND a.id < b.id
-        |  GROUP BY a.id, b.id),
-        |jac AS (
-        |  SELECT a_id, b_id FROM prs
-        |  WHERE CAST(shared AS DOUBLE) / (a_size + b_size - shared) >= 0.5),
+      ("WITH RECURSIVE " + jaccardPairsCte + """,
         |edges AS (SELECT a_id AS u, b_id AS v FROM jac UNION SELECT b_id, a_id FROM jac),
         |reach(u, v) AS (
         |  SELECT u, v FROM edges
         |  UNION
         |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u)
-        |SELECT u AS id, least(u, min(v)) AS comp FROM reach GROUP BY u ORDER BY id""".stripMargin,
+        |SELECT u AS id, least(u, min(v)) AS comp FROM reach GROUP BY u ORDER BY id""".stripMargin),
     "corpus_cap" ->
       """WITH rk AS (
         |  SELECT doc_id, lang,
@@ -3571,24 +3538,7 @@ object SparkEntry {
     // dedup applied = corpus minus non-keeper cluster members, same
     // recursive-CTE closure as dedup_clusters.
     "dedup_apply" ->
-      """WITH RECURSIVE norm AS (
-        |  SELECT doc_id AS id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w
-        |  FROM documents),
-        |sh AS (
-        |  SELECT id, list_distinct(list_transform(generate_series(1, greatest(len(w)-2, 0)),
-        |    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shl
-        |  FROM norm),
-        |ex AS (SELECT id, len(shl) AS sz, unnest(shl) AS shingle FROM sh),
-        |exf AS (
-        |  SELECT * FROM ex WHERE shingle NOT IN (
-        |    SELECT shingle FROM ex GROUP BY shingle HAVING count(*) > 10)),
-        |prs AS (
-        |  SELECT a.id AS a_id, b.id AS b_id, any_value(a.sz) AS a_size, any_value(b.sz) AS b_size, count(*) AS shared
-        |  FROM exf a JOIN exf b ON a.shingle = b.shingle AND a.id < b.id
-        |  GROUP BY a.id, b.id),
-        |jac AS (
-        |  SELECT a_id, b_id FROM prs
-        |  WHERE CAST(shared AS DOUBLE) / (a_size + b_size - shared) >= 0.5),
+      ("WITH RECURSIVE " + jaccardPairsCte + """,
         |edges AS (SELECT a_id AS u, b_id AS v FROM jac UNION SELECT b_id, a_id FROM jac),
         |reach(u, v) AS (
         |  SELECT u, v FROM edges
@@ -3597,7 +3547,7 @@ object SparkEntry {
         |cc AS (SELECT u AS id, least(u, min(v)) AS comp FROM reach GROUP BY u)
         |SELECT doc_id, lang, source FROM documents
         |WHERE doc_id NOT IN (SELECT id FROM cc WHERE id <> comp)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
     // elo oracle: the ballot construction and the smoothed win/loss/match
     // accounting are recomputed in SQL from the documents table; the five
     // elo values are a literal derived at the driver's verify scale

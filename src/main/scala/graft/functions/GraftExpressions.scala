@@ -150,16 +150,14 @@ object gf {
   def shingleFpsSorted(text: Column, n: Int): Column =
     call("shingle_fps_sorted", "shingleFpsSorted", longs, text)(n)
 
-  /** Prefix-filtered candidacy against a plan-embedded delta CSR (see
-    * [[Kernels.prefixCandidates]]). `probePrefix=false` = one-sided mode:
-    * the probing list need not be df-ordered; the CSR side carries the
-    * prefixes. */
-  def prefixCandidates(rked: Column, t: Double, minHits: Int,
-      fps: Array[Long], offsets: Array[Int], dreps: Array[Int],
-      dRepIds: Array[Long], dRepNfp: Array[Int],
-      probePrefix: Boolean = true): Column =
-    call("prefix_candidates", "prefixCandidates", longs, rked)(
-      t, minHits, fps, offsets, dreps, dRepIds, dRepNfp, probePrefix)
+  /** Prefix-filtered candidacy of `probe` (elements of a set of full size
+    * `n`) against a plan-embedded prefix CSR (see
+    * [[Kernels.prefixCandidates]]). */
+  def prefixCandidates(probe: Column, n: Column, t: Double, minHits: Int,
+      fps: Array[Long], offsets: Array[Int], keys: Array[Int],
+      keyIds: Array[Long], keySizes: Array[Int]): Column =
+    call("prefix_candidates", "prefixCandidates", longs, probe, n)(
+      t, minHits, fps, offsets, keys, keyIds, keySizes)
 
   /** One-merge-pass Jaccard of two sorted long-array columns. */
   def jaccardSortedFps(a: Column, b: Column): Column =
@@ -178,13 +176,6 @@ object gf {
     * (lower-cased) term list. */
   def termFreqs(text: Column, terms: Array[String]): Column =
     call("term_freqs", "termFreqs", longs, text)(terms)
-
-  /** Candidate pairs from a shingle posting list (inverted-index Jaccard
-    * join): array<struct<id, sz>> -> array<struct<a_id, b_id, a_size,
-    * b_size>> with a_id < b_id. */
-  def postingPairs(items: Column): Column =
-    call("posting_pairs", "postingPairs", arr(struct("a_id" -> LongType, "b_id" -> LongType,
-      "a_size" -> IntegerType, "b_size" -> IntegerType)), items)()
 
   /** Bucket-local pair scorer over array<struct<id, vec>>: all (min_id,
     * max_id) pairs in one LSH bucket with cosine >= minCos, in a single

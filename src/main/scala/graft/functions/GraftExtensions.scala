@@ -38,8 +38,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       a => gf.hyperplaneBucket(a.col(0), a.int(1), a.long(2))),
     ("bucket_pairs_cos", 2, "bucket_pairs_cos(items, minCos) - id pairs in a bucket with cosine >= minCos",
       a => gf.bucketPairsCos(a.col(0), a.double(1))),
-    ("posting_pairs", 1, "posting_pairs(items) - candidate pairs from a shingle posting list",
-      a => gf.postingPairs(a.col(0))),
     ("repetition_stats", 1, "repetition_stats(text) - [n_lines, dup_line_frac, dup_line_char_frac, top_bigram_frac]",
       a => gf.repetitionStats(a.col(0))),
     ("char_bigram_counts", 1, "char_bigram_counts(text) - packed (code << 32 | count) char-bigram counts",

@@ -269,49 +269,6 @@ object Kernels {
     eq.toDouble / n
   }
 
-  /** All ordered id pairs from one shingle's posting list, with both doc
-    * sizes attached: the candidate-pair emission step of an inverted-index
-    * Jaccard join, run bucket-locally so the only shuffles are building
-    * the postings and counting the emitted pairs. `items` is
-    * array<struct<id:long, sz:int>>. */
-  def postingPairs(items: ArrayData): ArrayData = {
-    val n = items.numElements()
-    if (n < 2) return new GenericArrayData(Array.empty[Any])
-    // n*(n-1)/2 pairs materialize in ONE projection: overflow-guard with a
-    // clear error instead of a negative allocation or a silent task OOM.
-    // A posting/duplicate group this large means exact dedup should have
-    // collapsed it upstream (Dedup.exact), or a valve (maxDf/maxBucket)
-    // should have dropped the bucket.
-    val pairCount = n.toLong * (n - 1) / 2
-    if (pairCount > 100000000L) throw new IllegalArgumentException(
-      s"posting list of $n entries would emit $pairCount pairs in one kernel call; " +
-        "collapse exact duplicates first (Dedup.exact) or cap the bucket (maxDf/maxBucket)")
-    val ids = new Array[Long](n)
-    val szs = new Array[Int](n)
-    var i = 0
-    while (i < n) {
-      val row = items.getStruct(i, 2)
-      ids(i) = row.getLong(0)
-      szs(i) = row.getInt(1)
-      i += 1
-    }
-    val out = new Array[Any](pairCount.toInt)
-    var w = 0
-    var a = 0
-    while (a < n) {
-      var b = a + 1
-      while (b < n) {
-        val (loI, hiI) = if (ids(a) < ids(b)) (a, b) else (b, a)
-        out(w) = org.apache.spark.sql.catalyst.InternalRow(
-          ids(loI), ids(hiI), szs(loI), szs(hiI))
-        w += 1
-        b += 1
-      }
-      a += 1
-    }
-    new GenericArrayData(out)
-  }
-
   /** All id pairs within one LSH bucket whose cosine >= minCos, emitted as
     * (min_id, max_id) structs. One pass over the bucket: vectors are
     * decoded and norms precomputed once, then the O(b²) pair loop does a
@@ -1160,50 +1117,45 @@ object Kernels {
     shared.toDouble / (na + nb - shared)
   }
 
-  /** Delta reps whose prefix-filtered shingle overlap with this corpus
-    * rep clears the exact-recall hit bound — the broadcast-probe candidacy
-    * of [[graft.ops.Dedup.dedupIndexProbe]] for saturated shingle spaces,
-    * where the inverted-index join's Σ df_idx·df_delta volume goes
-    * quadratic. One pass per corpus rep: walk the rep's own prefix of its
-    * (df, fp)-ordered list `rked`, gather posting d_reps from the
-    * plan-embedded CSR of the DELTA's prefix (fps ascending; d_reps for
-    * fps(i) at dreps[offsets(i) until offsets(i+1))), sort, count runs,
-    * keep d_reps with hits >= min(j, ceil(t*|A|), ceil(t*|B|)) passing the
-    * size filter t*|A| <= |B| <= |A|/t. All counting is task-local — the
-    * billion-row (pair, hit) shuffle never exists. ceil is computed on
-    * x - 1e-9 so float error can only lengthen prefixes / lower the bound
-    * (admits candidates, never loses one). `dreps` carries INDEXES into
-    * the aligned `dRepIds`/`dRepNfp` arrays (id and full fp-set size per
-    * delta rep) — indexes make the run-scan's attribute lookup O(1); a
-    * per-run binary search over the rep-id array measured ~10^12
-    * comparisons at sf100. */
+  /** Keys of a plan-embedded prefix CSR whose prefix postings share
+    * enough of `probe` to clear the exact-recall hit bound — the task-local
+    * candidacy of the prefix filter ([[graft.ops.Prefix]]) wherever one
+    * side is small enough to ride the plan: the dedup index probe's
+    * saturated-space path (probe = a corpus rep's own prefix, the CSR = the
+    * delta's prefixes) and the decontamination eval probe (probe = a
+    * corpus doc's whole fp set, the CSR = the eval prefixes; the j smallest
+    * common elements sit inside the eval side's prefix by its own position
+    * argument, so the probing side needs no df order). One pass: gather
+    * posting keys of every probed fp (fps ascending; keys for fps(i) at
+    * keys[offsets(i) until offsets(i+1))), sort, count runs, keep keys with
+    * hits >= min(j, ceil(t*n), ceil(t*|B|)) passing the size filter
+    * t*n <= |B| <= n/t, where n is the probing set's FULL size. All
+    * counting is task-local — the billion-row (pair, hit) shuffle never
+    * exists. ceil is computed on x - 1e-9 so float error can only lower the
+    * bound (admits candidates, never loses one). `keys` carries INDEXES
+    * into the aligned `keyIds`/`keySizes` arrays (id and full set size per
+    * key) — indexes make the run-scan's attribute lookup O(1); a per-run
+    * binary search over the id array measured ~10^12 comparisons at
+    * sf100. */
   def prefixCandidates(
-      rked: ArrayData, t: Double, minHits: Int,
-      fps: Array[Long], offsets: Array[Int], dreps: Array[Int],
-      dRepIds: Array[Long], dRepNfp: Array[Int],
-      probePrefix: Boolean = true): ArrayData = {
-    val n = rked.numElements()
-    if (n == 0 || fps.length == 0) return new GenericArrayData(Array.empty[Any])
+      probe: ArrayData, n: Int, t: Double, minHits: Int,
+      fps: Array[Long], offsets: Array[Int], keys: Array[Int],
+      keyIds: Array[Long], keySizes: Array[Int]): ArrayData = {
+    val lI = probe.numElements()
+    if (lI == 0 || fps.length == 0) return new GenericArrayData(Array.empty[Any])
     val oI = math.ceil(t * n - 1e-9).toLong
     val jI = math.min(minHits.toLong, oI)
-    // probePrefix=false is the ONE-SIDED mode: `rked` need not be in the
-    // canonical (df, fp) order — the whole list probes the CSR (which then
-    // must carry the OTHER side's prefixes; the j smallest common elements
-    // sit inside that side's prefix by its own position argument). Used
-    // when the probing side has no cheap df order (decontaminate's corpus
-    // pass against an eval-prefix CSR).
-    val lI = if (probePrefix) math.min(n.toLong, n - oI + jI).toInt else n
     var hits = new Array[Int](16)
     var nh = 0
     var i = 0
     while (i < lI) {
-      val pos = java.util.Arrays.binarySearch(fps, rked.getLong(i))
+      val pos = java.util.Arrays.binarySearch(fps, probe.getLong(i))
       if (pos >= 0) {
         var j = offsets(pos)
         val end = offsets(pos + 1)
         while (j < end) {
           if (nh == hits.length) hits = java.util.Arrays.copyOf(hits, nh * 2)
-          hits(nh) = dreps(j)
+          hits(nh) = keys(j)
           nh += 1
           j += 1
         }
@@ -1218,11 +1170,11 @@ object Kernels {
       var e = s + 1
       while (e < nh && hits(e) == hits(s)) e += 1
       val k = hits(s)
-      val dNfp = dRepNfp(k)
-      val oD = math.ceil(t * dNfp - 1e-9).toLong
+      val bSize = keySizes(k)
+      val oD = math.ceil(t * bSize - 1e-9).toLong
       val jD = math.min(minHits.toLong, oD)
-      val sizeOk = n >= oD && n <= math.floor(dNfp / t + 1e-9).toLong
-      if (sizeOk && (e - s) >= math.min(jD, jI)) out.add(dRepIds(k))
+      val sizeOk = n >= oD && n <= math.floor(bSize / t + 1e-9).toLong
+      if (sizeOk && (e - s) >= math.min(jD, jI)) out.add(keyIds(k))
       s = e
     }
     new GenericArrayData(out.toArray)

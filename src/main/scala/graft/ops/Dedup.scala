@@ -18,7 +18,7 @@ import scala.jdk.CollectionConverters._
   */
 object Dedup {
 
-  /** The pair kernels (postingPairs, bucketPairsCos, group expansion) read
+  /** The pair kernels (prefixCandidates, bucketPairsCos, group expansion) read
     * ids as 64-bit longs; a silently-mis-read string id would corrupt
     * output, so integral id columns are enforced (and widened) up front. */
   private[graft] def requireLongId(df: DataFrame, idCol: String): Unit =
@@ -71,7 +71,7 @@ object Dedup {
     * Relational formulation (explode + self-equi-join on the group key),
     * NOT a per-row pair-array kernel: on a corpus whose duplication factor
     * scales with the corpus (the replicated-crawl shape — GenScale decades
-    * have |group| ≈ the copy factor), a postingPairs-style eval
+    * have |group| ≈ the copy factor), a pair-array kernel eval
     * materializes |group|²/2 structs as ONE in-memory array per row
     * (~40 MB/row at |group|=1000; executor OOM at sf100), while the join
     * streams the exact same pair set through a spillable shuffle. */
@@ -181,64 +181,86 @@ object Dedup {
     * element and measured ~10x slower. */
   def shingles(text: Column, n: Int): Column = gf.shingles(text, n)
 
-  /** Exact n-gram Jaccard similar pairs via shingle inverted index:
-    * shingle ONCE, build the posting list per shingle in one shuffle, emit
-    * each posting list's candidate pairs with a bucket-local kernel, count
-    * shared shingles per pair → Jaccard = shared / (|A| + |B| - shared) ≥
-    * threshold. Only pairs sharing ≥1 surviving shingle are materialized,
-    * and the corpus is shingled exactly once (the join formulation
-    * re-shingled it for the df pass and for both join sides).
+  /** Prefix postings up to which [[ngramJaccardPairs]] counts candidate
+    * hits task-locally against a plan-embedded CSR (~12 B per posting in
+    * the plan, ~100 B per collected row on the driver). On the GenScale
+    * sf1 corpus (1.4M postings over a saturated ~30k-trigram space, 4
+    * cores) the operator took ~14 s this way and ~48 s through the
+    * self-join, whose per-pair hit count aggregates 44M join rows. */
+  private val MaxCsrPostings = 2000000
+
+  /** Exact n-gram Jaccard similar pairs: every (a_id, b_id), a_id < b_id,
+    * whose distinct word n-gram shingle sets reach Jaccard >= `threshold`.
     *
-    * Scale valve: candidate cost is sum(df(shingle)²) — a hot shingle in
-    * f docs alone yields f²/2 pairs. maxDf drops shingles with document
-    * frequency > maxDf from candidate generation (pairs sharing ONLY
-    * ultra-common shingles are missed — the standard web-dedup trade-off;
-    * |A|,|B| stay exact so Jaccard of surviving pairs is exact).
-    */
+    * Identical normalized contents collapse first ([[canonicalGroups]]):
+    * their pairs are Jaccard-1 matches, emitted per group when it has a
+    * shingle, and each distinct content is shingled once as sorted fps.
+    * Candidacy between the distinct contents is the rare-first prefix
+    * filter ([[Prefix]]) — the size filter t·|A| <= |B| <= |A|/t and the
+    * min(j_A, j_B) hit bound over prefix postings, recall 1 for J >= t > 0
+    * — survivors are verified with the exact sorted-merge Jaccard kernel
+    * and expanded back to member pairs. The output is the exact pair set
+    * at any scale: a shingle shared by thousands of docs sits outside
+    * their prefixes instead of being dropped from candidacy (the full
+    * n-gram self-join costs Σ df(shingle)²).
+    *
+    * The hits are counted one of two ways, with the same candidates: up to
+    * `maxCsrPostings` prefix postings they ride the plan as a CSR and each
+    * content's full fp set probes it in one kernel pass (the one-sided
+    * mode of the decontamination probe); past it the postings self-join on
+    * fp and a shuffle counts hits per pair. */
   def ngramJaccardPairs(
       df: DataFrame,
       textCol: String,
       idCol: String,
       n: Int,
-      threshold: Double,
-      maxDf: Option[Long] = None): DataFrame = {
+      threshold: Double): DataFrame =
+    ngramJaccardPairs(df, textCol, idCol, n, threshold, MaxCsrPostings)
+
+  private[graft] def ngramJaccardPairs(
+      df: DataFrame, textCol: String, idCol: String, n: Int, threshold: Double,
+      maxCsrPostings: Int): DataFrame = {
+    require(threshold > 0 && threshold <= 1, s"threshold must be in (0, 1], got $threshold " +
+      "(shared-shingle candidacy is complete only for J >= t > 0)")
     requireLongId(df, idCol)
-    val sh = df
-      .select(col(idCol).cast("long").as("id"), shingles(col(textCol), n).as("sh"))
-      .withColumn("sh_size", size(col("sh")))
-    val exploded = sh.select(col("id"), col("sh_size"), explode(col("sh")).as("shingle"))
-    // The df valve runs BEFORE the posting lists exist: a count-only
-    // aggregate (map-side partial, the shuffle carries one row per
-    // DISTINCT shingle) finds the shingles worth collecting, and only
-    // their postings enter the collect_list shuffle. On a duplicate-heavy
-    // corpus almost every shingle is hot, so collecting first and capping
-    // after (the old shape) shuffled the whole corpus's postings to then
-    // drop them — 27M struct rows to keep a few hundred pairs at sf10.
-    // The corpus is shingled twice (both passes are narrow maps off the
-    // scan; recompute beats materializing corpus-sized rows — the
-    // duplicatedSpans trade). sh_size stays the FULL set size, so Jaccard
-    // semantics are unchanged.
-    // No broadcast hint on `eligible`: on a duplicate-heavy corpus it is
-    // tiny (hot shingles fall out) and AQE broadcasts it at runtime — the
-    // posting explosion then never shuffles at all. On a Zipf corpus most
-    // distinct shingles have df in [2, cap], `eligible` is corpus-scale,
-    // and the shuffled join IS the right plan (the surviving postings are
-    // the real output volume).
-    val eligible = exploded.groupBy("shingle").agg(count(lit(1)).as("__df"))
-      .where(col("__df") >= 2 &&
-        maxDf.map(cap => col("__df") <= cap).getOrElse(lit(true)))
-      .select("shingle")
-    val postings = exploded
-      .join(eligible, Seq("shingle"))
-      .groupBy("shingle")
-      .agg(collect_list(struct(col("id"), col("sh_size"))).as("postings"))
-    postings
-      .select(explode(gf.postingPairs(col("postings"))).as("p"))
-      .groupBy(col("p.a_id").as("a_id"), col("p.b_id").as("b_id"),
-        col("p.a_size").as("a_size"), col("p.b_size").as("b_size"))
-      .agg(count(lit(1)).as("shared"))
-      .where(col("shared") / (col("a_size") + col("b_size") - col("shared")) >= threshold)
-      .select(col("a_id"), col("b_id"))
+    val groups = canonicalGroups(df, idCol,
+      TextAnalysis.fingerprint(col(textCol)), col(textCol))
+    val within = withinGroupPairs(groups, size(gf.shingleFpsSorted(col("__payload"), n)) > 0)
+    val reps = groups
+      .select(col("rep_id").as("id"), gf.shingleFpsSorted(col("__payload"), n).as("shl"))
+      .select(col("id"), size(col("shl")).as("sz"), col("shl"))
+      .where(col("sz") > 0)
+      .pinned() // reused by the df count, the prefixes, candidacy and verify
+    val fps = reps.select(col("id"), col("sz"), explode(col("shl")).as("fp"))
+    val pref = Prefix.prefix(fps, Seq("id", "sz"), "fp", Prefix.docFreq(fps, "fp"),
+        Prefix.prefixLen(col("sz"), threshold, Prefix.MinHits))
+      .select("fp", "id", "sz")
+    val postings = pref.limit(maxCsrPostings + 1).collect()
+    val cand =
+      if (postings.length <= maxCsrPostings) {
+        val c = Prefix.csr(postings)
+        reps.select(col("id").as("a_id"),
+            explode(gf.prefixCandidates(col("shl"), col("sz"), threshold, Prefix.MinHits,
+              c.fps, c.offsets, c.keys, c.keyIds, c.keySizes)).as("b_id"))
+          .where(col("a_id") < col("b_id"))
+      } else {
+        def side(s: String) =
+          pref.select(col("fp"), col("id").as(s"${s}_id"), col("sz").as(s"${s}_sz"))
+        side("a").join(side("b"), Seq("fp"))
+          .where(col("a_id") < col("b_id") &&
+            col("b_sz") >= Prefix.minOverlap(col("a_sz"), threshold) &&
+            col("a_sz") >= Prefix.minOverlap(col("b_sz"), threshold))
+          .groupBy("a_id", "b_id", "a_sz", "b_sz").agg(count(lit(1)).as("hits"))
+          .where(col("hits") >= least(Prefix.hitBound(col("a_sz"), threshold, Prefix.MinHits),
+            Prefix.hitBound(col("b_sz"), threshold, Prefix.MinHits)))
+          .select("a_id", "b_id")
+      }
+    val repPairs = cand
+      .join(reps.select(col("id").as("a_id"), col("shl").as("a_shl")), "a_id")
+      .join(reps.select(col("id").as("b_id"), col("shl").as("b_shl")), "b_id")
+      .where(gf.jaccardSortedFps(col("a_shl"), col("b_shl")) >= threshold)
+      .select("a_id", "b_id")
+    within.unionByName(expandGroupPairs(groups, repPairs))
   }
 
   /** MinHash + LSH banding near-dup pairs — the 100 TB dedup path.
@@ -385,8 +407,9 @@ object Dedup {
     * and template-similar corpora concentrate fingerprints into a few hot
     * block values (measured 50x blowup on a 10x synthetic corpus).
     * `maxBucket` drops buckets with occupancy above the cap — pairs whose
-    * ONLY agreeing blocks are ultra-hot are missed, the same bounded
-    * trade-off as the n-gram maxDf valve. Occupancy counts distinct
+    * ONLY agreeing blocks are ultra-hot are missed, the standard web-dedup
+    * trade-off (the exact n-gram path needs no such cap: its hot shingles
+    * fall outside the rare-first prefixes). Occupancy counts distinct
     * fingerprints, the robust definition (a million exact copies of one
     * document should not evict their bucket).
     *
@@ -450,7 +473,7 @@ object Dedup {
   }
 
   /** Sorted distinct copy of `a` (sorts `a` in place). */
-  private def sortedDistinct(a: Array[Long]): Array[Long] = {
+  private[ops] def sortedDistinct(a: Array[Long]): Array[Long] = {
     java.util.Arrays.sort(a)
     var d = 0
     for (i <- a.indices if i == 0 || a(i) != a(i - 1)) { a(d) = a(i); d += 1 }
@@ -639,44 +662,17 @@ object Dedup {
       graft.functions.Kernels.bloomK(EvalBloomBitsPerItem))
   }
 
-  /** Plan-embeddable prefix-CSR arrays over an eval battery's
-    * (rep, sorted fps) rows — the probe side of [[gf.prefixCandidates]]
-    * in [[verifiedMatches]]. */
-  private case class EvalPrefixCsr(
-      fps: Array[Long], offsets: Array[Int], reps: Array[Int],
-      repIds: Array[Long], repNfp: Array[Int])
-
-  /** Prefix hit bound j shared by the CSR build and the probe kernel. */
-  private val PrefixMinHits = 3
-
+  /** The [[Prefix.Csr]] of an eval battery's prefix postings under
+    * eval-side document frequencies — the plan-embedded probe side of
+    * [[verifiedMatches]]. */
   private def evalPrefixCsr(
-      evalShRows: Array[(Long, Array[Long])], threshold: Double): EvalPrefixCsr = {
-    def oMin(sz: Int): Int = math.ceil(sz * threshold - 1e-9).toInt
-    val df = new java.util.HashMap[Long, Int]()
-    evalShRows.foreach(_._2.foreach(fp => df.merge(fp, 1, Integer.sum _)))
-    // postings carry the eval rep's INDEX in the (id-sorted) attrs arrays,
-    // not its id — the kernel's run-scan then reads attributes O(1)
-    val attrs = evalShRows.map { case (r, fps) => (r, fps.length) }.sortBy(_._1)
-    val idxOf = attrs.iterator.map(_._1).zipWithIndex.toMap
-    val posts = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)] // (fp, eval idx)
-    evalShRows.foreach { case (rep, fps) =>
-      val o = oMin(fps.length)
-      val l = math.min(fps.length, fps.length - o + math.min(PrefixMinHits, o))
-      val idx = idxOf(rep)
-      fps.sortBy(fp => (df.get(fp).intValue, fp)).take(l).foreach(fp => posts += ((fp, idx)))
-    }
-    val byFp = posts.sortBy(identity).toArray
-    val fpsB = Array.newBuilder[Long]
-    val offB = Array.newBuilder[Int]
-    val reps = new Array[Int](byFp.length)
-    var i = 0
-    while (i < byFp.length) {
-      if (i == 0 || byFp(i)._1 != byFp(i - 1)._1) { fpsB += byFp(i)._1; offB += i }
-      reps(i) = byFp(i)._2
-      i += 1
-    }
-    offB += byFp.length
-    EvalPrefixCsr(fpsB.result(), offB.result(), reps, attrs.map(_._1), attrs.map(_._2))
+      spark: org.apache.spark.sql.SparkSession, idx: EvalIndex, threshold: Double): Prefix.Csr = {
+    import spark.implicits._
+    val fps = idx.reps.toSeq.map(r => (r._1, r._2.length, r._2)).toDF("rep", "nfp", "shl")
+      .select(col("rep"), col("nfp"), explode(col("shl")).as("fp"))
+    Prefix.csr(Prefix.prefix(fps, Seq("rep", "nfp"), "fp", Prefix.docFreq(fps, "fp"),
+        Prefix.prefixLen(col("nfp"), threshold, Prefix.MinHits))
+      .select("fp", "rep", "nfp").collect())
   }
 
   /** Bloom count prefilter over (id, __text) rows: keep a row iff its
@@ -700,30 +696,29 @@ object Dedup {
     * would admit pairs just under it).
     *
     * Candidacy is the eval-prefix CSR probe: the battery is small by
-    * contract, so its PREFIX postings (rare-first (df, fp) order over
-    * eval-side document frequencies; length |B| - ceil(t·|B|) + j per eval
-    * rep) ride the plan, and one kernel pass over each row's full fp set
-    * counts hits task-locally (one-sided prefix theorem: the j smallest
-    * common elements of a J >= t pair sit inside the EVAL side's prefix,
-    * so recall is exactly 1). A shuffle-based candidacy goes quadratic on
-    * saturated shingle spaces: the shared-shingle equi-join measured
-    * Σ df_corpus·df_eval ≈ 9·10^10 rows at sf100 and filled the disk.
-    * The score is projected once, then filtered; the eval arrays join as a
-    * broadcast local relation. Per-row throughout, so it runs unchanged on
-    * a stream. */
+    * contract, so its [[Prefix]] postings (rare-first under eval-side
+    * document frequencies) ride the plan, and one kernel pass over each
+    * row's full fp set counts hits task-locally (one-sided prefix
+    * theorem: the j smallest common elements of a J >= t pair sit inside
+    * the EVAL side's prefix, so recall is exactly 1). A shuffle-based
+    * candidacy goes quadratic on saturated shingle spaces: the
+    * shared-shingle equi-join measured Σ df_corpus·df_eval ≈ 9·10^10 rows
+    * at sf100 and filled the disk. The score is projected once, then
+    * filtered; the eval arrays join as a broadcast local relation. Per-row
+    * throughout, so it runs unchanged on a stream. */
   private def verifiedMatches(
       docs: DataFrame, idx: EvalIndex, n: Int, threshold: Double): DataFrame = {
     require(threshold > 0, s"threshold must be > 0, got $threshold " +
       "(shared-shingle candidacy is complete only for J >= t > 0)")
-    val c = evalPrefixCsr(idx.reps.map(r => (r._1, r._2)), threshold)
+    val c = evalPrefixCsr(docs.sparkSession, idx, threshold)
     val evalSh = {
       import docs.sparkSession.implicits._
       idx.reps.toSeq.toDF("eval_rep", "b_shl", "eval_members")
     }
     docs.select(col("id"), gf.shingleFpsSorted(col("__text"), n).as("a_shl"))
       .select(col("id"), col("a_shl"),
-        explode(gf.prefixCandidates(col("a_shl"), threshold, PrefixMinHits,
-          c.fps, c.offsets, c.reps, c.repIds, c.repNfp, probePrefix = false)).as("eval_rep"))
+        explode(gf.prefixCandidates(col("a_shl"), size(col("a_shl")), threshold, Prefix.MinHits,
+          c.fps, c.offsets, c.keys, c.keyIds, c.keySizes)).as("eval_rep"))
       .join(broadcast(evalSh), "eval_rep")
       .withColumn("__jraw", gf.jaccardSortedFps(col("a_shl"), col("b_shl")))
       .where(col("__jraw") >= threshold)
@@ -1354,23 +1349,21 @@ object Dedup {
       col("rep_id"),
       col("__ck").as("content_key"),
       gf.shingleFpsSorted(col("__payload"), n).as("shl"))
-    // global document frequency per fp — defines the canonical (df, fp)
-    // rare-first order every probe-side prefix filter uses. Written first;
-    // everything below reads it back instead of recomputing.
-    repsF.select(explode(col("shl")).as("fp"))
-      .groupBy("fp").agg(count(lit(1)).as("df"))
+    // global document frequency per fp — defines the rare-first order
+    // every probe-side prefix filter uses. Written first; everything below
+    // reads it back instead of recomputing.
+    val fps = repsF.select(col("rep_id"), explode(col("shl")).as("fp"))
+    Prefix.docFreq(fps, "fp")
       .withColumn("fb", pmod(hash(col("fp")), lit(numParts)))
       .write.mode("overwrite").partitionBy("fb").format("parquet")
       .saveAsTable(s"${tableName}_df")
     // reps carry BOTH orderings of the fp set: `shl` (value-sorted, the
-    // exact-Jaccard merge kernel's input) and `shl_rk` ((df, fp)-ordered,
-    // rare first — position i IS the fp's prefix rank, so the probe's
-    // broadcast-kernel path slices its prefix straight off the array).
-    val rkArr = repsF
-      .select(col("rep_id"), explode(col("shl")).as("fp"))
-      .join(spark.table(s"${tableName}_df").select("fp", "df"), Seq("fp"))
+    // exact-Jaccard merge kernel's input) and `shl_rk` (rare-first —
+    // position i IS the fp's prefix rank, so the probe's broadcast-kernel
+    // path slices its prefix straight off the array).
+    val rkArr = Prefix.rareFirst(fps, Seq("rep_id"), "fp", spark.table(s"${tableName}_df"))
       .groupBy("rep_id")
-      .agg(transform(array_sort(collect_list(struct(col("df"), col("fp")))),
+      .agg(transform(array_sort(collect_list(struct(col("rk"), col("fp")))),
         s => s.getField("fp")).as("shl_rk"))
     repsF.join(rkArr, Seq("rep_id"))
       .withColumn("pb", pmod(hash(col("rep_id")), lit(numParts)))
@@ -1401,11 +1394,9 @@ object Dedup {
     *   - `new`  : else — the doc is admissible.
     *
     * EXACT output (not approximate): candidacy is prefix-filtered
-    * (AllPairs/PPJoin — rare-first (df, fp) order, prefix length
-    * |X| - ceil(t·|X|) + j, at least min(j_A, j_B) shared prefix fps),
-    * which has recall exactly 1 for J >= t (see the inline proof at the
-    * candidacy join); survivors are verified with the exact sorted-merge
-    * Jaccard kernel against the stored rep fp arrays. The prefix filter is
+    * ([[Prefix]], at least min(j_A, j_B) shared prefix fps), which has
+    * recall exactly 1 for J >= t; survivors are verified with the exact
+    * sorted-merge Jaccard kernel against the stored rep fp arrays. The prefix filter is
     * what keeps candidacy LINEAR when the shingle space saturates — the
     * full-postings count join this replaced measured Σ df_idx·df_delta =
     * 2.23 BILLION join rows at sf10 (vs 22M at sf1) on the ~30k-trigram
@@ -1433,10 +1424,8 @@ object Dedup {
       idCol: String,
       tableName: String,
       threshold: Double = 0.5,
-      maxBroadcastBytes: Long = 256L << 20,
-      prefixMinHits: Int = 3): DataFrame = {
+      maxBroadcastBytes: Long = 256L << 20): DataFrame = {
     requireLongId(delta, idCol)
-    require(prefixMinHits >= 1, "prefixMinHits must be at least 1")
     val spark = delta.sparkSession
     val reps = spark.table(tableName)
     val fpsIdx = spark.table(s"${tableName}_fps")
@@ -1480,60 +1469,39 @@ object Dedup {
       .groupBy("d_rep").agg(min(col("rep_id")).as("exact_match"))
       .pinned()
 
-    // Near candidacy is PREFIX-FILTERED (AllPairs/PPJoin, Bayardo 2007):
-    // the earlier shape joined the delta's FULL fp lists against the full
-    // posting index and counted per-pair hits — exact, but its join volume
-    // is Σ_fp df_idx(fp)·df_delta(fp), which grows quadratically whenever
-    // the shingle space saturates (measured 22M rows at sf1 → 2.23B at
-    // sf10: a ~30k-fp trigram vocabulary makes every delta fp collide with
-    // ~1000 corpus reps). Prefix filtering restores a linear candidacy:
-    //
-    //  - Canonical order: ascending (build-time df, fp) — rare-first, so
-    //    hot fps fall OUTSIDE prefixes and never fan out.
-    //  - J(A,B) >= t forces |A∩B| >= ceil(t·|A|) and >= ceil(t·|B|); the
-    //    j smallest common elements (canonical order) then sit within the
-    //    first |X| - ceil(t·|X|) + j elements of BOTH sides (each has
-    //    >= ceil(t·|X|) - j commons after it). So joining only those
-    //    prefixes and requiring >= min(j_A, j_B) hits — j_X = min(j,
-    //    ceil(t·|X|)), which degrades gracefully for tiny fp lists — has
-    //    recall EXACTLY 1, while j kills the pairs that share only a few
-    //    noise shingles. On the saturated synthetic corpus the expected
-    //    chance intersection between two random docs is ~0.05 fps, so the
-    //    candidate count falls ~400x per unit of j (Poisson tail); j = 2
-    //    still left ~28M chance pairs at sf10 (a broadcast OOM), j = 3
-    //    leaves thousands. True matches need >= ceil(t·n) >> 3 shared fps.
-    //  - Size filter: |B| must lie in [t·|A|, |A|/t] (else J < t) — applied
-    //    as a post-join predicate before the hit count.
-    //  - ceil(t·x) is computed as ceil(t·x − 1e-9): a float rounding UP to
-    //    the next integer would silently shorten prefixes and raise hit
-    //    requirements (a recall bug); rounding DOWN only admits candidates.
+    // Near candidacy is PREFIX-FILTERED ([[Prefix]]): the earlier shape
+    // joined the delta's FULL fp lists against the full posting index and
+    // counted per-pair hits — exact, but its join volume is
+    // Σ_fp df_idx(fp)·df_delta(fp), which grows quadratically whenever the
+    // shingle space saturates (measured 22M rows at sf1 → 2.23B at sf10: a
+    // ~30k-fp trigram vocabulary makes every delta fp collide with ~1000
+    // corpus reps). Rare-first prefixes restore a linear candidacy; on the
+    // saturated synthetic corpus j = 2 still left ~28M chance pairs at sf10
+    // (a broadcast OOM), j = 3 leaves thousands. The size filter
+    // |B| in [t·|A|, |A|/t] applies as a post-join predicate before the hit
+    // count.
     //
     // Delta fps absent from the index (df join misses) generate no
-    // candidates and are dropped before ranking; removing them only moves
-    // common fps EARLIER in the delta's order, so the prefix bound (which
-    // uses the FULL |A|) stays recall-safe. Survivors are verified against
-    // the reps' stored fp arrays with the exact sorted-merge Jaccard
-    // kernel; every emitted (match, score) is exact, as before.
+    // candidates and drop out of the ranking; the prefix length still uses
+    // the FULL |A|. Survivors are verified against the reps' stored fp
+    // arrays with the exact sorted-merge Jaccard kernel; every emitted
+    // (match, score) is exact.
     //
     // Exact-matched delta reps are still excluded up front — exact
     // dominates near in the output, and a re-crawl delta is MOSTLY exact
     // dups, so their candidacy fan-out is pure waste.
-    val j = lit(prefixMinHits)
-    def oMin(nCol: Column): Column = ceil(nCol.cast("double") * threshold - 1e-9)
+    val j = Prefix.MinHits
     val dNear = dSh.join(deltaSide(exactM.select(col("d_rep"))), Seq("d_rep"), "left_anti")
     val dFps = dNear
       .select(col("d_rep"), size(col("d_shl")).as("d_nfp"),
         explode(col("d_shl")).as("fp"))
     // delta prefix postings at hit requirement h: prefix length grows with
     // h (the per-doc min(h, ceil(t·n)) cap keeps tiny docs exact-recall)
-    def prefFor(h: Int): DataFrame = dfIdx.select(col("fp"), col("df"))
-      .join(deltaSide(dFps), Seq("fp"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("d_rep").orderBy("df", "fp")))
-      .where(col("rn") <= col("d_nfp") - oMin(col("d_nfp")) +
-        least(lit(h), oMin(col("d_nfp"))))
-      .select(col("d_rep"), col("d_nfp"), col("fp"), col("df"))
-    val dPref = prefFor(prefixMinHits)
+    def prefFor(h: Int): DataFrame =
+      Prefix.prefix(deltaSide(dFps), Seq("d_rep", "d_nfp"), "fp", dfIdx,
+          Prefix.prefixLen(col("d_nfp"), threshold, h))
+        .select(col("d_rep"), col("d_nfp"), col("fp"), col("df"))
+    val dPref = prefFor(j)
       .pinned() // reused: selectivity estimate + one of the two candidacy paths
     // the candidacy join is the probe's compute-heavy broadcast join and
     // its streamed side (the prefix-filtered postings) is bytes-small —
@@ -1541,7 +1509,7 @@ object Dedup {
     // file-split parallelism (measured 4 of 32 cores at sf10, the
     // io.Layout rule). Under the tripped guard the joins shuffle anyway.
     val idxPref = fpsIdx
-      .where(col("rk") < col("n_fp") - oMin(col("n_fp")) + least(j, oMin(col("n_fp"))))
+      .where(col("rk") < Prefix.prefixLen(col("n_fp"), threshold, j))
     // ADAPTIVE CANDIDACY. The inverted-index join's volume is
     // Σ_fp df_idx(fp)·df_delta(fp) over the two prefixes — estimated by
     // Σ df over the delta's prefix rows (one delta-sized aggregate; df is
@@ -1579,7 +1547,7 @@ object Dedup {
     // a chance-pair filter whose survivors are exact-verified anyway
     // (path-equality spec unchanged).
     val jEff =
-      if (estJoinRows == 0L) prefixMinHits
+      if (estJoinRows == 0L) j
       else {
         val lambda = 2.0 * estJoinRows.toDouble /
           (math.max(dRows, 1L).toDouble * math.max(nReps, 1L).toDouble)
@@ -1590,7 +1558,7 @@ object Dedup {
           while (i <= k) { t = t * lambda / i; i += 1 }
           t
         }
-        var h = prefixMinHits
+        var h = j
         while (h < 16 && chance(h) > candCap) h += 1
         h
       }
@@ -1605,34 +1573,18 @@ object Dedup {
     // join — at that point re-running dedup, not probing, is the right
     // operation anyway.
     val kernelPath = estJoinRows > 16L * math.max(nReps, 1L) &&
-      (prefRows + (jEff - prefixMinHits).toLong * dRows) * 12L +
+      (prefRows + (jEff - j).toLong * dRows) * 12L +
         dRows * 16L <= maxBroadcastBytes
     val cand =
       if (kernelPath) {
-        val kPref = if (jEff == prefixMinHits) dPref else prefFor(jEff)
-        val rows = kPref.select(col("fp"), col("d_rep"), col("d_nfp")).collect()
-        val byFp = rows.sortBy(r => (r.getLong(0), r.getLong(1)))
-        // postings carry delta-rep INDEXES into the id-sorted attrs arrays
-        // (O(1) attribute lookup in the kernel's run-scan)
-        val attrs = rows.map(r => (r.getLong(1), r.getInt(2))).distinct.sortBy(_._1)
-        val idxOf = attrs.iterator.map(_._1).zipWithIndex.toMap
-        val fpsB = Array.newBuilder[Long]
-        val offB = Array.newBuilder[Int]
-        val drB = new Array[Int](byFp.length)
-        var i = 0
-        while (i < byFp.length) {
-          if (i == 0 || byFp(i).getLong(0) != byFp(i - 1).getLong(0)) {
-            fpsB += byFp(i).getLong(0); offB += i
-          }
-          drB(i) = idxOf(byFp(i).getLong(1))
-          i += 1
-        }
-        offB += byFp.length
+        val kPref = if (jEff == j) dPref else prefFor(jEff)
+        val c = Prefix.csr(kPref.select(col("fp"), col("d_rep"), col("d_nfp")).collect())
+        val nFp = size(col("shl_rk"))
         Layout.spread(reps.select(col("rep_id"), col("shl_rk")))
           .select(col("rep_id"),
-            explode(gf.prefixCandidates(col("shl_rk"), threshold, jEff,
-              fpsB.result(), offB.result(), drB,
-              attrs.map(_._1), attrs.map(_._2))).as("d_rep"))
+            explode(gf.prefixCandidates(
+              slice(col("shl_rk"), lit(1), Prefix.prefixLen(nFp, threshold, jEff).cast("int")), nFp,
+              threshold, jEff, c.fps, c.offsets, c.keys, c.keyIds, c.keySizes)).as("d_rep"))
       } else {
         // Hit counting is a WINDOW over the pair, not a groupBy: the join
         // output's (d_rep, rep_id) keys are mostly unique (noise pairs
@@ -1644,13 +1596,14 @@ object Dedup {
         val pairW = Window.partitionBy("d_rep", "rep_id")
         (if (bcastDelta) Layout.spread(idxPref) else idxPref)
           .join(deltaSide(dPref.drop("df")), Seq("fp"))
-          .where(col("n_fp") >= oMin(col("d_nfp")) &&
+          .where(col("n_fp") >= Prefix.minOverlap(col("d_nfp"), threshold) &&
             col("n_fp") <= floor(col("d_nfp").cast("double") / threshold + 1e-9))
           .select(col("d_rep"), col("rep_id"), col("d_nfp"), col("n_fp"))
           .withColumn("__hits", count(lit(1)).over(pairW))
           .withColumn("__rn", row_number().over(pairW.orderBy("d_nfp")))
           .where(col("__rn") === 1 &&
-            col("__hits") >= least(least(j, oMin(col("d_nfp"))), least(j, oMin(col("n_fp")))))
+            col("__hits") >= least(Prefix.hitBound(col("d_nfp"), threshold, j),
+              Prefix.hitBound(col("n_fp"), threshold, j)))
           .select(col("d_rep"), col("rep_id"))
       }
     // verify joins keep the index on the streamed side too: the candidate

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Approximate string join bounded by edit distance — the SSJoin /
@@ -26,7 +25,7 @@ import org.apache.spark.sql.functions._
   * short-bucket pair join, so recall stays exactly 1 for all lengths.
   *
   * 100 TB posture: the gram-frequency table is one map-combined groupBy;
-  * ranking is a per-string window (tiny partitions — one string's grams);
+  * ranking is one per-string sort ([[Prefix]]; tiny groups — one string's grams);
   * hot/frequent grams are naturally EXCLUDED from signatures (rarest-first
   * prefix), which is what caps equi-join fan-out on skewed vocabularies;
   * the short bucket is bounded by the short-string population and joins
@@ -35,6 +34,22 @@ import org.apache.spark.sql.functions._
   * band exceeds tau instead of filling the full matrix.
   */
 object Fuzzy {
+
+  /** (__id, gram) rows of each side's q*tau+1 signature: its distinct
+    * q-gram texts (positions collapse — the filter argument is about gram
+    * TEXT occurrence, so sets suffice), the rarest first under ONE order
+    * over the grams of all `sides` (one map-combined shuffle on gram, then
+    * a per-string sort). */
+  private def signatures(q: Int, tau: Int, sides: DataFrame*): Seq[DataFrame] = {
+    val grams = sides.map(_
+      .filter(length(col("__s")) >= q)
+      .select(col("__id"), explode(array_distinct(
+        transform(sequence(lit(0), length(col("__s")) - q),
+          i => col("__s").substr(i + lit(1), lit(q))))).as("gram")))
+    val gramDf = Prefix.docFreq(grams.reduce(_ union _), "gram")
+    grams.map(g => Prefix.prefix(g, Seq("__id"), "gram", gramDf, lit(q * tau + 1))
+      .select(col("__id"), col("gram")))
+  }
 
   /** Self-join of `df` on `strCol`: all pairs with edit distance <= tau
     * (and a_id < b_id), via df-ranked q-gram prefix signatures. Output:
@@ -45,23 +60,8 @@ object Fuzzy {
     require(q >= 2, s"q must be >= 2, got $q")
     val strings = df.select(col(idCol).as("__id"), col(strCol).as("__s"))
       .filter(col("__s").isNotNull)
-    val sigLen = q * tau + 1
     val shortMax = q * (tau + 1) - 1 // gram count <= q*tau: no prefix guarantee
-
-    // distinct q-gram texts per string (positions collapse: the filter
-    // argument is about gram TEXT occurrence, so sets suffice)
-    val grams = strings
-      .filter(length(col("__s")) >= q)
-      .select(col("__id"), explode(array_distinct(
-        transform(sequence(lit(0), length(col("__s")) - q),
-          i => col("__s").substr(i + lit(1), lit(q))))).as("gram"))
-
-    // global rarest-first order: one map-combined shuffle on gram
-    val gramDf = grams.groupBy("gram").agg(count(lit(1)).as("__df"))
-    val ranked = grams.join(gramDf, "gram")
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("__id")).orderBy(col("__df"), col("gram"))))
-    val sig = ranked.filter(col("__rn") <= sigLen).select(col("__id"), col("gram"))
+    val Seq(sig) = signatures(q, tau, strings)
 
     val candLong = sig.as("a").join(sig.as("b"),
         col("a.gram") === col("b.gram") && col("a.__id") < col("b.__id"))
@@ -109,24 +109,11 @@ object Fuzzy {
         .filter(col("__s").isNotNull)
     val d = strings(dict)
     val p = strings(probes)
-    val sigLen = q * tau + 1
     val shortMax = q * (tau + 1) - 1
-
-    def grams(side: DataFrame) = side
-      .filter(length(col("__s")) >= q)
-      .select(col("__id"), explode(array_distinct(
-        transform(sequence(lit(0), length(col("__s")) - q),
-          i => col("__s").substr(i + lit(1), lit(q))))).as("gram"))
-    val dG = grams(d)
-    val pG = grams(p)
     // one global rarest-first order over BOTH sides' grams
-    val gramDf = dG.union(pG).groupBy("gram").agg(count(lit(1)).as("__df"))
-    def sig(g: DataFrame) = g.join(gramDf, "gram")
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("__id")).orderBy(col("__df"), col("gram"))))
-      .filter(col("__rn") <= sigLen).select(col("__id"), col("gram"))
+    val Seq(pSig, dSig) = signatures(q, tau, p, d)
 
-    val candLong = sig(pG).as("p").join(sig(dG).as("d"), Seq("gram"))
+    val candLong = pSig.as("p").join(dSig.as("d"), Seq("gram"))
       .select(col("p.__id").as("__pid"), col("d.__id").as("__did"))
       .distinct()
     val candShort = p.filter(length(col("__s")) <= shortMax).as("p")

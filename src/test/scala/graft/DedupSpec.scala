@@ -15,14 +15,10 @@ class DedupSpec extends SparkSpec {
     * corpus docs with no eval doc at exact word-trigram Jaccard >= 0.5
     * (lowercased whitespace tokens, the engine's tokenization). */
   private def exactTrigramSurvivors(corpus: Seq[(Long, String)], evalSet: Seq[(Long, String)]): Set[Long] = {
-    def sh(s: String): Set[String] =
-      if (s == null) Set.empty
-      else s.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
-        .sliding(3).filter(_.length == 3).map(_.mkString(" ")).toSet
-    val ev = evalSet.map(e => sh(e._2)).filter(_.nonEmpty)
+    val ev = evalSet.map(e => TrigramJaccard.shingles(e._2))
     corpus.filter { case (_, text) =>
-      val a = sh(text)
-      !ev.exists(b => a.nonEmpty && (a & b).size.toDouble / (a | b).size >= 0.5)
+      val a = TrigramJaccard.shingles(text)
+      !ev.exists(b => TrigramJaccard.jaccard(a, b) >= 0.5)
     }.map(_._1).toSet
   }
 
@@ -76,6 +72,36 @@ class DedupSpec extends SparkSpec {
     val pairs = Dedup.ngramJaccardPairs(df, "text", "doc_id", 3, 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs === Set((1L, 2L)))
+  }
+
+  test("dedup_ngram_jaccard and dedup_clusters: pairs through shingles shared by more than " +
+      "10 docs equal a brute-force trigram Jaccard") {
+    // 12 one-word edits of one 40-word document: no two are exact copies,
+    // every pair of them has J >= 32/44, and each unedited shingle is
+    // shared by 11 or 12 of them (the first three also by the doc quoting
+    // five of its words)
+    val words = (0 until 40).map(i => s"w$i").toArray
+    val copies = (0 until 12).map { k =>
+      val w = words.clone()
+      w(3 * k + 1) = s"edit$k"
+      (100L + k, w.mkString(" "))
+    }
+    val others = (0 until 6).map(i =>
+      (200L + i, (0 until 20).map(w => s"doc${i}word$w").mkString(" "))) :+
+      (300L, (words.take(5) ++ (0 until 25).map(w => s"quote$w")).mkString(" "))
+    val all = copies ++ others
+    val dir = tempDir("graft-hot-shingles").toString
+    all.map { case (id, text) => (id, text, "en", "web") }
+      .toDF("doc_id", "text", "lang", "source")
+      .coalesce(1).write.parquet(s"$dir/documents.parquet")
+    val truth = TrigramJaccard.pairs(all, 0.5)
+    assert(truth.size === 66)
+    val pairs = SparkEntry.queries("dedup_ngram_jaccard")(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs === truth)
+    val comps = SparkEntry.queries("dedup_clusters")(spark, dir)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(comps === copies.map(_._1 -> 100L).toMap)
   }
 
   test("minhashLsh: recovers the exact-jaccard pair set on sf0.001 documents") {

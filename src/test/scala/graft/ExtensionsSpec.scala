@@ -30,7 +30,7 @@ class ExtensionsSpec extends SparkSpec {
     assert(math.abs(c - 1.0) < 1e-9)
   }
 
-  test("SQL surface: bucket_pairs_cos and posting_pairs over grouped structs") {
+  test("SQL surface: bucket_pairs_cos over grouped structs") {
     graft.io.Tables.embeddings(spark, sfDir).createOrReplaceTempView("ext_emb2")
     // the same pairs as an exact cosine self-join over the same rows, at a
     // threshold the two vectors miss and at one they clear
@@ -46,13 +46,6 @@ class ExtensionsSpec extends SparkSpec {
       n
     }
     assert(counts.sum > 0)
-    val pairs = spark.sql(
-      """SELECT explode(posting_pairs(array(struct(CAST(1 AS BIGINT) AS id, 5 AS sz),
-        |  struct(CAST(2 AS BIGINT) AS id, 7 AS sz)))) AS p""".stripMargin)
-      .select("p.a_id", "p.b_id", "p.a_size", "p.b_size").collect()
-    assert(pairs.length === 1)
-    assert(pairs(0).getLong(0) === 1L && pairs(0).getLong(1) === 2L)
-    assert(pairs(0).getInt(2) === 5 && pairs(0).getInt(3) === 7)
   }
 
   test("SQL surface: non-literal n rejected with a named error") {

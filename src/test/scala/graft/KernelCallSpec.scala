@@ -23,9 +23,6 @@ class KernelCallSpec extends SparkSpec {
     StructField("vec", vecT),
     StructField("doc", LongType),
     StructField("junk", BinaryType),
-    StructField("items", ArrayType(StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("sz", IntegerType, nullable = false))), containsNull = false)),
     StructField("spans", ArrayType(LongType, containsNull = false)),
     StructField("bucket", ArrayType(StructType(Seq(
       StructField("id", LongType, nullable = false),
@@ -35,11 +32,11 @@ class KernelCallSpec extends SparkSpec {
     "Mail a.b@example.com or call 555-123-4567 from 10.0.0.1\nthe quick brown fox"
   private val rows = Seq(
     Row(1L, text1, "HTTP://Example.COM:80/a/?utm_b=1&z=2&a=3", Seq(1f, 0f, 0.5f, 0.25f), 5L,
-      "xx".getBytes("UTF-8"), Seq(Row(1L, 5), Row(2L, 7), Row(3L, 4)), Seq(0L, 2L),
+      "xx".getBytes("UTF-8"), Seq(0L, 2L),
       Seq(Row(1L, Seq(1f, 0f, 0f, 0f)), Row(2L, Seq(1f, 0f, 0f, 0f)), Row(3L, Seq(0f, 1f, 0f, 0f)))),
     Row(2L, "Café naïve résumé über cafe", "https://x.org/b/", Seq(0f, 1f, 1f, 0f), 6L,
-      Array.emptyByteArray, Seq(), Seq(), Seq()),
-    Row(3L, null, null, null, null, null, null, null, null))
+      Array.emptyByteArray, Seq(), Seq()),
+    Row(3L, null, null, null, null, null, null, null))
 
   /** An RDD-backed frame, so projections over it are not folded into a
     * local relation by the optimizer. */
@@ -86,14 +83,13 @@ class KernelCallSpec extends SparkSpec {
       "bloomShingleHits" -> gf.bloomShingleHits(text, 3, Kernels.bloomBuild(fps1, 10),
         Kernels.bloomK(10)),
       "shingleFpsSorted" -> sorted,
-      "prefixCandidates" -> gf.prefixCandidates(sorted, 0.5, 1, fps1,
+      "prefixCandidates" -> gf.prefixCandidates(sorted, size(sorted), 0.5, 1, fps1,
         Array.tabulate(fps1.length + 1)(identity), Array.fill(fps1.length)(0),
-        Array(7L), Array(fps1.length), probePrefix = false),
+        Array(7L), Array(fps1.length)),
       "jaccardSortedFps" -> gf.jaccardSortedFps(sorted, gf.shingleFpsSorted(url, 3)),
       "dropSpans" -> gf.dropSpans(text, col("spans")),
       "deflateStats" -> gf.deflateStats(text),
       "termFreqs" -> gf.termFreqs(text, Array("the", "fox")),
-      "postingPairs" -> gf.postingPairs(col("items")),
       "bucketPairsCos" -> gf.bucketPairsCos(col("bucket"), 0.9),
       "nearestCell" -> gf.nearestCell(vec, centroids),
       "nearestCos" -> gf.nearestCos(vec, centroids),
@@ -137,7 +133,7 @@ class KernelCallSpec extends SparkSpec {
   }
 
   test("every gf kernel: codegen and interpreted paths give the same rows; null in, null out") {
-    assert(calls.map(_._1).count(n => !n.endsWith("Junk")) === 47)
+    assert(calls.map(_._1).count(n => !n.endsWith("Junk")) === 46)
     val (codegen, wholeStage) = run()
     val (interpreted, wholeStageOff) = withConf(
       "spark.sql.codegen.wholeStage" -> "false",

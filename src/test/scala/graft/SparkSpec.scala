@@ -4,6 +4,28 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+/** Brute-force word-trigram Jaccard over raw strings (lowercased
+  * whitespace tokens, the engine's tokenization): the reference the exact
+  * Jaccard operators must equal. */
+object TrigramJaccard {
+  def shingles(s: String): Set[String] =
+    if (s == null) Set.empty
+    else s.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
+      .sliding(3).filter(_.length == 3).map(_.mkString(" ")).toSet
+
+  def jaccard(a: Set[String], b: Set[String]): Double =
+    if (a.isEmpty || b.isEmpty) 0.0 else (a & b).size.toDouble / (a | b).size
+
+  /** Every (a_id, b_id), a_id < b_id, with Jaccard >= t. */
+  def pairs(docs: Seq[(Long, String)], t: Double): Set[(Long, Long)] = {
+    val sh = docs.map { case (id, text) => (id, shingles(text)) }.sortBy(_._1).toArray
+    (for {
+      i <- sh.indices; j <- (i + 1) until sh.length
+      if jaccard(sh(i)._2, sh(j)._2) >= t
+    } yield (sh(i)._1, sh(j)._1)).toSet
+  }
+}
+
 /** Shared local session for all specs (one JVM, one session). */
 object TestSession {
   lazy val spark: SparkSession = GraftSession.getOrCreate("local[4]")

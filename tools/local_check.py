@@ -1,13 +1,18 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's correctness gate: run each oracle SQL in
 DuckDB over the sf tables and compare against Verify's parquet dumps
-(columns sorted by name, rows sorted, values compared)."""
+(columns sorted by name, rows sorted, values compared).
+
+Usage: local_check.py [SF_DIR] [OUT_DIR] [ENTRY,ENTRY,...]
+With the third argument only the named oracles are checked, against a
+Verify dump filtered to the same entries."""
 import json, sys, glob, os
 import duckdb
 import pandas as pd
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft-verify"
+only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
 
 con = duckdb.connect()
 for p in glob.glob(f"{sf_dir}/*.parquet"):
@@ -15,6 +20,11 @@ for p in glob.glob(f"{sf_dir}/*.parquet"):
     con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+if only is not None:
+    unknown = sorted(only - set(oracle))
+    if unknown:
+        sys.exit(f"no oracle for: {', '.join(unknown)}")
+    oracle = {k: v for k, v in oracle.items() if k in only}
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df.reindex(sorted(df.columns), axis=1)
