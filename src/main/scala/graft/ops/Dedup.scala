@@ -181,14 +181,6 @@ object Dedup {
     * element and measured ~10x slower. */
   def shingles(text: Column, n: Int): Column = gf.shingles(text, n)
 
-  /** Prefix postings up to which [[ngramJaccardPairs]] counts candidate
-    * hits task-locally against a plan-embedded CSR (~12 B per posting in
-    * the plan, ~100 B per collected row on the driver). On the GenScale
-    * sf1 corpus (1.4M postings over a saturated ~30k-trigram space, 4
-    * cores) the operator took ~14 s this way and ~48 s through the
-    * self-join, whose per-pair hit count aggregates 44M join rows. */
-  private val MaxCsrPostings = 2000000
-
   /** Exact n-gram Jaccard similar pairs: every (a_id, b_id), a_id < b_id,
     * whose distinct word n-gram shingle sets reach Jaccard >= `threshold`.
     *
@@ -196,30 +188,20 @@ object Dedup {
     * their pairs are Jaccard-1 matches, emitted per group when it has a
     * shingle, and each distinct content is shingled once as sorted fps.
     * Candidacy between the distinct contents is the rare-first prefix
-    * filter ([[Prefix]]) — the size filter t·|A| <= |B| <= |A|/t and the
-    * min(j_A, j_B) hit bound over prefix postings, recall 1 for J >= t > 0
-    * — survivors are verified with the exact sorted-merge Jaccard kernel
+    * filter ([[Prefix]]): the prefix postings self-join on fp under the
+    * size filter t·|A| <= |B| <= |A|/t, and a pair must share the
+    * min(j_A, j_B) hit bound of prefix fps (recall 1 for J >= t > 0).
+    * Survivors are verified with the exact sorted-merge Jaccard kernel
     * and expanded back to member pairs. The output is the exact pair set
     * at any scale: a shingle shared by thousands of docs sits outside
     * their prefixes instead of being dropped from candidacy (the full
-    * n-gram self-join costs Σ df(shingle)²).
-    *
-    * The hits are counted one of two ways, with the same candidates: up to
-    * `maxCsrPostings` prefix postings they ride the plan as a CSR and each
-    * content's full fp set probes it in one kernel pass (the one-sided
-    * mode of the decontamination probe); past it the postings self-join on
-    * fp and a shuffle counts hits per pair. */
+    * n-gram self-join costs Σ df(shingle)²). */
   def ngramJaccardPairs(
       df: DataFrame,
       textCol: String,
       idCol: String,
       n: Int,
-      threshold: Double): DataFrame =
-    ngramJaccardPairs(df, textCol, idCol, n, threshold, MaxCsrPostings)
-
-  private[graft] def ngramJaccardPairs(
-      df: DataFrame, textCol: String, idCol: String, n: Int, threshold: Double,
-      maxCsrPostings: Int): DataFrame = {
+      threshold: Double): DataFrame = {
     require(threshold > 0 && threshold <= 1, s"threshold must be in (0, 1], got $threshold " +
       "(shared-shingle candidacy is complete only for J >= t > 0)")
     requireLongId(df, idCol)
@@ -230,31 +212,22 @@ object Dedup {
       .select(col("rep_id").as("id"), gf.shingleFpsSorted(col("__payload"), n).as("shl"))
       .select(col("id"), size(col("shl")).as("sz"), col("shl"))
       .where(col("sz") > 0)
-      .pinned() // reused by the df count, the prefixes, candidacy and verify
+      .pinned() // reused by the df count, the prefixes and verify
     val fps = reps.select(col("id"), col("sz"), explode(col("shl")).as("fp"))
     val pref = Prefix.prefix(fps, Seq("id", "sz"), "fp", Prefix.docFreq(fps, "fp"),
         Prefix.prefixLen(col("sz"), threshold, Prefix.MinHits))
       .select("fp", "id", "sz")
-    val postings = pref.limit(maxCsrPostings + 1).collect()
-    val cand =
-      if (postings.length <= maxCsrPostings) {
-        val c = Prefix.csr(postings)
-        reps.select(col("id").as("a_id"),
-            explode(gf.prefixCandidates(col("shl"), col("sz"), threshold, Prefix.MinHits,
-              c.fps, c.offsets, c.keys, c.keyIds, c.keySizes)).as("b_id"))
-          .where(col("a_id") < col("b_id"))
-      } else {
-        def side(s: String) =
-          pref.select(col("fp"), col("id").as(s"${s}_id"), col("sz").as(s"${s}_sz"))
-        side("a").join(side("b"), Seq("fp"))
-          .where(col("a_id") < col("b_id") &&
-            col("b_sz") >= Prefix.minOverlap(col("a_sz"), threshold) &&
-            col("a_sz") >= Prefix.minOverlap(col("b_sz"), threshold))
-          .groupBy("a_id", "b_id", "a_sz", "b_sz").agg(count(lit(1)).as("hits"))
-          .where(col("hits") >= least(Prefix.hitBound(col("a_sz"), threshold, Prefix.MinHits),
-            Prefix.hitBound(col("b_sz"), threshold, Prefix.MinHits)))
-          .select("a_id", "b_id")
-      }
+      .pinned() // both sides of the self-join: one df count and one rank
+    def side(s: String) =
+      pref.select(col("fp"), col("id").as(s"${s}_id"), col("sz").as(s"${s}_sz"))
+    val cand = side("a").join(side("b"), Seq("fp"))
+      .where(col("a_id") < col("b_id") &&
+        col("b_sz") >= Prefix.minOverlap(col("a_sz"), threshold) &&
+        col("a_sz") >= Prefix.minOverlap(col("b_sz"), threshold))
+      .groupBy("a_id", "b_id", "a_sz", "b_sz").agg(count(lit(1)).as("hits"))
+      .where(col("hits") >= least(Prefix.hitBound(col("a_sz"), threshold, Prefix.MinHits),
+        Prefix.hitBound(col("b_sz"), threshold, Prefix.MinHits)))
+      .select("a_id", "b_id")
     val repPairs = cand
       .join(reps.select(col("id").as("a_id"), col("shl").as("a_shl")), "a_id")
       .join(reps.select(col("id").as("b_id"), col("shl").as("b_shl")), "b_id")
@@ -662,19 +635,6 @@ object Dedup {
       graft.functions.Kernels.bloomK(EvalBloomBitsPerItem))
   }
 
-  /** The [[Prefix.Csr]] of an eval battery's prefix postings under
-    * eval-side document frequencies — the plan-embedded probe side of
-    * [[verifiedMatches]]. */
-  private def evalPrefixCsr(
-      spark: org.apache.spark.sql.SparkSession, idx: EvalIndex, threshold: Double): Prefix.Csr = {
-    import spark.implicits._
-    val fps = idx.reps.toSeq.map(r => (r._1, r._2.length, r._2)).toDF("rep", "nfp", "shl")
-      .select(col("rep"), col("nfp"), explode(col("shl")).as("fp"))
-    Prefix.csr(Prefix.prefix(fps, Seq("rep", "nfp"), "fp", Prefix.docFreq(fps, "fp"),
-        Prefix.prefixLen(col("nfp"), threshold, Prefix.MinHits))
-      .select("fp", "rep", "nfp").collect())
-  }
-
   /** Bloom count prefilter over (id, __text) rows: keep a row iff its
     * distinct-shingle hits against the eval fp union reach t·|shingles|.
     * J(a,b) >= t implies |a ∩ b| >= t·|a| (from shared >= t(|a|+|b|)/(1+t)
@@ -697,7 +657,8 @@ object Dedup {
     *
     * Candidacy is the eval-prefix CSR probe: the battery is small by
     * contract, so its [[Prefix]] postings (rare-first under eval-side
-    * document frequencies) ride the plan, and one kernel pass over each
+    * document frequencies, cut on the driver with no Spark job) ride the
+    * plan, and one kernel pass over each
     * row's full fp set counts hits task-locally (one-sided prefix
     * theorem: the j smallest common elements of a J >= t pair sit inside
     * the EVAL side's prefix, so recall is exactly 1). A shuffle-based
@@ -710,7 +671,7 @@ object Dedup {
       docs: DataFrame, idx: EvalIndex, n: Int, threshold: Double): DataFrame = {
     require(threshold > 0, s"threshold must be > 0, got $threshold " +
       "(shared-shingle candidacy is complete only for J >= t > 0)")
-    val c = evalPrefixCsr(docs.sparkSession, idx, threshold)
+    val c = Prefix.localCsr(idx.reps.map(r => (r._1, r._2)), threshold, Prefix.MinHits)
     val evalSh = {
       import docs.sparkSession.implicits._
       idx.reps.toSeq.toDF("eval_rep", "b_shl", "eval_members")
@@ -1578,7 +1539,7 @@ object Dedup {
     val cand =
       if (kernelPath) {
         val kPref = if (jEff == j) dPref else prefFor(jEff)
-        val c = Prefix.csr(kPref.select(col("fp"), col("d_rep"), col("d_nfp")).collect())
+        val c = Prefix.collectCsr(kPref.select(col("fp"), col("d_rep"), col("d_nfp")))
         val nFp = size(col("shl_rk"))
         Layout.spread(reps.select(col("rep_id"), col("shl_rk")))
           .select(col("rep_id"),

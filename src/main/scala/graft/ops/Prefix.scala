@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -70,6 +70,12 @@ object Prefix {
   private[graft] def prefixLen(n: Column, t: Double, j: Int): Column =
     n - minOverlap(n, t) + hitBound(n, t, j)
 
+  /** [[prefixLen]] of a driver-side set of size `n`. */
+  private def prefixLen(n: Int, t: Double, j: Int): Int = {
+    val o = math.ceil(n * t - 1e-9).toInt
+    n - o + math.min(j, o)
+  }
+
   /** Plan-embeddable CSR of prefix postings, the probe side of
     * [[graft.functions.gf.prefixCandidates]]: `fps` ascending; the keys of
     * fps(i) at keys[offsets(i) until offsets(i+1)], stored as INDEXES into
@@ -79,24 +85,46 @@ object Prefix {
       fps: Array[Long], offsets: Array[Int], keys: Array[Int],
       keyIds: Array[Long], keySizes: Array[Int])
 
-  /** The [[Csr]] of prefix postings collected on the driver as (fp: long,
-    * key: long, |X|: int) rows. Primitive arrays throughout: fps and keys
-    * map to their sorted indexes, and one sort of (fp index << 32 | key
-    * index) longs orders the postings. */
-  private[graft] def csr(postings: Array[Row]): Csr = {
-    val n = postings.length
+  /** The [[Csr]] of the (fp: long, key: long, |X|: int) prefix postings
+    * in `postings`, collected to the driver. */
+  private[graft] def collectCsr(postings: DataFrame): Csr = {
+    val rows = postings.collect()
+    csr(rows.map(_.getLong(0)), rows.map(_.getLong(1)), rows.map(_.getInt(2)))
+  }
+
+  /** The [[Csr]] of small in-memory (key, distinct elements) sets, ranked
+    * and cut on the driver with no Spark job: [[prefix]]'s rare-first
+    * order under the sets' own document frequencies and [[prefixLen]]'s
+    * rule. For an eval battery, collected once and probed by every row. */
+  private[graft] def localCsr(sets: Array[(Long, Array[Long])], t: Double, j: Int): Csr = {
+    val df = new java.util.HashMap[Long, Int]()
+    sets.foreach(_._2.foreach(e => df.merge(e, 1, Integer.sum _)))
+    val n = sets.iterator.map(s => prefixLen(s._2.length, t, j)).sum
     val fp = new Array[Long](n)
     val key = new Array[Long](n)
+    val size = new Array[Int](n)
     var i = 0
-    while (i < n) { fp(i) = postings(i).getLong(0); key(i) = postings(i).getLong(1); i += 1 }
+    sets.foreach { case (k, elems) =>
+      elems.sortBy(e => (df.get(e).intValue, e)).iterator.take(prefixLen(elems.length, t, j))
+        .foreach { e => fp(i) = e; key(i) = k; size(i) = elems.length; i += 1 }
+    }
+    csr(fp, key, size)
+  }
+
+  /** The [[Csr]] of prefix postings given as parallel (fp, key, |X|)
+    * arrays. Primitive arrays throughout: fps and keys map to their
+    * sorted indexes, and one sort of (fp index << 32 | key index) longs
+    * orders the postings. */
+  private def csr(fp: Array[Long], key: Array[Long], size: Array[Int]): Csr = {
+    val n = fp.length
     val fps = Dedup.sortedDistinct(fp.clone())
     val keyIds = Dedup.sortedDistinct(key.clone())
     val keySizes = new Array[Int](keyIds.length)
     val packed = new Array[Long](n)
-    i = 0
+    var i = 0
     while (i < n) {
       val k = java.util.Arrays.binarySearch(keyIds, key(i))
-      keySizes(k) = postings(i).getInt(2)
+      keySizes(k) = size(i)
       packed(i) = (java.util.Arrays.binarySearch(fps, fp(i)).toLong << 32) | k
       i += 1
     }

@@ -263,6 +263,29 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.evalIndex(manyRows.limit(2), "text", "doc_id", 3, 16).reps.length === 2)
   }
 
+  test("Prefix: the driver-side CSR of an eval battery equals the Spark-ranked one") {
+    import graft.ops.Prefix
+    // 60 sets over a 40-element space (many df ties, negative elements),
+    // sizes 1..24, so tiny sets take the min(j, ceil(t·|X|)) branch
+    val rnd = new scala.util.Random(7)
+    val sets = (1 to 60).map { k =>
+      val es = Array.fill(1 + rnd.nextInt(24))((rnd.nextInt(40) - 20) * 0x9E3779B97F4A7C15L)
+      (k.toLong * 11, es.distinct.sorted)
+    }.toArray
+    val rows = sets.toSeq.flatMap { case (k, es) => es.map(e => (k, es.length, e)) }
+      .toDF("key", "sz", "fp")
+    for (t <- Seq(0.5, 0.8); j <- Seq(1, 3)) {
+      val local = Prefix.localCsr(sets, t, j)
+      val spark = Prefix.collectCsr(
+        Prefix.prefix(rows, Seq("key", "sz"), "fp", Prefix.docFreq(rows, "fp"),
+          Prefix.prefixLen(col("sz"), t, j)).select("fp", "key", "sz"))
+      def fields(c: Prefix.Csr) =
+        Seq(c.fps.toSeq, c.offsets.toSeq, c.keys.toSeq, c.keyIds.toSeq, c.keySizes.toSeq)
+      assert(fields(local) === fields(spark), s"t=$t j=$j")
+      assert(local.keys.length < rows.count(), s"t=$t j=$j: prefixes cut nothing")
+    }
+  }
+
   test("null texts never pair: canonical paths match the naive paths' empty output") {
     val docs = Seq((1L, "some real document text here"), (2L, null), (3L, null), (4L, null))
       .toDF("doc_id", "text")

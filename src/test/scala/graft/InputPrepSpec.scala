@@ -40,8 +40,7 @@ class InputPrepSpec extends SparkSpec {
     intercept[IllegalArgumentException](graft.llm.Results.unpackJsonWithSchema(df, bad))
   }
 
-  test("ngramJaccardPairs: both candidacy paths give exactly the brute-force trigram " +
-      "Jaccard pairs; threshold 0 throws") {
+  test("ngramJaccardPairs: equals brute-force trigram Jaccard; threshold 0 throws") {
     val sf = graft.io.Tables.documents(spark, sfDir).select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
     val (id0, text0) = sf.find(d => TrigramJaccard.shingles(d._2).nonEmpty).get
@@ -54,14 +53,10 @@ class InputPrepSpec extends SparkSpec {
     val df = docs.toDF("doc_id", "text")
     val truth = TrigramJaccard.pairs(docs, 0.5)
     assert(Set((id0, 900007L), (id0, 900008L), (900007L, 900008L)).subsetOf(truth))
-    // the plan-embedded CSR path (the default at this size) and the
-    // shuffled self-join (no postings allowed on the plan)
-    for (pairs <- Seq(graft.ops.Dedup.ngramJaccardPairs(df, "text", "doc_id", 3, 0.5),
-        graft.ops.Dedup.ngramJaccardPairs(df, "text", "doc_id", 3, 0.5, maxCsrPostings = 0))) {
-      val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      assert(got.length === got.toSet.size)
-      assert(got.toSet === truth)
-    }
+    val got = graft.ops.Dedup.ngramJaccardPairs(df, "text", "doc_id", 3, 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(got.length === got.toSet.size)
+    assert(got.toSet === truth)
     intercept[IllegalArgumentException](
       graft.ops.Dedup.ngramJaccardPairs(df, "text", "doc_id", 3, 0.0))
   }
