@@ -40,26 +40,22 @@ object Diag {
     }
 
     if (sections("simhash")) {
-      // occupancy over DISTINCT fingerprints (the canonical path's shape)
-      val fps = docs.select(TextAnalysis.fingerprint(col("text")).as("ck"),
-          gf.simhash64(col("text")).as("fp"))
-        .where(col("ck").isNotNull)
-        .groupBy("ck").agg(first(col("fp")).as("fp"))
-        .select(col("fp")).distinct()
-      for (blocks <- Seq(4, 6)) {
-        val bitsPerBlock = 64 / blocks
-        val banded = fps.select(posexplode(array((0 until blocks).map { i =>
-          val sh = shiftrightunsigned(col("fp"), i * bitsPerBlock)
-          if (i == blocks - 1) sh else sh.bitwiseAND(lit((1L << bitsPerBlock) - 1))
-        }: _*)).as(Seq("block", "blockval")))
-        val occ = banded.groupBy("block", "blockval").agg(count(lit(1)).as("occ"))
-        val st = occ.agg(count(lit(1)).as("buckets"), max("occ").as("maxocc"),
-          sum(col("occ") * (col("occ") - 1) / 2).as("pairs"),
-          sum(when(col("occ") <= 500, col("occ") * (col("occ") - 1) / 2).otherwise(0L)).as("pairs_capped"))
-          .head()
-        println(s"[diag] simhash blocks=$blocks buckets=${st.getLong(0)} maxocc=${st.getLong(1)} " +
-          s"pairs=${st.getAs[Any](2)} pairs_cap500=${st.getAs[Any](3)}")
-      }
+      // dedup_simhash's own banding at the entry's block count, over
+      // DISTINCT fingerprints (the canonical path's shape): the bucket
+      // occupancy its pair join squares
+      val n = math.max(docs.where(col("text").isNotNull).count(), 1L)
+      val blocks = ops.Dedup.simhashBlocksFor(n)
+      val fps = docs.select(gf.simhash64(col("text")).as("fp"))
+        .where(col("fp").isNotNull).distinct()
+        .select(col("fp").as("rep_id"), col("fp"))
+      val occ = ops.Dedup.simhashBands(fps, "rep_id", 3, blocks)
+        .groupBy("block", "blockval").agg(count(lit(1)).as("occ"))
+      val st = occ.agg(count(lit(1)).as("buckets"), max("occ").as("maxocc"),
+        sum(col("occ") * (col("occ") - 1) / 2).as("pairs")).head()
+      val hot = occ.orderBy(col("occ").desc, col("block"), col("blockval")).head()
+      println(s"[diag] simhash docs=$n distinct_fps=${fps.count()} blocks=$blocks " +
+        s"buckets=${st.getLong(0)} maxocc=${st.getLong(1)} pairs=${st.getAs[Any](2)} " +
+        s"hottest=(${hot.getInt(0)},${hot.getLong(1)})")
     }
 
     if (sections("ngram")) {

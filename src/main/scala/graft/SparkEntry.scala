@@ -820,12 +820,13 @@ object SparkEntry {
         n = 3, numHashes = 128, bands = 32, threshold = 0.5)
       .orderBy("a_id", "b_id")
 
-  /** Canonical (distinct-fingerprint) banding with the maxBucket=500
-    * hot-bucket valve: candidate cost per bucket is occupancy², counted
-    * over distinct fingerprints (a 10x template-heavy rehearsal measured
-    * 52M candidate rows with naive banding). At the driver's verify scale
-    * max occupancy is 26, so the cap is a no-op there and the all-pairs
-    * oracle applies unchanged. Block count follows `simhashBlocksFor`
+  /** Canonical (distinct-fingerprint) banding: candidate cost per bucket
+    * is occupancy², counted over distinct fingerprints (a 10x
+    * template-heavy rehearsal measured 52M candidate rows with naive
+    * banding). No bucket is dropped: the maximum distinct-fingerprint
+    * occupancy is 26 at sf0.01, 187 at sf0.1 and 155 at GenScale sf1 and
+    * sf10 (`graft.Diag simhash`), so the all-pairs oracle applies at
+    * every scale. Block count follows `simhashBlocksFor`
     * (Manku-style multi-block banding): past ~16k distinct fingerprints
     * the minimal 4-block/16-bit-key scheme goes quadratic on RANDOM key
     * collisions (n²/2^16), so the rule widens keys by keying on block
@@ -833,7 +834,7 @@ object SparkEntry {
     * hamming-verified), so the oracle is unaffected at any scale. */
   private def dedupSimhash(s: SparkSession, dir: String): DataFrame =
     Dedup.simhashPairsCanonical(t(s, dir, "documents"), "text", "doc_id", maxHamming = 3,
-        maxBucket = Some(500L), numBlocks = Dedup.simhashBlocksFor(nDocs(s, dir)))
+        numBlocks = Dedup.simhashBlocksFor(nDocs(s, dir)))
       .orderBy("a_id", "b_id")
 
   /** Duplicate clusters over the exact-Jaccard pair graph:
@@ -1081,10 +1082,9 @@ object SparkEntry {
     *
     * k follows `semdedupKFor`: ceil(sqrt(n/8)) balances the flat argmax
     * assignment (n·k·d) against the within-cluster pair stage (n²·d/k),
-    * making both O(n^1.5·d) — at the oracle's sf0.01 scale (n=500) the
-    * formula lands exactly on the documented k=8 operating point, so the
-    * SQL oracle (which bakes k=8 into its seed CTE) is unchanged. A
-    * fixed k would leave the pair stage quadratic at 100x. */
+    * making both O(n^1.5·d); the SQL oracle computes the same k from its
+    * own vector count (8 at sf0.01, 16 at sf0.1). A fixed k would leave
+    * the pair stage quadratic at 100x. */
   private def dedupSemantic(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
     Dedup.semdedup(emb, "vec_id", "embedding",
@@ -2541,15 +2541,20 @@ object SparkEntry {
         |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
         |WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.4
         |ORDER BY a_id, b_id""".stripMargin,
-    // SemDeDup from first principles: md5-order leaders, argmax-cosine
-    // assignment (ties -> lowest leader index), within-cluster pairs,
-    // recursive-CTE components, min-id keepers.
+    // SemDeDup from first principles: the first k md5-order leaders (k by
+    // semdedupKFor's rule max(8, ceil(sqrt(n/8))) over the non-null
+    // vectors), argmax-cosine assignment (ties -> lowest leader index),
+    // within-cluster pairs, recursive-CTE components, min-id keepers.
     "dedup_semantic" ->
-      """WITH RECURSIVE ld AS (
-        |  SELECT embedding,
-        |    row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS idx
-        |  FROM embeddings WHERE embedding IS NOT NULL
-        |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8),
+      """WITH RECURSIVE nk AS (
+        |  SELECT greatest(8, CAST(ceil(sqrt(CAST(count(*) AS DOUBLE) / 8.0)) AS BIGINT)) AS k
+        |  FROM embeddings WHERE embedding IS NOT NULL),
+        |ld AS (
+        |  SELECT embedding, idx FROM (
+        |    SELECT embedding,
+        |      row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS idx
+        |    FROM embeddings WHERE embedding IS NOT NULL)
+        |  WHERE idx < (SELECT k FROM nk)),
         |asg AS (
         |  SELECT e.vec_id, e.embedding, ld.idx,
         |    row_number() OVER (PARTITION BY e.vec_id
@@ -3633,6 +3638,8 @@ object SparkEntry {
     // embed oracle recomputes the feature-hash embedding from first
     // principles in SQL: FNV-1a 64 per token (UBIGINT mod-2^64 arithmetic),
     // signed bucket accumulate, L2 normalize, float32 rounding via REAL.
+    // DuckDB's round keeps the sign of a tiny negative sum (-0.0) where
+    // Spark's decimal round writes 0.0; "+ 0.0" makes the zero canonical.
     "embed_hash" ->
       """WITH toks AS (
         |  SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')) AS tok
@@ -3661,7 +3668,7 @@ object SparkEntry {
         |  FROM comp c JOIN nrm n ON c.doc_id = n.doc_id)
         |SELECT doc_id, CAST(64 AS BIGINT) AS dim,
         |  round(max(CASE WHEN bucket = 0 THEN cv END), 6) AS e0,
-        |  round(sum(cv), 5) AS e_sum
+        |  round(sum(cv), 5) + 0.0 AS e_sum
         |FROM fin GROUP BY doc_id""".stripMargin,
     // classifier filter: the same FNV-1a/bucket/L2 chain as embed_hash,
     // then the fixed weight vector and a LEFT bucket-ascending fold —

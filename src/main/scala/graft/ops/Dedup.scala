@@ -103,19 +103,6 @@ object Dedup {
       .select(col("x"), explode(col("b_members")).as("y"))
       .select(least(col("x"), col("y")).as("a_id"), greatest(col("x"), col("y")).as("b_id"))
 
-  /** Drop (block, value) buckets whose occupancy exceeds the cap — the
-    * hot-bucket valve shared by the banding paths. */
-  private def capHotBuckets(banded: DataFrame, maxBucket: Option[Long]): DataFrame =
-    maxBucket match {
-      case None => banded
-      case Some(cap) =>
-        val hot = banded.groupBy("block", "blockval")
-          .agg(count(lit(1)).as("__occ"))
-          .where(col("__occ") > cap)
-          .select("block", "blockval")
-        banded.join(broadcast(hot), Seq("block", "blockval"), "left_anti")
-    }
-
   /** Generalized SimHash pigeonhole banding (Manku et al., WWW'07): split
     * the 64-bit fingerprint into `numBlocks` near-equal blocks and emit one
     * (carry, table, key) row per (numBlocks - maxHamming)-subset of blocks,
@@ -134,8 +121,7 @@ object Dedup {
     * verified-away candidate, never loses one.
     *
     * Column contract matches the old single-block layout ((block, blockval)
-    * = (table id, bucket key)) so [[capHotBuckets]] and the pair joins
-    * apply unchanged. */
+    * = (table id, bucket key)) so the pair joins apply unchanged. */
   private[graft] def simhashBands(
       fp: DataFrame, carryCol: String, maxHamming: Int, numBlocks: Int): DataFrame = {
     require(numBlocks > maxHamming, "numBlocks must exceed maxHamming (pigeonhole)")
@@ -372,19 +358,17 @@ object Dedup {
     * occupancy² candidate cost) is counted over DISTINCT fingerprints;
     * pairs then expand back through group membership. Same-fingerprint
     * pairs are hamming-0 matches by definition and are emitted directly.
-    * With maxBucket = None the output is identical to banding every
-    * document (measured 10x faster on a 10x duplicate-heavy rehearsal
-    * corpus; DedupSpec keeps that per-document path as its baseline).
+    * The output is identical to banding every document (measured 10x
+    * faster on a 10x duplicate-heavy rehearsal corpus; DedupSpec keeps
+    * that per-document path as its baseline).
     *
-    * Scale valve: candidate cost per (block, value) bucket is occupancy²,
-    * and template-similar corpora concentrate fingerprints into a few hot
-    * block values (measured 50x blowup on a 10x synthetic corpus).
-    * `maxBucket` drops buckets with occupancy above the cap — pairs whose
-    * ONLY agreeing blocks are ultra-hot are missed, the standard web-dedup
-    * trade-off (the exact n-gram path needs no such cap: its hot shingles
-    * fall outside the rare-first prefixes). Occupancy counts distinct
-    * fingerprints, the robust definition (a million exact copies of one
-    * document should not evict their bucket).
+    * Candidate cost per (block, value) bucket is occupancy² over distinct
+    * fingerprints; no bucket is dropped, so every band-agreeing pair is
+    * hamming-verified. [[simhashBlocksFor]] widens the keys as the corpus
+    * grows to bound random-collision occupancy; the measured maximum is
+    * 187 at sf0.1 and 155 at GenScale sf1 and sf10 (`graft.Diag simhash`;
+    * GenScale's word-permuted copies keep sf0.1's 4,965 distinct
+    * fingerprints).
     *
     * Output-volume note: the pair LIST is quadratic in the duplication
     * factor by definition (every within-group pair is a true hamming-0
@@ -398,7 +382,6 @@ object Dedup {
       textCol: String,
       idCol: String,
       maxHamming: Int = 3,
-      maxBucket: Option[Long] = None,
       numBlocks: Int = 0): DataFrame = {
     requireLongId(df, idCol)
     val m = if (numBlocks > 0) numBlocks else maxHamming + 1
@@ -408,9 +391,9 @@ object Dedup {
     // within-group: every member pair is an exact-fingerprint (hamming 0) match
     val within = withinGroupPairs(groups, lit(true))
     // cross-group: band over DISTINCT fingerprints only
-    val capped = capHotBuckets(simhashBands(groups, "rep_id", maxHamming, m), maxBucket)
-    val fpPairs = capped.select(col("block"), col("blockval"), col("rep_id").as("a_id"), col("fp").as("a_fp"))
-      .join(capped.select(col("block"), col("blockval"), col("rep_id").as("b_id"), col("fp").as("b_fp")),
+    val banded = simhashBands(groups, "rep_id", maxHamming, m)
+    val fpPairs = banded.select(col("block"), col("blockval"), col("rep_id").as("a_id"), col("fp").as("a_fp"))
+      .join(banded.select(col("block"), col("blockval"), col("rep_id").as("b_id"), col("fp").as("b_fp")),
         Seq("block", "blockval"))
       .where(col("a_id") < col("b_id"))
       .dropDuplicates("a_id", "b_id")
@@ -1091,10 +1074,12 @@ object Dedup {
 
   /** LSH-bucketed embedding near-dup pairs — the scale path for
     * [[embeddingPairs]]: candidates meet in a random-hyperplane bucket in
-    * any of `tables` hash tables (high-cosine pairs collide with
-    * probability (1 - θ/π)^bits per table), then exact cosine verifies.
-    * Shuffle is on (table, bucket); pair space bounded by bucket occupancy
-    * instead of |n|². */
+    * any of `tables` hash tables of the one banding
+    * ([[Similarity.hyperplaneBands]]; high-cosine pairs collide with
+    * probability (1 - θ/π)^bits per table), then exact cosine verifies
+    * every candidate of every bucket — none is skipped. Shuffle is on
+    * (table, bucket); pair space bounded by bucket occupancy instead of
+    * |n|². */
   def embeddingPairsLsh(
       emb: DataFrame,
       idCol: String,
@@ -1102,21 +1087,19 @@ object Dedup {
       minCos: Double,
       bits: Int = 8,
       tables: Int = 16,
-      maxBucket: Option[Int] = None,
       numParts: Int = 0): DataFrame = {
     requireLongId(emb, idCol)
-    val bucketed = emb.select(
-      col(idCol).cast("long").as("id"), col(vecCol).as("vec"),
-      posexplode(array((0 until tables).map(t =>
-        gf.hyperplaneBucket(col(vecCol), bits, seed = 0x9e3779b9L * (t + 1))): _*))
-        .as(Seq("table", "bucket")))
+    val bucketed = emb
+      .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"),
+        explode(Similarity.hyperplaneBands(col(vecCol), bits, tables)).as("b"))
+      .select(col("id"), col("vec"), col("b.table").as("table"), col("b.bucket").as("bucket"))
     // One shuffle on (table, bucket), then the whole O(b²) score-and-filter
     // runs inside a single kernel call per bucket: candidate pairs that
     // fail minCos are never materialized as rows (the bucket self-join
     // formulation shuffled every candidate — measured ~5x slower at sf0.1).
-    // maxBucket is the degenerate-density valve: buckets denser than the
-    // cap are skipped in that table (a dense region usually recurs across
-    // tables; the principled fix for persistent density is more bits).
+    // The kernel is the in-bucket form of the one LSH cosine verify (see
+    // [[Similarity.hyperplaneBands]]); dense buckets cost occupancy², and
+    // the fix for persistent density is more bits ([[Similarity.lshBitsFor]]).
     //
     // That shuffle carries each VECTOR once per table (`tables`x data
     // amplification — inherent to multi-table LSH: the computation is
@@ -1130,14 +1113,9 @@ object Dedup {
     // (same keys), so this adds no extra pass.
     val spread = if (numParts > 0) bucketed.repartition(numParts, col("table"), col("bucket"))
       else bucketed
-    val grouped = spread
+    spread
       .groupBy("table", "bucket")
       .agg(collect_list(struct(col("id"), col("vec"))).as("items"))
-    val bounded = maxBucket match {
-      case None => grouped
-      case Some(cap) => grouped.where(size(col("items")) <= cap)
-    }
-    bounded
       .select(explode(gf.bucketPairsCos(col("items"), minCos)).as("p"))
       .select(col("p.a_id").as("a_id"), col("p.b_id").as("b_id"))
       .dropDuplicates("a_id", "b_id")
@@ -1602,10 +1580,11 @@ object Dedup {
     * Two tables: the payload (vec per row, hash-partitioned by id for
     * append routing) and the LSH postings (one row per (table, bucket)
     * assignment under `tables` hyperplane tables of `bits` bits — the
-    * same generator as the in-memory LSH family, so the full-recall
-    * sizing rule carries over). Postings carry only (bucket, id): the
-    * corpus vectors are stored ONCE and fetched only for
-    * candidate-verified ids. */
+    * one banding of the in-memory LSH family,
+    * [[Similarity.hyperplaneBands]], so the full-recall sizing rule
+    * carries over; its `table` is stored as `tb`). Postings carry only
+    * (bucket, id): the corpus vectors are stored ONCE and fetched only
+    * for candidate-verified ids. */
   def embIndexBuild(
       corpus: DataFrame,
       vecCol: String,
@@ -1625,12 +1604,9 @@ object Dedup {
       .withColumn("ib", pmod(hash(col("vec_id")), lit(numParts)))
       .write.mode("overwrite").partitionBy("ib").format("parquet")
       .saveAsTable(tableName)
-    val buckets = array((0 until tables).map(t =>
-      struct(lit(t).as("tb"),
-        gf.hyperplaneBucket(col("embedding"), bits, seed = 0x9e3779b9L * (t + 1)).as("bucket"))): _*)
     vecs
-      .select(col("vec_id"), explode(buckets).as("b"))
-      .select(col("vec_id"), col("b.tb").as("tb"), col("b.bucket").as("bucket"))
+      .select(col("vec_id"), explode(Similarity.hyperplaneBands(col("embedding"), bits, tables)).as("b"))
+      .select(col("vec_id"), col("b.table").as("tb"), col("b.bucket").as("bucket"))
       .withColumn("bb", pmod(hash(col("tb"), col("bucket")), lit(numParts)))
       .write.mode("overwrite").partitionBy("bb").format("parquet")
       .saveAsTable(s"${tableName}_lsh")
@@ -1647,9 +1623,9 @@ object Dedup {
     * join sides broadcast so the corpus-sized tables are scanned ONCE
     * each, column-pruned, and never shuffled; exact matches are
     * anti-joined out of candidacy up front (a re-crawl delta is mostly
-    * exact); candidate (delta, corpus) pairs are deduped by aggregation
-    * before the single payload fetch that feeds the cosine verify, so the
-    * fetch is bounded by distinct candidates, not bucket co-occurrence.
+    * exact); candidate (delta, corpus) pairs are deduped before the
+    * single payload fetch that feeds the cosine verify, so the fetch is
+    * bounded by distinct candidates, not bucket co-occurrence.
     *
     * SIZE GUARDS are per frame, because the broadcast sides do NOT scale
     * together: the exploded bucket frame is `tables`× the delta, and the
@@ -1698,20 +1674,18 @@ object Dedup {
       .groupBy("d_id").agg(min(col("vec_id")).as("exact_match"))
       .pinned()
 
-    // near candidacy: delta bucket assignments (same generator as the
-    // build) meet the postings on (bb, tb, bucket); candidates dedup by
-    // aggregation — they exist only inside the groupBy, never re-joined
+    // near candidacy: delta bucket assignments (the build's banding)
+    // meet the postings on (bb, tb, bucket); candidates dedup once before
+    // the payload fetch
     val dNear = d.join(side(exactM.select(col("d_id")), idBytes), Seq("d_id"), "left_anti")
     val dBuckets = dNear
-      .select(col("d_id"), explode(array((0 until tables).map(t =>
-        struct(lit(t).as("tb"),
-          gf.hyperplaneBucket(col("d_vec"), bits, seed = 0x9e3779b9L * (t + 1)).as("bucket"))): _*)).as("b"))
-      .select(col("d_id"), col("b.tb").as("tb"), col("b.bucket").as("bucket"))
+      .select(col("d_id"), explode(Similarity.hyperplaneBands(col("d_vec"), bits, tables)).as("b"))
+      .select(col("d_id"), col("b.table").as("tb"), col("b.bucket").as("bucket"))
       .withColumn("bb", pmod(hash(col("tb"), col("bucket")), lit(numParts)))
     val cand = lsh
       .join(side(dBuckets, bucketBytes), Seq("bb", "tb", "bucket"))
-      .groupBy(col("d_id"), col("vec_id")).agg(count(lit(1)).as("__t"))
       .select(col("d_id"), col("vec_id"))
+      .dropDuplicates("d_id", "vec_id")
       .withColumn("ib", pmod(hash(col("vec_id")), lit(numParts)))
     // verify: ONE payload fetch bounded by distinct candidates, cosine
     // threshold fused. The candidate side is deliberately UN-hinted (see

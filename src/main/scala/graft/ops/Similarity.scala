@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -90,11 +90,10 @@ object Similarity {
   /** Random-hyperplane LSH top-k — the scale path for ANN.
     *
     * `tables` independent hash tables, each bucketing vectors by `bits`
-    * hyperplane sign bits (deterministic pseudo-random hyperplanes, no
-    * stored model). Query and corpus vectors meeting in any table's bucket
-    * become candidates; candidates are ranked by exact cosine. Recall is
-    * tuned by (tables, bits): more tables -> higher recall, more bits ->
-    * smaller buckets.
+    * hyperplane sign bits ([[hyperplaneBands]]). Query and corpus vectors
+    * meeting in any table's bucket become candidates; candidates are
+    * ranked by exact cosine. Recall is tuned by (tables, bits): more
+    * tables -> higher recall, more bits -> smaller buckets.
     *
     * `bits` MUST grow with the corpus ([[lshBitsFor]]): bucket occupancy
     * is n / 2^bits per table, and candidate work scales with it. Measured
@@ -127,12 +126,9 @@ object Similarity {
       vecCol: String,
       bits: Int,
       tables: Int): DataFrame = {
-    def bucketed(df: DataFrame, id: String, vec: String) = {
-      val buckets = array((0 until tables).map(t =>
-        struct(lit(t).as("table"), gf.hyperplaneBucket(col(vec), bits, seed = 0x9e3779b9L * (t + 1)).as("bucket"))): _*)
-      df.select(col(id), col(vec), explode(buckets).as("tb"))
-        .select(col(id), col(vec), col("tb.table").as("table"), col("tb.bucket").as("bucket"))
-    }
+    def bucketed(df: DataFrame, id: String, vec: String) =
+      df.select(col(id), col(vec), explode(hyperplaneBands(col(vec), bits, tables)).as("b"))
+        .select(col(id), col(vec), col("b.table").as("table"), col("b.bucket").as("bucket"))
     val q = bucketed(queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec")), "query_id", "q_vec")
     val c = bucketed(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec")), "neighbor_id", "c_vec")
     c.join(q, Seq("table", "bucket"))
@@ -196,6 +192,26 @@ object Similarity {
     require(n > 0 && targetBucket > 0, "need positive corpus and bucket sizes")
     math.max(1, math.ceil(math.log(n.toDouble / targetBucket) / math.log(2.0)).toInt)
   }
+
+  /** The one random-hyperplane banding (Charikar, STOC 2002) behind every
+    * embedding-LSH path ([[lshTopK]], [[rangeSearchLsh]], [[knnLabelLsh]],
+    * [[Dedup.embeddingPairsLsh]], [[Dedup.embIndexBuild]] and
+    * [[Dedup.embIndexProbe]]): `tables` independent tables of `bits` sign
+    * bits each, table t's hyperplanes seeded 0x9e3779b9·(t + 1)
+    * (deterministic, no stored model), as array<struct<table:int,
+    * bucket:long>> for the caller to explode. A persistent index built
+    * under one seed rule is only probed correctly under the same rule, so
+    * this is the only place it may live.
+    *
+    * Every LSH candidate is verified by one cosine formula, double-
+    * accumulated dot / (sqrt(Σa²)·sqrt(Σb²)) with 0 on a zero norm: the
+    * row form is [[graft.functions.gf.cosine]] ≥ t, and the in-bucket form
+    * inside [[graft.functions.Kernels.bucketPairsCos]] must stay
+    * bit-identical to it. */
+  private[graft] def hyperplaneBands(vec: Column, bits: Int, tables: Int): Column =
+    array((0 until tables).map(t =>
+      struct(lit(t).as("table"),
+        gf.hyperplaneBucket(vec, bits, seed = 0x9e3779b9L * (t + 1)).as("bucket"))): _*)
 
   /** Shuffle-partition count for a multi-table LSH banding pass: the
     * banded frame carries each vector once per table (tables·n rows of

@@ -741,4 +741,65 @@ class DedupSpec extends SparkSpec {
         threshold = 0.999).collect()
     assert(res.length === 1 && res(0).getString(1) != "exact")
   }
+
+  test("embIndexProbe: perturbed copies at the full-recall point resolve as brute-force cosine") {
+    // a random corpus wide enough (dim 256) that no two unrelated vectors
+    // reach cos 0.4, and large enough that lshBitsFor gives 5 bits: a
+    // vector's postings are then a ~1/32 slice per table, so a probe whose
+    // banding drifted from the build's would miss most of its sources
+    val dim = 256
+    val rnd = new scala.util.Random(16)
+    val vecs = Array.fill(2000)(Array.fill(dim)(rnd.nextGaussian().toFloat))
+    val corpus = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toSeq.toDF("vec_id", "embedding")
+    val bits = graft.ops.Similarity.lshBitsFor(vecs.length)
+    assert(bits === 5)
+    Dedup.embIndexBuild(corpus, "embedding", "vec_id", "graft_emb_idx_near_spec",
+      bits = bits, tables = 48)
+    // 40 corpus vectors with ~10% noise (cos ~0.995) under shifted ids,
+    // plus 10 fresh vectors near nothing
+    val near = (0 until 40).map { i =>
+      (10000L + i, vecs(i * 50).map(x => x + 0.1f * rnd.nextGaussian().toFloat))
+    }
+    val fresh = (0 until 10).map(i => (20000L + i, Array.fill(dim)(rnd.nextGaussian().toFloat)))
+    val delta = (near ++ fresh).toDF("vec_id", "embedding")
+    val got = Dedup.embIndexProbe(delta, "embedding", "vec_id", "graft_emb_idx_near_spec")
+      .collect().map(r => r.getLong(0) -> ((r.getString(1), Option(r.get(2)).map(_.asInstanceOf[Long])))).toMap
+    // brute force: exact = bit-identical corpus vector, else near = min
+    // corpus id at gf.cosine >= 0.4, else new
+    val d = delta.select(col("vec_id").as("d_id"), col("embedding").as("d_vec"))
+    val c = corpus.select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
+    val exact = d.join(c, col("d_vec") === col("c_vec"))
+      .groupBy("d_id").agg(min("c_id").as("m")).as[(Long, Long)].collect().toMap
+    val nearRef = d.crossJoin(c).where(gf.cosine(col("d_vec"), col("c_vec")) >= 0.4)
+      .groupBy("d_id").agg(min("c_id").as("m")).as[(Long, Long)].collect().toMap
+    val want = delta.select("vec_id").as[Long].collect().map { id =>
+      id -> exact.get(id).map(m => ("exact", Some(m)))
+        .orElse(nearRef.get(id).map(m => ("near", Some(m))))
+        .getOrElse(("new", None))
+    }.toMap
+    assert(want.values.count(_._1 == "near") === 40)
+    assert(want.values.count(_._1 == "new") === 10)
+    assert(got === want)
+  }
+
+  test("bucketPairsCos keeps exactly the pairs gf.cosine puts at or above t, t at pair cosines") {
+    // the in-bucket form of the one LSH cosine verify: with t set to an
+    // observed pair cosine, each boundary pair must land on the same side
+    // in both forms, which holds only if they are bit-identical
+    val emb = graft.io.Tables.embeddings(spark, sfDir).where(col("embedding").isNotNull)
+      .select(col("vec_id").cast("long").as("id"), col("embedding").as("vec"))
+    val scored = emb.as("a").join(emb.as("b"), col("a.id") < col("b.id"))
+      .select(col("a.id").as("a_id"), col("b.id").as("b_id"),
+        gf.cosine(col("a.vec"), col("b.vec")).as("cos"))
+      .as[(Long, Long, Double)].collect()
+    val cosines = scored.map(_._3).filter(_ > 0.2).distinct.sorted
+    assert(cosines.length > 20)
+    val items = emb.agg(collect_list(struct(col("id"), col("vec"))).as("items"))
+    (0 until 8).map(i => cosines(i * (cosines.length - 1) / 7)).foreach { t =>
+      val want = scored.collect { case (a, b, c) if c >= t => (a, b) }.toSet
+      val got = items.select(explode(gf.bucketPairsCos(col("items"), t)).as("p"))
+        .select(col("p.a_id"), col("p.b_id")).as[(Long, Long)].collect().toSet
+      assert(got === want, s"t = $t")
+    }
+  }
 }

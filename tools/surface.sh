@@ -4,7 +4,8 @@
 # conf keys, mains, public defs declared directly in the graft.ops objects
 # (local defs inside a method are indented deeper and not counted), and
 # hand-written Catalyst expression classes (declarations that extend
-# Expression, UnaryExpression or BinaryExpression).
+# Expression, UnaryExpression or BinaryExpression), and the random-
+# hyperplane banding sites (gf.hyperplaneBucket calls in graft.ops).
 #
 # Usage: tools/surface.sh   (reports on the checkout the script sits in)
 set -euo pipefail
@@ -17,3 +18,4 @@ echo "spark_graft_keys $(grep -rhoE '"spark\.graft\.[A-Za-z.]+"' "$main" | sort 
 echo "mains            $(grep -rlE 'def main\(' "$main" | wc -l)"
 echo "ops_public_defs  $(grep -rhE '^  def ' "$main/graft/ops" | wc -l)"
 echo "catalyst_expr_classes $(grep -rhE '\bextends (Unary|Binary)?Expression\b' "$main" | wc -l)"
+echo "hyperplane_banding_sites $(grep -rF 'gf.hyperplaneBucket(' "$main/graft/ops" | wc -l)"
