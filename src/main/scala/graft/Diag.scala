@@ -18,7 +18,7 @@ object Diag {
     val spark = GraftSession.getOrCreate()
     import spark.implicits._
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val sections = if (args.isEmpty) Set("docs", "lines", "simhash", "ngram", "incr") else args.toSet
+    val sections = if (args.isEmpty) Set("docs", "lines", "simhash", "prefix", "incr") else args.toSet
     val docs = io.Tables.table(spark, dir, "documents")
 
     if (sections("docs")) {
@@ -58,60 +58,28 @@ object Diag {
         s"hottest=(${hot.getInt(0)},${hot.getLong(1)})")
     }
 
-    if (sections("ngram")) {
-      // ngramJaccardPairs' candidacy volume over distinct contents: the
-      // full shingle self-join (Σ df·(df-1)/2) next to the rare-first
-      // prefix self-join it runs instead
-      val fps = docs.select(TextAnalysis.fingerprint(col("text")).as("ck"), col("text"))
-        .where(col("ck").isNotNull)
-        .groupBy("ck").agg(first(col("text")).as("text"))
-        .select(col("ck"), gf.shingleFpsSorted(col("text"), 3).as("shl"))
-        .select(col("ck"), size(col("shl")).as("sz"), explode(col("shl")).as("fp"))
-      val dfs = ops.Prefix.docFreq(fps, "fp")
-      val pref = ops.Prefix.prefix(fps, Seq("ck", "sz"), "fp", dfs,
-        ops.Prefix.prefixLen(col("sz"), 0.5, ops.Prefix.MinHits))
-      def volume(d: org.apache.spark.sql.DataFrame) = d.agg(count(lit(1)), max("df"),
-        sum(col("df") * (col("df") - 1) / 2)).head()
-      val full = volume(dfs)
-      val pre = volume(ops.Prefix.docFreq(pref, "fp"))
-      println(s"[diag] ngram shingles=${full.getLong(0)} maxdf=${full.getAs[Any](1)} " +
-        s"pairs_full=${full.getAs[Any](2)} prefix_shingles=${pre.getLong(0)} " +
-        s"prefix_maxdf=${pre.getAs[Any](1)} pairs_prefix=${pre.getAs[Any](2)}")
-    }
-
     if (sections("prefix")) {
-      // candidacy volume of the prefix-filtered dedupIndexProbe WITHOUT
-      // running the big join: per-fp prefix dfs on both sides, then
-      // sum(dpdf * ipdf) — the exact join-row count the probe generates.
-      val tbl = "spark-warehouse/graft_dedup_idx_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val fpsIdx = spark.read.parquet(s"${tbl}_fps")
-      val dfIdx = spark.read.parquet(s"${tbl}_df")
-      def prefixLen(n: org.apache.spark.sql.Column) =
-        ops.Prefix.prefixLen(n, 0.5, ops.Prefix.MinHits)
-      val ipdf = fpsIdx
-        .where(col("rk") < prefixLen(col("n_fp")))
-        .groupBy("fp").agg(count(lit(1)).as("ipdf"))
-      val delta = docs.where(pmod(col("doc_id"), lit(10)) === 0)
-      val dSh = delta.select(col("doc_id").cast("long").as("id"), col("text"),
-          TextAnalysis.fingerprint(col("text")).as("ck"))
-        .where(col("ck").isNotNull)
-        .groupBy("ck").agg(min("id").as("d_rep"), first(col("text")).as("text"))
-        .select(col("d_rep"), gf.shingleFpsSorted(col("text"), 3).as("shl"))
-      val dFps = dSh.select(col("d_rep"), size(col("shl")).as("d_nfp"),
-        explode(col("shl")).as("fp"))
-      val dPref = ops.Prefix.prefix(dFps, Seq("d_rep", "d_nfp"), "fp", dfIdx,
-        prefixLen(col("d_nfp")))
-      val dpdf = dPref.groupBy("fp").agg(count(lit(1)).as("dpdf"))
-      val st = ipdf.join(dpdf, "fp")
-        .agg(sum(col("ipdf") * col("dpdf")).as("join_rows"),
-          count(lit(1)).as("shared_fps"), max("ipdf").as("max_ipdf")).head()
-      println(s"[diag] prefix join_rows=${st.getAs[Any](0)} shared_fps=${st.getAs[Any](1)} " +
-        s"max_ipdf=${st.getAs[Any](2)}")
+      // the one prefix candidacy (Prefix.sharded) of the n-gram trio and of
+      // dedup_incremental's probe, through the operators' own bodies:
+      // postings indexed, the largest pass's CSR bytes, shard count K,
+      // kernel candidates and Jaccard-verified pairs
+      def report(what: String, c: ops.Prefix.Sharded, verified: org.apache.spark.sql.DataFrame) =
+        println(s"[diag] prefix $what postings=${c.postings} csr_bytes=${c.csrBytes} " +
+          s"shards=${c.shards} candidates=${c.candidates.count()} verified=${verified.count()}")
+      val (_, trio, repPairs) = ops.Dedup.ngramPairs(docs, "text", "doc_id", 3, 0.5,
+        ops.Prefix.ShardPostings)
+      report("ngram", trio, repPairs)
+      ops.Dedup.dedupIndexBuild(docs.where(pmod(col("doc_id"), lit(10)) =!= 0),
+        "text", "doc_id", "graft_diag_dedup_idx")
+      val (_, probe, nearPairs) = ops.Dedup.indexProbe(
+        docs.where(pmod(col("doc_id"), lit(10)) === 0), "text", "doc_id",
+        "graft_diag_dedup_idx", 0.5, 256L << 20, ops.Prefix.ShardPostings)
+      report("incr", probe, nearPairs)
     }
 
     if (sections("incr")) {
-      // the probe's inverted-index join cost: sum over fp of idx_df * delta_df
+      // the full-postings join volume the prefix filter avoids: sum over fp
+      // of idx_df * delta_df
       val corpus = docs.where(pmod(col("doc_id"), lit(10)) =!= 0)
       val delta = docs.where(pmod(col("doc_id"), lit(10)) === 0)
       def repFps(d: org.apache.spark.sql.DataFrame) = d

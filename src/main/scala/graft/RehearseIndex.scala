@@ -52,7 +52,7 @@ object RehearseIndex {
     timed("dedup index BUILD (10x corpus)") {
       ops.Dedup.dedupIndexBuild(corpusDocs, "text", "doc_id", "graft_rehearse_dedup")
     }
-    tableBytes(spark, Seq("graft_rehearse_dedup", "graft_rehearse_dedup_fps",
+    tableBytes(spark, Seq("graft_rehearse_dedup", "graft_rehearse_dedup_df",
       "graft_rehearse_dedup_meta"))
     // the probe's own size-guard aggregate, recomputed here for the record
     val n = spark.table("graft_rehearse_dedup_meta").head().getInt(0)
@@ -65,7 +65,7 @@ object RehearseIndex {
       f"est broadcast footprint $estMb%.1f MB (guard default 256 MB)")
     var probeOut: DataFrame = null
     (1 to 3).foreach { i =>
-      timed(s"dedup index PROBE (1x delta, broadcast path) run$i") {
+      timed(s"dedup index PROBE (1x delta, broadcast joins) run$i") {
         probeOut = ops.Dedup.dedupIndexProbe(deltaDocs, "text", "doc_id",
           "graft_rehearse_dedup")
         Bench.exec(probeOut)
@@ -74,7 +74,7 @@ object RehearseIndex {
     probeOut.groupBy("status").count().orderBy("status").collect()
       .foreach(r => println(s"[rehearse] probe status ${r.get(0)}: ${r.get(1)}"))
     (1 to 3).foreach { i =>
-      timed(s"dedup index PROBE (guard-forced SHUFFLE path) run$i") {
+      timed(s"dedup index PROBE (guard-forced shuffled joins) run$i") {
         Bench.exec(ops.Dedup.dedupIndexProbe(deltaDocs, "text", "doc_id",
           "graft_rehearse_dedup", maxBroadcastBytes = 0L))
       }

@@ -1118,14 +1118,15 @@ object Kernels {
   }
 
   /** Keys of a plan-embedded prefix CSR whose prefix postings share
-    * enough of `probe` to clear the exact-recall hit bound — the task-local
-    * candidacy of the prefix filter ([[graft.ops.Prefix]]) wherever one
-    * side is small enough to ride the plan: the dedup index probe's
-    * saturated-space path (probe = a corpus rep's own prefix, the CSR = the
-    * delta's prefixes) and the decontamination eval probe (probe = a
-    * corpus doc's whole fp set, the CSR = the eval prefixes; the j smallest
-    * common elements sit inside the eval side's prefix by its own position
-    * argument, so the probing side needs no df order). One pass: gather
+    * enough of `probe` to clear the exact-recall hit bound — the one
+    * task-local hit count of the prefix filter ([[graft.ops.Prefix]]): the
+    * n-gram self-join (probe = a content's whole fp set, the CSR = one
+    * shard of every content's prefix), the dedup index probe (probe = a
+    * corpus rep's own prefix, the CSR = one shard of the delta's prefixes)
+    * and the decontamination eval probe (probe = a corpus doc's whole fp
+    * set, the CSR = the eval prefixes). A whole-set probe needs no df
+    * order: the j smallest common elements sit inside the indexed side's
+    * prefix by its own position argument. One pass: gather
     * posting keys of every probed fp (fps ascending; keys for fps(i) at
     * keys[offsets(i) until offsets(i+1))), sort, count runs, keep keys with
     * hits >= min(j, ceil(t*n), ceil(t*|B|)) passing the size filter

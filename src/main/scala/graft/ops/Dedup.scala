@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.functions.gf
@@ -174,20 +173,30 @@ object Dedup {
     * their pairs are Jaccard-1 matches, emitted per group when it has a
     * shingle, and each distinct content is shingled once as sorted fps.
     * Candidacy between the distinct contents is the rare-first prefix
-    * filter ([[Prefix]]): the prefix postings self-join on fp under the
-    * size filter t·|A| <= |B| <= |A|/t, and a pair must share the
-    * min(j_A, j_B) hit bound of prefix fps (recall 1 for J >= t > 0).
+    * filter ([[Prefix]]) as an index probe: the contents' prefix postings
+    * are collected as a CSR ([[Prefix.sharded]], one pass per shard of at
+    * most [[Prefix.ShardPostings]] postings) and every content streams its
+    * FULL sorted fp set through [[graft.functions.gf.prefixCandidates]],
+    * which counts prefix hits task-locally under the size filter and the
+    * min(j_A, j_B) hit bound (the one-sided theorem: recall 1 for
+    * J >= t > 0); a content keeps the partners with a larger id.
     * Survivors are verified with the exact sorted-merge Jaccard kernel
     * and expanded back to member pairs. The output is the exact pair set
     * at any scale: a shingle shared by thousands of docs sits outside
-    * their prefixes instead of being dropped from candidacy (the full
-    * n-gram self-join costs Σ df(shingle)²). */
+    * their prefixes instead of being dropped from candidacy. */
   def ngramJaccardPairs(
       df: DataFrame,
       textCol: String,
       idCol: String,
       n: Int,
-      threshold: Double): DataFrame = {
+      threshold: Double): DataFrame =
+    ngramPairs(df, textCol, idCol, n, threshold, Prefix.ShardPostings)._1
+
+  /** [[ngramJaccardPairs]] with the shard bound as a parameter, returning
+    * (pairs, its candidacy, the verified content pairs (a_id, b_id)). */
+  private[graft] def ngramPairs(
+      df: DataFrame, textCol: String, idCol: String, n: Int, threshold: Double,
+      shardPostings: Long): (DataFrame, Prefix.Sharded, DataFrame) = {
     require(threshold > 0 && threshold <= 1, s"threshold must be in (0, 1], got $threshold " +
       "(shared-shingle candidacy is complete only for J >= t > 0)")
     requireLongId(df, idCol)
@@ -198,28 +207,24 @@ object Dedup {
       .select(col("rep_id").as("id"), gf.shingleFpsSorted(col("__payload"), n).as("shl"))
       .select(col("id"), size(col("shl")).as("sz"), col("shl"))
       .where(col("sz") > 0)
-      .pinned() // reused by the df count, the prefixes and verify
+      .pinned() // reused by the df count, the prefixes, every pass and verify
     val fps = reps.select(col("id"), col("sz"), explode(col("shl")).as("fp"))
     val pref = Prefix.prefix(fps, Seq("id", "sz"), "fp", Prefix.docFreq(fps, "fp"),
         Prefix.prefixLen(col("sz"), threshold, Prefix.MinHits))
       .select("fp", "id", "sz")
-      .pinned() // both sides of the self-join: one df count and one rank
-    def side(s: String) =
-      pref.select(col("fp"), col("id").as(s"${s}_id"), col("sz").as(s"${s}_sz"))
-    val cand = side("a").join(side("b"), Seq("fp"))
-      .where(col("a_id") < col("b_id") &&
-        col("b_sz") >= Prefix.minOverlap(col("a_sz"), threshold) &&
-        col("a_sz") >= Prefix.minOverlap(col("b_sz"), threshold))
-      .groupBy("a_id", "b_id", "a_sz", "b_sz").agg(count(lit(1)).as("hits"))
-      .where(col("hits") >= least(Prefix.hitBound(col("a_sz"), threshold, Prefix.MinHits),
-        Prefix.hitBound(col("b_sz"), threshold, Prefix.MinHits)))
-      .select("a_id", "b_id")
-    val repPairs = cand
+      .pinned() // counted once, collected once per shard
+    val cand = Prefix.sharded(pref, shardPostings) { c =>
+      Layout.spread(reps).select(col("id").as("a_id"),
+          explode(gf.prefixCandidates(col("shl"), col("sz"), threshold, Prefix.MinHits,
+            c.fps, c.offsets, c.keys, c.keyIds, c.keySizes)).as("b_id"))
+        .where(col("a_id") < col("b_id"))
+    }
+    val repPairs = cand.candidates
       .join(reps.select(col("id").as("a_id"), col("shl").as("a_shl")), "a_id")
       .join(reps.select(col("id").as("b_id"), col("shl").as("b_shl")), "b_id")
       .where(gf.jaccardSortedFps(col("a_shl"), col("b_shl")) >= threshold)
       .select("a_id", "b_id")
-    within.unionByName(expandGroupPairs(groups, repPairs))
+    (within.unionByName(expandGroupPairs(groups, repPairs)), cand, repPairs)
   }
 
   /** MinHash + LSH banding near-dup pairs — the 100 TB dedup path.
@@ -1248,25 +1253,23 @@ object Dedup {
     *
     * Three tables under `tableName`:
     *   - `<t>` (reps): ONE ROW PER DISTINCT CONTENT — (rep_id = min doc id
-    *     of that content, content_key, sorted shingle-fp array), partitioned
-    *     by `pb = pmod(hash(rep_id), numParts)` so the probe's verify fetch
+    *     of that content, content_key, sorted shingle-fp array `shl`, and
+    *     the same fps in rare-first order `shl_rk`), partitioned by
+    *     `pb = pmod(hash(rep_id), numParts)` so the probe's verify fetch
     *     prunes partitions dynamically (the IVFADC index convention).
     *     Exact-dup canonicalization is IN the index: web crawls run 30-50%
     *     exact duplication, and every exact copy would multiply probe work.
-    *   - `<t>_fps` : the shingle-fp INVERTED INDEX (fp, rep_id), partitioned
-    *     by `fb = pmod(hash(fp), numParts)`. Shared-shingle candidacy has
-    *     recall exactly 1 for any Jaccard threshold > 0 (a qualifying pair
-    *     shares a shingle), so the probe's output is EXACT — unlike banding,
-    *     whose recall is a tuned property. The index carries 8-byte
-    *     fingerprints, never shingle text.
-    *   - `<t>_meta`: (n, num_parts).
+    *   - `<t>_df`: each fp's document frequency over the reps (the
+    *     [[Prefix]] order), partitioned by `fb = pmod(hash(fp), numParts)`.
+    *   - `<t>_meta`: (n, num_parts, n_reps).
     *
-    * Probe economics ([[dedupIndexProbe]]): the delta side broadcasts, so
-    * neither index table is ever shuffled — candidacy is one column-pruned
-    * scan of `<t>_fps` (partition-pruned via the delta's fp hash buckets)
-    * and verification fetches only candidate rep rows from `<t>` (partition-
-    * pruned via the candidates' rep_id hash buckets). Cost scales with the
-    * delta and its co-occurrence, not the corpus. */
+    * Probe economics ([[dedupIndexProbe]]): the delta's prefix postings
+    * are the kernel's CSR, so candidacy is one column-pruned scan of the
+    * reps' `shl_rk` arrays and verification fetches only candidate rep
+    * rows from `<t>` (partition-pruned via the candidates' rep_id hash
+    * buckets). Neither index table is ever shuffled by a join, and cost
+    * scales with the delta, not with the corpus's co-occurrence. The
+    * index carries 8-byte fingerprints, never shingle text. */
   def dedupIndexBuild(
       corpus: DataFrame,
       textCol: String,
@@ -1277,8 +1280,7 @@ object Dedup {
     requireLongId(corpus, idCol)
     val spark = corpus.sparkSession
     import spark.implicits._
-    Warehouse.dropTables(spark,
-      Seq(tableName, s"${tableName}_fps", s"${tableName}_df", s"${tableName}_meta"))
+    Warehouse.dropTables(spark, Seq(tableName, s"${tableName}_df", s"${tableName}_meta"))
     val docs = corpus
       .where(col(textCol).isNotNull)
       .select(col(idCol).cast("long").as("id"), col(textCol).as("__text"))
@@ -1298,8 +1300,8 @@ object Dedup {
       .saveAsTable(s"${tableName}_df")
     // reps carry BOTH orderings of the fp set: `shl` (value-sorted, the
     // exact-Jaccard merge kernel's input) and `shl_rk` (rare-first —
-    // position i IS the fp's prefix rank, so the probe's broadcast-kernel
-    // path slices its prefix straight off the array).
+    // position i IS the fp's prefix rank, so the probe slices its prefix
+    // straight off the array).
     val rkArr = Prefix.rareFirst(fps, Seq("rep_id"), "fp", spark.table(s"${tableName}_df"))
       .groupBy("rep_id")
       .agg(transform(array_sort(collect_list(struct(col("rk"), col("fp")))),
@@ -1308,15 +1310,6 @@ object Dedup {
       .withColumn("pb", pmod(hash(col("rep_id")), lit(numParts)))
       .write.mode("overwrite").partitionBy("pb").format("parquet")
       .saveAsTable(tableName)
-    // The inverted postings (the probe's join-path candidacy) denormalize
-    // n_fp (Jaccard needs both set sizes) and rk (prefix rank, 0-based —
-    // the probe selects rk < n_fp - ceil(t*n_fp) + j for its own t).
-    spark.table(tableName)
-      .select(col("rep_id"), size(col("shl")).as("n_fp"),
-        posexplode(col("shl_rk")).as(Seq("rk", "fp")))
-      .withColumn("fb", pmod(hash(col("fp")), lit(numParts)))
-      .write.mode("overwrite").partitionBy("fb").format("parquet")
-      .saveAsTable(s"${tableName}_fps")
     val nReps = spark.table(tableName).count()
     Seq((n, numParts, nReps)).toDF("n", "num_parts", "n_reps")
       .write.mode("overwrite").format("parquet").saveAsTable(s"${tableName}_meta")
@@ -1335,43 +1328,54 @@ object Dedup {
     * EXACT output (not approximate): candidacy is prefix-filtered
     * ([[Prefix]], at least min(j_A, j_B) shared prefix fps), which has
     * recall exactly 1 for J >= t; survivors are verified with the exact
-    * sorted-merge Jaccard kernel against the stored rep fp arrays. The prefix filter is
-    * what keeps candidacy LINEAR when the shingle space saturates — the
-    * full-postings count join this replaced measured Σ df_idx·df_delta =
-    * 2.23 BILLION join rows at sf10 (vs 22M at sf1) on the ~30k-trigram
-    * corpus. Delta reps that match exactly are excluded from near
-    * candidacy up front: exact dominates near in the output and a re-crawl
-    * delta is mostly exact dups. The delta is canonicalized to distinct
-    * contents before probing (verify work per distinct content, not per
-    * doc — the §9.3 symmetry rule) and every join against the index
-    * broadcasts the delta side: the corpus-sized tables are scanned,
-    * never shuffled.
+    * sorted-merge Jaccard kernel against the stored rep fp arrays. Delta
+    * reps that match exactly are excluded from near candidacy up front:
+    * exact dominates near in the output and a re-crawl delta is mostly
+    * exact dups. The delta is canonicalized to distinct contents before
+    * probing (verify work per distinct content, not per doc — the §9.3
+    * symmetry rule).
     *
-    * SIZE GUARD: broadcasting is only correct while the delta is small.
-    * The dominant broadcast is the exploded (fb, fp, d_rep) frame — one
-    * hash-relation entry per delta shingle — so after canonicalizing we
-    * measure the delta (one cheap aggregate over the checkpointed frame)
-    * and estimate that footprint; above `maxBroadcastBytes` every
-    * delta-side broadcast hint is dropped and the probe degrades to
-    * ordinary shuffled joins. At that size the "delta" is no longer a
-    * daily crawl increment but a corpus-scale batch, and shuffling both
-    * sides IS the right plan — the guard makes the cutover explicit
-    * instead of letting a 10 GB broadcast OOM the executors. */
+    * Candidacy is an index probe over the delta: the delta's prefix
+    * postings (rare-first under the index's `<t>_df`) are collected as a
+    * CSR ([[Prefix.sharded]], one pass per shard of at most
+    * [[Prefix.ShardPostings]] postings), and one kernel pass over the reps
+    * table ([[graft.functions.gf.prefixCandidates]] on each rep's own
+    * prefix, sliced off `shl_rk`) counts hits task-locally. No (pair, hit)
+    * row is shuffled, so a saturated shingle space (a ~30k-trigram
+    * vocabulary where every delta fp meets hundreds of reps) costs one
+    * scan of the reps, not Σ_fp df_idx·df_delta join rows.
+    *
+    * SIZE GUARD: the delta-side join hints (the exact-key join, the
+    * prefix ranking, the verify fetch and the final re-attach) broadcast
+    * only while the delta is small. After canonicalizing, one cheap
+    * aggregate measures the delta and estimates its footprint (~64 B per
+    * row + 48 B per shingle); above `maxBroadcastBytes` every delta-side
+    * hint is dropped and those joins shuffle. At that size the "delta" is
+    * a corpus-scale batch, and shuffling both sides IS the right plan —
+    * the guard makes the cutover explicit instead of letting a 10 GB
+    * broadcast OOM the executors. */
   def dedupIndexProbe(
       delta: DataFrame,
       textCol: String,
       idCol: String,
       tableName: String,
       threshold: Double = 0.5,
-      maxBroadcastBytes: Long = 256L << 20): DataFrame = {
+      maxBroadcastBytes: Long = 256L << 20): DataFrame =
+    indexProbe(delta, textCol, idCol, tableName, threshold, maxBroadcastBytes,
+      Prefix.ShardPostings)._1
+
+  /** [[dedupIndexProbe]] with the shard bound as a parameter, returning
+    * (verdicts, its candidacy, the verified (d_rep, rep_id, __jraw) pairs). */
+  private[graft] def indexProbe(
+      delta: DataFrame, textCol: String, idCol: String, tableName: String,
+      threshold: Double, maxBroadcastBytes: Long,
+      shardPostings: Long): (DataFrame, Prefix.Sharded, DataFrame) = {
     requireLongId(delta, idCol)
     val spark = delta.sparkSession
     val reps = spark.table(tableName)
-    val fpsIdx = spark.table(s"${tableName}_fps")
-    require(fpsIdx.columns.contains("rk") && reps.columns.contains("shl_rk") &&
-      spark.catalog.tableExists(s"${tableName}_df"),
-      s"$tableName was built by an older dedupIndexBuild (no rank column / " +
-        s"ranked rep arrays / df table) — rebuild the index before probing")
+    require(reps.columns.contains("shl_rk") && spark.catalog.tableExists(s"${tableName}_df"),
+      s"$tableName was built by an older dedupIndexBuild (no ranked rep arrays / " +
+        s"df table) — rebuild the index before probing")
     val meta = spark.table(s"${tableName}_meta").head()
     val n = meta.getInt(0)
     val nReps = meta.getLong(2)
@@ -1408,27 +1412,8 @@ object Dedup {
       .groupBy("d_rep").agg(min(col("rep_id")).as("exact_match"))
       .pinned()
 
-    // Near candidacy is PREFIX-FILTERED ([[Prefix]]): the earlier shape
-    // joined the delta's FULL fp lists against the full posting index and
-    // counted per-pair hits — exact, but its join volume is
-    // Σ_fp df_idx(fp)·df_delta(fp), which grows quadratically whenever the
-    // shingle space saturates (measured 22M rows at sf1 → 2.23B at sf10: a
-    // ~30k-fp trigram vocabulary makes every delta fp collide with ~1000
-    // corpus reps). Rare-first prefixes restore a linear candidacy; on the
-    // saturated synthetic corpus j = 2 still left ~28M chance pairs at sf10
-    // (a broadcast OOM), j = 3 leaves thousands. The size filter
-    // |B| in [t·|A|, |A|/t] applies as a post-join predicate before the hit
-    // count.
-    //
-    // Delta fps absent from the index (df join misses) generate no
-    // candidates and drop out of the ranking; the prefix length still uses
-    // the FULL |A|. Survivors are verified against the reps' stored fp
-    // arrays with the exact sorted-merge Jaccard kernel; every emitted
-    // (match, score) is exact.
-    //
-    // Exact-matched delta reps are still excluded up front — exact
-    // dominates near in the output, and a re-crawl delta is MOSTLY exact
-    // dups, so their candidacy fan-out is pure waste.
+    // Near candidacy. Delta fps absent from the index (df join misses)
+    // drop out of the ranking; the prefix length still uses the FULL |A|.
     val j = Prefix.MinHits
     val dNear = dSh.join(deltaSide(exactM.select(col("d_rep"))), Seq("d_rep"), "left_anti")
     val dFps = dNear
@@ -1439,52 +1424,28 @@ object Dedup {
     def prefFor(h: Int): DataFrame =
       Prefix.prefix(deltaSide(dFps), Seq("d_rep", "d_nfp"), "fp", dfIdx,
           Prefix.prefixLen(col("d_nfp"), threshold, h))
-        .select(col("d_rep"), col("d_nfp"), col("fp"), col("df"))
+        .select(col("fp"), col("d_rep"), col("d_nfp"), col("df"))
     val dPref = prefFor(j)
-      .pinned() // reused: selectivity estimate + one of the two candidacy paths
-    // the candidacy join is the probe's compute-heavy broadcast join and
-    // its streamed side (the prefix-filtered postings) is bytes-small —
-    // without the explicit spread the whole join + hit aggregation runs at
-    // file-split parallelism (measured 4 of 32 cores at sf10, the
-    // io.Layout rule). Under the tripped guard the joins shuffle anyway.
-    val idxPref = fpsIdx
-      .where(col("rk") < Prefix.prefixLen(col("n_fp"), threshold, j))
-    // ADAPTIVE CANDIDACY. The inverted-index join's volume is
-    // Σ_fp df_idx(fp)·df_delta(fp) over the two prefixes — estimated by
-    // Σ df over the delta's prefix rows (one delta-sized aggregate; df is
-    // already joined on). On ordinary Zipf-shingled corpora the rare-first
-    // prefixes make that sum tiny and the join IS the optimal plan: it
-    // touches only the postings the delta's fps select. On a SATURATED
-    // shingle space (the adversarial case: ~30k distinct trigrams across
-    // 450k reps) every delta fp collides with hundreds of reps and the
-    // join goes quadratic — measured 1.09B join rows at sf10 AFTER prefix
-    // filtering. Past the cutover (estimated join rows > 16x a full corpus
-    // scan) the probe flips to a broadcast-probe scan: the delta's prefix
-    // postings ride the plan as a CSR (the IVF-centroid/cleanLines
-    // pattern), one kernel pass over the reps table counts hits
-    // task-locally, and the billion-row (pair, hit) shuffle never exists.
-    // Both paths implement the same exact-recall prefix+hits bound; the
-    // output is identical (spec-asserted).
-    val pst = dPref.agg(sum(col("df")).as("s"), count(lit(1)).as("c")).head()
-    val estJoinRows = if (pst.isNullAt(0)) 0L else pst.getLong(0)
-    val prefRows = pst.getLong(1)
+      .pinned() // reused: saturation estimate + the CSR postings
     // SATURATION-SIZED HIT REQUIREMENT (a rule, not a constant — the
-    // lshBitsFor pattern). The kernel path never materializes the est
-    // join rows, but its OUTPUT — pairs with >= h prefix hits — still
-    // feeds the array-carrying verify join, and on a saturated space the
+    // lshBitsFor pattern). The kernel never materializes the (pair, hit)
+    // rows, but its OUTPUT — pairs with >= h prefix hits — still feeds
+    // the array-carrying verify join, and on a saturated space the
     // chance-pair count at the default h is itself a scale disease:
     // measured at sf100 (λ = est/(nD·nR) = 0.053, nD·nR = 2.2·10^12),
     // h = 3 admits ~5·10^7 chance pairs whose verify join shipped ~1 KB
     // of shingle arrays each and FILLED THE DISK, while at sf10 the same
     // λ yields ~10^5 pairs — invisible. So h is sized from the measured
-    // saturation: the smallest h whose expected chance-candidate count
-    // (Poisson first term nD·nR·λ^h/h!, λ doubled as a safety factor for
-    // prefix growth and model thinness, e^{-λ} dropped) fits a verify
-    // budget of max(2M, 4·nD) pairs. Recall stays EXACTLY 1 at every h:
-    // the prefix lengthens with h and the per-side min(h, ceil(t·n))
-    // caps keep the one-sided theorem intact — a larger h only tightens
-    // a chance-pair filter whose survivors are exact-verified anyway
-    // (path-equality spec unchanged).
+    // saturation, est = Σ df over the delta's prefix rows: the smallest h
+    // whose expected chance-candidate count (Poisson first term
+    // nD·nR·λ^h/h!, λ doubled as a safety factor for prefix growth and
+    // model thinness, e^{-λ} dropped) fits a verify budget of
+    // max(2M, 4·nD) pairs. Recall stays EXACTLY 1 at every h: the prefix
+    // lengthens with h and the per-side min(h, ceil(t·n)) caps keep the
+    // one-sided theorem intact — a larger h only tightens a chance-pair
+    // filter whose survivors are exact-verified anyway.
+    val pst = dPref.agg(sum(col("df")).as("s")).head()
+    val estJoinRows = if (pst.isNullAt(0)) 0L else pst.getLong(0)
     val jEff =
       if (estJoinRows == 0L) j
       else {
@@ -1501,65 +1462,37 @@ object Dedup {
         while (h < 16 && chance(h) > candCap) h += 1
         h
       }
-    // The kernel path is gated on ITS OWN footprint — the collected prefix
-    // CSR (~12 B/posting + attrs, with the prefix growth jEff adds
-    // bounded by (jEff - minHits)·nD postings) — NOT on the join guard:
-    // at sf100 the delta's exploded-fp hash relation (870 MB) trips
-    // `bcastDelta` while the CSR is only ~180 MB, and falling back to the
-    // shuffled join on a saturated space meant a ~10^11-row candidacy
-    // shuffle that filled the disk. Only a delta that defeats BOTH
-    // (a corpus-scale batch on a saturated space) takes the shuffled
-    // join — at that point re-running dedup, not probing, is the right
-    // operation anyway.
-    val kernelPath = estJoinRows > 16L * math.max(nReps, 1L) &&
-      (prefRows + (jEff - j).toLong * dRows) * 12L +
-        dRows * 16L <= maxBroadcastBytes
-    val cand =
-      if (kernelPath) {
-        val kPref = if (jEff == j) dPref else prefFor(jEff)
-        val c = Prefix.collectCsr(kPref.select(col("fp"), col("d_rep"), col("d_nfp")))
-        val nFp = size(col("shl_rk"))
-        Layout.spread(reps.select(col("rep_id"), col("shl_rk")))
-          .select(col("rep_id"),
-            explode(gf.prefixCandidates(
-              slice(col("shl_rk"), lit(1), Prefix.prefixLen(nFp, threshold, jEff).cast("int")), nFp,
-              threshold, jEff, c.fps, c.offsets, c.keys, c.keyIds, c.keySizes)).as("d_rep"))
-      } else {
-        // Hit counting is a WINDOW over the pair, not a groupBy: the join
-        // output's (d_rep, rep_id) keys are mostly unique (noise pairs
-        // share exactly one fp), so a hash aggregate degenerates — every
-        // partial map overflows and re-sorts per spill (measured: 32
-        // cores pinned in TimSort for minutes at sf10). The window shape
-        // is one exchange and ONE external sort per partition, then a
-        // streaming count per frame.
-        val pairW = Window.partitionBy("d_rep", "rep_id")
-        (if (bcastDelta) Layout.spread(idxPref) else idxPref)
-          .join(deltaSide(dPref.drop("df")), Seq("fp"))
-          .where(col("n_fp") >= Prefix.minOverlap(col("d_nfp"), threshold) &&
-            col("n_fp") <= floor(col("d_nfp").cast("double") / threshold + 1e-9))
-          .select(col("d_rep"), col("rep_id"), col("d_nfp"), col("n_fp"))
-          .withColumn("__hits", count(lit(1)).over(pairW))
-          .withColumn("__rn", row_number().over(pairW.orderBy("d_nfp")))
-          .where(col("__rn") === 1 &&
-            col("__hits") >= least(Prefix.hitBound(col("d_nfp"), threshold, j),
-              Prefix.hitBound(col("n_fp"), threshold, j)))
-          .select(col("d_rep"), col("rep_id"))
-      }
+    val kPref = if (jEff == j) dPref else prefFor(jEff).pinned()
+    val nFp = size(col("shl_rk"))
+    // the kernel pass is the probe's compute-heavy stage and its input
+    // (rep_id, shl_rk) is bytes-small next to its work — without the
+    // explicit spread it runs at file-split parallelism (measured 4 of 32
+    // cores at sf10, the io.Layout rule)
+    val cand = Prefix.sharded(kPref.select(col("fp"), col("d_rep"), col("d_nfp")),
+        shardPostings) { c =>
+      Layout.spread(reps.select(col("rep_id"), col("shl_rk")))
+        .select(col("rep_id"),
+          explode(gf.prefixCandidates(
+            slice(col("shl_rk"), lit(1), Prefix.prefixLen(nFp, threshold, jEff).cast("int")), nFp,
+            threshold, jEff, c.fps, c.offsets, c.keys, c.keyIds, c.keySizes)).as("d_rep"))
+    }
     // verify joins keep the index on the streamed side too: the candidate
     // set is delta-bounded after the hit filter, the reps table is
     // corpus-sized
-    val nearM = reps.select(col("rep_id"), col("shl"))
-      .join(deltaSide(cand), Seq("rep_id"))
+    val verified = reps.select(col("rep_id"), col("shl"))
+      .join(deltaSide(cand.candidates), Seq("rep_id"))
       .join(deltaSide(dSh.select(col("d_rep"), col("d_shl"))), Seq("d_rep"))
       .withColumn("__jraw", gf.jaccardSortedFps(col("d_shl"), col("shl")))
       .where(col("__jraw") >= threshold)
+      .select(col("d_rep"), col("rep_id"), col("__jraw"))
+    val nearM = verified
       .groupBy("d_rep")
       // min over (rep_id, score) structs = the min-id match AND its score
       .agg(min(struct(col("rep_id"), col("__jraw"))).as("m"))
       .select(col("d_rep"), col("m.rep_id").as("near_match"),
         round(col("m.__jraw"), 4).as("near_j"))
 
-    groups.select(col("rep_id").as("d_rep"), col("members"))
+    val out = groups.select(col("rep_id").as("d_rep"), col("members"))
       .join(deltaSide(exactM), Seq("d_rep"), "left")
       .join(deltaSide(nearM), Seq("d_rep"), "left")
       .select(
@@ -1570,6 +1503,7 @@ object Dedup {
         coalesce(col("exact_match"), col("near_match")).as("match_id"),
         when(col("exact_match").isNotNull, lit(1.0))
           .otherwise(col("near_j")).as("jaccard"))
+    (out, cand, verified)
   }
 
   /** Persistent EMBEDDING near-dup index — the embedding-space twin of

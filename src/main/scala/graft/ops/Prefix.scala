@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Checkpointing.PinSyntax
 
 /** The rare-first prefix filter (AllPairs, Bayardo et al. WWW'07; PPJoin,
   * Xiao et al. WWW'08) behind every exact set-similarity candidacy: the
@@ -12,17 +13,27 @@ import org.apache.spark.sql.functions._
   *
   *  - Canonical order: each key's elements ascending by (global document
   *    frequency, element), rarest first, so hot elements fall OUTSIDE
-  *    prefixes and never fan out a candidate join.
+  *    prefixes and post few postings.
   *  - J(A,B) >= t forces |A∩B| >= ceil(t·|A|) and >= ceil(t·|B|). The j
   *    smallest common elements (canonical order) then sit within the first
   *    |X| - ceil(t·|X|) + j elements of BOTH sides, since each side has at
-  *    least ceil(t·|X|) - j common elements after them. Joining only those
-  *    prefixes and requiring min(j_A, j_B) shared prefix elements, with
-  *    j_X = min(j, ceil(t·|X|)) for tiny sets, has recall EXACTLY 1; j
-  *    kills the pairs that share only a few noise elements.
+  *    least ceil(t·|X|) - j common elements after them. Requiring
+  *    min(j_A, j_B) shared prefix elements, with j_X = min(j, ceil(t·|X|))
+  *    for tiny sets, has recall EXACTLY 1; j kills the pairs that share
+  *    only a few noise elements. One-sided: B's prefix alone holds j_B
+  *    common elements, so a probe may bring its whole set instead of its
+  *    prefix and needs no df order.
   *  - ceil(t·x) is computed as ceil(t·x − 1e-9): a float rounding UP to
   *    the next integer would shorten prefixes and raise hit requirements
   *    (a recall bug); rounding DOWN only admits candidates.
+  *
+  * Hits are counted in one place, [[graft.functions.gf.prefixCandidates]]:
+  * the indexed side's prefix postings ride the plan as a [[Csr]] and each
+  * probing row counts its hits task-locally, so no (pair, hit) row is ever
+  * shuffled. [[sharded]] cuts the postings into K = ceil(postings /
+  * [[ShardPostings]]) shards by key hash (each key's postings whole in one
+  * shard, so its count is complete in one pass) and runs one kernel pass
+  * per shard, pinned before the next CSR is collected.
   *
   * Elements missing from the df table (absent from the other side's
   * vocabulary, so they cannot match) drop out of the ranking; prefix
@@ -34,6 +45,12 @@ object Prefix {
     * while chance pairs on a saturated shingle space fall ~400x per unit of
     * j (Poisson tail), so j = 3 leaves thousands where j = 2 left millions. */
   private[graft] val MinHits = 3
+
+  /** Prefix postings per kernel pass of [[sharded]]. At this bound the
+    * collect, the CSR build and a probe pass over it ran in a 1 GB
+    * `local[4]` JVM, every task holding its own deserialized CSR, with
+    * the peak used heap in `PERF_pr17.json` `shard_bound`. */
+  private[graft] val ShardPostings = 2000000L
 
   /** (elem, df): the number of `rows` carrying each element. */
   private[graft] def docFreq(rows: DataFrame, elem: String): DataFrame =
@@ -57,12 +74,12 @@ object Prefix {
 
   /** ceil(t·|X|): the fewest elements a J >= t partner of a set of size
     * `n` shares with it. */
-  private[graft] def minOverlap(n: Column, t: Double): Column = ceil(n.cast("double") * t - 1e-9)
+  private def minOverlap(n: Column, t: Double): Column = ceil(n.cast("double") * t - 1e-9)
 
   /** min(j, ceil(t·|X|)): the shared prefix elements a J >= t partner of
     * a set of size `n` is guaranteed; a pair must reach the smaller of its
     * two sides' bounds. */
-  private[graft] def hitBound(n: Column, t: Double, j: Int): Column =
+  private def hitBound(n: Column, t: Double, j: Int): Column =
     least(lit(j.toLong), minOverlap(n, t))
 
   /** The prefix length |X| - ceil(t·|X|) + min(j, ceil(t·|X|)) of a set of
@@ -85,11 +102,48 @@ object Prefix {
       fps: Array[Long], offsets: Array[Int], keys: Array[Int],
       keyIds: Array[Long], keySizes: Array[Int])
 
+  /** Bytes of a [[Csr]]'s arrays: one copy, as each probing task holds. */
+  private def bytes(c: Csr): Long =
+    8L * c.fps.length + 4L * c.offsets.length + 4L * c.keys.length + 12L * c.keyIds.length
+
+  /** One [[sharded]] candidacy: the union of its passes' rows, the
+    * postings it indexed, the largest pass's [[bytes]] and the pass count. */
+  private[graft] case class Sharded(
+      candidates: DataFrame, postings: Long, csrBytes: Long, shards: Int)
+
+  /** The union of `pass` over the [[Csr]] of each shard of `postings`
+    * ((fp: long, key: long, |X|: int) rows, pinned by the caller: they are
+    * counted once and read once per shard). K = ceil(postings / `bound`)
+    * shards by key hash. A pass is pinned before the next shard is
+    * collected, so one CSR is live at a time; the last pass stays in the
+    * plan and runs with its consumer. K = 1 runs the same code. */
+  private[graft] def sharded(postings: DataFrame, bound: Long)(pass: Csr => DataFrame): Sharded = {
+    val n = postings.count()
+    val k = math.max(1L, (n + bound - 1) / bound).toInt
+    val key = xxhash64(col(postings.columns(1)))
+    var maxBytes = 0L
+    val passes = (0 until k).map { s =>
+      val c = collectCsr(postings.where(pmod(key, lit(k.toLong)) === s))
+      maxBytes = math.max(maxBytes, bytes(c))
+      if (s < k - 1) pass(c).pinned() else pass(c)
+    }
+    Sharded(passes.reduce(_ unionByName _), n, maxBytes, k)
+  }
+
   /** The [[Csr]] of the (fp: long, key: long, |X|: int) prefix postings
-    * in `postings`, collected to the driver. */
+    * in `postings`, collected to the driver as primitive arrays, one
+    * triple per partition (a collected `Row` per posting held about
+    * 120 B of driver heap, the arrays hold 20 B). */
   private[graft] def collectCsr(postings: DataFrame): Csr = {
-    val rows = postings.collect()
-    csr(rows.map(_.getLong(0)), rows.map(_.getLong(1)), rows.map(_.getInt(2)))
+    val parts = postings.queryExecution.toRdd.mapPartitions { rows =>
+      val fp = Array.newBuilder[Long]
+      val key = Array.newBuilder[Long]
+      val size = Array.newBuilder[Int]
+      rows.foreach { r => fp += r.getLong(0); key += r.getLong(1); size += r.getInt(2) }
+      Iterator((fp.result(), key.result(), size.result()))
+    }.collect()
+    csr(Array.concat(parts.map(_._1): _*), Array.concat(parts.map(_._2): _*),
+      Array.concat(parts.map(_._3): _*))
   }
 
   /** The [[Csr]] of small in-memory (key, distinct elements) sets, ranked

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.{gf, Kernels}
-import graft.ops.Dedup
+import graft.ops.{Dedup, Prefix}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.unsafe.types.UTF8String
@@ -102,6 +102,58 @@ class DedupSpec extends SparkSpec {
     val comps = SparkEntry.queries("dedup_clusters")(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comps === copies.map(_._1 -> 100L).toMap)
+  }
+
+  /** 12-word documents over a 4-word vocabulary: the trigram space (64
+    * trigrams) saturates, so every shingle is hot and prefixes overlap. */
+  private def saturatedText(seed: Int): String = {
+    val vocab = Array("alpha", "beta", "gamma", "delta")
+    (0 until 12).map { i =>
+      vocab(math.floorMod(scala.util.hashing.MurmurHash3.productHash((seed, i)), 4))
+    }.mkString(" ")
+  }
+
+  private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] = {
+    val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(got.length === got.toSet.size)
+    got.toSet
+  }
+
+  test("ngramJaccardPairs: K > 1 prefix shards give the brute-force and the one-shard pairs") {
+    // the ">10 docs" corpus: 12 one-word edits of one 40-word document,
+    // six unrelated docs and one quoting five of its words
+    val words = (0 until 40).map(i => s"w$i").toArray
+    val all = (0 until 12).map { k =>
+      val w = words.clone()
+      w(3 * k + 1) = s"edit$k"
+      (100L + k, w.mkString(" "))
+    } ++ (0 until 6).map(i => (200L + i, (0 until 20).map(w => s"doc${i}word$w").mkString(" "))) :+
+      (300L, (words.take(5) ++ (0 until 25).map(w => s"quote$w")).mkString(" "))
+    val df = all.toDF("doc_id", "text")
+    val (one, c1, _) = Dedup.ngramPairs(df, "text", "doc_id", 3, 0.5, Prefix.ShardPostings)
+    val (many, cMany, _) = Dedup.ngramPairs(df, "text", "doc_id", 3, 0.5, c1.postings / 5)
+    assert(c1.shards === 1 && cMany.shards >= 5 && cMany.postings === c1.postings)
+    val truth = TrigramJaccard.pairs(all, 0.5)
+    assert(truth.size === 66)
+    assert(pairSet(one) === truth)
+    assert(pairSet(many) === truth)
+  }
+
+  test("ngramJaccardPairs: a saturated 4-word vocabulary equals brute-force trigram Jaccard") {
+    val all = (0L until 300L).map(i => (i, saturatedText(i.toInt)))
+    val truth = TrigramJaccard.pairs(all, 0.5)
+    assert(truth.size > 20)
+    assert(pairSet(Dedup.ngramJaccardPairs(all.toDF("doc_id", "text"), "text", "doc_id", 3, 0.5)) ===
+      truth)
+  }
+
+  test("ngramJaccardPairs: same rows across input partition layouts") {
+    val df = docs.select("doc_id", "text")
+    def rowsOf(d: org.apache.spark.sql.DataFrame) =
+      Dedup.ngramJaccardPairs(d, "text", "doc_id", 3, 0.5).orderBy("a_id", "b_id").collect()
+    val a = rowsOf(df.repartition(1))
+    assert(a.nonEmpty)
+    assert(a.sameElements(rowsOf(df.repartition(7))))
   }
 
   test("minhashLsh: recovers the exact-jaccard pair set on sf0.001 documents") {
@@ -669,6 +721,43 @@ class DedupSpec extends SparkSpec {
         val mm = jac.keys.min
         assert(st === "near" && m === mm, s"doc $id")
         assert(math.abs(j - jac(mm)) < 5e-5, s"doc $id jaccard $j vs ${jac(mm)}")
+      } else assert(st === "new" && m === -1L, s"doc $id")
+    }
+  }
+
+  test("dedupIndexProbe: K > 1 prefix shards on a saturated corpus give the brute-force " +
+      "and the one-shard verdicts") {
+    val sat = ((0L until 400L).map(i => (i, saturatedText(i.toInt))) :+ (1000L, saturatedText(1)))
+      .toDF("doc_id", "text")
+    val corpus = sat.where(col("doc_id") % 10 =!= 0 && col("doc_id") < 1000L)
+    val delta = sat.where(col("doc_id") % 10 === 0 || col("doc_id") === 1000L)
+    Dedup.dedupIndexBuild(corpus, "text", "doc_id", "graft_dedup_idx_shards")
+    def probe(bound: Long) = {
+      val (out, c, _) = Dedup.indexProbe(delta, "text", "doc_id", "graft_dedup_idx_shards",
+        0.5, 256L << 20, bound)
+      (out.collect().map(r => r.getLong(0) -> (r.getString(1),
+        if (r.isNullAt(2)) -1L else r.getLong(2),
+        if (r.isNullAt(3)) -1.0 else r.getDouble(3))).toMap, c)
+    }
+    val (one, c1) = probe(Prefix.ShardPostings)
+    val (many, cMany) = probe(c1.postings / 5)
+    assert(c1.shards === 1 && cMany.shards >= 5)
+    assert(many === one)
+    val c = fpSet(corpus)
+    val d = fpSet(delta)
+    assert(one.keySet === d.keySet)
+    assert(one.values.exists(_._1 == "near"))
+    d.foreach { case (id, (key, shl)) =>
+      val exactIds = c.collect { case (cid, (ck, _)) if ck == key => cid }
+      val jac = c.view.mapValues { case (_, cs) =>
+        val shared = (shl & cs).size
+        if (shl.isEmpty || cs.isEmpty) 0.0 else shared.toDouble / (shl.size + cs.size - shared)
+      }.filter(_._2 >= 0.5)
+      val (st, m, j) = one(id)
+      if (exactIds.nonEmpty) assert(st === "exact" && m === exactIds.min && j === 1.0, s"doc $id")
+      else if (jac.nonEmpty) {
+        val mm = jac.keys.min
+        assert(st === "near" && m === mm && math.abs(j - jac(mm)) < 5e-5, s"doc $id")
       } else assert(st === "new" && m === -1L, s"doc $id")
     }
   }

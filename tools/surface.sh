@@ -5,7 +5,9 @@
 # (local defs inside a method are indented deeper and not counted), and
 # hand-written Catalyst expression classes (declarations that extend
 # Expression, UnaryExpression or BinaryExpression), and the random-
-# hyperplane banding sites (gf.hyperplaneBucket calls in graft.ops).
+# hyperplane banding sites (gf.hyperplaneBucket calls in graft.ops), and the
+# prefix hit-count sites (Prefix.hitBound calls outside Prefix.scala: hits
+# are counted only in the gf.prefixCandidates kernel, so this reads 0).
 #
 # Usage: tools/surface.sh   (reports on the checkout the script sits in)
 set -euo pipefail
@@ -19,3 +21,4 @@ echo "mains            $(grep -rlE 'def main\(' "$main" | wc -l)"
 echo "ops_public_defs  $(grep -rhE '^  def ' "$main/graft/ops" | wc -l)"
 echo "catalyst_expr_classes $(grep -rhE '\bextends (Unary|Binary)?Expression\b' "$main" | wc -l)"
 echo "hyperplane_banding_sites $(grep -rF 'gf.hyperplaneBucket(' "$main/graft/ops" | wc -l)"
+echo "prefix_hit_count_sites $(grep -rF --exclude=Prefix.scala 'Prefix.hitBound(' "$main" | wc -l)"
